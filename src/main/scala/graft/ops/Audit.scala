@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.RowHash
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -30,18 +31,20 @@ object Audit {
       .withColumn("updated_utc_ts", ts)
       .withColumn("runid", lit(runId))
 
-  /** The reference's row-hash expression
-    * (utils/dataframe_operations.py:73-90): NULL -> '', join all listed
-    * columns with ',', wrap in '(...)', MD5-hex.
+  /** The reference's row hash (utils/dataframe_operations.py:73-90):
+    * NULL -> '', join all listed columns' string casts with ',', wrap
+    * in '(...)', MD5-hex. The bytes equal
+    * `md5(concat('(', concat_ws(',', coalesce(cast(c as string), '')…), ')'))`.
     *
-    * Pure built-in expressions (md5/concat_ws/coalesce/cast) — fully
-    * codegen'd, no UDF; at 100 TB this runs inside the scan's
-    * whole-stage-codegen pass with zero extra exchange.
+    * One native expression ([[graft.functions.RowHash]]) formats the
+    * row into a reused buffer and digests it in the scan's codegen
+    * pass, with no per-column strings. Integral, boolean, string,
+    * decimal (precision <= 18), date and timestamp (fixed-offset
+    * session zone) values are formatted directly; every other type,
+    * and dates and timestamps outside years 1-9999, are printed by
+    * Spark's own cast to string.
     */
-  def rowHashExpr(cols: Seq[String]): Column =
-    md5(concat(lit("("),
-               concat_ws(",", cols.map(c => coalesce(col(c).cast("string"), lit(""))): _*),
-               lit(")")))
+  def rowHashExpr(cols: Seq[String]): Column = RowHash.rowHash(cols.map(col))
 
   /** Append `row_hash_code` (schema registration at reference
     * rdbms_operations.py:115).

@@ -35,6 +35,8 @@ object Config {
     *   lineitem: {active_flag: "T"}
     *   orders:   {active_flag: "F"}
     * }}}
+    * `active_flag` is "T" or "F" (missing means "F"); any other value
+    * fails the load, naming the table and the value.
     */
   def fromYaml(yaml: String): PipelineConfig = {
     val mapper = new ObjectMapper(new YAMLFactory())
@@ -47,8 +49,10 @@ object Config {
     val tablesNode = root.get("tables")
     require(tablesNode != null, "config: missing required field 'tables'")
     val tables = tablesNode.properties().asScala.toSeq.map { e =>
-      TableConfig(e.getKey, Option(e.getValue.get("active_flag"))
-        .map(_.asText()).getOrElse("F"))
+      val flag = Option(e.getValue.get("active_flag")).map(_.asText()).getOrElse("F")
+      require(flag == "T" || flag == "F",
+        s"config: table '${e.getKey}' has active_flag '$flag'; expected \"T\" or \"F\"")
+      TableConfig(e.getKey, flag)
     }
     PipelineConfig(
       sourceDir = req("source_dir"),

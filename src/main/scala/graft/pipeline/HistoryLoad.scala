@@ -4,7 +4,7 @@ import java.time.LocalDateTime
 import scala.util.{Failure, Success, Try}
 
 import graft.ops.{Audit, SchemaOps}
-import graft.sources.PartitionedSink
+import graft.sources.{ParquetFooter, PartitionedSink}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The reference's end-to-end pipeline (O-12, main.py:35-80) realized
@@ -12,12 +12,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * failure isolation (one bad table never aborts the run), and
   * success/failure tallies, with count reconciliation at the sink.
   *
-  * Per-table flow mirrors flow.txt:7-16:
-  *   scan -> compat casts -> audit columns -> name normalization ->
-  *   row hash -> date-partitioned parquet sink -> count reconcile.
+  * Per-table flow (flow.txt:7-16, without the reference's compat
+  * casts: [[graft.ops.CompatCasts.referenceCompatPass]] is not in the
+  * chain, source types are written as read):
+  *   scan -> audit columns -> name normalization -> row hash ->
+  *   date-partitioned parquet sink, whose row count is observed on the
+  *   write itself.
   * The whole chain is ONE lazy Catalyst plan per table executed at the
   * sink action — the reference's chunk loop becomes partition
-  * parallelism.
+  * parallelism. The scan takes its schema from one Parquet footer read
+  * on the driver ([[ParquetFooter.schema]]), so a table costs one Spark
+  * job, the write.
   */
 final case class RunReport(
     succeeded: Seq[String],
@@ -41,8 +46,9 @@ class HistoryLoad(spark: SparkSession, config: PipelineConfig,
   }
 
   def processTable(table: String): Long = {
-    val df = spark.read.parquet(s"${config.sourceDir}/$table.parquet")
-    PartitionedSink.writeDatePartitioned(transform(df),
+    val path = s"${config.sourceDir}/$table.parquet"
+    val reader = ParquetFooter.schema(spark, path).fold(spark.read)(spark.read.schema)
+    PartitionedSink.writeDatePartitioned(transform(reader.parquet(path)),
       config.targetDir, table, now)
   }
 

@@ -147,7 +147,7 @@ class MaxSimSpec extends SparkSpec {
       try {
         MaxSim.searchIndex(spark, idx, q, k = 4, nPlanes = 3,
           dims = 8, dBuckets = 4).collect()
-        Thread.sleep(1500) // drain the listener bus (BenchScale idiom)
+        org.apache.spark.sql.graft.SparkBridge.drainListenerBus(spark.sparkContext)
         import scala.jdk.CollectionConverters._
         plans.asScala.mkString("\n===\n")
       } finally spark.listenerManager.unregister(ql)

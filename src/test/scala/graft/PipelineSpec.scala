@@ -28,6 +28,19 @@ class ConfigSpec extends org.scalatest.funsuite.AnyFunSuite {
     assertThrows[IllegalArgumentException](Config.fromYaml("target_dir: /out"))
   }
 
+  test("an active_flag other than T or F fails at load time, naming table and value") {
+    def load(flag: String) = Config.fromYaml(
+      s"source_dir: /in\ntarget_dir: /out\ntables:\n  lineitem: {active_flag: \"T\"}\n" +
+        s"  orders: {$flag}\n")
+    assert(load("active_flag: \"F\"").tables.last == TableConfig("orders", "F"))
+    assert(load("other: 1").tables.last == TableConfig("orders", "F"))
+    for (bad <- Seq("Y", "t", "true", "")) {
+      val e = intercept[IllegalArgumentException](load(s"active_flag: \"$bad\""))
+      assert(e.getMessage.contains("'orders'") && e.getMessage.contains(s"'$bad'"),
+        e.getMessage)
+    }
+  }
+
   test("secret resolution order: env wins, then config file, fail-fast on miss") {
     import graft.sources.SecretProvider
     val env = SecretProvider.fromEnv(Map("PG_PASSWORD" -> "from-env"))

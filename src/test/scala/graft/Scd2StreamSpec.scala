@@ -185,7 +185,7 @@ class Scd2StreamSpec extends SparkSpec {
       Scd2Stream.applyBatch(spark, store,
         ev(Seq((7L, 99L, 999L, "T"))), "user_id", "ts", "event_id",
         Seq("state"), nBuckets = 16)
-      Thread.sleep(1500) // drain the listener bus (BenchScale idiom)
+      org.apache.spark.sql.graft.SparkBridge.drainListenerBus(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(l)
     assert(acc.get() < 100L,
       s"fold read ${acc.get()} records — bucket pruning not effective")
