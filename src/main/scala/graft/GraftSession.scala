@@ -64,6 +64,15 @@ object GraftSession {
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.parquet.compression.codec", "snappy")
+      // local files through Hadoop's LocalFileSystem, checksums and all,
+      // but with a setPermission that does not fork `chmod` per file and
+      // directory written (graft.sources.NioLocalFileSystem). The FS
+      // cache is keyed by scheme, not by configuration: with it on, a
+      // plain LocalFileSystem cached by earlier code (any
+      // `new Configuration()` touching a local path) would be returned
+      // instead, so Spark's own configurations bypass it for `file`.
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.file.impl.disable.cache", "true")
       // managed (bucketed) tables land in tmp, never in the repo
       .config("spark.sql.warehouse.dir",
         sys.props("java.io.tmpdir") + "/graft-warehouse")

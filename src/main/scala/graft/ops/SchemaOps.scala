@@ -47,13 +47,17 @@ object SchemaOps {
     * overwrites on collision ("a-b" and "ab" both -> "ab"); we detect
     * and fail fast (SURVEY.md §7.3).
     */
-  def normalizeNames(df: DataFrame): DataFrame = {
-    val normalized = df.columns.map(normalizeName)
+  def normalizeNames(df: DataFrame): DataFrame =
+    df.toDF(normalizedNames(df.columns.toIndexedSeq): _*)
+
+  /** [[normalizeName]] of every name, failing fast when two collide. */
+  def normalizedNames(names: Seq[String]): Seq[String] = {
+    val normalized = names.map(normalizeName)
     val dupes = normalized.groupBy(identity).collect {
       case (n, hits) if hits.length > 1 => n
     }
     require(dupes.isEmpty,
       s"normalizeNames: collision after normalization: ${dupes.mkString(", ")}")
-    df.toDF(normalized.toIndexedSeq: _*)
+    normalized
   }
 }

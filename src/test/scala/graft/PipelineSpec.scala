@@ -33,12 +33,32 @@ class ConfigSpec extends org.scalatest.funsuite.AnyFunSuite {
       s"source_dir: /in\ntarget_dir: /out\ntables:\n  lineitem: {active_flag: \"T\"}\n" +
         s"  orders: {$flag}\n")
     assert(load("active_flag: \"F\"").tables.last == TableConfig("orders", "F"))
-    assert(load("other: 1").tables.last == TableConfig("orders", "F"))
+    assert(load("").tables.last == TableConfig("orders", "F"))
     for (bad <- Seq("Y", "t", "true", "")) {
       val e = intercept[IllegalArgumentException](load(s"active_flag: \"$bad\""))
       assert(e.getMessage.contains("'orders'") && e.getMessage.contains(s"'$bad'"),
         e.getMessage)
     }
+  }
+
+  test("unknown keys, wrong shapes and a non-integer run_id fail at load time, named") {
+    val base = "source_dir: /in\ntarget_dir: /out\n"
+    def fails(yaml: String, mentions: String*): Unit = {
+      val e = intercept[IllegalArgumentException](Config.fromYaml(yaml))
+      mentions.foreach(m => assert(e.getMessage.contains(m), e.getMessage))
+    }
+    // a misspelled per-table key used to make the table silently inactive
+    fails(base + "tables:\n  lineitem: {activeflag: \"T\"}\n", "'lineitem'", "'activeflag'")
+    fails(base + "tables:\n  lineitem: {active_flag: \"T\", chunk: 5}\n", "'lineitem'", "'chunk'")
+    fails(base + "updatedby: me\ntables:\n  lineitem: {active_flag: \"T\"}\n", "'updatedby'")
+    // Jackson's asLong read this as run 0
+    fails(base + "run_id: abc\ntables:\n  lineitem: {active_flag: \"T\"}\n", "run_id", "'abc'")
+    fails(base + "run_id: 1.5\ntables:\n  lineitem: {active_flag: \"T\"}\n", "run_id", "'1.5'")
+    fails(base + "tables:\n  lineitem: T\n", "'lineitem'")
+    fails(base + "tables: [lineitem]\n", "'tables'")
+    fails("source_dir: [/a, /b]\ntarget_dir: /out\ntables: {}\n", "'source_dir'")
+    assert(Config.fromYaml(base + "run_id: -3\ntables: {}\n").runId == -3L)
+    assert(Config.fromYaml(base + "tables: {}\n").runId == -1L)
   }
 
   test("secret resolution order: env wins, then config file, fail-fast on miss") {
@@ -118,6 +138,9 @@ class PipelineSpec extends SparkSpec {
     val report = hl.process()
     assert(report.succeeded == Seq("nation"))
     assert(report.failed.map(_._1) == Seq("nosuchtable"))
+    // every active table is timed, the failed one too
+    assert(report.wallMs.keySet == Set("nosuchtable", "nation"))
+    assert(report.wallMs.values.forall(_ >= 0) && report.wallMs("nation") > 0)
   }
 
   test("sink reconcile counts this write only, not every run at the path") {
