@@ -51,43 +51,6 @@ object BloomMightContainLong {
     ColumnBridge.column(BloomMightContainLong(ColumnBridge.expression(c), bloom))
 }
 
-/** [[BloomMightContainLong]]'s sharded sibling: probes a broadcast
-  * [[graft.ops.ShardedBloom]] family. Same codegen shape — the family
-  * rides the broadcast handle, resolves once per task into mutable
-  * state, and the per-row cost is floorMod + one shard probe.
-  */
-case class ShardedBloomMightContainLong(child: Expression,
-                                        family: Broadcast[graft.ops.ShardedBloom])
-    extends UnaryExpression {
-
-  override def dataType: DataType = BooleanType
-
-  @transient private lazy val filter: graft.ops.ShardedBloom = family.value
-
-  override def nullSafeEval(input: Any): Any =
-    filter.mightContainLong(input.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sbClass = classOf[graft.ops.ShardedBloom].getName
-    val ref = ctx.addReferenceObj("shardedBloomBc", family,
-      classOf[Broadcast[_]].getName)
-    val local = ctx.addMutableState(sbClass, "shardedBloom",
-      v => s"$v = ($sbClass) $ref.value();")
-    defineCodeGen(ctx, ev, c => s"$local.mightContainLong($c)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): ShardedBloomMightContainLong =
-    copy(child = newChild)
-}
-
-object ShardedBloomMightContainLong {
-
-  /** Column API: true iff the sharded family may contain the value. */
-  def mightContain(c: Column, family: Broadcast[graft.ops.ShardedBloom]): Column =
-    ColumnBridge.column(
-      ShardedBloomMightContainLong(ColumnBridge.expression(c), family))
-}
-
 /** File-backed sharded probe: no broadcast AT ALL — each task resolves
   * the shards its rows route to from the executor-wide
   * [[graft.ops.ShardedBloomFiles]] cache (one load per shard per JVM).

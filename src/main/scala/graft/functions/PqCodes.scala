@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
   * CodegenFallback in Spark, so every one of those m*k lambda
   * evaluations is interpreted and boxed. At m=8, k=16 that is ~50x the
   * work of the coarse-cell argmin and measured 111 s for a 2.56M-row
-  * index build (BENCH_SCALE_r07). This expression is the same exact
+  * index build (r07, local[32]). This expression is the same exact
   * integer argmin — d(s, c) = |sv - c|^2 accumulated directly, ties to
   * the lowest code — as straight-line Java.
   *

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * [[graft.ops.Projection]] — same integer sign formula
   * `(i*2654435761 + j*40503) % 97 % 2` on 1-based indices, so the SQL
   * oracle replays it unchanged. The HOF form pays an interpreted
-  * lambda per array element (~26 s for 3.3M x 64→8 in BenchScale);
+  * lambda per array element (~26 s for 3.3M x 64→8 at local[32]);
   * this is one static JIT'd loop per row inside whole-stage codegen.
   */
 case class RademacherProject(child: Expression, k: Int)

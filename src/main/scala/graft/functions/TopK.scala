@@ -20,7 +20,7 @@ import org.apache.spark.sql.Encoder
   * O(groups x k x map-partitions) — the same partial-aggregation
   * shape that makes `sum` scale.
   *
-  * MEASURED caveat (BenchScale topk/window shuffle_mb rows): the
+  * MEASURED caveat (x20 run, topk/window shuffle_mb rows): the
   * reduction factor is k / (rows per group per map partition). With
   * sparse groups (that ratio near or below k) the partial barely
   * drops rows and its serialized buffers compress WORSE than the

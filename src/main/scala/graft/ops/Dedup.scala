@@ -258,27 +258,6 @@ object Dedup {
         (1 until k).map(j => min(col(s"m$j")).as(s"h$j")): _*)
   }
 
-  /** Scale-path weighted MinHash: same output shape as
-    * [[weightedMinhashSignatures]] (h0..h{k-1} longs, so
-    * [[lshCandidatePairs]] consumes either variant), computed by the
-    * native [[graft.functions.WeightedMinHashTokens]] expression —
-    * the whole tf-weighted signature is a NARROW MAP over the corpus:
-    * no tf groupBy, no repetition explode, no aggregation shuffle
-    * (the md5 path pays two corpus-volume shuffles for the same
-    * estimator). Different hash family than md5 → different (equally
-    * valid) signatures; the md5 variant remains the oracle-parity
-    * surface.
-    */
-  def weightedMinhashSignaturesFast(df: DataFrame, idCol: String, textCol: String,
-                                    k: Int): DataFrame = {
-    val toks = df.select(col(idCol), TextAnalysis.tokens(col(textCol)).as("tk"))
-      .where(size(col("tk")) >= 1)
-    val sig = toks.withColumn("wmh",
-      graft.functions.WeightedMinHashTokens.weightedMinhashArray(col("tk"), k))
-    sig.select(col(idCol) +:
-      (0 until k).map(j => element_at(col("wmh"), j + 1).as(s"h$j")): _*)
-  }
-
   /** Verification join for LSH candidates: exact shingle-set Jaccard
     * computed ONLY for the candidate pairs — the precision half of
     * the LSH recipe (banding recalls candidates cheaply; this

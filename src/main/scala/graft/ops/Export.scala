@@ -60,18 +60,6 @@ object Export {
                        epoch: Int, nShards: Int): DataFrame =
     assign(df, idCol, epoch, nShards, Seq(col(stageCol)))
 
-  /** Materialize an epoch: one shard = one hive directory, rows
-    * inside stored in stream order (`pos`), so the dataloader reads
-    * shard files sequentially with zero further sorting. One
-    * repartition (co-keyed with the assignment window's exchange
-    * under AQE) + in-partition sort — no global sort barrier.
-    */
-  def writeEpoch(assigned: DataFrame, path: String): Unit =
-    assigned
-      .repartition(col("shard"))
-      .sortWithinPartitions(col("shard"), col("pos"))
-      .write.mode("overwrite").partitionBy("shard").parquet(path)
-
   /** DuckDB replay of [[epochShards]] over `rel` with key `idCol`. */
   def epochShardsSql(rel: String, idCol: String, epoch: Int,
                      nShards: Int): String =

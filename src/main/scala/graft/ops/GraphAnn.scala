@@ -45,15 +45,15 @@ import org.apache.spark.sql.types.LongType
   *
   * Approximation is ONLY in which pairs get scored, never in a score:
   * recall is governed by (k, iterations) at build and (beam, hops,
-  * seed quality) at search; `AnnEval.recallAtK` measures it (BenchScale
-  * frontier rows put this family on the same recall/latency axes as
-  * IVF / IVF-PQ).
+  * seed quality) at search; `AnnEval.recallAtK` measures it (the x20
+  * scale run's frontier rows put this family on the same
+  * recall/latency axes as IVF / IVF-PQ).
   *
   * ==FAMILY SCOPE: EXPERIMENTAL (measured verdict, round 10)==
   * On cluster-structured corpora — the shape web-scale embedding
   * corpora actually have — this family is DOMINATED by the IVF
   * family at every measured operating point, and the round-10
-  * build-quality sweep (`BENCH_SCALE_r10.json` `sweep16_*` rows)
+  * build-quality sweep (the x20 scale run's `sweep16_*` rows)
   * shows more build quality cannot fix it: k=8/it=2 and k=16/it=2
   * builds lift router-seeded recall only to 0.23/0.27 against their
   * own nProbe=1 router's 0.24, while plain IVF nProbe=16 reads 0.80
@@ -198,7 +198,7 @@ object GraphAnn {
     * node's top-k stays inside its cluster), so a scattered entry set
     * cannot reach clusters it didn't land in
     * (`frontier_graph_recall_milli_stride5000` = 0.000 on the
-    * BenchScale frontier corpus). Use [[searchSeeded]] with a cheap
+    * x20 frontier corpus). Use [[searchSeeded]] with a cheap
     * coarse router's shortlist (e.g. an nProbe=1 [[Ivf]] probe) as
     * seeds — the primary API. Stride entries are defensible only on
     * corpora verified to have small-world connectivity.
@@ -231,9 +231,9 @@ object GraphAnn {
     * reach clusters it didn't land in (recall ~0 measured; see
     * [[searchStrideEntries]]'s warning). Seed from a cheap coarse
     * router — e.g. an nProbe=1 IVF probe's shortlist as seeds, graph
-    * walk as the refinement stage (the two-layer shape BenchScale's
-    * `frontier_graph_*` rows price). Self-matches are dropped here,
-    * so routers may seed carelessly.
+    * walk as the refinement stage (the two-layer shape the x20
+    * run's `frontier_graph_*` rows price). Self-matches are dropped
+    * here, so routers may seed carelessly.
     */
   def searchSeeded(edges: DataFrame, corpus: DataFrame, queries: DataFrame,
                    idCol: String, k: Int, beam: Int, hops: Int,

@@ -136,7 +136,7 @@ object IncrementalAgg {
     MicroBatch.noAqe(spark) {
     // persisted: touched-partition discovery AND the merge both read
     // the partial (|keys-in-batch| rows) — without the persist each
-    // would rescan the raw batch (BenchScale's rollup_incremental_
+    // would rescan the raw batch (the x20 run's rollup_incremental_
     // mrows_read measured the fold at 2x batch before this)
     val partial = aggregateBatch(batch, keys, measures).persist()
     val root = new org.apache.hadoop.fs.Path(path)

@@ -29,8 +29,7 @@ import org.apache.spark.sql.types.LongType
   * |batch| to |dups| + fpp·|batch|, so for a mostly-novel batch the
   * shuffle all but disappears. Sizing: ~1.2 GB per 10^9 fingerprints
   * at 1% fpp; past that, the [[ShardedBloom]] family partitions the
-  * filter by fingerprint — [[dedupAgainstSharded]] for a broadcastable
-  * family built shard-locally, [[dedupAgainstShardedPath]] for the
+  * filter by fingerprint — [[dedupAgainstShardedPath]] for the
   * 10^10-fp regime where the family lives as per-shard files and is
   * never assembled in any single JVM — or simply raise fpp;
   * correctness never depends on it.
@@ -164,22 +163,6 @@ object IncrementalDedup {
       maxBroadcastProbe)
   }
 
-  /** [[dedupAgainstBloom]] with a broadcast [[ShardedBloom]] family as
-    * the router. Same exactness contract; the family's win is on the
-    * build/admit side (shard-local bitsets — see [[ShardedBloom]]) and
-    * its broadcast is the same total bytes as the monolithic filter.
-    * For a family too large to broadcast at all, use
-    * [[dedupAgainstShardedPath]].
-    */
-  def dedupAgainstSharded(batch: DataFrame, history: DataFrame, fpCol: String,
-                          family: ShardedBloom,
-                          maxBroadcastProbe: Long = 10000000L): DataFrame = {
-    val bc = batch.sparkSession.sparkContext.broadcast(family)
-    dedupRouted(batch, history, fpCol,
-      c => graft.functions.ShardedBloomMightContainLong.mightContain(c, bc),
-      maxBroadcastProbe)
-  }
-
   /** The >10^9-fingerprint route: the standing family lives as per-
     * shard FILES ([[ShardedBloom.buildToPath]]) and is never broadcast
     * or assembled — each task lazily loads just the shards its rows
@@ -205,31 +188,6 @@ object IncrementalDedup {
     dedupRouted(batch, history, fpCol,
       c => graft.functions.ShardedBloomPathProbe.mightContain(c, dir, diskShards),
       maxBroadcastProbe)
-  }
-
-  /** [[admit]] for a sharded family: same self-sized driver fold
-    * (`putLong` routes to the right shard); the corpus-sized fallback
-    * builds a second family with IDENTICAL per-shard sizing (so the
-    * per-shard merges are compatible by construction — no
-    * implementation mixing, see [[ShardedBloom]]) and merges it in.
-    */
-  def admitSharded(family: ShardedBloom, accepted: DataFrame, fpCol: String,
-                   driverFoldMax: Long = -1L): Unit = {
-    val foldMax =
-      if (driverFoldMax >= 0L) driverFoldMax
-      else math.max(family.bitSize / 64L, 1000000L)
-    val fps = accepted.select(col(fpCol).cast(LongType).as(fpCol)).na.drop()
-    val it = fps.toLocalIterator()
-    var n = 0L
-    while (it.hasNext && n <= foldMax) {
-      family.putLong(it.next().getLong(0))
-      n += 1
-    }
-    if (it.hasNext) {
-      family.mergeInPlace(ShardedBloom.build(fps, fpCol,
-        family.perShardItems * family.numShards, family.fpp, family.numShards))
-      ()
-    }
   }
 
   private def dedupRouted(batch: DataFrame, history: DataFrame, fpCol: String,

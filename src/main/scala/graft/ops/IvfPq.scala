@@ -39,7 +39,7 @@ import org.apache.spark.sql.types.LongType
   * `ei - centroid(cell)`, the textbook deployment, spending codebook
   * entries on within-cell structure instead of re-describing cell
   * positions — ships behind `Model.residual`. MEASURED
-  * (BENCH_SCALE_r12 `frontier_ivfpq_res_*`, content-addressed fits —
+  * (r12 x20 run, `frontier_ivfpq_res_*`, content-addressed fits —
   * run-stable): on the 2.56M x 64-dim clustered frontier corpus the
   * residual form tracks raw codes at low refine (recall@10 0.097 vs
   * 0.094 at np4/rf64) and falls BEHIND as the exact re-rank deepens
@@ -118,7 +118,7 @@ object IvfPq {
     * `opq = true` a coordinate permutation is fit first
     * ([[Pq.fitOpqPermutationEi]], one extra aggregation) and the
     * codebooks fit on the permuted vectors — MEASURED WORTH SHIPPING
-    * (BENCH_SCALE_r13 `frontier_ivfpq_opq_*`, same fixture and
+    * (r13 x20 run, `frontier_ivfpq_opq_*`, same fixture and
     * operating points as the raw/residual sweeps): recall@10 0.256
     * vs raw's 0.200 at np4/rf256, 0.216 vs 0.134 at np16/rf64 —
     * balancing per-subspace energy lifts the PQ memory tier at every

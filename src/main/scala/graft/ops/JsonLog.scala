@@ -16,8 +16,8 @@ final case class LogContext(jobName: String, runId: Long,
 object JsonLog {
 
   /** JSON string escape (backslash, quote, all control chars) — the
-    * single shared implementation; Bench and Verify's artifact lines
-    * use it too, so an escaping fix lands everywhere at once.
+    * single shared implementation; Verify's artifact lines use it
+    * too, so an escaping fix lands everywhere at once.
     */
   private[graft] def esc(s: String): String = s.flatMap {
     case '"' => "\\\""

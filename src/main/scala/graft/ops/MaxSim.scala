@@ -148,7 +148,7 @@ object MaxSim {
     * `multiProbe` > 0 additionally probes, per query token, that many
     * nearest-boundary neighbor buckets ([[probeBucketsCol]]) —
     * recall's rescue lever when the shortlist starves. MEASURED
-    * (BENCH_SCALE_r12 `maxsim_recall_milli_*` rows, recall@10 vs
+    * (r12 x20 run, `maxsim_recall_milli_*` rows, recall@10 vs
     * [[scoreExact]] ground truth on [[AnnEval.plantedTokenBags]] —
     * planted neighbors at controlled ANGULAR distance, nominal
     * cos θ 0.848 → 0.606, over 2.56M independent corpus tokens; the
@@ -187,7 +187,7 @@ object MaxSim {
     * large corpus fraction, so probe cost tracks the corpus nearly
     * linearly. Route m=2 bags here for the equal-recall saving, not
     * in the expectation that the gap widens with growth
-    * (`maxsim_*_m2_x2_*`, BENCH_SCALE_r14). Re-measure via the recall
+    * (`maxsim_*_m2_x2_*`, r14 x20 run). Re-measure via the recall
     * rows after changing either knob — the planted-angular fixture
     * fails loudly on regressions (the r11 fixture could not).
     */

@@ -6,10 +6,10 @@ import org.apache.spark.sql.SparkSession
   *
   * A streaming fold's inputs are bounded by construction — O(batch +
   * touched partitions), never table-scale — and its wall at streaming
-  * cadence is the per-batch JOB bill, not task time (ProbeJobs: with
-  * AQE every Exchange materializes as its own job plus a scheduler
-  * round-trip; the r16 probe priced the scd2 fold at 63 jobs/gate, 36
-  * with AQE off, job wall ~20-90 ms each at local[32]). AQE's actual
+  * cadence is the per-batch JOB bill, not task time (a job listener
+  * shows it: with AQE every Exchange materializes as its own job plus
+  * a scheduler round-trip; the r16 probe priced the scd2 fold at 63
+  * jobs/gate, 36 with AQE off, job wall ~20-90 ms each at local[32]). AQE's actual
   * benefits — runtime skew splitting and partition coalescing — target
   * unbounded, estimate-hostile plans, which fold plans structurally
   * are not: their sizes are known-small every batch at ANY corpus

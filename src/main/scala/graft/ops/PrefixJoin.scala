@@ -68,9 +68,9 @@ import org.apache.spark.sql.functions._
   * sort, the prefix-token equi-join with the in-join filters above,
   * and exact verification on candidates only — no quadratic stage
   * anywhere. Residual candidate volume is output-class: pairs
-  * sharing a rare shingle at compatible lengths/ranks. The
-  * `*Candidates` entry points expose the generator so a pipeline (or
-  * BenchScale) can price candidate volume explicitly.
+  * sharing a rare shingle at compatible lengths/ranks.
+  * [[selfJoinCandidates]] exposes the generator so a pipeline can
+  * price candidate volume explicitly.
   *
   * All arithmetic is exact-integer (milli thresholds, floor-division
   * Jaccard) so results replay bit-for-bit in any engine.
@@ -239,19 +239,6 @@ object PrefixJoin {
     val sh = shingleSets(docs, idCol, textCol, shingleWidth)
     verifyJaccardFrom(sh, idCol,
       jaccardCandidatesFrom(sh, idCol, minJaccardMilli), minJaccardMilli)
-  }
-
-  /** Candidate pairs for the containment join — the lossless
-    * generator [[containmentSelfJoin]] verifies, exposed for
-    * candidate-volume pricing. Columns: doc_a, doc_b.
-    */
-  def containmentCandidates(docs: DataFrame, idCol: String, textCol: String,
-                            shingleWidth: Int,
-                            minContainMilli: Long): DataFrame = {
-    require(minContainMilli >= 1 && minContainMilli <= 1000,
-      s"minContainMilli must be in [1, 1000] (got $minContainMilli)")
-    containCandidatesFrom(shingleSets(docs, idCol, textCol, shingleWidth),
-      idCol, minContainMilli)
   }
 
   /** Exact CONTAINMENT self-join: every DIRECTED pair (doc_a, doc_b)

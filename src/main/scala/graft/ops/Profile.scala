@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * Aggregate (the multi-count-distinct lowers to one Expand +
   * HashAggregate), then the single wide row is reshaped to one row
   * per column with `stack` — no per-column scans, no driver loops.
-  * Measured either way at 8 columns x 12M rows (BenchScale
-  * profile_onepass / profile_grouped): one-pass 4.2 s vs grouped
+  * Measured either way at 8 columns x 12M rows (x20 run
+  * rows profile_onepass / profile_grouped): one-pass 4.2 s vs grouped
   * 11.8 s with healthy executor memory — the Expand's extra rows are
   * cheaper than re-scanning — but the ranking INVERTS under memory
   * pressure (grouped 7.6 s vs one-pass 35 s on a page-cache-starved
@@ -51,7 +51,7 @@ object Profile {
     * vs n·(cols+1)) and one-pass wins with healthy memory, but each
     * grouped aggregate's hash state is a fraction of the one-pass
     * giant — the measured winner only under memory pressure (see
-    * object scaladoc; BenchScale carries both rows).
+    * object scaladoc for both measurements).
     */
   def profileNumericGrouped(df: DataFrame, cols: Seq[String],
                             groupSize: Int = 2): DataFrame =

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * speculative execution); the small side is replicated `saltFactor`
   * ways. Join fans the hot key across `saltFactor` tasks.
   *
-  * When to use — measured (BenchScale r10 `skew_hotkey_*` rows: half
+  * When to use — measured (r10 x20 run, `skew_hotkey_*` rows: half
   * of a 12M-row fact carrying an incompressible 128 B payload
   * collapses onto ONE key of a 3M-row dim, broadcast pinned off):
   *

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import java.io.FileNotFoundException
 import java.time.LocalDateTime
 import scala.util.{Failure, Success, Try}
 
@@ -62,9 +63,15 @@ class HistoryLoad(spark: SparkSession, config: PipelineConfig,
       RowHash.rowHash(cols).as("row_hash_code"): _*)
   }
 
+  /** Load one table; a missing source fails here, on the driver, with
+    * a message naming the table and its path, before any Spark job or
+    * SQL execution starts.
+    */
   def processTable(table: String): Long = {
     val path = s"${config.sourceDir}/$table.parquet"
-    val reader = ParquetFooter.schema(spark, path).fold(spark.read)(spark.read.schema)
+    val schema = ParquetFooter.ifExists(spark, path).getOrElse(
+      throw new FileNotFoundException(s"table '$table': source $path does not exist"))
+    val reader = schema.fold(spark.read)(spark.read.schema)
     PartitionedSink.writeDatePartitioned(transform(reader.parquet(path)),
       config.targetDir, table, now)
   }

@@ -22,7 +22,7 @@ package object queries {
 
   /** The events fixture stores `ts` as parquet TIMESTAMP(NANOS), which
     * Spark only reads as a raw long (spark.sql.legacy.parquet.nanosAsLong,
-    * set in GraftSession/Verify/Bench). Convert ns -> µs by integer
+    * set in GraftSession). Convert ns -> µs by integer
     * division — the same truncation DuckDB applies on read, so both
     * engines see identical microsecond timestamps.
     */

@@ -27,19 +27,27 @@ object ParquetFooter {
     * subdirectories (a partitioned layout, whose partition columns
     * only the reader's own discovery can supply).
     */
-  def schema(spark: SparkSession, path: String): Option[StructType] = {
+  def schema(spark: SparkSession, path: String): Option[StructType] =
+    ifExists(spark, path).flatten
+
+  /** [[schema]] of an existing `path`, or None when `path` does not
+    * exist: the same one listing tells a missing source from a
+    * partitioned or empty one, so a caller can fail on the driver
+    * before Spark plans a read.
+    */
+  def ifExists(spark: SparkSession, path: String): Option[Option[StructType]] = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
     if (!fs.exists(root)) return None
     def data(s: FileStatus) = !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")
     val (dirs, files) = fs.listStatus(root).filter(data).partition(_.isDirectory)
-    if (dirs.nonEmpty || files.isEmpty) return None
+    if (dirs.nonEmpty || files.isEmpty) return Some(None)
     val first = files.map(_.getPath).minBy(_.getName)
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(first, conf))
     val footer = try reader.getFooter finally reader.close()
     val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
-    Some(SparkBridge.asNullable(
-      ParquetFileFormat.readSchemaFromFooter(new Footer(first, footer), converter)))
+    Some(Some(SparkBridge.asNullable(
+      ParquetFileFormat.readSchemaFromFooter(new Footer(first, footer), converter))))
   }
 }

@@ -117,7 +117,7 @@ object MaxSimStream {
     // See graft.ops.MicroBatch.
     graft.ops.MicroBatch.noAqe(spark) {
     // labeled actions (guide §1.5): the per-batch job bill is the
-    // streaming cost model — make it attributable (UI + ProbeJobs)
+    // streaming cost model — make it attributable (UI + job listeners)
     def labeled[T](step: String)(f: => T): T = {
       spark.sparkContext.setJobDescription(s"maxsim[$batchId]: $step")
       try f finally spark.sparkContext.setJobDescription(null)

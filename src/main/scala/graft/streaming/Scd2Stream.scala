@@ -101,7 +101,7 @@ object Scd2Stream {
     graft.ops.MicroBatch.noAqe(spark) {
     // labeled actions (guide §1.5): the fold runs a handful of jobs
     // per micro-batch and the job bill IS the streaming cost model —
-    // labels make it attributable in the UI and in tools/ProbeJobs
+    // labels make it attributable in the UI and to job listeners
     def labeled[T](step: String)(f: => T): T = {
       spark.sparkContext.setJobDescription(s"scd2[$batchId]: $step")
       try f finally spark.sparkContext.setJobDescription(null)

@@ -71,7 +71,7 @@ object SegmentDedupStream {
     // NOT wrapped in MicroBatch.noAqe — its per-batch work (text
     // segmentation + a window over every segment + the store
     // anti-join) is compute-heavy rather than fixed-bill, and the
-    // A/B measured AQE-on faster (BenchOne min 3.85 s vs 4.28 s).
+    // A/B measured AQE-on faster (min of two runs, 3.85 s vs 4.28 s).
     // The single-file appends below are kept either way: they bound
     // the store's file count at any scale.
     val segs = SegmentDedup.segments(batch, idCol, textCol, segTokens)

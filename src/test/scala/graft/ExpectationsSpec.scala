@@ -66,54 +66,6 @@ class ExpectationsSpec extends SparkSpec {
     assert(clean.head._6, clean.toString)
   }
 
-  test("streaming twin: cumulative verdicts equal the batch suite over the concatenation") {
-    val rules = Seq(
-      NotNull("o_orderpriority"), NotNull("o_custkey"),
-      InRange("o_totalprice", 0.0, 300000.0),
-      InSet("o_orderstatus", Seq("O", "F", "P")),
-      RowCount(50000L, 100000000L)) // below the fixture's total until all batches land
-    val dir = java.nio.file.Files.createTempDirectory("graft_exp_stream")
-    val src = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-
-    val se = new graft.streaming.StreamingExpectations(rules)
-    // fold three disjoint "micro-batches" and compare against the
-    // batch evaluator over their union after each fold
-    val batches = Seq(
-      src.where(col("o_orderkey") % 3 === 0),
-      src.where(col("o_orderkey") % 3 === 1),
-      src.where(col("o_orderkey") % 3 === 2))
-    var sofar: org.apache.spark.sql.DataFrame = null
-    batches.foreach { b =>
-      se.addBatch(b)
-      sofar = if (sofar == null) b else sofar.unionAll(b)
-      val want = Expectations.evaluate(sofar, rules)
-        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
-          r.getLong(3), r.getLong(4), r.getBoolean(5))).toSet
-      val got = se.report().map(v => (v.rule, v.colName, v.nViolations,
-        v.metricMilli, v.thresholdMilli, v.pass)).toSet
-      assert(got == want, s"after ${sofar.count()} rows")
-    }
-    // RowCount flipped only once the cumulative total crossed the bound
-    assert(se.report().exists(v => v.rule == "row_count"))
-
-    // wired to a real file stream, same verdicts
-    Seq("a", "b", "c").zip(batches).foreach { case (nm, b) =>
-      b.coalesce(1).write.parquet(dir.resolve(s"p_$nm").toString)
-    }
-    val stream = spark.readStream.schema(src.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString + "/p_*")
-    val se2 = new graft.streaming.StreamingExpectations(rules)
-    val q = se2.attach(stream)
-    try q.processAllAvailable() finally q.stop()
-    assert(se2.report().toSet == se.report().toSet)
-
-    // cross-batch uniqueness is not a mergeable count — rejected
-    intercept[IllegalArgumentException] {
-      new graft.streaming.StreamingExpectations(Seq(Unique(Seq("o_orderkey"))))
-    }
-    spark.catalog.clearCache()
-  }
-
   test("the whole single-table suite is ONE scan (no per-rule passes)") {
     val df = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     val plan = Expectations.evaluate(df, Seq(

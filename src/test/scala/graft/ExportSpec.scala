@@ -60,24 +60,6 @@ class ExportSpec extends SparkSpec {
     }
   }
 
-  test("writeEpoch: shard dirs on disk, in-file order is the stream order") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_export").toString
-    val assigned = Export.epochShards(docs(200), "doc_id", 1, 4)
-    Export.writeEpoch(assigned, s"$tmp/epoch1")
-    val back = spark.read.parquet(s"$tmp/epoch1")
-    assert(back.select("shard").distinct().count() == 4)
-    assert(back.count() == 200)
-    // within a shard file, rows must already be in pos order
-    import org.apache.spark.sql.expressions.Window
-    val disorder = back
-      .withColumn("file", input_file_name())
-      .withColumn("seq", monotonically_increasing_id())
-      .withColumn("prev", lag("pos", 1).over(
-        Window.partitionBy("file").orderBy("seq")))
-      .where(col("prev").isNotNull && col("pos") <= col("prev"))
-    assert(disorder.count() == 0)
-  }
-
   test("plan: the whole epoch assignment is ONE hash shuffle") {
     val plan = Export.epochShards(docs(100), "doc_id", 1, 8)
       .queryExecution.executedPlan.toString

@@ -59,27 +59,4 @@ class KllSpec extends SparkSpec {
     assert(org.apache.datasketches.kll.KllDoublesSketch
       .heapify(org.apache.datasketches.memory.Memory.wrap(sk)).getN == 2)
   }
-
-  test("streaming twin: cumulative sketch sees every row across micro-batches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kll_stream")
-    Seq("a", "b").foreach { n =>
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get("/root/testdata/sf0.001/lineitem.parquet"),
-        dir.resolve(s"li_$n.parquet"))
-    }
-    val schema = spark.read
-      .parquet("/root/testdata/sf0.001/lineitem.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .select(col("l_extendedprice").as("v"))
-    val sq = new graft.streaming.StreamingQuantiles("v")
-    val q = sq.attach(stream)
-    try q.processAllAvailable() finally q.stop()
-
-    val xs = spark.read.parquet(dir.toString)
-      .select("l_extendedprice").as[Double].collect().toSeq
-    assert(sq.count == xs.size) // weight-linear: both copies counted
-    val est = sq.quantile(0.5)
-    assert(est >= exactQ(xs, 0.47) && est <= exactQ(xs, 0.53))
-  }
 }

@@ -2,9 +2,14 @@ package graft
 
 import java.nio.file.Files
 import java.time.LocalDateTime
+import java.util.concurrent.atomic.AtomicInteger
+import scala.util.Try
 
 import graft.pipeline.{Config, HistoryLoad, PipelineConfig, TableConfig}
 import graft.sources.{JdbcSource, PartitionedSink}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.graft.SparkBridge
 
 class ConfigSpec extends org.scalatest.funsuite.AnyFunSuite {
 
@@ -135,9 +140,27 @@ class PipelineSpec extends SparkSpec {
     val hl = new HistoryLoad(spark,
       cfg("/root/testdata/sf0.001", out,
         Seq(TableConfig("nosuchtable", "T"), TableConfig("nation", "T"))))
+    // the missing source fails on the driver: no SQL execution starts
+    val sc = spark.sparkContext
+    val sqlStarts = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => sqlStarts.incrementAndGet(); ()
+        case _ => ()
+      }
+    }
+    SparkBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    val missing = Try(hl.processTable("nosuchtable"))
+    try SparkBridge.drainListenerBus(sc) finally sc.removeSparkListener(listener)
+    assert(sqlStarts.get == 0)
+    assert(missing.isFailure)
     val report = hl.process()
     assert(report.succeeded == Seq("nation"))
     assert(report.failed.map(_._1) == Seq("nosuchtable"))
+    val msg = report.failed.head._2
+    assert(msg.contains("'nosuchtable'") &&
+      msg.contains("/root/testdata/sf0.001/nosuchtable.parquet"), msg)
     // every active table is timed, the failed one too
     assert(report.wallMs.keySet == Set("nosuchtable", "nation"))
     assert(report.wallMs.values.forall(_ >= 0) && report.wallMs("nation") > 0)

@@ -6,9 +6,8 @@ import graft.ops.{Contamination, IncrementalDedup, ShardedBloom, ShardedBloomFil
 import org.apache.spark.sql.functions._
 
 /** The sharded standing-bloom family: equivalence with the monolithic
-  * filter at any shard count, across every probe path (in-memory,
-  * broadcast expression, file-backed), plus the admit fold and the
-  * sharded survivor filter in gramDocFrequency.
+  * filter at any shard count, across the in-memory and file-backed
+  * probe paths, plus the sharded survivor filter in gramDocFrequency.
   */
 class ShardedBloomSpec extends SparkSpec {
   import spark.implicits._
@@ -32,17 +31,6 @@ class ShardedBloomSpec extends SparkSpec {
     }
   }
 
-  test("dedupAgainstSharded equals the plain anti-join at any shard count") {
-    val expected = batch.join(hist, Seq("fp"), "left_anti")
-      .select("key", "fp").orderBy("fp").collect().toSeq
-    for (n <- Seq(1, 3, 8)) {
-      val family = ShardedBloom.build(hist, "fp", 5000L, 0.01, n)
-      val got = IncrementalDedup.dedupAgainstSharded(batch, hist, "fp", family)
-        .select("key", "fp").orderBy("fp").collect().toSeq
-      assert(got == expected, s"numShards=$n")
-    }
-  }
-
   test("file-backed family: buildToPath + path probe equal the anti-join") {
     val dir = Files.createTempDirectory("sharded_bloom").toString + "/epoch1"
     ShardedBloom.buildToPath(hist, "fp", 5000L, dir, 0.01, numShards = 4)
@@ -63,25 +51,6 @@ class ShardedBloomSpec extends SparkSpec {
     val probes = (hist.as[Long].collect() ++ (1L to 2000L))
     assert(probes.forall(fp =>
       family.mightContainLong(fp) == loaded.mightContainLong(fp)))
-  }
-
-  test("admitSharded: driver fold and distributed fallback both make re-ingest empty") {
-    // driverFoldMax=0 forces the distributed per-shard merge (compatible
-    // by construction); the default takes the driver fold — both must
-    // leave the family answering 'maybe' for every admitted fp
-    for (foldMax <- Seq(-1L, 0L)) {
-      val family = ShardedBloom.build(hist, "fp", 5000L, 0.01, numShards = 4)
-      val kept = IncrementalDedup.dedupAgainstSharded(batch, hist, "fp", family)
-      IncrementalDedup.admitSharded(family, kept.select("fp"), "fp",
-        driverFoldMax = foldMax)
-      val keptFps = kept.select("fp").as[Long].collect()
-      assert(keptFps.forall(family.mightContainLong), s"foldMax=$foldMax")
-      // the grown history (epoch + admitted batch) now rejects a re-sent
-      // copy of the same batch entirely
-      val grownHist = hist.select("fp").unionByName(kept.select("fp"))
-      assert(IncrementalDedup.dedupAgainstSharded(batch, grownHist, "fp", family)
-        .count() == 0L, s"foldMax=$foldMax")
-    }
   }
 
   test("saturation cadence: healthy tick touches nothing; a saturated family rotates to an epoch that equals a fresh build") {

@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.{EventsStream, StatefulSessions}
-import graft.functions.MomentsAggregator
 import org.apache.spark.sql.functions._
 
 class StatefulSessionsSpec extends SparkSpec {
@@ -35,38 +34,5 @@ class StatefulSessionsSpec extends SparkSpec {
         batchClosed.exceptAll(streamedCmp).isEmpty)
       assert(streamed.count() > 0)
     } finally q.stop()
-  }
-}
-
-class MomentsAggregatorSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("typed Aggregator variance matches the exact decimal formulation") {
-    val vals = Seq(1.25, 2.50, 3.75, 10.00, 4.25)
-    val ds = vals.toDS()
-    val out = ds.select(MomentsAggregator.centMoments.toColumn).head()
-    val n = vals.size
-    val s1 = vals.sum
-    val s2 = vals.map(v => v * v).sum
-    assert(out.n == n)
-    assert(math.abs(out.mean - s1 / n) < 1e-12)
-    assert(math.abs(out.variance - (s2 - s1 * s1 / n) / (n - 1)) < 1e-9)
-  }
-
-  test("Aggregator works grouped over the fixture") {
-    val li = Tables(spark, "/root/testdata/sf0.001", "lineitem")
-    val grouped = li.select(col("l_returnflag"), col("l_quantity"))
-      .as[(String, Double)]
-      .groupByKey(_._1)
-      .agg(MomentsAggregator.centMomentsOf[(String, Double)](_._2).toColumn)
-      .collect().toMap
-    // cross-check against q58's exact-decimal variance
-    val oracle = SparkEntry.queries("q58_exact_moments")(
-      spark, "/root/testdata/sf0.001")
-      .select("l_returnflag", "var_qty").as[(String, Double)].collect().toMap
-    oracle.foreach { case (flag, varExp) =>
-      assert(math.abs(grouped(flag).variance - varExp) < 1e-6,
-        s"flag $flag: ${grouped(flag).variance} vs $varExp")
-    }
   }
 }
