@@ -50,44 +50,3 @@ object BloomMightContainLong {
   def mightContain(c: Column, bloom: Broadcast[BloomFilter]): Column =
     ColumnBridge.column(BloomMightContainLong(ColumnBridge.expression(c), bloom))
 }
-
-/** File-backed sharded probe: no broadcast AT ALL — each task resolves
-  * the shards its rows route to from the executor-wide
-  * [[graft.ops.ShardedBloomFiles]] cache (one load per shard per JVM).
-  * This is the >10^9-fingerprint path: the family exists only as N
-  * files ([[graft.ops.ShardedBloom.buildToPath]]), never assembled in
-  * any single JVM; a multi-GB standing filter costs each executor only
-  * the shards it actually touches. `dir` is an immutable epoch by
-  * contract.
-  */
-case class ShardedBloomPathProbe(child: Expression, dir: String,
-                                 numShards: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = BooleanType
-
-  @transient private lazy val handle =
-    new graft.ops.ShardedBloomPathHandle(dir, numShards)
-
-  override def nullSafeEval(input: Any): Any =
-    handle.mightContain(input.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val hClass = classOf[graft.ops.ShardedBloomPathHandle].getName
-    val dirRef = ctx.addReferenceObj("shardDir", dir, "java.lang.String")
-    val local = ctx.addMutableState(hClass, "shardedBloomHandle",
-      v => s"$v = new $hClass($dirRef, $numShards);")
-    defineCodeGen(ctx, ev, c => s"$local.mightContain($c)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): ShardedBloomPathProbe =
-    copy(child = newChild)
-}
-
-object ShardedBloomPathProbe {
-
-  /** Column API: true iff the file-backed family may contain the value. */
-  def mightContain(c: Column, dir: String, numShards: Int): Column =
-    ColumnBridge.column(
-      ShardedBloomPathProbe(ColumnBridge.expression(c), dir, numShards))
-}

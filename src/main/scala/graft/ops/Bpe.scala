@@ -314,8 +314,7 @@ object Bpe {
   // one join — [[encodeCounts]]); `merges` is the cold path for words
   // the vocabulary has never seen ([[segmentWords]]); `meta` anchors
   // the retrain cadence: [[countShift]] = live vocab mass vs mass at
-  // train time, the drift signal [[maintain]] trips on (the
-  // [[Ivf.maintain]] shape).
+  // train time, the drift signal [[maintain]] trips on.
   // ---------------------------------------------------------------
 
   /** Persist a trained model at `path` (see layout above). `ord` is

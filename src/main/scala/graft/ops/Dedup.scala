@@ -195,29 +195,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Star edges for the buckets [[lshCandidatePairs]] DROPS (size >
-    * `maxBucketSize`): min id -> every other member, n-1 edges. The
-    * pair expansion caps oversized buckets because C(n,2) pairs from a
-    * boilerplate flood are quadratic — but silently admitting the
-    * flood is worse (every member enters the clean corpus and collides
-    * with every later batch). Stars keep the cost linear in the bucket
-    * while still surfacing every member for downstream verification /
-    * quarantine against the bucket's keeper.
-    */
-  def lshOversizedBucketEdges(sig: DataFrame, idCol: String,
-                              bands: Int, rowsPerBand: Int,
-                              maxBucketSize: Int): DataFrame = {
-    val exploded = bandKeys(sig, idCol, bands, rowsPerBand)
-    exploded.groupBy("band", "bandsig")
-      .agg(array_sort(collect_list(col(idCol))).as("ids"))
-      .where(size(col("ids")) > maxBucketSize)
-      .select(explode(expr(
-        "transform(slice(ids, 2, size(ids) - 1), y -> struct(element_at(ids, 1) AS a, y AS b))"))
-        .as("p"))
-      .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
-      .distinct()
-  }
-
   /** WEIGHTED MinHash: Jaccard over token MULTISETS (tf-weighted),
     * via exact repetition expansion — token t with frequency w
     * contributes elements t#1..t#w, and MinHash over that expanded
@@ -288,31 +265,7 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("n_common"), col("jaccard_milli"))
   }
 
-  /** SHUFFLED twin of [[verifyCandidatePairs]] for candidate sets
-    * with no smallness contract — the lossless prefix-filter joins
-    * ([[PrefixJoin]]), whose candidate volume is input-dependent and
-    * can exceed what a driver can broadcast (the hinted variant
-    * OOMs the broadcast build past a few million pairs; measured at
-    * the 20x gram corpus). Same semantics, same in-row exact
-    * verification; both joins shuffle on the doc-id key, which
-    * scales with the candidate set instead of driver memory.
-    */
-  def verifyCandidatePairsShuffled(corpus: DataFrame, idCol: String,
-                                   textCol: String, pairs: DataFrame,
-                                   shingleWidth: Int,
-                                   minJaccardMilli: Long): DataFrame = {
-    val sh = shingleSets(corpus, idCol, textCol, shingleWidth)
-    pairs
-      .join(sh.select(col(idCol).as("doc_a"), col("shs").as("sa")), "doc_a")
-      .join(sh.select(col(idCol).as("doc_b"), col("shs").as("sb")), "doc_b")
-      .withColumn("n_common", size(array_intersect(col("sa"), col("sb"))).cast("long"))
-      .withColumn("jaccard_milli",
-        expr("n_common * 1000 DIV (size(sa) + size(sb) - n_common)"))
-      .where(col("jaccard_milli") >= minJaccardMilli)
-      .select(col("doc_a"), col("doc_b"), col("n_common"), col("jaccard_milli"))
-  }
-
-  /** Distinct shingle sets per doc (shared by the verify variants). */
+  /** Distinct shingle sets per doc. */
   private def shingleSets(corpus: DataFrame, idCol: String, textCol: String,
                           shingleWidth: Int): DataFrame =
     corpus
@@ -321,16 +274,14 @@ object Dedup {
       .select(col(idCol),
         expr(s"array_distinct(${shingleExpr(shingleWidth)})").as("shs"))
 
-  /** Per-document quarantine verdict over verified candidates: the
-    * decision [[graft.streaming.NearDupStream]] makes per micro-batch,
-    * factored out so the batch oracle (q106) checks the SAME logic the
-    * stream executes. A candidate doc (`doc_b` side — in-batch pairs
-    * come ordered a < b, cross-batch pairs put the incumbent corpus
-    * doc on the a side) is quarantined iff at least one of its
-    * candidate pairs passes exact-Jaccard verification at
-    * `minJaccardMilli`. Evidence per verdict: how many verified
-    * collisions, the smallest colliding id (the keeper it lost to),
-    * and the strongest Jaccard.
+  /** Per-document quarantine verdict over verified candidates — the
+    * destructive decision of near-dup curation, taken only on exact
+    * evidence (q106). A candidate doc (`doc_b` side — bucket pairs
+    * come ordered a < b, so the lower id is the keeper) is
+    * quarantined iff at least one of its candidate pairs passes
+    * exact-Jaccard verification at `minJaccardMilli`. Evidence per
+    * verdict: how many verified collisions, the smallest colliding id
+    * (the keeper it lost to), and the strongest Jaccard.
     */
   def verifiedQuarantine(corpus: DataFrame, idCol: String, textCol: String,
                          candidates: DataFrame, shingleWidth: Int,

@@ -27,12 +27,8 @@ import org.apache.spark.util.sketch.BloomFilter
   *
   * Safety: pruning is only sound for files the sidecar covers. Files
   * present in the data but absent from the sidecar (appended since
-  * the last build/refresh) are ALWAYS candidates — a stale sidecar
-  * costs reads, never correctness. [[refresh]] builds blooms for
-  * exactly the uncovered files by scanning ONLY them (O(new data)).
-  * [[buildVersioned]]/[[refreshVersioned]] put the sidecar under the
-  * same [[Generations]] pointer-flip lifecycle as the other index
-  * families.
+  * the last build) are ALWAYS candidates — a stale sidecar costs
+  * reads, never correctness; [[build]] again to cover them.
   *
   * Keys are longs ([[LongMembership]] convention); hash strings
   * through `xxhash64` at the mouth, as the exact-dedup family does.
@@ -94,38 +90,6 @@ object FileBloomIndex {
       .mode("overwrite").parquet(sidecarPath)
   }
 
-  /** Extend the sidecar to cover files appended since it was built,
-    * scanning ONLY the uncovered files. No-op when coverage is
-    * complete. Returns the number of files indexed.
-    */
-  def refresh(spark: SparkSession, dataPath: String, keyCol: String,
-              sidecarPath: String, expectedPerFile: Long = 1L << 20,
-              fpp: Double = 0.01): Int = {
-    val missing = uncoveredFiles(spark, dataPath, sidecarPath)
-    if (missing.isEmpty) 0
-    else {
-      val newData = spark.read.option("basePath", dataPath)
-        .parquet(missing.toIndexedSeq: _*)
-      val rows = bloomRows(newData, keyCol, expectedPerFile, fpp)
-      spark.createDataFrame(rows, sidecarSchema).write
-        .mode("append").parquet(sidecarPath)
-      missing.length
-    }
-  }
-
-  /** Data files not covered by the sidecar — appended since the last
-    * build/refresh. These can never be pruned ([[candidateFiles]]
-    * always includes them), so a stale sidecar degrades to extra
-    * reads, never to a missed row.
-    */
-  def uncoveredFiles(spark: SparkSession, dataPath: String,
-                     sidecarPath: String): Array[String] = {
-    val dataFiles = spark.read.parquet(dataPath).inputFiles
-    val covered = spark.read.parquet(sidecarPath)
-      .select("file").collect().map(_.getString(0)).toSet
-    dataFiles.filterNot(covered)
-  }
-
   /** Files that might contain ANY of `values`: sidecar-pruned covered
     * files plus every uncovered file. ONE distributed pass over the
     * sidecar yields both the probe survivors and the coverage set
@@ -163,27 +127,4 @@ object FileBloomIndex {
         .parquet(files: _*)
         .where(col(keyCol).cast(LongType).isin(values: _*))
   }
-
-  /** Versioned lifecycle: build into a fresh generation under
-    * `sidecarRoot` and flip the pointer; readers of the superseded
-    * generation finish undisturbed, [[Generations.prune]] retires it.
-    */
-  def buildVersioned(spark: SparkSession, dataPath: String, keyCol: String,
-                     sidecarRoot: String, expectedPerFile: Long = 1L << 20,
-                     fpp: Double = 0.01): String = {
-    val next = Generations.nextPath(spark, sidecarRoot)
-    build(spark, dataPath, keyCol, next, expectedPerFile, fpp)
-    Generations.publish(spark, sidecarRoot, next)
-    next
-  }
-
-  /** Refresh the LIVE generation in place — additive file commits
-    * only (new sidecar rows), the same discipline as the other
-    * families' `appendIndex`.
-    */
-  def refreshVersioned(spark: SparkSession, dataPath: String, keyCol: String,
-                       sidecarRoot: String, expectedPerFile: Long = 1L << 20,
-                       fpp: Double = 0.01): Int =
-    refresh(spark, dataPath, keyCol,
-      Generations.livePath(spark, sidecarRoot), expectedPerFile, fpp)
 }

@@ -3,10 +3,11 @@ package graft.ops
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Catalog-pointer generation discipline for on-disk index roots —
-  * the atomic-swap shape [[Ivf.maintain]]'s and
-  * [[ShardedBloom.maintainEpoch]]'s scaladocs prescribe for
-  * production and stand in for with delete+rename.
+/** Catalog-pointer generation discipline for on-disk index roots: a
+  * rebuild lands in a new directory and becomes visible by one atomic
+  * pointer flip, never by delete+rename over live files. Writers:
+  * [[MaxSim.writeIndexVersioned]] (and its staging area and
+  * compaction), [[Bpe.writeModelVersioned]] and [[Bpe.refresh]].
   *
   * Layout under one root directory:
   * {{{
@@ -44,16 +45,15 @@ import org.apache.spark.sql.SparkSession
   * safely after the flip, because superseded generations are immutable
   * and [[prune]] never deletes the live one (callers prune with a keep
   * window covering their longest-running reader). The LIVE generation
-  * is not fully immutable: the sanctioned lifecycles may append to it
-  * (`Ivf.appendIndex`, `LshIndex.append`), and those appends are
-  * additive file commits — a reader of the live generation sees a
-  * complete index as of some append, never a torn file.
+  * is not fully immutable: a sanctioned lifecycle may append to it
+  * (MaxSim's staging fold), and those appends are additive file
+  * commits — a reader of the live generation sees a complete index as
+  * of some append, never a torn file.
   *
-  * This closes the one documented atomicity gap in the maintain
-  * loops: `Ivf.checkedSwap` deletes the live dir before renaming the
-  * rebuild over it, so a reader that listed files pre-swap can hit
-  * FileNotFound mid-probe. Under a generation root, rebuild lands in
-  * a NEW dir and the flip is pointer-only.
+  * A swap by delete+rename has an atomicity gap: a reader that listed
+  * files before the swap can hit FileNotFound mid-probe. Under a
+  * generation root, a rebuild lands in a NEW dir and the flip is
+  * pointer-only.
   *
   * At 100 TB nothing here scales with data: resolve is one small
   * directory listing per query plan (not per task), publish is one
@@ -61,8 +61,8 @@ import org.apache.spark.sql.SparkSession
   * pointer reaches.
   *
   * Concurrency contract: readers unlimited, ONE maintainer at a time
-  * — the same single-cadence-owner assumption every maintain loop in
-  * this package already carries. Two concurrent builders would race
+  * — the same single-cadence-owner assumption MaxSim's maintain
+  * cadence carries. Two concurrent builders would race
   * the same next-generation directory; serialize rotation through
   * whatever owns the cadence (a scheduler slot, a lock service).
   */
@@ -91,7 +91,7 @@ object Generations {
   private val ObjectStoreSchemes =
     Set("s3", "s3a", "s3n", "gs", "oss", "cos", "obs", "swift", "wasb", "abfs", "abfss")
 
-  private[ops] def genName(n: Long): String = f"$GenPrefix$n%06d"
+  private def genName(n: Long): String = f"$GenPrefix$n%06d"
 
   private def fcFor(p: Path, spark: SparkSession): FileContext =
     FileContext.getFileContext(
@@ -281,12 +281,9 @@ object Generations {
     * manifest log is trimmed to its `keep` newest entries (the head
     * entry — the one resolution uses — is never deleted).
     *
-    * Caveat: the window counts generation NUMBERS, so a
-    * committed-but-never-published generation left by a crashed
-    * rotation (skipped forward over, see ShardedBloom) occupies one
-    * slot and shortens the previous live generation's grace by one
-    * flip. If rotations crash often enough for that to matter, raise
-    * `keep`.
+    * Caveat: the window counts generation NUMBERS, so a generation
+    * directory left by a crashed build that was never published
+    * occupies one slot until a retry rebuilds over it.
     */
   def prune(spark: SparkSession, root: String, keep: Int = 2): Unit = {
     require(keep >= 1, "keep must be >= 1")

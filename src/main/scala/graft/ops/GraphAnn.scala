@@ -31,9 +31,7 @@ import org.apache.spark.sql.types.LongType
   * rounds of one equi-join + one window each; per query the pool
   * grows by <= beam*k rows per hop, so a million-query batch stays a
   * narrow frame. At 100 TB the adjacency shuffles ONCE per hop against
-  * a frontier of Q*beam rows; stored bucket-partitioned (the
-  * InvertedIndex discipline) the hop reads only the frontier's
-  * buckets.
+  * a frontier of Q*beam rows.
   *
   * Exactness/determinism contract (the q171 oracle): all similarity
   * math is exact-integer micro-cosine over quantized embeddings
@@ -65,10 +63,7 @@ import org.apache.spark.sql.types.LongType
   * top-k is intra-cluster), so the beam walk can never leave the
   * clusters its seeds landed in — recall is ceilinged by router
   * coverage, and the walk only re-ranks what IVF's exact distances
-  * already rank exactly. Appends share the verdict: even
-  * router-seeded, a 1% batch costs ~54% of a from-scratch build
-  * (`frontier_graph_append_1pct_routed`), because a random batch
-  * touches every storage bucket and the rewrite dominates. Use
+  * already rank exactly. Use
   * [[Ivf]] / [[IvfPq]] (+ refine) for production ANN; reach for this
   * family only on corpora VERIFIED to have small-world connectivity
   * (long-range links a graph can exploit), and measure recall on the
@@ -311,221 +306,6 @@ object GraphAnn {
         col("sim_micro"))
     adj.unpersist(); c.unpersist()
     out
-  }
-
-  // ---------------------------------------------------------------
-  // Persisted index lifecycle — the [[Ivf]]/[[LshIndex]] discipline
-  // applied to the graph: hive-partitioned storage, O(batch) appends
-  // that rewrite only touched partitions, a one-aggregation health
-  // probe, and a Generations-rooted rebuild cadence.
-  // ---------------------------------------------------------------
-
-  /** Stored-index schema: the directed top-k edge list
-    * (src, dst, sim_micro) plus `ins` (0 = NN-Descent build edge,
-    * 1 = insert-time edge — the health probe's signal), hive-
-    * partitioned by `bucket` = md5(src) % `buckets`. The bucket
-    * column exists for [[appendIndex]]'s touched-partition merge
-    * (an insert rewrites only the buckets whose src nodes it
-    * touches, O(batch) like [[graft.ops.IncrementalAgg]]), not for
-    * probe pruning — a beam search's frontier is data-dependent, so
-    * [[searchIndex]] reads the adjacency once and reuses it across
-    * hops.
-    */
-  private def withBucket(edges: DataFrame, buckets: Int): DataFrame =
-    edges.withColumn("bucket", (hash8(col("src")) % buckets).cast("int"))
-
-  /** Materialize an already-built edge list at `path` (see
-    * [[withBucket]] for the layout) — [[writeIndex]]'s storage half,
-    * public so a caller holding a [[buildGraph]] result (e.g. one it
-    * also searches in-memory) can persist it without rebuilding.
-    */
-  def writeEdges(edges: DataFrame, path: String, buckets: Int = 64): Unit =
-    withBucket(edges.select("src", "dst", "sim_micro")
-      .withColumn("ins", lit(0)), buckets)
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
-
-  /** Build the NN-Descent graph over `corpus` and materialize it at
-    * `path` (see [[withBucket]] for the layout). One-shot: prefer
-    * [[writeIndexVersioned]] in production so rebuilds are pointer
-    * flips.
-    */
-  def writeIndex(corpus: DataFrame, idCol: String, k: Int,
-                 initBuckets: Int, iterations: Int, path: String,
-                 buckets: Int = 64): Unit =
-    writeEdges(buildGraph(corpus, idCol, k, initBuckets, iterations),
-      path, buckets)
-
-  /** Stride-entry beam search over a materialized index — explicit
-    * opt-in with [[searchStrideEntries]]'s recall hazard (measured
-    * ~0 on clustered corpora); the primary stored-index probe is
-    * [[searchIndexSeeded]].
-    */
-  def searchIndexStrideEntries(spark: org.apache.spark.sql.SparkSession,
-                               path: String, corpus: DataFrame,
-                               queries: DataFrame, idCol: String, k: Int,
-                               beam: Int, hops: Int,
-                               entryStride: Int): DataFrame =
-    searchStrideEntries(
-      spark.read.parquet(path).select("src", "dst", "sim_micro"),
-      corpus, queries, idCol, k, beam, hops, entryStride)
-
-  /** [[searchSeeded]] over a materialized index — the two-layer
-    * (router + graph) deployment shape against stored state.
-    */
-  def searchIndexSeeded(spark: org.apache.spark.sql.SparkSession,
-                        path: String, corpus: DataFrame, queries: DataFrame,
-                        idCol: String, k: Int, beam: Int, hops: Int,
-                        seeds: DataFrame): DataFrame =
-    searchSeeded(spark.read.parquet(path).select("src", "dst", "sim_micro"),
-      corpus, queries, idCol, k, beam, hops, seeds)
-
-  /** Join-shaped insert — the HNSW insert loop without the sequential
-    * dependency. Each batch node finds its top-k neighbors by beam-
-    * searching the EXISTING graph from a caller-provided ROUTER seed
-    * set (`seeds` = (q_id, node) per batch row, e.g. an nProbe=1
-    * [[Ivf]] shortlist — the same seeding contract as
-    * [[searchSeeded]]; `corpus` must already contain the batch rows;
-    * neighbors can be prior nodes or other batch nodes that entered
-    * the walk); its edges AND the reverse edges then merge into the
-    * index under the same per-src bounded top-k the build uses, so
-    * (a) every node's out-degree stays <= k and (b) every touched
-    * node's k-th best similarity is monotonically nondecreasing — a
-    * reverse edge only displaces a worse edge (spec-pinned, the
-    * NN-Descent convergence handle carried over to inserts).
-    *
-    * Cost is O(batch): the search reads the adjacency once; the merge
-    * reads and dynamically overwrites ONLY the hive buckets holding a
-    * touched src ([[IncrementalAgg]]'s touched-partition discipline —
-    * untouched bucket files are never rewritten). What inserts cannot
-    * do is re-run the descent fixpoint for OLD nodes (an insert only
-    * offers them the new node, never new old-old pairs), so insert-
-    * heavy indexes drift from the from-scratch graph; [[insFraction]]
-    * probes that drift and [[maintain]] rebuilds past threshold.
-    */
-  def appendIndexSeeded(spark: org.apache.spark.sql.SparkSession,
-                        path: String, corpus: DataFrame, batch: DataFrame,
-                        idCol: String, k: Int, beam: Int, hops: Int,
-                        seeds: DataFrame, buckets: Int = 64): Unit =
-    mergeFound(spark, path,
-      searchIndexSeeded(spark, path, corpus, batch, idCol, k, beam, hops,
-        seeds), k, buckets)
-
-  /** [[appendIndexSeeded]] with stride entries seeding the insert
-    * batch's beam search — explicit opt-in carrying
-    * [[searchStrideEntries]]'s recall hazard: on clustered corpora a
-    * stride-seeded insert finds near-random "neighbors", so the
-    * inserted nodes' edges are junk and the O(batch) promise buys a
-    * degraded graph (measured: the r9 stride append cost 58% of a
-    * full rebuild AND seeded from a mode whose probe recall is 0).
-    * Route inserts through a router shortlist instead.
-    */
-  def appendIndexStrideEntries(spark: org.apache.spark.sql.SparkSession,
-                               path: String, corpus: DataFrame,
-                               batch: DataFrame, idCol: String, k: Int,
-                               beam: Int, hops: Int, entryStride: Int,
-                               buckets: Int = 64): Unit =
-    mergeFound(spark, path,
-      searchIndexStrideEntries(spark, path, corpus, batch, idCol, k, beam,
-        hops, entryStride), k, buckets)
-
-  /** Shared insert-merge tail: fold a batch search result's forward +
-    * reverse edges into the stored index under the per-src bounded
-    * top-k, rewriting only touched hive buckets.
-    */
-  private def mergeFound(spark: org.apache.spark.sql.SparkSession,
-                         path: String, found: DataFrame, k: Int,
-                         buckets: Int): Unit = {
-    val fwd = found.select(col("q_id").as("src"), col("vec_id").as("dst"),
-      col("sim_micro"))
-    val rev = found.select(col("vec_id").as("src"), col("q_id").as("dst"),
-      col("sim_micro"))
-    val newEdges = withBucket(
-      fwd.unionByName(rev).withColumn("ins", lit(1)), buckets).persist()
-    val touched = newEdges.select("bucket").distinct()
-      .collect().map(_.getInt(0)) // <= `buckets` values, KB-scale
-    val existing = spark.read.parquet(path)
-      .where(col("bucket").isin(touched.map(Integer.valueOf): _*))
-    // per-src bounded top-k over old ∪ new; ins survives as the MIN
-    // marker per kept edge (an edge present at build stays 0)
-    val w = Window.partitionBy("src")
-      .orderBy(col("sim_micro").desc, col("dst"), col("ins"))
-    val merged = existing.unionByName(newEdges)
-      // same (src,dst) can arrive from both sides — keep the best/oldest
-      .withColumn("rn0", row_number().over(
-        Window.partitionBy("src", "dst")
-          .orderBy(col("sim_micro").desc, col("ins"))))
-      .where(col("rn0") === 1).drop("rn0")
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k).drop("rn")
-      .select("src", "dst", "sim_micro", "ins", "bucket")
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.write.mode("overwrite").partitionBy("bucket").parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-    newEdges.unpersist()
-    ()
-  }
-
-  /** Health probe: the fraction of nodes whose entire edge set
-    * arrived via [[appendIndex]] (min(ins) = 1) — the nodes the
-    * descent fixpoint never saw. One aggregation over the index;
-    * rebuild cadence input for [[maintain]] (0.3–0.5 is a reasonable
-    * trip point: past it, a third of the graph's neighborhoods were
-    * chosen by a beam walk instead of the converged descent).
-    */
-  def insFraction(spark: org.apache.spark.sql.SparkSession,
-                  path: String): Double = {
-    val r = spark.read.parquet(path).groupBy("src")
-      .agg(min("ins").as("mi"))
-      .agg(avg(col("mi").cast("double")).as("f")).head()
-    if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-  }
-
-  /** Generation-rooted build: the graph lands in `root/gen-N/`, the
-    * [[Generations]] pointer flips once — rebuilds never disturb an
-    * in-flight probe. Probe via
-    * `searchIndex(spark, Generations.livePath(spark, root), ...)`.
-    */
-  def writeIndexVersioned(spark: org.apache.spark.sql.SparkSession,
-                          corpus: DataFrame, idCol: String, k: Int,
-                          initBuckets: Int, iterations: Int,
-                          root: String, buckets: Int = 64): String = {
-    val gen = Generations.nextPath(spark, root)
-    writeIndex(corpus, idCol, k, initBuckets, iterations, gen, buckets)
-    Generations.publish(spark, root, gen)
-    gen
-  }
-
-  /** Outcome of one [[maintain]] tick. */
-  final case class MaintenanceReport(insFraction: Double, rebuilt: Boolean)
-
-  /** The rebuild cadence ([[Ivf.maintain]] analogue): probe
-    * [[insFraction]] on the live generation; below `threshold` a tick
-    * costs one aggregation and touches nothing; past it, re-run the
-    * full NN-Descent over the current corpus into the NEXT generation,
-    * flip the pointer, prune beyond `keep`. buildGraph is
-    * deterministic, so a rebuild is exactly the from-scratch index
-    * over the same corpus — correctness never depends on when the
-    * cadence fires, only probe quality does.
-    */
-  def maintain(spark: org.apache.spark.sql.SparkSession, root: String,
-               corpus: DataFrame, idCol: String, k: Int,
-               initBuckets: Int, iterations: Int,
-               threshold: Double = 0.4, keep: Int = 2,
-               buckets: Int = 64): MaintenanceReport = {
-    val live = Generations.livePath(spark, root)
-    val f = insFraction(spark, live)
-    if (f <= threshold) MaintenanceReport(f, rebuilt = false)
-    else {
-      val gen = Generations.nextPath(spark, root)
-      writeIndex(corpus, idCol, k, initBuckets, iterations, gen, buckets)
-      Generations.publish(spark, root, gen)
-      Generations.prune(spark, root, keep)
-      MaintenanceReport(f, rebuilt = true)
-    }
   }
 
   // ---------------------------------------------------------------

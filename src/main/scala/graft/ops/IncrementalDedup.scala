@@ -28,11 +28,8 @@ import org.apache.spark.sql.types.LongType
   * rows, the anti-join decides. The join's probe side shrinks from
   * |batch| to |dups| + fpp·|batch|, so for a mostly-novel batch the
   * shuffle all but disappears. Sizing: ~1.2 GB per 10^9 fingerprints
-  * at 1% fpp; past that, the [[ShardedBloom]] family partitions the
-  * filter by fingerprint — [[dedupAgainstShardedPath]] for the
-  * 10^10-fp regime where the family lives as per-shard files and is
-  * never assembled in any single JVM — or simply raise fpp;
-  * correctness never depends on it.
+  * at 1% fpp; past that, raise fpp — correctness never depends on
+  * it.
   * Pre-bucketing history by `fp` (see [[Bucketing]])
   * removes the history-side shuffle of the residual join too.
   *
@@ -52,9 +49,8 @@ object IncrementalDedup {
 
   /** One distributed aggregation pass over the historical fingerprints
     * (merged on the driver). Steady-state ingest builds this ONCE and
-    * reuses it across batches — extend it in place with each accepted
-    * batch ([[admit]]) instead of rebuilding; the build is O(history)
-    * and amortizes to zero, the per-batch cost is O(batch).
+    * reuses it across batches ([[dedupAgainstBloom]]); the build is
+    * O(history) and amortizes to zero, the per-batch cost is O(batch).
     */
   def buildBloom(history: DataFrame, fpCol: String, expectedItems: Long,
                  fpp: Double = 0.01): org.apache.spark.util.sketch.BloomFilter =
@@ -64,62 +60,6 @@ object IncrementalDedup {
     if (history.isEmpty)
       org.apache.spark.util.sketch.BloomFilter.create(math.max(expectedItems, 1L), fpp)
     else history.stat.bloomFilter(fpCol, expectedItems, fpp)
-
-  /** Fold an accepted batch's fingerprints into the standing bloom.
-    *
-    * A batch is O(batch)-small by this operator's contract, so the
-    * fold streams the fingerprints to the driver (`toLocalIterator`,
-    * one partition in memory at a time) and `putLong`s them — a few
-    * MB of longs. The previous distributed form (build a SECOND
-    * standing-size bloom over the batch, mergeInPlace) allocated an
-    * expectedItems-sized bitset per partition and merged them on the
-    * driver for EVERY small batch — measured as the dominant cost of
-    * the whole steady-state loop.
-    *
-    * `driverFoldMax` < 0 (the default) self-sizes from the standing
-    * bloom: fold up to `bitSize/64` fingerprints — i.e. stream at most
-    * one bitset's worth of long-words through the driver. That is the
-    * break-even shape: the distributed merge's driver cost is ORing
-    * per-partition bitsets of exactly that many words, so folding
-    * fewer longs than ONE bitset copy is always cheaper than shipping
-    * and merging several. (At 1% fpp this yields ~0.15·expectedItems —
-    * 20M for a 134M-item bloom, matching the previously hand-tuned
-    * static threshold — and scales with the deployment instead of
-    * silently serializing fat batches through the driver.)
-    *
-    * Past the threshold the distributed merge runs (corpus-sized folds
-    * belong there). Spark 4's `stat.bloomFilter` builds a
-    * differently-sized bitset than `BloomFilter.create` even at
-    * identical (expectedItems, fpp), and `mergeInPlace` rejects
-    * mismatched bit arrays — so on IncompatibleMergeException the fold
-    * falls back to draining the already-open iterator: slower for a
-    * corpus-sized fold, but always correct. (mergeInPlace checks
-    * compatibility before mutating, so the standing bloom is intact
-    * when it throws.)
-    */
-  def admit(bloom: org.apache.spark.util.sketch.BloomFilter,
-            accepted: DataFrame, fpCol: String, expectedItems: Long,
-            fpp: Double = 0.01, driverFoldMax: Long = -1L): Unit = {
-    val foldMax =
-      if (driverFoldMax >= 0L) driverFoldMax
-      else math.max(bloom.bitSize() / 64L, 1000000L)
-    val fps = accepted.select(col(fpCol).cast(LongType).as(fpCol)).na.drop()
-    // stream without a pre-count (one action, partitions arrive one at
-    // a time); if the "batch" turns out corpus-sized, bail to the
-    // distributed merge — the fps already put are a harmless subset
-    val it = fps.toLocalIterator()
-    var n = 0L
-    while (it.hasNext && n <= foldMax) {
-      bloom.putLong(it.next().getLong(0))
-      n += 1
-    }
-    if (it.hasNext) {
-      try { bloom.mergeInPlace(fps.stat.bloomFilter(fpCol, expectedItems, fpp)); () }
-      catch { case _: org.apache.spark.util.sketch.IncompatibleMergeException =>
-        while (it.hasNext) { bloom.putLong(it.next().getLong(0)) }
-      }
-    }
-  }
 
   /** Rows of `batch` whose `fpCol` (a long fingerprint) does NOT occur
     * in `history(fpCol)`. Bloom-prefiltered exact anti-join; output
@@ -158,41 +98,8 @@ object IncrementalDedup {
     // native codegen'd probe (graft.functions.BloomMightContainLong):
     // the routing filter stays inside whole-stage codegen — a UDF here
     // broke the stage's codegen and boxed every fingerprint
-    dedupRouted(batch, history, fpCol,
-      c => graft.functions.BloomMightContainLong.mightContain(c, bc),
-      maxBroadcastProbe)
-  }
-
-  /** The >10^9-fingerprint route: the standing family lives as per-
-    * shard FILES ([[ShardedBloom.buildToPath]]) and is never broadcast
-    * or assembled — each task lazily loads just the shards its rows
-    * route to (executor-wide cache). Repartitioning the batch by
-    * `pmod(fpCol, numShards)` upstream narrows that to one shard per
-    * task; correctness does not depend on it.
-    *
-    * The shard count is read from the family's `_meta` — it is part of
-    * the routing function, and probing with a different N than the
-    * build routes fingerprints to the WRONG shard (false negatives =
-    * known duplicates admitted). `numShards` >= 0 is validated against
-    * `_meta` and rejected on mismatch; the default (-1) just uses the
-    * on-disk value.
-    */
-  def dedupAgainstShardedPath(batch: DataFrame, history: DataFrame,
-                              fpCol: String, dir: String, numShards: Int = -1,
-                              maxBroadcastProbe: Long = 10000000L): DataFrame = {
-    val (diskShards, _, _) = ShardedBloom.meta(dir)
-    require(numShards < 0 || numShards == diskShards,
-      s"numShards $numShards does not match the family at $dir " +
-        s"(built with $diskShards shards); probing with a mismatched " +
-        "shard count mis-routes fingerprints and admits known duplicates")
-    dedupRouted(batch, history, fpCol,
-      c => graft.functions.ShardedBloomPathProbe.mightContain(c, dir, diskShards),
-      maxBroadcastProbe)
-  }
-
-  private def dedupRouted(batch: DataFrame, history: DataFrame, fpCol: String,
-                          mightContain: Column => Column,
-                          maxBroadcastProbe: Long): DataFrame = {
+    def mightContain(c: Column): Column =
+      graft.functions.BloomMightContainLong.mightContain(c, bc)
     // null fingerprints: the anti-join keeps them (null keys never
     // match), so the bloom route must too — a null predicate would
     // silently drop them from BOTH branches

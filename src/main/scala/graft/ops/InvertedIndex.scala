@@ -66,63 +66,6 @@ object InvertedIndex {
       .write.mode("overwrite").parquet(path + "/_doclen")
   }
 
-  /** Incremental append for NEW documents only (the [[Ivf.appendIndex]]
-    * contract — re-adding an existing doc id would split its postings
-    * across files): tokenize just the batch, append its postings under
-    * their bucket directories and its lengths to the sidecar. O(batch).
-    */
-  def appendIndex(batch: DataFrame, idCol: String, textCol: String,
-                  path: String, nBuckets: Int = DefaultBuckets): Unit = {
-    build(batch, idCol, textCol, nBuckets)
-      .write.mode("append").partitionBy("bucket").parquet(path)
-    batch.select(col(idCol).as("doc"),
-        TextAnalysis.tokenCount(col(textCol)).cast("long").as("dl"))
-      .write.mode("append").parquet(path + "/_doclen")
-  }
-
-  /** Generation-rooted write (the [[Generations]] lifecycle all four
-    * other index families use): build into the next generation dir,
-    * flip the CURRENT pointer once. Probe with
-    * `Generations.livePath(spark, root)` as the index path.
-    */
-  def writeIndexVersioned(spark: SparkSession, docs: DataFrame,
-                          idCol: String, textCol: String, root: String,
-                          nBuckets: Int = DefaultBuckets): String = {
-    val gen = Generations.nextPath(spark, root)
-    writeIndex(docs, idCol, textCol, gen, nBuckets)
-    Generations.publish(spark, root, gen)
-    gen
-  }
-
-  /** Compact a long append chain ([[LshIndex.compactVersioned]]'s
-    * discipline): each [[appendIndex]] lands one file set per touched
-    * bucket, so after N appends a probe opens O(N) small files per
-    * probed bucket and the pushed `term IN (...)` filter skips
-    * nothing at the row-group level (tiny groups, every one matching
-    * some term). The compaction rewrites the LIVE generation into a
-    * NEW one — one file per bucket, rows sorted by (term, doc) so
-    * parquet min/max statistics prune row groups by term — then flips
-    * the pointer and prunes old generations. Postings and the
-    * `_doclen` sidecar move together; probe results are identical
-    * (spec-pinned), only the file layout changes. Returns the new
-    * live generation path.
-    */
-  def compactVersioned(spark: SparkSession, root: String,
-                       keep: Int = 2): String = {
-    val live = Generations.livePath(spark, root)
-    val next = Generations.nextPath(spark, root)
-    spark.read.parquet(live)
-      .repartition(col("bucket"))
-      .sortWithinPartitions("term", "doc")
-      .write.mode("overwrite").partitionBy("bucket").parquet(next)
-    spark.read.parquet(live + "/_doclen")
-      .repartitionByRange(col("doc")).sortWithinPartitions("doc")
-      .write.mode("overwrite").parquet(next + "/_doclen")
-    Generations.publish(spark, root, next)
-    Generations.prune(spark, root, keep)
-    next
-  }
-
   /** Exact phrase occurrences per document from a postings frame:
     * (doc, n_occurrences), docs with zero occurrences absent.
     */

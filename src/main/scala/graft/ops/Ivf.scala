@@ -5,138 +5,39 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.functions.FloatVectorOps.{floatCosine, floatDot}
-
-/** IVF-style approximate nearest neighbor index: a k-means coarse
-  * quantizer partitions the corpus into `nLists` cells; a query
+/** IVF-style approximate nearest neighbor index: a farthest-point
+  * coarse quantizer partitions the corpus into `nLists` cells; a query
   * probes only its `nProbe` closest cells.
   *
-  * Everything is DataFrame-composed and deterministic:
+  * Everything runs over integer-quantized embeddings (round(x*1e6) ->
+  * long). Integer d2 is exact and order-independent, so init,
+  * assignment, probe selection and ranking are bit-identical in any
+  * engine — the SQL oracle replays them (q61, q93, q99, q130):
   *  - init: ONE corpus scan collects an oversampled far-point pool
   *    (top `nLists*initOversample` by distance from the lowest-id
   *    vector), then a driver-side greedy farthest-point pass over that
   *    tiny pool picks the `nLists` seeds — the k-means|| shape (one
   *    distributed oversample pass + cheap local reduce) instead of one
   *    full scan per centroid;
-  *  - Lloyd iterations: assignment is a per-row argmin over an
-  *    in-plan broadcast centroid array (ZERO exchange — no crossJoin,
-  *    no window); the per-dimension mean update is one narrow shuffle
-  *    per iteration, all map-side combined;
+  *  - assignment is a per-row argmin over an in-plan broadcast
+  *    centroid array (ZERO exchange — no crossJoin, no window);
+  *  - [[lloydStepQuantized]] refines with integer-floor means, the one
+  *    Lloyd step that stays bit-replicable cross-engine;
   *  - only the k (tiny) centroids and the init pool ever reach the
   *    driver.
   *
-  * At 100 TB the corpus is assigned once (one pass, broadcast
-  * centroids) and written partitioned by cell; each probe then reads
-  * `nProbe/nLists` of the data. The quadratic term of brute force
-  * drops by that factor, recall governed by nProbe.
+  * A probe reads `nProbe/nLists` of the corpus's cells; the quadratic
+  * term of brute force drops by that factor, recall governed by
+  * nProbe. [[IvfPq]] materializes the cells as a codes-only index.
   */
 object Ivf {
 
-  final case class Model(centroids: Seq[(Int, Seq[Float])])
-
-  /** Per-row `struct(d2, cell)` candidates against an in-plan literal
-    * centroid array. d2 omits the constant `|x|^2` term — argmin and
-    * probe ordering are unchanged; no join, no shuffle.
-    */
-  private def scoredCells(emb: Column, centroids: Seq[(Int, Seq[Float])]): Column = {
-    val cArr = array(centroids.map { case (cell, v) =>
-      struct(lit(v.toArray).as("cvec"), lit(cell).as("cell")) }: _*)
-    transform(cArr, c => struct(
-      (floatDot(c.getField("cvec"), c.getField("cvec"))
-        - lit(2.0) * floatDot(emb, c.getField("cvec"))).as("d2"),
-      c.getField("cell").as("cell")))
-  }
-
-  /** Sequential-sum double dot, bit-identical to FloatDotProduct. */
-  private def dotD(a: Seq[Float], b: Seq[Float]): Double = {
-    var acc = 0.0
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
-    acc
-  }
-
-  /** Deterministic Lloyd's k-means over the `embedding` column.
-    * Production fits on 100 TB would run this on a sample — the
-    * operator takes whatever frame it's given.
-    */
-  def fit(corpus: DataFrame, idCol: String, nLists: Int,
-          iterations: Int = 3, initOversample: Int = 8): Model = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-
-    val first = corpus.orderBy(col(idCol)).limit(1)
-      .select(col("embedding")).as[Seq[Float]].head()
-
-    // one scan: oversampled far-point pool (full d2 from the seed;
-    // |x|^2 matters here because rows are compared to each other)
-    val pool: Seq[(Long, Seq[Float])] = corpus
-      .withColumn("d2",
-        floatDot(col("embedding"), col("embedding"))
-          - lit(2.0) * floatDot(col("embedding"), lit(first.toArray)))
-      .orderBy(col("d2").desc, col(idCol).asc)
-      .limit((nLists - 1) * initOversample)
-      .select(col(idCol).cast(LongType), col("embedding"))
-      .as[(Long, Seq[Float])].collect().toSeq
-
-    // driver-side greedy farthest-point over the pool (k-means||'s
-    // local reduce): maximize min-distance to the picked set, ties to
-    // the lower id — identical selection rule to the sequential init,
-    // restricted to the pool
-    var centroids: Seq[(Int, Seq[Float])] = Seq((0, first))
-    var remaining = pool
-    (1 until nLists).foreach { i =>
-      if (remaining.nonEmpty) {
-        val next = remaining.maxBy { case (id, v) =>
-          val mind2 = centroids.map { case (_, c) =>
-            dotD(v, v) - 2.0 * dotD(v, c) + dotD(c, c) }.min
-          (mind2, -id) // farthest; ties -> lowest id
-        }
-        centroids = centroids :+ ((i, next._2))
-        remaining = remaining.filterNot(_._1 == next._1)
-      }
-    }
-
-    (0 until iterations).foreach { _ =>
-      val assigned = assign(corpus, centroids)
-      // per-dimension mean via posexplode: map-side partial avgs, one
-      // shuffle on (cell, dim) — never collects vectors to the driver
-      val means = assigned
-        .select(col("cell"), posexplode(col("embedding")).as(Seq("dim", "v")))
-        .groupBy("cell", "dim").agg(avg("v").as("m"))
-        .groupBy("cell").agg(
-          transform(array_sort(collect_list(struct(col("dim"), col("m")))),
-            s => s.getField("m").cast("float")).as("cvec"))
-        .as[(Int, Seq[Float])].collect()
-      // empty cells keep their previous centroid
-      val updated = means.toMap
-      centroids = centroids.map { case (i, old) => (i, updated.getOrElse(i, old)) }
-    }
-    Model(centroids)
-  }
-
-  /** Nearest-cell assignment: per-row argmin over the broadcast
-    * centroid literal — a pure map, zero exchange in the plan.
-    */
-  def assign(corpus: DataFrame, centroids: Seq[(Int, Seq[Float])]): DataFrame =
-    corpus.withColumn("cell",
-      array_min(scoredCells(col("embedding"), centroids)).getField("cell"))
-
-  // ---------------------------------------------------------------
-  // Oracle-parity path: the same IVF pipeline over integer-quantized
-  // embeddings (round(x*1e6) -> long). Integer d2 is exact and
-  // order-independent, so init, assignment, probe selection and
-  // ranking are bit-identical in any engine — this is the variant the
-  // SQL oracle replays (q61). Lloyd iterations are deliberately
-  // absent here: floating-point means are not exactly replicable
-  // cross-engine; the float path above owns refinement.
-  // ---------------------------------------------------------------
-
   final case class QuantModel(centroids: Seq[(Int, Seq[Long])])
 
-  /** Exact integer analogue of [[scoredCells]]: struct(d2, cell) per
-    * centroid with d2 = |c|^2 - 2<x,c> (|c|^2 precomputed exactly on
-    * the driver — integers don't drift). Shared with [[IvfPq]]'s
+  /** Per-row `struct(d2, cell)` candidates against an in-plan literal
+    * centroid array with d2 = |c|^2 - 2<x,c> (|c|^2 precomputed
+    * exactly on the driver — integers don't drift; |x|^2 is omitted,
+    * argmin and probe order are unchanged). Shared with [[IvfPq]]'s
     * probe-cell selection.
     */
   private[ops] def scoredCellsQ(ei: Column, centroids: Seq[(Int, Seq[Long])]): Column = {
@@ -200,13 +101,12 @@ object Ivf {
       .withColumn("cell",
         array_min(scoredCellsQ(col("ei"), model.centroids)).getField("cell"))
 
-  /** ONE Lloyd refinement step on the quantized path, bit-replicable
-    * cross-engine — the exception to the "no quantized Lloyd" rule
-    * above, made safe by integer-floor centroid means: the new
-    * centroid coordinate is `floor(sum/count)` where `sum` and
-    * `count` are exact integers. Every engine computes the same
-    * correctly-rounded IEEE-754 double quotient of the same two
-    * integers and floors it, so the result is identical everywhere.
+  /** ONE Lloyd refinement step, bit-replicable cross-engine because
+    * centroid means are integer floors: the new centroid coordinate is
+    * `floor(sum/count)` where `sum` and `count` are exact integers.
+    * Every engine computes the same correctly-rounded IEEE-754 double
+    * quotient of the same two integers and floors it, so the result is
+    * identical everywhere.
     * The floor cannot land on the wrong side of an integer boundary
     * while `|sum| < 2^53`: for non-integral S/n the distance to the
     * nearest integer is >= 1/n, the quotient's rounding error is
@@ -215,7 +115,7 @@ object Ivf {
     * per (cell, dim) sum — it allows ~4.5e9 rows per cell at
     * 1e6-quantized unit-scale coordinates before tripping.
     *
-    * Plan shape per step (the same one the float path promises):
+    * Plan shape per step:
     * assignment is a narrow argmin over broadcast centroids (zero
     * Exchange), the mean update is one map-side-combined groupBy of
     * the (cell, dim) explode, and only nLists × dims longs reach the
@@ -259,8 +159,10 @@ object Ivf {
       .agg(count(lit(1)).as("n_vecs"), sum(col("d2")).as("inertia"))
   }
 
-  /** Quantized probe — same shape as [[search]], exact integer cell
-    * math and micro-unit cosine ranking (Similarity.cosineMicro).
+  /** Probe: top-k micro-unit cosine (Similarity.cosineMicro) within
+    * the query's `nProbe` nearest cells. Query-side probe selection is
+    * the same in-plan argmin (sorted, first nProbe) — no window over
+    * the query set either.
     */
   def searchQuantized(corpus: DataFrame, queries: DataFrame, idCol: String,
                       model: QuantModel, k: Int, nProbe: Int): DataFrame = {
@@ -330,282 +232,5 @@ object Ivf {
       .withColumn("rnk", row_number().over(w).cast(LongType))
       .where(col("rnk") <= k)
       .select(col("q_id"), col("rnk"), col(idCol), col("sim_micro"))
-  }
-
-  /** Materialize the IVF index: the corpus written once, hive-
-    * partitioned by cell. This is the 100 TB deployment shape — the
-    * assignment pass runs once (narrow map, see [[assign]]), and every
-    * subsequent probe reads ONLY its probed cells via partition
-    * pruning instead of scanning the corpus. cell count = directory
-    * count, so `nLists` should be sized like any partition key
-    * (hundreds to low thousands).
-    */
-  def writeIndex(corpus: DataFrame, model: Model, path: String): Unit =
-    assign(corpus, model.centroids)
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
-
-  /** Incremental append for a materialized index: assign ONLY the
-    * arriving batch against the existing model (narrow map, O(batch))
-    * and append its rows under their cell directories — the corpus is
-    * never re-assigned or re-shuffled per refresh, mirroring
-    * [[graft.ops.LshIndex.append]] for the LSH index. Append +
-    * [[searchIndex]] is EXACTLY a full [[writeIndex]] rebuild under
-    * the same model (assignment is a pure function of the model), so
-    * correctness never depends on when maintenance runs.
-    *
-    * What appends cannot do is move the centroids: as the corpus
-    * drifts, cells skew. [[cellImbalance]] is the maintenance probe —
-    * refit + rebuild when it degrades (the [[LshIndex.compact]]
-    * analogue, at re-cluster cadence).
-    */
-  def appendIndex(batch: DataFrame, model: Model, path: String): Unit =
-    assign(batch, model.centroids)
-      .write.mode("append").partitionBy("cell").parquet(path)
-
-  /** Cell-balance health of a materialized index: max cell size over
-    * mean cell size (1.0 = perfectly balanced). One aggregation over
-    * the index's (pruned-scan-friendly) cell column; a probe of a
-    * cell at ratio r costs ~r times the balanced read, so schedule a
-    * refit + [[writeIndex]] rebuild when this passes the deployment's
-    * tolerance (3-5 is a common threshold).
-    */
-  def cellImbalance(spark: org.apache.spark.sql.SparkSession,
-                    path: String): Double = {
-    val sizes = spark.read.parquet(path).groupBy("cell")
-      .agg(count(lit(1)).as("n"))
-      .agg(max("n").cast("double").as("mx"), avg("n").as("mean"))
-      .head()
-    if (sizes.isNullAt(0) || sizes.getDouble(1) == 0.0) 1.0
-    else sizes.getDouble(0) / sizes.getDouble(1)
-  }
-
-  /** Outcome of one [[maintain]] cadence tick: the imbalance that was
-    * measured, whether it tripped a rebuild, and the model now serving
-    * the index (the refit model after a rebuild, the old one
-    * otherwise).
-    */
-  final case class MaintenanceReport(imbalance: Double, rebuilt: Boolean,
-                                     model: Model)
-
-  /** The re-cluster cadence for a materialized index — the
-    * [[LshIndex.compact]] analogue. An index that only ever
-    * [[appendIndex]]s degrades unbounded as the corpus drifts away
-    * from the centroids it was fit on: arriving vectors pile into the
-    * few cells nearest the drift, and a probe of a cell at imbalance
-    * ratio r costs ~r times the balanced read. This ties the loop
-    * shut: measure [[cellImbalance]]; below `threshold`, touch nothing
-    * (one cheap aggregation is the entire cost of a healthy tick);
-    * past it, REFIT the quantizer on the current corpus and rebuild.
-    *
-    * LEGACY single-directory variant: the rebuild writes to `path +
-    * ".rebuild"` while the live index stays readable (the fit/assign
-    * job only reads `path`), then swaps directories. The swap itself
-    * is two filesystem metadata ops — delete + rename — NOT atomic to
-    * concurrent readers: one that listed files pre-swap can hit
-    * FileNotFound mid-probe. [[maintain]] (the default cadence,
-    * generation-rooted) closes that window with a pointer flip; use
-    * this entry point only where the single-dir layout is a hard
-    * requirement and no probe can overlap a tick. Append + maintain +
-    * [[searchIndex]] under the returned model is exactly a
-    * from-scratch [[fit]] + [[writeIndex]] over the same corpus (fit
-    * is deterministic), so correctness never depends on WHEN the
-    * cadence fires — only probe cost does. Spec: IvfSpec.
-    *
-    * At 100 TB: the health probe is one pruned-scan aggregation; the
-    * rebuild is fit on a sample (pass `fitSample` < 1.0) + one
-    * full-corpus narrow assign + partitioned write — the same cost
-    * profile as the initial index build, amortized over the cadence.
-    */
-  def maintainInPlace(spark: org.apache.spark.sql.SparkSession, path: String,
-               idCol: String, model: Model, nLists: Int,
-               threshold: Double = 3.0, iterations: Int = 3,
-               initOversample: Int = 8,
-               fitSample: Double = 1.0): MaintenanceReport = {
-    val imb = cellImbalance(spark, path)
-    if (imb <= threshold) MaintenanceReport(imb, rebuilt = false, model)
-    else {
-      val corpus = spark.read.parquet(path).drop("cell")
-      val fitCorpus =
-        if (fitSample < 1.0) corpus.sample(withReplacement = false, fitSample, seed = 7L)
-        else corpus
-      val refit = fit(fitCorpus, idCol, nLists, iterations, initOversample)
-      val tmp = path + ".rebuild"
-      writeIndex(corpus, refit, tmp) // reads old gen, writes new
-      checkedSwap(spark, path, tmp)
-      MaintenanceReport(imb, rebuilt = true, refit)
-    }
-  }
-
-  /** Generation-root index lifecycle — the production swap discipline
-    * [[maintain]]'s scaladoc prescribes, made concrete: the index
-    * lives under `root/gen-N/` with a [[Generations]] `CURRENT`
-    * pointer, a rebuild lands in a NEW generation dir while every
-    * in-flight reader keeps its (immutable) old one, and the swap is
-    * ONE atomic pointer flip instead of delete+rename over live
-    * files. Probe with `searchIndex(spark, Generations.livePath(spark,
-    * root), ...)`; prune's keep window bounds reader grace.
-    */
-  def writeIndexVersioned(spark: org.apache.spark.sql.SparkSession,
-                          corpus: DataFrame, model: Model,
-                          root: String): String = {
-    val gen = Generations.nextPath(spark, root)
-    writeIndex(corpus, model, gen)
-    Generations.publish(spark, root, gen)
-    gen
-  }
-
-  /** The DEFAULT maintain cadence, against a generation root: healthy
-    * tick probes the live generation and touches nothing; a trip
-    * refits, rebuilds into the next generation, flips the pointer,
-    * and prunes old generations beyond `keep`. Concurrent probes of
-    * the superseded generation stay valid through the keep window —
-    * no reader ever sees a half-swapped directory (the gap
-    * [[maintainInPlace]], the legacy single-dir variant, documents).
-    */
-  def maintain(spark: org.apache.spark.sql.SparkSession,
-                        root: String, idCol: String, model: Model,
-                        nLists: Int, threshold: Double = 3.0,
-                        iterations: Int = 3, initOversample: Int = 8,
-                        fitSample: Double = 1.0,
-                        keep: Int = 2): MaintenanceReport = {
-    val live = Generations.livePath(spark, root)
-    val imb = cellImbalance(spark, live)
-    if (imb <= threshold) MaintenanceReport(imb, rebuilt = false, model)
-    else {
-      val corpus = spark.read.parquet(live).drop("cell")
-      val fitCorpus =
-        if (fitSample < 1.0) corpus.sample(withReplacement = false, fitSample, seed = 7L)
-        else corpus
-      val refit = fit(fitCorpus, idCol, nLists, iterations, initOversample)
-      val next = Generations.nextPath(spark, root)
-      writeIndex(corpus, refit, next)
-      Generations.publish(spark, root, next)
-      Generations.prune(spark, root, keep)
-      MaintenanceReport(imb, rebuilt = true, refit)
-    }
-  }
-
-  /** Swap a rebuilt generation into place: delete the live dir, rename
-    * the rebuild over it. The swap MUST be checked: Hadoop FS ops
-    * report failure by returning false, not throwing. An unchecked
-    * delete=false would serve the OLD index under the NEW refit model
-    * (cell/model mismatch = wrong search results); an unchecked
-    * rename=false after a successful delete would lose the live index
-    * entirely — both while reporting rebuilt=true. Fail loudly
-    * instead: the rebuild directory is intact either way, so the
-    * caller can re-point or retry. delete=false is ambiguous (real
-    * failure OR path already absent — a prior run deleted but died
-    * before the rename); only the still-exists case is a failure, the
-    * absent case proceeds straight to the rename. Shared with
-    * [[IvfPq.maintain]] and bloom-epoch rotation.
-    */
-  private[ops] def checkedSwap(spark: org.apache.spark.sql.SparkSession,
-                               path: String, tmp: String): Unit = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.delete(hPath, true) && fs.exists(hPath))
-      throw new java.io.IOException(
-        s"index swap: failed to delete old generation at $path; " +
-          s"rebuilt generation is intact at $tmp")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), hPath))
-      throw new java.io.IOException(
-        s"index swap: failed to rename $tmp to $path; " +
-          s"rebuilt generation is intact at $tmp")
-  }
-
-  /** Probe a materialized index: identical semantics to [[search]],
-    * but the corpus side is a pruned read of the probed cell
-    * directories. The probed cell set is computed first (one tiny job
-    * over the query set — queries are broadcast-sized by contract) and
-    * pushed as a STATIC `cell IN (...)` partition filter, so pruning
-    * is guaranteed rather than left to dynamic-pruning heuristics.
-    * Asserted in IvfSpec.
-    */
-  def searchIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                  queries: DataFrame, idCol: String, model: Model,
-                  k: Int, nProbe: Int): DataFrame = {
-    val queryCells = queries
-      .withColumn("probe",
-        explode(slice(array_sort(scoredCells(col("embedding"), model.centroids)),
-          1, nProbe)))
-      .select(col(idCol).as("q_id"), col("embedding").as("qe"),
-        col("probe").getField("cell").as("cell"))
-
-    val probedCells = queryCells.select("cell").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val corpusCells = spark.read.parquet(path)
-      .where(col("cell").isin(probedCells.map(Integer.valueOf): _*))
-
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col(idCol))
-    corpusCells.join(broadcast(queryCells), Seq("cell"))
-      .where(col(idCol) =!= col("q_id"))
-      .withColumn("sim", floatCosine(col("embedding"), col("qe")))
-      .withColumn("rnk", row_number().over(w).cast(LongType))
-      .where(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col(idCol), col("sim"))
-  }
-
-  /** Filtered probe against a MATERIALIZED index ([[writeIndex]]
-    * stores every corpus column, so metadata rides in the index):
-    * `pred` is a plain Column predicate over index columns, applied
-    * to the probed-cells scan — Catalyst pushes it into the parquet
-    * reader (PushedFilters, row-group stats skipping), so a selective
-    * metadata constraint cuts index I/O instead of post-filtering
-    * ranked results. Composes with the static `cell IN (...)`
-    * partition prune: at 100 TB a probe reads nProbe/nLists of the
-    * index FURTHER thinned by the predicate's row groups.
-    *
-    * Pre-filtering semantics, like [[searchQuantizedFiltered]]:
-    * equivalent to [[search]] over `corpus.where(pred)` under the
-    * same model (spec-pinned in IvfSpec).
-    */
-  def searchIndexFiltered(spark: org.apache.spark.sql.SparkSession,
-                          path: String, queries: DataFrame, idCol: String,
-                          model: Model, k: Int, nProbe: Int,
-                          pred: Column): DataFrame = {
-    val queryCells = queries
-      .withColumn("probe",
-        explode(slice(array_sort(scoredCells(col("embedding"), model.centroids)),
-          1, nProbe)))
-      .select(col(idCol).as("q_id"), col("embedding").as("qe"),
-        col("probe").getField("cell").as("cell"))
-
-    val probedCells = queryCells.select("cell").distinct()
-      .collect().map(_.getInt(0)).sorted
-    val corpusCells = spark.read.parquet(path)
-      .where(col("cell").isin(probedCells.map(Integer.valueOf): _*))
-      .where(pred)
-
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col(idCol))
-    corpusCells.join(broadcast(queryCells), Seq("cell"))
-      .where(col(idCol) =!= col("q_id"))
-      .withColumn("sim", floatCosine(col("embedding"), col("qe")))
-      .withColumn("rnk", row_number().over(w).cast(LongType))
-      .where(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col(idCol), col("sim"))
-  }
-
-  /** Probe: top-k cosine within the query's `nProbe` nearest cells.
-    * Query-side probe selection is the same in-plan argmin (sorted,
-    * first nProbe) — no window over the query set either.
-    */
-  def search(corpus: DataFrame, queries: DataFrame, idCol: String,
-             model: Model, k: Int, nProbe: Int): DataFrame = {
-    val corpusCells = assign(corpus, model.centroids)
-
-    val queryCells = queries
-      .withColumn("probe",
-        explode(slice(array_sort(scoredCells(col("embedding"), model.centroids)),
-          1, nProbe)))
-      .select(col(idCol).as("q_id"), col("embedding").as("qe"),
-        col("probe").getField("cell").as("cell"))
-
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col(idCol))
-    corpusCells.join(broadcast(queryCells), Seq("cell"))
-      .where(col(idCol) =!= col("q_id"))
-      .withColumn("sim", floatCosine(col("embedding"), col("qe")))
-      .withColumn("rnk", row_number().over(w).cast(LongType))
-      .where(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col(idCol), col("sim"))
   }
 }

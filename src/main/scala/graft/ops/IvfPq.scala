@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.LongType
   * corpus into cells; product quantization ([[Pq]]) compresses each
   * row to `m` small codes. The materialized index stores ONLY
   * `(id, codes, cell)` — m codes per row, not `dim` floats: at 100 TB
-  * and m=8/k<=256 that is a ~32x smaller index than [[Ivf.writeIndex]]
-  * materializing full embeddings.
+  * and m=8/k<=256 that is a ~32x smaller index than one materializing
+  * full embeddings.
   *
   * Probe = three stages, each strictly narrower than the last:
   *  1. '''cell prune''': the query's `nProbe` nearest cells, pushed as
@@ -48,7 +48,7 @@ import org.apache.spark.sql.types.LongType
   * centroid subtraction smears the per-subspace modes that raw PQ
   * quantizes well, so the textbook residual win does not transfer to
   * this geometry. The OPQ coordinate permutation (round 13, see
-  * [[fit]]'s scaladoc and [[Pq.fitOpqPermutation]]) is the lever
+  * [[fit]]'s scaladoc and [[Pq.fitOpqPermutationEi]]) is the lever
   * that DOES transfer: balanced per-subspace energy lifts the tier's
   * best measured point to **0.256** (np4/rf256, vs raw 0.200 /
   * residual 0.125) and 0.216 at np16/rf64 (vs 0.134 / 0.088) — OPQ
@@ -59,10 +59,9 @@ import org.apache.spark.sql.types.LongType
   * (21x) — not a latency/recall win at this dimensionality.
   * The flag lives IN the model so an index can never
   * be probed under the wrong interpretation, codes become a function
-  * of BOTH levels (any coarse refit invalidates them — [[maintain]]
-  * always refits both together, so the lifecycle already honors
-  * that), and the probe builds its ADC LUT per (query, probed cell)
-  * over the query's residual, since
+  * of BOTH levels (any coarse refit invalidates them, so [[fit]]
+  * always fits both together), and the probe builds its ADC LUT per
+  * (query, probed cell) over the query's residual, since
   * `|(q - c) - (x - c)|^2 = |q - x|^2`. Residuals stay on the same
   * exact-integer micro grid (`quant(x) - quant(c)` is plain long
   * subtraction), so determinism is preserved; what is given up is the
@@ -79,7 +78,7 @@ object IvfPq {
     * records how codes are to be interpreted (raw-vector vs
     * cell-residual quantization) — it is part of the model because an
     * index written one way must never be probed the other. `perm`
-    * (OPQ, [[Pq.fitOpqPermutation]]) records the coordinate
+    * (OPQ, [[Pq.fitOpqPermutationEi]]) records the coordinate
     * permutation the codebooks were fit under: codes quantize the
     * PERMUTED vector, the probe LUT builds over the permuted query,
     * and everything else (cells, exact re-rank) stays in raw space —
@@ -154,19 +153,6 @@ object IvfPq {
     }
   }
 
-  /** Assign + encode under the model's declared interpretation —
-    * shared by [[writeIndex]] and [[appendIndex]] so the two can never
-    * diverge on the residual question.
-    */
-  private def encodeRows(assigned: DataFrame, idCol: String,
-                         model: Model): DataFrame = {
-    val enc =
-      if (model.residual) residualEi(col("ei"), model.coarse) else col("ei")
-    assigned
-      .withColumn("codes", Pq.codesColumn(permuteEi(enc, model.perm), model.pq))
-      .select(col(idCol), col("codes"), col("cell"))
-  }
-
   /** Materialize the two-level index: one corpus scan assigns cells
     * (narrow argmin over broadcast centroids) and encodes codes
     * (narrow argmin per subspace, over the residual when the model
@@ -174,21 +160,14 @@ object IvfPq {
     * No full embedding reaches the index — that is the point.
     */
   def writeIndex(corpus: DataFrame, idCol: String, model: Model,
-                 path: String): Unit =
-    encodeRows(Ivf.assignQuantized(corpus, model.coarse), idCol, model)
+                 path: String): Unit = {
+    val enc =
+      if (model.residual) residualEi(col("ei"), model.coarse) else col("ei")
+    Ivf.assignQuantized(corpus, model.coarse)
+      .withColumn("codes", Pq.codesColumn(permuteEi(enc, model.perm), model.pq))
+      .select(col(idCol), col("codes"), col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(path)
-
-  /** Incremental append, [[Ivf.appendIndex]]'s shape: assign + encode
-    * ONLY the arriving batch (O(batch) narrow map) and append under
-    * its cell directories. Append + [[searchIndex]] is exactly a full
-    * [[writeIndex]] under the same model — both assignments are pure
-    * functions of the model. What appends cannot do is move centroids
-    * or codebooks; [[maintain]] is the cadence for that.
-    */
-  def appendIndex(batch: DataFrame, idCol: String, model: Model,
-                  path: String): Unit =
-    encodeRows(Ivf.assignQuantized(batch, model.coarse), idCol, model)
-      .write.mode("append").partitionBy("cell").parquet(path)
+  }
 
   /** Probe the materialized index. `corpus` is the BASE table the
     * shortlist re-ranks against (the index itself holds no vectors);
@@ -198,8 +177,8 @@ object IvfPq {
     * shortlist side broadcast.
     *
     * The probed cell set is computed first and pushed as a static
-    * `cell IN (...)` partition filter (guaranteed pruning, the
-    * [[Ivf.searchIndex]] contract — asserted in IvfPqSpec).
+    * `cell IN (...)` partition filter (guaranteed pruning — asserted
+    * in IvfPqSpec).
     */
   def searchIndex(spark: SparkSession, path: String, corpus: DataFrame,
                   queries: DataFrame, idCol: String, model: Model,
@@ -261,82 +240,5 @@ object IvfPq {
       .withColumn("rnk", row_number().over(ew).cast(LongType))
       .where(col("rnk") <= topK)
       .select(col("q_id"), col("rnk"), col(idCol), col("d2"))
-  }
-
-  /** One cadence tick, refitting BOTH levels: measure cell imbalance
-    * on the index; below `threshold`, touch nothing (one aggregation
-    * over the codes table is the whole cost); past it, refit coarse +
-    * codebooks on the current corpus and rebuild. Codebooks MUST
-    * refit with the coarse model — after a drift big enough to trip
-    * the cadence, the subspace geometry the old codebooks quantize is
-    * stale too. [[maintain]] (generation-rooted pointer flip) is the
-    * default; [[maintainInPlace]] is the legacy single-dir variant
-    * with [[Ivf.maintainInPlace]]'s documented reader FileNotFound
-    * window across its delete+rename swap.
-    */
-  final case class MaintenanceReport(imbalance: Double, rebuilt: Boolean,
-                                     model: Model)
-
-  def maintainInPlace(spark: SparkSession, path: String, corpus: DataFrame,
-               idCol: String, model: Model, nLists: Int, m: Int, k: Int,
-               threshold: Double = 3.0, oversample: Int = 8,
-               fitSample: Double = 1.0): MaintenanceReport = {
-    val imb = Ivf.cellImbalance(spark, path)
-    if (imb <= threshold) MaintenanceReport(imb, rebuilt = false, model)
-    else {
-      val fitCorpus =
-        if (fitSample < 1.0)
-          corpus.sample(withReplacement = false, fitSample, seed = 7L)
-        else corpus
-      val refit = fit(fitCorpus, idCol, nLists, m, k, oversample,
-        residual = model.residual, opq = model.perm.isDefined)
-      val tmp = path + ".rebuild"
-      writeIndex(corpus, idCol, refit, tmp)
-      Ivf.checkedSwap(spark, path, tmp)
-      MaintenanceReport(imb, rebuilt = true, refit)
-    }
-  }
-
-  /** [[Ivf.writeIndexVersioned]]'s two-level twin: build into the next
-    * generation under `root` and flip `CURRENT` atomically. Probe with
-    * `searchIndex(spark, Generations.livePath(spark, root), ...)`.
-    */
-  def writeIndexVersioned(spark: SparkSession, corpus: DataFrame,
-                          idCol: String, model: Model,
-                          root: String): String = {
-    val gen = Generations.nextPath(spark, root)
-    writeIndex(corpus, idCol, model, gen)
-    Generations.publish(spark, root, gen)
-    gen
-  }
-
-  /** The DEFAULT maintain cadence, against a generation root:
-    * rebuilds (both levels refit together) land in a new generation
-    * and become visible via one pointer flip — concurrent probes of
-    * the old generation stay valid until [[Generations.prune]]'s keep
-    * window passes them by.
-    */
-  def maintain(spark: SparkSession, root: String,
-                        corpus: DataFrame, idCol: String, model: Model,
-                        nLists: Int, m: Int, k: Int,
-                        threshold: Double = 3.0, oversample: Int = 8,
-                        fitSample: Double = 1.0,
-                        keep: Int = 2): MaintenanceReport = {
-    val live = Generations.livePath(spark, root)
-    val imb = Ivf.cellImbalance(spark, live)
-    if (imb <= threshold) MaintenanceReport(imb, rebuilt = false, model)
-    else {
-      val fitCorpus =
-        if (fitSample < 1.0)
-          corpus.sample(withReplacement = false, fitSample, seed = 7L)
-        else corpus
-      val refit = fit(fitCorpus, idCol, nLists, m, k, oversample,
-        residual = model.residual, opq = model.perm.isDefined)
-      val next = Generations.nextPath(spark, root)
-      writeIndex(corpus, idCol, refit, next)
-      Generations.publish(spark, root, next)
-      Generations.prune(spark, root, keep)
-      MaintenanceReport(imb, rebuilt = true, refit)
-    }
   }
 }

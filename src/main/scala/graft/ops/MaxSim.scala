@@ -206,13 +206,14 @@ object MaxSim {
   }
 
   // ---------------------------------------------------------------
-  // Persisted token-bucket index — the [[LshIndex]]/[[Ivf]] storage
-  // discipline applied to late interaction: quantization and bucket
-  // assignment happen ONCE at build (q176's in-memory path recomputes
-  // both per query batch), probes read only the query tokens'
+  // Persisted token-bucket index — the [[IvfPq]] storage discipline
+  // (a cell-partitioned index) applied to late interaction:
+  // quantization and bucket assignment happen ONCE at build (q176's
+  // in-memory path recomputes both per query batch), probes read only
+  // the query tokens'
   // bucket partitions for the shortlist and only the candidate docs'
-  // doc-hash partitions for the re-rank, and appends are O(batch)
-  // partitioned parquet appends. The retrieval shape RAG deploys:
+  // doc-hash partitions for the re-rank, and appends land as one
+  // staged file each. The retrieval shape RAG deploys:
   // stored shortlist index + exact re-rank.
   //
   // Layout under one index path:
@@ -251,8 +252,8 @@ object MaxSim {
       .withColumn("bucket", bucketCol(nPlanes, dims).cast("int"))
       .withColumn("dbucket", dbucketCol(col("doc_id"), dBuckets))
       .persist()
-    // repartition on the write key (the appendIndex/compactVersioned
-    // discipline, extended to the build in r15): without it every
+    // repartition on the write key (the compactVersioned discipline,
+    // extended to the build in r15): without it every
     // task holding rows for a partition value opens a file there, so
     // the build scatters up to tasks x partitions small files that
     // every later probe pays to list and open
@@ -264,46 +265,6 @@ object MaxSim {
       .repartition(col("dbucket"))
       .write.mode("overwrite").partitionBy("dbucket")
       .parquet(s"$path/toks")
-    q.unpersist()
-    ()
-  }
-
-  /** O(batch) append: the batch's postings and token vectors land as
-    * new files in their partitions — existing files are never read or
-    * rewritten (the [[LshIndex.append]] discipline). The caller owns
-    * doc-id uniqueness (re-ingesting a doc_id would double its
-    * tokens, like any append-only store).
-    *
-    * Both writes repartition on their write key first (the
-    * [[compactVersioned]] discipline): without it every task holding
-    * any rows for a partition value opens a file there, so one append
-    * scatters up to tasks × touched-partitions near-empty files —
-    * per-file open/commit/list cost that is FIXED overhead per
-    * append, unrelated to batch size (the r11 chain measured 9.4 s
-    * for a 1% batch vs 18 s for the full build; the
-    * `maxsim_append_files_*` rows price the file count directly).
-    * With the repartition, one append adds at most one file per
-    * touched partition value, so the per-append floor is bounded by
-    * distinct partition values, not by parallelism. Even so the
-    * floor is ~320 files and ~fixed seconds PER APPEND — at
-    * streaming cadence use [[appendIndexBuffered]], which cuts it to
-    * one file per append and pays the partitioned bill once per
-    * fold.
-    */
-  def appendIndex(batchToks: DataFrame, path: String, nPlanes: Int,
-                  dims: Int, dBuckets: Int = 64): Unit = {
-    require(nPlanes >= 1 && nPlanes <= 31,
-      s"nPlanes in [1,31] for int partition keys (got $nPlanes)")
-    val q = quantized(batchToks)
-      .withColumn("bucket", bucketCol(nPlanes, dims).cast("int"))
-      .withColumn("dbucket", dbucketCol(col("doc_id"), dBuckets))
-      .persist()
-    q.select("bucket", "doc_id").distinct()
-      .repartition(col("bucket"))
-      .write.mode("append").partitionBy("bucket").parquet(s"$path/postings")
-    q.select("dbucket", "doc_id", "tok", "vec_id", "ei", "nn")
-      .repartition(col("dbucket"))
-      .write.mode("append").partitionBy("dbucket").parquet(s"$path/toks")
     q.unpersist()
     ()
   }
@@ -353,13 +314,18 @@ object MaxSim {
       .map(spark.read.parquet(_))
   }
 
-  /** Buffered O(1)-file append: the batch lands as one coalesced file
-    * in the live staging generation (created on first use), then
+  /** Buffered O(1)-file append of an ALREADY-quantized batch (the
+    * [[quantizeBag]] frame, so a streaming intake that just probed
+    * with the same bag via [[searchIndexQuantized]] does not pay the
+    * quantization twice): the batch lands as one coalesced file in
+    * the live staging generation (created on first use), then
     * staging folds into the bucket partitions iff its on-disk size
     * passed `foldBytes`. Probes see staged docs immediately
     * ([[searchIndex]] unions staging), so the index contract is
     * unchanged — only the file bill moves from per-append to
-    * per-fold. Returns true iff this append triggered a fold.
+    * per-fold. Returns true iff this append triggered a fold. The
+    * caller owns doc-id uniqueness (re-ingesting a doc_id would
+    * double its tokens, like any append-only store).
     *
     * The size probe is one driver-side directory listing (no job);
     * staging is bounded by `foldBytes` + one batch, so the probe-side
@@ -378,18 +344,6 @@ object MaxSim {
     * [[foldStaging]]), but that covers the append-during-fold window
     * only; two concurrent FOLDS still race the same next-generation
     * directory and are out of contract.
-    */
-  def appendIndexBuffered(batchToks: DataFrame, path: String, nPlanes: Int,
-                          dims: Int, dBuckets: Int = 64,
-                          foldBytes: Long = 64L << 20): Boolean =
-    appendIndexBufferedQuantized(quantized(batchToks), path, nPlanes, dims,
-      dBuckets, foldBytes)
-
-  /** [[appendIndexBuffered]] over an ALREADY-quantized batch — the
-    * [[quantizeBag]] frame, so a streaming intake that just probed
-    * with the same bag ([[searchIndexQuantized]]) does not pay the
-    * quantization twice. Same writer contract as
-    * [[appendIndexBuffered]].
     */
   def appendIndexBufferedQuantized(qRows: DataFrame, path: String,
                                    nPlanes: Int, dims: Int,
@@ -410,9 +364,9 @@ object MaxSim {
     }
     // aid identifies THIS append: maintain's duplicate-postings probe
     // distincts (bucket, doc_id) within an append (two tokens of one
-    // doc sharing a bucket is legit — unbuffered appendIndex would
-    // have distinct'd it) while replays of the same doc under a
-    // different aid still count as the duplicates they are
+    // doc sharing a bucket is legit — writeIndex distincts it too)
+    // while replays of the same doc under a different aid still count
+    // as the duplicates they are
     val aid = java.util.UUID.randomUUID().toString
     qRows
       .select(col("doc_id"), col("tok"), col("vec_id"), col("ei"), col("nn"))
@@ -454,7 +408,7 @@ object MaxSim {
     * empty.
     *
     * WRITER CONTRACT: one owner per index path serializes appends and
-    * folds (see [[appendIndexBuffered]]). Belt and braces for the
+    * folds (see [[appendIndexBufferedQuantized]]). Belt and braces for the
     * append-during-fold window anyway: the fold reads an explicit
     * FILE SNAPSHOT of the live staging generation, and any staged
     * file that landed after the snapshot is COPIED into the fresh
@@ -535,7 +489,7 @@ object MaxSim {
     * query bucket list exactly as [[scoreLshPruned]]'s does (the
     * stored postings layout is untouched — multi-probe only reads
     * more partitions). Staged-but-unfolded rows
-    * ([[appendIndexBuffered]]) join both the shortlist and the
+    * ([[appendIndexBufferedQuantized]]) join both the shortlist and the
     * re-rank — a buffered doc is retrievable the moment its append
     * returns, and a doc visible in BOTH staging and the partitions
     * (the fold's grace window) scores identically (MAX-idempotent
@@ -600,7 +554,7 @@ object MaxSim {
     // materialization below is its first action and caches it in the
     // same job (r16 — one fewer job per probe)
     val staged = stagedRows(spark, path).map(_.localCheckpoint(false))
-    // a staging-only index is legal: appendIndexBuffered on a path
+    // a staging-only index is legal: a buffered append on a path
     // never written by writeIndex creates no partitioned dirs until
     // the first fold, and "retrievable the moment the append returns"
     // must hold there too — so the partitioned reads are data-probed
@@ -667,11 +621,12 @@ object MaxSim {
   /** Maintenance compaction into a new generation: postings are
     * re-distincted (appends can re-add a (bucket, doc_id) pair) and
     * buckets holding more than `maxBucketDocs` docs are DROPPED —
-    * the [[LshIndex]] bucket-cap discipline. A flooded bucket is
-    * boilerplate (at 2^nPlanes buckets over a healthy corpus each
-    * holds ~n/2^nPlanes docs; one holding a large corpus fraction
-    * means a degenerate token direction), and every query colliding
-    * with it would drag the whole cluster through the exact re-rank.
+    * the bucket-cap discipline of [[Dedup.lshCandidatePairs]]. A
+    * flooded bucket is boilerplate (at 2^nPlanes buckets over a
+    * healthy corpus each holds ~n/2^nPlanes docs; one holding a large
+    * corpus fraction means a degenerate token direction), and every
+    * query colliding with it would drag the whole cluster through the
+    * exact re-rank.
     * Capping drops only that bucket's POSTINGS: a capped doc stays
     * findable through its other tokens' buckets, and its token
     * vectors stay in `toks` for re-ranks it still qualifies for.
@@ -742,7 +697,7 @@ object MaxSim {
   final case class MaintenanceReport(maxBucketDocs: Long, dupPostings: Long,
                                      compacted: Boolean)
 
-  /** The compaction cadence ([[Ivf.maintain]] shape): probe the live
+  /** The compaction cadence: probe the live
     * generation's postings health in ONE aggregation — the largest
     * bucket's doc count (boilerplate flooding) and the duplicate
     * (bucket, doc_id) volume appends accrued — and run

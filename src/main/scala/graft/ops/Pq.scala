@@ -163,13 +163,8 @@ object Pq {
     * integer energies, total tie order. Returns `perm` where
     * `perm(j)` is the source dim of target slot `j`, slots grouped
     * contiguously per subspace (slot j belongs to subspace j / width).
-    */
-  def fitOpqPermutation(corpus: DataFrame, m: Int): Seq[Int] =
-    fitOpqPermutationEi(Similarity.withQuantized(corpus, "embedding"), m)
-
-  /** [[fitOpqPermutation]] over a frame already carrying `ei` — the
-    * [[IvfPq.fit]] entry point, which quantizes once for all three
-    * fits (coarse, perm, codebooks).
+    * Takes a frame already carrying `ei`: [[IvfPq.fit]] quantizes once
+    * for all three fits (coarse, perm, codebooks).
     */
   private[ops] def fitOpqPermutationEi(q: DataFrame, m: Int): Seq[Int] = {
     val dim = q.select(size(col("ei"))).head().getInt(0)
@@ -191,17 +186,6 @@ object Pq {
     }
     bins.toIndexedSeq.flatten
   }
-
-  /** Apply a [[fitOpqPermutation]] permutation to a raw embedding
-    * array column. Because permutation commutes with the element-wise
-    * micro-quantization, running the WHOLE IVF-PQ pipeline on
-    * permuted embeddings IS IVF-PQ-with-OPQ: cell assignment, ground
-    * truth, and the exact re-rank are permutation-invariant (L2 is),
-    * and only the PQ subspace split — the thing OPQ optimizes —
-    * changes.
-    */
-  def permuteEmbedding(emb: Column, perm: Seq[Int]): Column =
-    array(perm.map(d => element_at(emb, d + 1)): _*)
 
   /** The `m`-code encode of a pre-quantized `ei` column: per subspace,
     * argmin over the broadcast codebook — a pure narrow map. Shared by
@@ -269,7 +253,7 @@ object Pq {
     * subspace distances (|q_s - c|^2), then each candidate's
     * approximate distance is `zip_with(codes, lut, lookup) |> sum` —
     * one codegen'd expression per pair, `m` adds deep. Queries are
-    * broadcast-size by contract (same as [[Ivf.search]]); ranking
+    * broadcast-size by contract (same as [[Ivf.searchQuantized]]); ranking
     * tie-breaks (adc_d2, id).
     */
   def searchAdcQuantized(corpus: DataFrame, queries: DataFrame, idCol: String,

@@ -187,8 +187,8 @@ object PrefixJoin {
   /** Exact-Jaccard verify over the candidate pairs, shuffled on the
     * doc-id keys (candidates carry no smallness contract — a
     * broadcast-hinted verify would OOM the driver past a few million
-    * pairs; cf. [[Dedup.verifyCandidatePairsShuffled]], same
-    * semantics, here reading the already-checkpointed shingle sets).
+    * pairs; same semantics as [[Dedup.verifyCandidatePairs]], here
+    * reading the already-checkpointed shingle sets).
     */
   private def verifyJaccardFrom(sh: DataFrame, idCol: String,
                                 cand: DataFrame,

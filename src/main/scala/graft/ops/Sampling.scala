@@ -210,12 +210,11 @@ object Sampling {
   }
 
   /** The Efraimidis–Spirakis priority ln(u)/w as a column — u drawn
-    * content-addressed from 52 md5 bits of the key. Shared by the
-    * batch sampler above and the streaming reservoir
-    * ([[graft.streaming.WeightedReservoirStream]]) so the two can
-    * never rank differently. Requires `weightCol > 0` upstream.
+    * content-addressed from 52 md5 bits of the key, so a key's
+    * priority is the same on every run and engine. Requires
+    * `weightCol > 0` upstream.
     */
-  private[graft] def esPriority(keyCol: String, weightCol: String): Column =
+  private def esPriority(keyCol: String, weightCol: String): Column =
     expr(
       s"ln((CAST(conv(substring(md5(CAST($keyCol AS STRING)), 1, 13), 16, 10)" +
         s" AS BIGINT) + 0.5) / ${1L << 52}.0) / CAST($weightCol AS DOUBLE)")

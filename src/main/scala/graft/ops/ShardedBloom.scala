@@ -1,7 +1,5 @@
 package graft.ops
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -41,15 +39,10 @@ object BloomMembership {
   *     [[ShardedBloom.build]] shuffles fingerprints to their shard
   *     first, so each task allocates only its shard's bitset (1/N),
   *     and each shard is built by exactly one task;
-  *   - '''storage/transport''': [[ShardedBloom.buildToPath]] writes each
-  *     shard from its OWN task — the family never exists assembled in
-  *     any single JVM, driver included;
-  *   - '''probe''': the file-backed probe
-  *     ([[graft.functions.ShardedBloomPathProbe]]) routes each row to
-  *     its shard and lazily loads ONLY the shards a task actually
-  *     touches (executor-wide cache, one load per shard per JVM). A
-  *     batch repartitioned by `pmod(fp, N)` touches one shard per task —
-  *     no broadcast of the family at all, at any size.
+  *   - '''probe''': the family broadcasts as N independent bitsets,
+  *     and a probe touches only the one shard its fingerprint routes
+  *     to ([[graft.functions.SurvivingGramsSharded]], the survivor
+  *     filter of [[Contamination.gramDocFrequency]]).
   *
   * Correctness is unchanged from the monolithic filter: same
   * no-false-negative guarantee (a fingerprint is always probed against
@@ -75,22 +68,6 @@ final class ShardedBloom(val perShardItems: Long, val fpp: Double,
 
   def putLong(fp: Long): Unit = { shards(shardOf(fp)).putLong(fp); () }
 
-  /** Total bits across shards — same scale as the monolithic filter's
-    * `bitSize`, used by [[IncrementalDedup.admit]]-style fold sizing.
-    */
-  def bitSize: Long = shards.map(_.bitSize()).sum
-
-  /** Realized false-positive probability of the WORST shard — the
-    * sketch's popcount-based `expectedFpp` (set-bit fraction to the
-    * k-th power), which tracks what was actually admitted rather than
-    * what `expectedItems` promised. A long-lived standing family that
-    * outgrows its sizing degrades here first: fpp drifts toward 1 and
-    * every probe routes to the exact join — silent cost, not silent
-    * wrongness. [[ShardedBloom.maintainEpoch]] is the cadence that
-    * watches this.
-    */
-  def saturation: Double = shards.map(_.expectedFpp()).max
-
   def mergeInPlace(other: ShardedBloom): ShardedBloom = {
     require(other.numShards == numShards,
       s"shard count mismatch: $numShards vs ${other.numShards}")
@@ -108,42 +85,9 @@ final class ShardedBloom(val perShardItems: Long, val fpp: Double,
       s.writeTo(bos)
       BloomFilter.readFrom(new java.io.ByteArrayInputStream(bos.toByteArray))
     })
-
-  /** Persist as one file per shard plus a `_meta` line. Shard files
-    * written here are IMMUTABLE by contract — the executor-side probe
-    * cache ([[ShardedBloomFiles]]) caches loads per (dir, shard); write
-    * a new epoch to a new directory, never in place.
-    */
-  def save(dir: String): Unit = {
-    val conf = new Configuration()
-    val fs = FileSystem.get(new java.net.URI(dir).normalize() match {
-      case u if u.getScheme == null => new java.io.File(dir).toURI
-      case u => u
-    }, conf)
-    fs.mkdirs(new Path(dir))
-    shards.zipWithIndex.foreach { case (s, i) =>
-      val out = fs.create(ShardedBloom.shardPath(dir, i), true)
-      try s.writeTo(out) finally out.close()
-    }
-    val meta = fs.create(new Path(dir, "_meta"), true)
-    try meta.write(s"$numShards $perShardItems $fpp\n".getBytes("UTF-8"))
-    finally meta.close()
-  }
 }
 
 object ShardedBloom {
-
-  private[ops] def shardPath(dir: String, shard: Int): Path =
-    new Path(dir, f"shard-$shard%05d.bloom")
-
-  private def fsFor(dir: String): FileSystem = {
-    val conf = new Configuration()
-    val uri = new java.net.URI(dir).normalize() match {
-      case u if u.getScheme == null => new java.io.File(dir).toURI
-      case u => u
-    }
-    FileSystem.get(uri, conf)
-  }
 
   def perShard(expectedItems: Long, numShards: Int): Long =
     math.max(expectedItems / numShards, 1L)
@@ -172,76 +116,6 @@ object ShardedBloom {
     family
   }
 
-  /** The no-driver-object build: each task writes its shard files
-    * straight to `dir`; the driver only fills in empty shards and the
-    * `_meta` line. At 10^10 fps the family exists only as N files of
-    * bitSize/N each — no single JVM ever holds it assembled. Pair with
-    * [[graft.functions.ShardedBloomPathProbe]] for a probe that loads
-    * per-shard on demand. `dir` must be fresh (epoch semantics).
-    *
-    * Each task commits its shard via an attempt-unique temp file +
-    * rename — a speculative or retried attempt can never tear a shard
-    * file another attempt is concurrently writing (two attempts
-    * `create`-ing the same final path interleave their writes on
-    * object stores). Rename is the commit point: if another attempt
-    * already renamed its (byte-identical — tasks are deterministic)
-    * copy into place, the loser just discards its temp.
-    */
-  def buildToPath(history: DataFrame, fpCol: String, expectedItems: Long,
-                  dir: String, fpp: Double = 0.01,
-                  numShards: Int = 8): Unit = {
-    // enforce epoch freshness up front. A COMMITTED family (_meta is
-    // always written last) is immutable by contract — rebuilding over
-    // it would serve mixed generations to the probe cache. UNCOMMITTED
-    // debris from a crashed build must be cleared: the rename-commit
-    // loser-discard below assumes byte-identical attempts, which holds
-    // within one job but NOT across builds over different histories —
-    // a stale shard file surviving into the new family would answer
-    // bloom-NO for fingerprints the new history contains (silent false
-    // negatives). No reader ever saw the debris (_meta commits last),
-    // so deleting it is safe.
-    val preFs = fsFor(dir)
-    val dirPath = new Path(dir)
-    if (preFs.exists(new Path(dir, "_meta")))
-      throw new java.io.IOException(
-        s"refusing to rebuild committed epoch $dir in place; epochs are " +
-          "immutable — build the next epoch to a fresh directory")
-    if (preFs.exists(dirPath) && !preFs.delete(dirPath, true))
-      throw new java.io.IOException(
-        s"failed to clear uncommitted build debris at $dir")
-    val per = perShard(expectedItems, numShards)
-    val written = shardPairs(history, fpCol, per, fpp, numShards)
-      .map { case (s, b) =>
-        val fs = fsFor(dir)
-        val attempt = org.apache.spark.TaskContext.get() match {
-          case null => s"driver-${java.lang.Thread.currentThread().getId}"
-          case tc => s"attempt-${tc.taskAttemptId()}"
-        }
-        val tmp = new Path(dir, s"_tmp-$attempt-${shardPath(dir, s).getName}")
-        val out = fs.create(tmp, true)
-        try b.writeTo(out) finally out.close()
-        val dst = shardPath(dir, s)
-        // commit: first rename wins; a losing attempt's bytes are
-        // identical by determinism, so just drop the temp
-        if (!fs.rename(tmp, dst)) {
-          if (!fs.exists(dst))
-            throw new java.io.IOException(s"failed to commit shard $s to $dst")
-          fs.delete(tmp, false)
-        }
-        s
-      }
-      .collect().toSet
-    val fs = fsFor(dir)
-    fs.mkdirs(new Path(dir))
-    (0 until numShards).filterNot(written).foreach { s =>
-      val out = fs.create(shardPath(dir, s), true)
-      try BloomFilter.create(per, fpp).writeTo(out) finally out.close()
-    }
-    val meta = fs.create(new Path(dir, "_meta"), true)
-    try meta.write(s"$numShards $per $fpp\n".getBytes("UTF-8"))
-    finally meta.close()
-  }
-
   /** (shard, shard-local bloom) pairs, one pair per shard per task; a
     * shard's rows all land in one task (shuffle by shard id), so each
     * shard yields exactly one pair and `mergeInPlace` per shard is a
@@ -264,221 +138,5 @@ object ShardedBloom {
       scala.jdk.CollectionConverters.MapHasAsScala(local).asScala
         .iterator.map { case (k, v) => (k.intValue, v) }
     }
-  }
-
-  /** The family's on-disk parameters: (numShards, perShardItems, fpp).
-    * The `_meta` line is the single source of truth for shard routing —
-    * probing with a DIFFERENT shard count than the build silently
-    * routes fingerprints to the wrong shard and breaks the
-    * no-false-negative guarantee, so every path-based probe reads (or
-    * validates against) this instead of trusting a caller argument.
-    */
-  def meta(dir: String): (Int, Long, Double) = {
-    val fs = fsFor(dir)
-    val metaIn = fs.open(new Path(dir, "_meta"))
-    val line = try scala.io.Source.fromInputStream(metaIn).mkString.trim
-               finally metaIn.close()
-    val Array(n, per, fpp) = line.split(" ")
-    (n.toInt, per.toLong, fpp.toDouble)
-  }
-
-  def load(dir: String): ShardedBloom = {
-    val (n, per, fpp) = meta(dir)
-    new ShardedBloom(per, fpp, Array.tabulate(n)(loadShard(dir, _)))
-  }
-
-  /** Realized-fpp health of a file-backed family: the max popcount-
-    * based `expectedFpp` across shards, measured DISTRIBUTED — one
-    * task per shard loads its shard (through the executor-wide
-    * [[ShardedBloomFiles]] cache, so a later probe reuses the bytes)
-    * and emits one double. No JVM ever holds more than the shards its
-    * tasks touch; the driver collects N doubles.
-    */
-  def saturationOf(spark: org.apache.spark.sql.SparkSession,
-                   dir: String): Double = {
-    val (n, _, _) = meta(dir)
-    spark.range(0, n, 1, n).rdd
-      .map(s => ShardedBloomFiles.shard(dir, s.toInt).expectedFpp())
-      .max()
-  }
-
-  /** Outcome of one epoch-cadence tick: the realized fpp that was
-    * measured, the family's target, and — after a rotation — the NEW
-    * epoch directory the caller should serve probes from (`dir`
-    * unchanged on a healthy tick).
-    */
-  final case class EpochReport(realizedFpp: Double, targetFpp: Double,
-                               rotated: Boolean, dir: String)
-
-  /** The saturation cadence for a standing file-backed family — the
-    * [[Ivf.maintain]] analogue. A family sized for `expectedItems`
-    * that keeps admitting new epochs' fingerprints degrades toward
-    * fpp=1: probes never go WRONG (no false negatives), they go SLOW —
-    * eventually every batch row routes to the exact resolution join
-    * and the bloom's O(batch) win evaporates. Nothing in the probe
-    * path notices, so a cadence has to.
-    *
-    * Tick: measure [[saturationOf]] (distributed, one task per shard);
-    * at or below `factor * targetFpp`, touch nothing — N shard loads
-    * is the entire cost of a healthy tick. Past it, REBUILD the family
-    * from the CURRENT history via [[buildToPath]] into the next epoch
-    * directory, resized for `history.count() * headroom` fingerprints.
-    * The old epoch dir is left fully intact — shard files are
-    * immutable by contract and concurrent probes keep reading the old
-    * epoch safely; the caller flips its serving pointer to the
-    * returned `dir` (exactly the catalog-pointer discipline
-    * [[Ivf.maintain]]'s scaladoc prescribes).
-    *
-    * Epoch naming: a trailing integer in the directory name increments
-    * (`.../epoch1` -> `.../epoch2`); a name with no trailing integer
-    * gets `2` appended. A candidate that already exists COMMITTED
-    * (has `_meta` — e.g. a prior rotation whose caller never flipped)
-    * is skipped, never rebuilt over; uncommitted debris from a
-    * crashed rotation is cleared by [[buildToPath]]'s freshness
-    * enforcement, so a re-tick after a crash converges instead of
-    * committing a family with stale shards.
-    */
-  def maintainEpoch(spark: org.apache.spark.sql.SparkSession,
-                    history: DataFrame, fpCol: String, dir: String,
-                    factor: Double = 4.0, headroom: Double = 1.3,
-                    numShards: Int = -1): EpochReport = {
-    val (n, _, targetFpp) = meta(dir)
-    val shards = if (numShards > 0) numShards else n
-    val realized = saturationOf(spark, dir)
-    if (realized <= factor * targetFpp)
-      EpochReport(realized, targetFpp, rotated = false, dir)
-    else {
-      val fs = fsFor(dir)
-      var next = nextEpochDir(dir)
-      while (fs.exists(new Path(next, "_meta")))
-        next = nextEpochDir(next)
-      val expected = math.max(
-        math.ceil(history.count() * headroom).toLong, 1L)
-      buildToPath(history, fpCol, expected, next, targetFpp, shards)
-      EpochReport(realized, targetFpp, rotated = true, next)
-    }
-  }
-
-  /** [[buildToPath]] into the next generation under a [[Generations]]
-    * root, then flip `CURRENT` atomically — the committed family
-    * becomes servable in one pointer write. Probe via
-    * `Generations.livePath(spark, root)`.
-    */
-  def buildToPathVersioned(history: DataFrame, fpCol: String,
-                           expectedItems: Long, root: String,
-                           fpp: Double = 0.01, numShards: Int = 8): String = {
-    val spark = history.sparkSession
-    val next = nextUncommittedGen(spark, root)
-    buildToPath(history, fpCol, expectedItems, next, fpp, numShards)
-    Generations.publish(spark, root, next)
-    next
-  }
-
-  /** The next generation dir a bloom build may land in. Plain
-    * `Generations.nextPath` would wedge after a rotation that crashed
-    * between [[buildToPath]]'s `_meta` commit and the pointer flip:
-    * the re-tick computes the SAME next path, and [[buildToPath]]
-    * refuses (correctly) to rebuild a committed family in place —
-    * permanently. Committed-but-unpublished generations are skipped
-    * instead, exactly [[maintainEpoch]]'s convergence rule; they were
-    * never served (no pointer reached them) and a later [[Generations
-    * .prune]] sweeps them once the window passes. Uncommitted debris
-    * (no `_meta`) is NOT skipped — buildToPath clears and reuses it.
-    */
-  private def nextUncommittedGen(
-      spark: org.apache.spark.sql.SparkSession, root: String): String = {
-    val fs = fsFor(root)
-    var next = Generations.nextPath(spark, root)
-    while (fs.exists(new Path(next, "_meta")))
-      next = new Path(root, Generations.genName(
-        new Path(next).getName.stripPrefix("gen-").toLong + 1)).toString
-    next
-  }
-
-  /** [[maintainEpoch]] against a [[Generations]] root: the serving
-    * pointer that contract asks the CALLER to flip is the root's
-    * `CURRENT` file, flipped here atomically after the rebuilt family
-    * commits. Concurrent probes of the old epoch stay valid (shard
-    * files are immutable; [[Generations.prune]]'s keep window bounds
-    * their grace). The returned report's `dir` is always the live
-    * generation to serve from.
-    */
-  def maintainEpochVersioned(spark: org.apache.spark.sql.SparkSession,
-                             history: DataFrame, fpCol: String,
-                             root: String, factor: Double = 4.0,
-                             headroom: Double = 1.3, numShards: Int = -1,
-                             keep: Int = 2): EpochReport = {
-    val live = Generations.livePath(spark, root)
-    val (n, _, targetFpp) = meta(live)
-    val shards = if (numShards > 0) numShards else n
-    val realized = saturationOf(spark, live)
-    if (realized <= factor * targetFpp)
-      EpochReport(realized, targetFpp, rotated = false, live)
-    else {
-      val expected = math.max(
-        math.ceil(history.count() * headroom).toLong, 1L)
-      val next = nextUncommittedGen(spark, root)
-      buildToPath(history, fpCol, expected, next, targetFpp, shards)
-      Generations.publish(spark, root, next)
-      Generations.prune(spark, root, keep)
-      EpochReport(realized, targetFpp, rotated = true, next)
-    }
-  }
-
-  private[graft] def nextEpochDir(dir: String): String = {
-    val trimmed = dir.stripSuffix("/")
-    val (parent, name) = trimmed.lastIndexOf('/') match {
-      case -1 => ("", trimmed)
-      case i => (trimmed.substring(0, i + 1), trimmed.substring(i + 1))
-    }
-    val m = "^(.*?)(\\d+)$".r.findFirstMatchIn(name)
-    m match {
-      case Some(g) => parent + g.group(1) + (g.group(2).toLong + 1L)
-      case None => parent + name + "2"
-    }
-  }
-
-  def loadShard(dir: String, shard: Int): BloomFilter = {
-    val fs = fsFor(dir)
-    val in = fs.open(shardPath(dir, shard))
-    try BloomFilter.readFrom(in) finally in.close()
-  }
-}
-
-/** Executor-wide cache for file-backed shard probes: one load per
-  * (dir, shard) per JVM, shared across tasks and queries. Keyed on the
-  * immutable-epoch contract of [[ShardedBloom.save]]/`buildToPath` —
-  * rewriting a shard dir in place would serve stale bits; write new
-  * epochs to new dirs (and [[invalidate]] exists for tests).
-  */
-object ShardedBloomFiles {
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), BloomFilter]()
-
-  def shard(dir: String, s: Int): BloomFilter =
-    cache.computeIfAbsent((dir, s),
-      key => ShardedBloom.loadShard(key._1, key._2))
-
-  def invalidate(dir: String): Unit = {
-    val it = cache.keySet().iterator()
-    while (it.hasNext) if (it.next()._1 == dir) it.remove()
-  }
-}
-
-/** Per-task probe handle over a file-backed family: resolves each
-  * touched shard once from [[ShardedBloomFiles]] into a local array,
-  * so the per-row cost is floorMod + array load + one probe. A batch
-  * pre-partitioned by `pmod(fp, N)` resolves exactly one shard per
-  * task; an unpartitioned batch at worst resolves all N (still loaded
-  * once per JVM, not per task).
-  */
-final class ShardedBloomPathHandle(dir: String, numShards: Int) {
-  private val local = new Array[BloomFilter](numShards)
-
-  def mightContain(fp: Long): Boolean = {
-    val s = java.lang.Math.floorMod(fp, numShards.toLong).toInt
-    var b = local(s)
-    if (b == null) { b = ShardedBloomFiles.shard(dir, s); local(s) = b }
-    b.mightContainLong(fp)
   }
 }

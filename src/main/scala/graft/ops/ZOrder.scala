@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -14,12 +14,10 @@ import org.apache.spark.sql.types.LongType
   * min-max stats are tight on BOTH dimensions at once and a 2-D box
   * predicate skips the overwhelming majority of splits.
   *
-  * Scale shape: `repartitionByRange` computes split bounds by sampling
-  * (no global sort barrier on the driver), then shuffles once into
-  * range-contiguous partitions — the identical mechanism at 32 or
-  * 100k partitions. The z-value itself is a pure per-row expression
-  * (64 bit-ops at 16-bit resolution) inside whole-stage codegen —
-  * no UDF, no shuffle of its own.
+  * The z-value is a pure per-row expression (64 bit-ops at 16-bit
+  * resolution) inside whole-stage codegen — no UDF, no shuffle of its
+  * own. [[graft.sources.PartitionedSink.zOrderedWrite]] range-
+  * partitions a table on it, which is the write-side layout step.
   *
   * The top 2k bits of a z-value name the 4^k-cell quadtree bucket the
   * point falls in — `zBucket` exposes that as the fully-parallel
@@ -52,41 +50,6 @@ object ZOrder {
   def zBucket(z: Column, bits: Int, levels: Int): Column = {
     require(levels >= 1 && levels <= bits, s"levels in [1,$bits] (got $levels)")
     shiftright(z, 2 * (bits - levels))
-  }
-
-  /** Range-partition `df` by z-value of (x, y) — the write-side layout
-    * step. Every output partition (=> parquet file) covers one compact
-    * z-range; follow with a partition-local sort for row-group-level
-    * stats too.
-    */
-  def clusterBy(df: DataFrame, xCol: String, yCol: String, bits: Int,
-                numPartitions: Int): DataFrame =
-    df.withColumn("zval", zValue2(col(xCol), col(yCol), bits))
-      .repartitionByRange(numPartitions, col("zval"))
-      .sortWithinPartitions("zval")
-
-  /** Per-partition min-max skipping stats of the two dimensions —
-    * what a parquet footer would carry for each file written from
-    * this layout. One narrow aggregation, no data movement.
-    */
-  def layoutStats(df: DataFrame, xCol: String, yCol: String): DataFrame =
-    df.groupBy(spark_partition_id().as("split"))
-      .agg(count(lit(1)).as("n_rows"),
-        min(xCol).as("min_x"), max(xCol).as("max_x"),
-        min(yCol).as("min_y"), max(yCol).as("max_y"))
-
-  /** Fraction of splits a box predicate `x in [x0,x1] && y in [y0,y1]`
-    * can skip given layout stats (driver-side over the per-split
-    * summary — O(splits), not O(rows)).
-    */
-  def skippedFraction(stats: DataFrame, x0: Long, x1: Long,
-                      y0: Long, y1: Long): Double = {
-    val rows = stats.select("min_x", "max_x", "min_y", "max_y").collect()
-    if (rows.isEmpty) 0.0
-    else rows.count { r =>
-      r.getLong(1) < x0 || r.getLong(0) > x1 ||
-        r.getLong(3) < y0 || r.getLong(2) > y1
-    }.toDouble / rows.length
   }
 
   /** DuckDB-SQL rendering of [[zValue2]] (for oracle parity): the same

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.ops.{Contamination, IncrementalDedup, Sampling}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkBridge
 
 /** Corpus-curation surface, round 3 (cont.): incremental-ingest dedup
   * against a historical fingerprint store, domain-mixture
@@ -72,7 +73,7 @@ object CurationQueries {
     // from the raw table — the sidecar is an access path, never a
     // semantics change (one lost or phantom row hash-mismatches).
     "q147_bloom_sidecar_lookup" -> ((s, dir) => {
-      val scratch = java.nio.file.Files.createTempDirectory("graft_q147")
+      val scratch = SparkBridge.tempDir("graft_q147")
       val data = scratch.resolve("t").toString
       val side = scratch.resolve("idx").toString
       t(s, dir, "documents").select(col("doc_id"), col("text"))

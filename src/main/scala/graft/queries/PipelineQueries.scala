@@ -1,8 +1,10 @@
 package graft.queries
 
 import graft.ops.{ChangeCapture, Contamination, Packing, QualitySignals, SegmentDedup, TextAnalysis, UrlOps}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkBridge
 import org.apache.spark.sql.types.LongType
 
 /** Training-data pipeline surface, round 3: repetition quality
@@ -337,7 +339,7 @@ object PipelineQueries {
         to_date(col("ts")).cast("string").as("day"),
         col("event_type"), col("user_id"),
         expr("CAST(round(value * 1000.0) AS BIGINT)").as("v_milli"))
-      val path = java.nio.file.Files.createTempDirectory("graft_q141")
+      val path = SparkBridge.tempDir("graft_q141")
         .resolve("rollup").toString
       val keys = Seq("day", "event_type")
       val ms = Seq(IncrementalAgg.count("n_events"),
@@ -376,9 +378,9 @@ object PipelineQueries {
         .select(to_date(col("ts")).cast("string").as("day"),
           col("event_type"), col("user_id"),
           expr("CAST(round(value * 1000.0) AS BIGINT)").as("v_milli"))
-      val path = java.nio.file.Files.createTempDirectory("graft_q189")
+      val path = SparkBridge.tempDir("graft_q189")
         .resolve("rollup").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_q189_ck")
+      val ckpt = SparkBridge.tempDir("graft_q189_ck")
         .toString
       val keys = Seq("day", "event_type")
       val ms = Seq(IncrementalAgg.count("n_events"),
@@ -450,9 +452,9 @@ object PipelineQueries {
       require(feed.nonEmpty, "q190: the event_id % 13 slice is empty")
       val (lo, hi) = (feed.map(_._2).min, feed.map(_._2).max)
       val (c1, c2) = (lo + (hi - lo) / 3, lo + 2 * ((hi - lo) / 3))
-      val store = java.nio.file.Files.createTempDirectory("graft_q190")
+      val store = SparkBridge.tempDir("graft_q190")
         .resolve("scd2").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_q190_ck")
+      val ckpt = SparkBridge.tempDir("graft_q190_ck")
         .toString
       implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
       import s.implicits._
@@ -513,9 +515,9 @@ object PipelineQueries {
             .as("text"))
       // bounded driver read: one max-id row for the range cuts
       val m = d.agg(max("doc_id")).head().getLong(0)
-      val store = java.nio.file.Files.createTempDirectory("graft_q191")
+      val store = SparkBridge.tempDir("graft_q191")
         .resolve("store").toString
-      val out = java.nio.file.Files.createTempDirectory("graft_q191_out")
+      val out = SparkBridge.tempDir("graft_q191_out")
         .resolve("clean").toString
       implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
       import s.implicits._
@@ -523,8 +525,7 @@ object PipelineQueries {
         .MemoryStream[(Long, String)]
       val rows = mem.toDS().toDF("doc_id", "text")
       val q = graft.streaming.SegmentDedupStream.start(rows, "doc_id",
-        "text", 10, store, out, java.nio.file.Files
-          .createTempDirectory("graft_q191_ck").toString)
+        "text", 10, store, out, SparkBridge.tempDir("graft_q191_ck").toString)
       // bounded driver read: the % 3 slice is ~170 docs/batch at the
       // sf0.01 gate, ~1.7k at sf0.1 — fixture feed
       def batch(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
@@ -569,9 +570,9 @@ object PipelineQueries {
       require(feed.nonEmpty, "q194: the event_id % 19 slice is empty")
       val (lo, hi) = (feed.map(_._2).min, feed.map(_._2).max)
       val (c1, c2) = (lo + (hi - lo) / 3, lo + 2 * ((hi - lo) / 3))
-      val store = java.nio.file.Files.createTempDirectory("graft_q194")
+      val store = SparkBridge.tempDir("graft_q194")
         .resolve("scd2").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_q194_ck")
+      val ckpt = SparkBridge.tempDir("graft_q194_ck")
         .toString
       implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
       import s.implicits._
@@ -628,9 +629,9 @@ object PipelineQueries {
       require(feed.nonEmpty, "q195: the event_id % 23 slice is empty")
       val (lo, hi) = (feed.map(_._2).min, feed.map(_._2).max)
       val (c1, c2) = (lo + (hi - lo) / 3, lo + 2 * ((hi - lo) / 3))
-      val store = java.nio.file.Files.createTempDirectory("graft_q195")
+      val store = SparkBridge.tempDir("graft_q195")
         .resolve("scd2").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_q195_ck")
+      val ckpt = SparkBridge.tempDir("graft_q195_ck")
         .toString
       implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
       import s.implicits._
@@ -687,9 +688,9 @@ object PipelineQueries {
       require(feed.nonEmpty, "q196: the event_id % 29 slice is empty")
       val (lo, hi) = (feed.map(_._2).min, feed.map(_._2).max)
       val (c1, c2) = (lo + (hi - lo) / 3, lo + 2 * ((hi - lo) / 3))
-      val store = java.nio.file.Files.createTempDirectory("graft_q196")
+      val store = SparkBridge.tempDir("graft_q196")
         .resolve("scd2").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_q196_ck")
+      val ckpt = SparkBridge.tempDir("graft_q196_ck")
         .toString
       implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
       import s.implicits._
@@ -771,7 +772,7 @@ object PipelineQueries {
     "q156_rollup_rewrite" -> ((s, dir) => {
       import graft.ops.IncrementalAgg
       import graft.plans.RollupRewrite
-      val scratch = java.nio.file.Files.createTempDirectory("graft_q156")
+      val scratch = SparkBridge.tempDir("graft_q156")
       val srcPath = scratch.resolve("raw_events_src.parquet").toString
       val rollupPath = scratch.resolve("rollup_mv_store").toString
       events(s, dir).select(
@@ -793,9 +794,16 @@ object PipelineQueries {
         .groupBy("day", "event_type")
         .agg(count(lit(1)).as("n_events"), sum("v_milli").as("sum_v_milli"))
         .orderBy("day", "event_type")
-      val plan = q.queryExecution.executedPlan.toString
-      require(plan.contains("rollup_mv_store") && !plan.contains("raw_events_src"),
-        s"rollup rewrite did not fire:\n$plan")
+      // the scans' root paths, not the plan text: Spark cuts a file
+      // location short in a plan string
+      val scanned = q.queryExecution.optimizedPlan.collect {
+        case lr: LogicalRelation => lr.relation
+      }.collect {
+        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.getName)
+      }.flatten
+      require(scanned.contains("rollup_mv_store") &&
+          !scanned.contains("raw_events_src.parquet"),
+        s"rollup rewrite did not fire, scans $scanned:\n${q.queryExecution.optimizedPlan}")
       q
     }),
 
@@ -871,8 +879,7 @@ object PipelineQueries {
       val d = t(s, dir, "documents")
       val (merges, seg) = graft.ops.Bpe.train(s,
         graft.ops.Bpe.wordVocab(d, "text"), 6)
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q181").toString
+      val root = SparkBridge.tempDir("graft_q181").toString
       graft.ops.Bpe.writeModelVersioned(s, merges, seg, root)
       seg.unpersist()
       graft.ops.Bpe.encodeCountsStored(s, d,
@@ -892,8 +899,7 @@ object PipelineQueries {
       val newD = d.where(col("doc_id") % 10 === 0)
       val (merges, seg) = graft.ops.Bpe.train(s,
         graft.ops.Bpe.wordVocab(oldD, "text"), 6)
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_q183").toString
+      val root = SparkBridge.tempDir("graft_q183").toString
       graft.ops.Bpe.writeModelVersioned(s, merges, seg, root)
       seg.unpersist()
       graft.ops.Bpe.refresh(s, root, newD, "text")

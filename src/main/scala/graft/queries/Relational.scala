@@ -741,7 +741,7 @@ object Relational {
     // — a pure projection, NO global sort), and emit each bucket's
     // min-max box plus whether a fixed 2-D box predicate could skip
     // it entirely. This is the data-skipping math behind
-    // ops/ZOrder.clusterBy: tight min-max on BOTH dims at once.
+    // PartitionedSink.zOrderedWrite: tight min-max on BOTH dims at once.
     "q118_zorder_skipping" -> ((s, dir) => {
       val bits = 16
       val z = graft.ops.ZOrder.zValue2(col("l_partkey"), col("l_suppkey"), bits)

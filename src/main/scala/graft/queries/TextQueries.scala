@@ -4,6 +4,7 @@ import graft.ops.{Dedup, Html, Mp4, Multimodal, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkBridge
 import org.apache.spark.sql.types.LongType
 
 /** Extension surface: text analysis, dedup family, multimodal
@@ -160,11 +161,10 @@ object TextQueries {
         .orderBy("doc_a", "doc_b")
     }),
 
-    // the stream's destructive decision, batch-checked: per-doc
-    // quarantine verdicts over VERIFIED candidates — the exact logic
-    // NearDupStream runs per micro-batch (Dedup.verifiedQuarantine is
-    // shared), so the oracle pins that band collisions below the
-    // Jaccard threshold are NOT quarantined
+    // the destructive curation decision, oracle-checked: per-doc
+    // quarantine verdicts over VERIFIED candidates
+    // (Dedup.verifiedQuarantine), so the oracle pins that band
+    // collisions below the Jaccard threshold are NOT quarantined
     "q106_neardup_quarantine" -> ((s, dir) => {
       val corpus = dupCorpus(s, dir)
       val sig = Dedup.minhashSignatures(corpus, "doc_id", "text",
@@ -890,7 +890,7 @@ object TextQueries {
     // paths cannot drift)
     "q135_bm25_index" -> ((s, dir) => {
       val d = t(s, dir, "documents")
-      val idx = java.nio.file.Files.createTempDirectory("graft_q135")
+      val idx = SparkBridge.tempDir("graft_q135")
         .resolve("idx").toString
       graft.ops.InvertedIndex.writeIndex(d, "doc_id", "text", idx)
       graft.ops.InvertedIndex.bm25SearchIndex(s, idx,
@@ -930,7 +930,7 @@ object TextQueries {
     // from the raw text.
     "q134_phrase_search" -> ((s, dir) => {
       val d = t(s, dir, "documents")
-      val idx = java.nio.file.Files.createTempDirectory("graft_q134")
+      val idx = SparkBridge.tempDir("graft_q134")
         .resolve("idx").toString
       graft.ops.InvertedIndex.writeIndex(d, "doc_id", "text", idx)
       graft.ops.InvertedIndex.phraseSearchIndex(s, idx, Seq("table", "hash"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.ops.{Pq, Similarity}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkBridge
 
 /** Similarity-search surface over the embeddings fixture
   * (vec_id, embedding: array<float>, label).
@@ -115,9 +116,7 @@ object VectorQueries {
     // — the metadata predicate rides the hash-join key next to cell
     // (pre-filter at equal nProbe: identical to probing the filtered
     // corpus under the same model; a post-ranking filter would starve
-    // top-k instead). The production twin over a materialized index
-    // (predicate pushed into the probed-cells parquet scan) is
-    // Ivf.searchIndexFiltered, spec-pinned for pushdown + parity.
+    // top-k instead).
     "q130_ann_filtered" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       val model = graft.ops.Ivf.fitQuantized(e, "vec_id", nLists = 4)
@@ -149,7 +148,7 @@ object VectorQueries {
     "q110_ivfpq_index" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       val model = graft.ops.IvfPq.fit(e, "vec_id", nLists = 4, m = 4, k = 4)
-      val idx = java.nio.file.Files.createTempDirectory("graft_q110")
+      val idx = SparkBridge.tempDir("graft_q110")
         .resolve("idx").toString
       graft.ops.IvfPq.writeIndex(e, "vec_id", model, idx)
       graft.ops.IvfPq.searchIndex(s, idx, e, e.where(col("vec_id") < 5),
@@ -167,7 +166,7 @@ object VectorQueries {
       val e = t(s, dir, "embeddings")
       val model = graft.ops.IvfPq.fit(e, "vec_id", nLists = 4, m = 4, k = 4,
         opq = true)
-      val idx = java.nio.file.Files.createTempDirectory("graft_q193")
+      val idx = SparkBridge.tempDir("graft_q193")
         .resolve("idx").toString
       graft.ops.IvfPq.writeIndex(e, "vec_id", model, idx)
       graft.ops.IvfPq.searchIndex(s, idx, e, e.where(col("vec_id") < 5),
@@ -443,7 +442,7 @@ object VectorQueries {
     // the stored index must hash-equal the in-memory pruned path
     "q180_maxsim_index" -> ((s, dir) => {
       val mv = graft.ops.MaxSim.multiVector(t(s, dir, "embeddings"), "vec_id", 4)
-      val idx = java.nio.file.Files.createTempDirectory("graft_q180").toString
+      val idx = SparkBridge.tempDir("graft_q180").toString
       graft.ops.MaxSim.writeIndex(mv, idx, nPlanes = 4, dims = 64,
         dBuckets = 16)
       graft.ops.MaxSim.searchIndex(s, idx, mv.where(col("doc_id") < 3),
@@ -478,10 +477,10 @@ object VectorQueries {
     // spec assertion to correctness gate.
     "q187_maxsim_stream_intake" -> ((s, dir) => {
       val mv = graft.ops.MaxSim.multiVector(t(s, dir, "embeddings"), "vec_id", 4)
-      val root = java.nio.file.Files.createTempDirectory("graft_q187_idx").toString
-      val out = java.nio.file.Files.createTempDirectory("graft_q187").toString +
+      val root = SparkBridge.tempDir("graft_q187_idx").toString
+      val out = SparkBridge.tempDir("graft_q187").toString +
         "/scores"
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_q187_ck").toString
+      val ckpt = SparkBridge.tempDir("graft_q187_ck").toString
       graft.ops.MaxSim.writeIndexVersioned(mv.where(col("doc_id") >= 8), root,
         nPlanes = 4, dims = 64, dBuckets = 16)
       import s.implicits._
@@ -530,10 +529,10 @@ object VectorQueries {
     // exercises the marker guard AROUND a fold, q187's done-bar.
     "q192_maxsim_stream_folded" -> ((s, dir) => {
       val mv = graft.ops.MaxSim.multiVector(t(s, dir, "embeddings"), "vec_id", 4)
-      val root = java.nio.file.Files.createTempDirectory("graft_q192_idx").toString
-      val out = java.nio.file.Files.createTempDirectory("graft_q192").toString +
+      val root = SparkBridge.tempDir("graft_q192_idx").toString
+      val out = SparkBridge.tempDir("graft_q192").toString +
         "/scores"
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_q192_ck").toString
+      val ckpt = SparkBridge.tempDir("graft_q192_ck").toString
       graft.ops.MaxSim.writeIndexVersioned(mv.where(col("doc_id") >= 8), root,
         nPlanes = 4, dims = 64, dBuckets = 16)
       import s.implicits._
@@ -569,12 +568,18 @@ object VectorQueries {
         .orderBy("batch_id", "q_doc", "rnk")
     }))
 
+  // Every CTE of the shared replay fragments below (quantCte,
+  // ivfAssignCte, pqFitCte, opqPermCte) is declared AS MATERIALIZED:
+  // DuckDB otherwise inlines a CTE at each reference and re-runs the
+  // PQ fit per use (q110 took 96 s, q193 minutes at 7.6 GB RSS on
+  // sf0.01); materialized, each runs once. An evaluation hint only —
+  // the rows are unchanged.
   private val quantCte =
-    """e AS (SELECT vec_id,
+    """e AS MATERIALIZED (SELECT vec_id,
          list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS ei
          FROM embeddings),
-       flat AS (SELECT vec_id, generate_subscripts(ei, 1) AS i, unnest(ei) AS v FROM e),
-       norms AS (SELECT vec_id, SUM(v*v) AS nn FROM flat GROUP BY 1)"""
+       flat AS MATERIALIZED (SELECT vec_id, generate_subscripts(ei, 1) AS i, unnest(ei) AS v FROM e),
+       norms AS MATERIALIZED (SELECT vec_id, SUM(v*v) AS nn FROM flat GROUP BY 1)"""
 
   /** Shared IVF replay (fitQuantized nLists=4 + assignment): c0 =
     * lowest-id vector; pool = top 24 by integer d2 from c0; greedy
@@ -583,49 +588,49 @@ object VectorQueries {
     * and q93 (semantic dedup).
     */
   private val ivfAssignCte =
-    """c0 AS (SELECT vec_id FROM e ORDER BY vec_id LIMIT 1),
-         dots0 AS (SELECT f.vec_id, SUM(f.v * c.v) AS xc
+    """c0 AS MATERIALIZED (SELECT vec_id FROM e ORDER BY vec_id LIMIT 1),
+         dots0 AS MATERIALIZED (SELECT f.vec_id, SUM(f.v * c.v) AS xc
                    FROM flat f JOIN flat c ON c.i = f.i
                      AND c.vec_id = (SELECT vec_id FROM c0)
                    GROUP BY 1),
-         pool AS (SELECT d.vec_id, n.nn - 2*d.xc AS d2
+         pool AS MATERIALIZED (SELECT d.vec_id, n.nn - 2*d.xc AS d2
                   FROM dots0 d JOIN norms n ON n.vec_id = d.vec_id
                   ORDER BY d2 DESC, d.vec_id LIMIT 24),
-         pdot AS (SELECT fa.vec_id AS ida, fb.vec_id AS idb, SUM(fa.v*fb.v) AS dot
+         pdot AS MATERIALIZED (SELECT fa.vec_id AS ida, fb.vec_id AS idb, SUM(fa.v*fb.v) AS dot
                   FROM flat fa JOIN flat fb ON fb.i = fa.i
                   WHERE fa.vec_id IN (SELECT vec_id FROM pool)
                     AND (fb.vec_id IN (SELECT vec_id FROM pool)
                          OR fb.vec_id = (SELECT vec_id FROM c0))
                   GROUP BY 1, 2),
-         pd AS (SELECT ida, idb, na.nn - 2*dot + nb.nn AS d2
+         pd AS MATERIALIZED (SELECT ida, idb, na.nn - 2*dot + nb.nn AS d2
                 FROM pdot JOIN norms na ON na.vec_id = ida
                   JOIN norms nb ON nb.vec_id = idb),
-         p1 AS (SELECT ida AS vec_id FROM pd WHERE idb = (SELECT vec_id FROM c0)
+         p1 AS MATERIALIZED (SELECT ida AS vec_id FROM pd WHERE idb = (SELECT vec_id FROM c0)
                 ORDER BY d2 DESC, ida LIMIT 1),
-         p2 AS (SELECT ida AS vec_id FROM (
+         p2 AS MATERIALIZED (SELECT ida AS vec_id FROM (
                   SELECT ida, MIN(d2) AS mind2 FROM pd
                   WHERE idb IN (SELECT vec_id FROM c0 UNION SELECT vec_id FROM p1)
                     AND ida <> (SELECT vec_id FROM p1)
                   GROUP BY ida)
                 ORDER BY mind2 DESC, ida LIMIT 1),
-         p3 AS (SELECT ida AS vec_id FROM (
+         p3 AS MATERIALIZED (SELECT ida AS vec_id FROM (
                   SELECT ida, MIN(d2) AS mind2 FROM pd
                   WHERE idb IN (SELECT vec_id FROM c0 UNION SELECT vec_id FROM p1
                                 UNION SELECT vec_id FROM p2)
                     AND ida NOT IN (SELECT vec_id FROM p1 UNION SELECT vec_id FROM p2)
                   GROUP BY ida)
                 ORDER BY mind2 DESC, ida LIMIT 1),
-         cents AS (SELECT 0 AS cell, (SELECT vec_id FROM c0) AS vec_id
+         cents AS MATERIALIZED (SELECT 0 AS cell, (SELECT vec_id FROM c0) AS vec_id
                    UNION ALL SELECT 1, (SELECT vec_id FROM p1)
                    UNION ALL SELECT 2, (SELECT vec_id FROM p2)
                    UNION ALL SELECT 3, (SELECT vec_id FROM p3)),
-         cflat AS (SELECT c.cell, f.i, f.v FROM cents c JOIN flat f ON f.vec_id = c.vec_id),
-         cnorm AS (SELECT cell, SUM(v*v) AS cc FROM cflat GROUP BY 1),
-         scored AS (SELECT a.vec_id, a.cell, cn.cc - 2*a.dot AS d2 FROM (
+         cflat AS MATERIALIZED (SELECT c.cell, f.i, f.v FROM cents c JOIN flat f ON f.vec_id = c.vec_id),
+         cnorm AS MATERIALIZED (SELECT cell, SUM(v*v) AS cc FROM cflat GROUP BY 1),
+         scored AS MATERIALIZED (SELECT a.vec_id, a.cell, cn.cc - 2*a.dot AS d2 FROM (
                       SELECT f.vec_id, cf.cell, SUM(f.v * cf.v) AS dot
                       FROM flat f JOIN cflat cf ON cf.i = f.i GROUP BY 1, 2) a
                     JOIN cnorm cn ON cn.cell = a.cell),
-         assigned AS (SELECT vec_id, cell FROM (
+         assigned AS MATERIALIZED (SELECT vec_id, cell FROM (
                         SELECT vec_id, cell,
                           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS rn
                         FROM scored) WHERE rn = 1)"""
@@ -639,25 +644,25 @@ object VectorQueries {
     * its own cell-restricted tail.
     */
   private val pqFitCte =
-    """sflat AS (SELECT vec_id, CAST((i - 1) // 16 AS INT) AS s,
+    """sflat AS MATERIALIZED (SELECT vec_id, CAST((i - 1) // 16 AS INT) AS s,
                    (i - 1) % 16 AS j, v FROM flat),
-       snorm AS (SELECT vec_id, s, SUM(v*v) AS nn FROM sflat GROUP BY 1, 2),
-       c0 AS (SELECT vec_id FROM e ORDER BY vec_id LIMIT 1),
-       sd0 AS (SELECT f.vec_id, f.s, SUM(f.v * c.v) AS xc
+       snorm AS MATERIALIZED (SELECT vec_id, s, SUM(v*v) AS nn FROM sflat GROUP BY 1, 2),
+       c0 AS MATERIALIZED (SELECT vec_id FROM e ORDER BY vec_id LIMIT 1),
+       sd0 AS MATERIALIZED (SELECT f.vec_id, f.s, SUM(f.v * c.v) AS xc
                FROM sflat f JOIN sflat c ON c.s = f.s AND c.j = f.j
                  AND c.vec_id = (SELECT vec_id FROM c0)
                GROUP BY 1, 2),
-       pool AS (SELECT vec_id, s FROM (
+       pool AS MATERIALIZED (SELECT vec_id, s FROM (
                  SELECT d.vec_id, d.s,
                    ROW_NUMBER() OVER (PARTITION BY d.s
                      ORDER BY (n.nn - 2*d.xc) DESC, d.vec_id) AS rn
                  FROM sd0 d JOIN snorm n ON n.vec_id = d.vec_id AND n.s = d.s)
                 WHERE rn <= 24),
-       poolc AS (SELECT vec_id, s FROM pool
+       poolc AS MATERIALIZED (SELECT vec_id, s FROM pool
                  UNION
                  SELECT c0.vec_id, sub.s FROM c0,
                    (SELECT DISTINCT s FROM sflat) sub),
-       pdot AS (SELECT fa.s, fa.vec_id AS ida, fb.vec_id AS idb,
+       pdot AS MATERIALIZED (SELECT fa.s, fa.vec_id AS ida, fb.vec_id AS idb,
                   SUM(fa.v * fb.v) AS dot
                 FROM (SELECT sf.vec_id, sf.s, sf.j, sf.v FROM sflat sf
                       JOIN pool p ON p.vec_id = sf.vec_id AND p.s = sf.s) fa
@@ -665,25 +670,25 @@ object VectorQueries {
                       JOIN poolc p ON p.vec_id = sf.vec_id AND p.s = sf.s) fb
                   ON fb.s = fa.s AND fb.j = fa.j
                 GROUP BY 1, 2, 3),
-       pd AS (SELECT p.s, ida, idb, na.nn - 2*dot + nb.nn AS d2
+       pd AS MATERIALIZED (SELECT p.s, ida, idb, na.nn - 2*dot + nb.nn AS d2
               FROM pdot p JOIN snorm na ON na.vec_id = ida AND na.s = p.s
                 JOIN snorm nb ON nb.vec_id = idb AND nb.s = p.s),
-       p1 AS (SELECT s, vec_id FROM (
+       p1 AS MATERIALIZED (SELECT s, vec_id FROM (
                SELECT s, ida AS vec_id,
                  ROW_NUMBER() OVER (PARTITION BY s ORDER BY d2 DESC, ida) AS rn
                FROM pd WHERE idb = (SELECT vec_id FROM c0)) WHERE rn = 1),
-       p2m AS (SELECT pd.s, ida, MIN(d2) AS mind2 FROM pd
+       p2m AS MATERIALIZED (SELECT pd.s, ida, MIN(d2) AS mind2 FROM pd
                WHERE (idb = (SELECT vec_id FROM c0)
                       OR EXISTS (SELECT 1 FROM p1
                                  WHERE p1.s = pd.s AND p1.vec_id = idb))
                  AND NOT EXISTS (SELECT 1 FROM p1
                                  WHERE p1.s = pd.s AND p1.vec_id = ida)
                GROUP BY 1, 2),
-       p2 AS (SELECT s, vec_id FROM (
+       p2 AS MATERIALIZED (SELECT s, vec_id FROM (
                SELECT s, ida AS vec_id,
                  ROW_NUMBER() OVER (PARTITION BY s ORDER BY mind2 DESC, ida) AS rn
                FROM p2m) WHERE rn = 1),
-       p3m AS (SELECT pd.s, ida, MIN(d2) AS mind2 FROM pd
+       p3m AS MATERIALIZED (SELECT pd.s, ida, MIN(d2) AS mind2 FROM pd
                WHERE (idb = (SELECT vec_id FROM c0)
                       OR EXISTS (SELECT 1 FROM p1
                                  WHERE p1.s = pd.s AND p1.vec_id = idb)
@@ -694,28 +699,28 @@ object VectorQueries {
                  AND NOT EXISTS (SELECT 1 FROM p2
                                  WHERE p2.s = pd.s AND p2.vec_id = ida)
                GROUP BY 1, 2),
-       p3 AS (SELECT s, vec_id FROM (
+       p3 AS MATERIALIZED (SELECT s, vec_id FROM (
                SELECT s, ida AS vec_id,
                  ROW_NUMBER() OVER (PARTITION BY s ORDER BY mind2 DESC, ida) AS rn
                FROM p3m) WHERE rn = 1),
-       cb AS (SELECT s, 0 AS code, (SELECT vec_id FROM c0) AS vec_id
+       cb AS MATERIALIZED (SELECT s, 0 AS code, (SELECT vec_id FROM c0) AS vec_id
               FROM (SELECT DISTINCT s FROM sflat)
               UNION ALL SELECT s, 1, vec_id FROM p1
               UNION ALL SELECT s, 2, vec_id FROM p2
               UNION ALL SELECT s, 3, vec_id FROM p3),
-       cvec AS (SELECT cb.s, cb.code, f.j, f.v FROM cb
+       cvec AS MATERIALIZED (SELECT cb.s, cb.code, f.j, f.v FROM cb
                 JOIN sflat f ON f.vec_id = cb.vec_id AND f.s = cb.s),
-       cnorm AS (SELECT s, code, SUM(v*v) AS cc FROM cvec GROUP BY 1, 2),
-       xdot AS (SELECT f.vec_id, c.s, c.code, SUM(f.v * c.v) AS dot
+       cnorm AS MATERIALIZED (SELECT s, code, SUM(v*v) AS cc FROM cvec GROUP BY 1, 2),
+       xdot AS MATERIALIZED (SELECT f.vec_id, c.s, c.code, SUM(f.v * c.v) AS dot
                 FROM sflat f JOIN cvec c ON c.s = f.s AND c.j = f.j
                 GROUP BY 1, 2, 3),
-       enc AS (SELECT vec_id, s, code FROM (
+       enc AS MATERIALIZED (SELECT vec_id, s, code FROM (
                 SELECT x.vec_id, x.s, x.code,
                   ROW_NUMBER() OVER (PARTITION BY x.vec_id, x.s
                     ORDER BY (cn.cc - 2*x.dot), x.code) AS rn
                 FROM xdot x JOIN cnorm cn ON cn.s = x.s AND cn.code = x.code)
                WHERE rn = 1),
-       qlut AS (SELECT f.vec_id AS q_id, c.s, c.code,
+       qlut AS MATERIALIZED (SELECT f.vec_id AS q_id, c.s, c.code,
                   MAX(n.nn) - 2*SUM(f.v * c.v) + MAX(cn.cc) AS d2
                 FROM sflat f
                 JOIN cvec c ON c.s = f.s AND c.j = f.j
@@ -758,7 +763,7 @@ object VectorQueries {
       "enc", "qlut")
       .foldLeft(pqFitCte)((s, n) => s.replaceAll("\\b" + n + "\\b", "pq_" + n))
 
-  /** Replays [[graft.ops.Pq.fitOpqPermutation]] for q193 (m=4 over 64
+  /** Replays [[graft.ops.Pq.fitOpqPermutationEi]] for q193 (m=4 over 64
     * dims -> 4 bins of cap 16): exact integer per-dim energies, dims
     * ranked (energy desc, dim asc), and the greedy lowest-energy-bin
     * allocation as a 64-step recursive CTE whose state is the four
@@ -770,8 +775,8 @@ object VectorQueries {
     * the composed query.
     */
   private val opqPermCte =
-    """denergy AS (SELECT i, CAST(SUM(v*v) AS HUGEINT) AS en FROM flat GROUP BY 1),
-       drank AS (SELECT i, en, ROW_NUMBER() OVER (ORDER BY en DESC, i) AS r
+    """denergy AS MATERIALIZED (SELECT i, CAST(SUM(v*v) AS HUGEINT) AS en FROM flat GROUP BY 1),
+       drank AS MATERIALIZED (SELECT i, en, ROW_NUMBER() OVER (ORDER BY en DESC, i) AS r
                  FROM denergy),
        alloc(r, cnts, es, asg) AS (
          SELECT 0::BIGINT, [0,0,0,0]::INT[], [0,0,0,0]::HUGEINT[],
@@ -791,13 +796,13 @@ object VectorQueries {
            WHERE z.c < 16 ORDER BY z.be, z.s LIMIT 1) pick
          WHERE a.r < 64
        ),
-       asgf AS (SELECT u.x.i AS src_i, u.x.s AS s, u.x.r AS rr
+       asgf AS MATERIALIZED (SELECT u.x.i AS src_i, u.x.s AS s, u.x.r AS rr
                 FROM (SELECT asg FROM alloc WHERE r = 64) fin,
                      UNNEST(fin.asg) u(x)),
-       permmap AS (SELECT src_i,
+       permmap AS MATERIALIZED (SELECT src_i,
                      s * 16 + ROW_NUMBER() OVER (PARTITION BY s ORDER BY rr) AS new_i
                    FROM asgf),
-       pflat AS (SELECT f.vec_id, pm.new_i AS i, f.v
+       pflat AS MATERIALIZED (SELECT f.vec_id, pm.new_i AS i, f.v
                  FROM flat f JOIN permmap pm ON pm.src_i = f.i)"""
 
   /** [[pqFitCteRenamed]] over the PERMUTED flat view: the only raw

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.SparkBridge
 
 /** JDBC scan (reference O-1) and bulk-load sink (reference O-11) as
   * option-driven wrappers over Spark's JDBC source.
@@ -165,7 +166,7 @@ object JdbcSource {
     */
   def bulkLoadCsvNative(df: DataFrame, url: String, schema: String,
                         table: String): Long = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bulkload")
+    val dir = SparkBridge.tempDir("graft_bulkload")
       .resolve("csv").toString
     df.write.option("escape", "\"").option("emptyValue", "\"\"").csv(dir)
     val files = new java.io.File(dir).listFiles()

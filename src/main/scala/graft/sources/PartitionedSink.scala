@@ -141,11 +141,8 @@ object PartitionedSink {
           floor((col(c).cast("double") - lit(lo)) / lit(hi - lo) * buckets))
           .cast("long")
       else lit(0L)
-    val (ra, rb) = (q(colA, loA, hiA), q(colB, loB, hiB))
-    val z = (0 until bits).map { i =>
-      shiftleft(shiftright(ra, i).bitwiseAND(1), 2 * i)
-        .bitwiseOR(shiftleft(shiftright(rb, i).bitwiseAND(1), 2 * i + 1))
-    }.reduce(_ bitwiseOR _)
+    // quantized into [0, 2^bits - 1], so zValue2's mask keeps every bit
+    val z = graft.ops.ZOrder.zValue2(q(colA, loA, hiA), q(colB, loB, hiB), bits)
     // g: per-dimension tile bits — one notch finer than the 4^k >=
     // nFiles grid, so files pack a few whole tiles (equi-depth-ish)
     // while boundaries stay on tile edges.

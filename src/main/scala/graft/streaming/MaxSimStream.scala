@@ -22,9 +22,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *      [[MaxSim.scoreLshPruned]] over that corpus (spec-pinned);
   *   2. appends the scored top-k rows to `outPath`;
   *   3. appends the batch's tokens into the live index
-  *      ([[MaxSim.appendIndexBuffered]]: one coalesced staging file
-  *      per append — the r12 bench priced the unbuffered append at
-  *      ~5 s / ~320 files REGARDLESS of batch size, a fixed floor
+  *      ([[MaxSim.appendIndexBufferedQuantized]]: one coalesced
+  *      staging file per append — the r12 bench priced the unbuffered
+  *      append at ~5 s / ~320 files REGARDLESS of batch size, a fixed floor
   *      that dominates at streaming cadence — with staging folding
   *      into the bucket partitions at `foldBytes`) so the NEXT batch
   *      retrieves against the grown corpus (staged docs are
@@ -55,8 +55,8 @@ object MaxSimStream {
     * additionally runs [[MaxSim.maintain]] on the index root after
     * every n-th batch's fold — INSIDE the same foreachBatch thread,
     * which satisfies the one-owner-per-index-path writer contract
-    * ([[MaxSim.appendIndexBuffered]]) by construction instead of by
-    * caller care: the health probe, any triggered compaction, and the
+    * ([[MaxSim.appendIndexBufferedQuantized]]) by construction instead
+    * of by caller care: the health probe, any triggered compaction, and the
     * appends can never overlap. A healthy tick costs one postings
     * scan; the cadence owns the duplicate-postings residue a
     * crash-replay can leave and the boilerplate buckets appends can

@@ -56,31 +56,6 @@ class CurationOpsSpec extends SparkSpec {
       s"native bloom probe missing from:\n$bplan")
   }
 
-  test("admit extends the standing bloom: admitted fps route to the exact join") {
-    val hist = docs.where(col("doc_id") % 2 === 0)
-      .select(IncrementalDedup.fp60(col("text")).as("fp"))
-    // sizing MUST match the original build for mergeInPlace (same bit
-    // array size) — the documented contract
-    val bloom = IncrementalDedup.buildBloom(hist, "fp", 10000L, 0.01)
-    val batch = docs.where(col("doc_id") % 2 =!= 0)
-      .select(col("doc_id"), IncrementalDedup.fp60(col("text")).as("fp"))
-    // before admit: batch fps are unknown -> (almost) all definitely-new
-    val before = IncrementalDedup.dedupAgainstBloom(batch, hist, "fp", bloom).count()
-    assert(before == batch.count())
-    // admit the batch, then re-probe THE SAME batch against unchanged
-    // history: bloom now says maybe for every row, the exact join
-    // still keeps them all (they are not in history) — routing
-    // changed, result didn't
-    IncrementalDedup.admit(bloom, batch, "fp", 10000L, 0.01)
-    val after = IncrementalDedup.dedupAgainstBloom(batch, hist, "fp", bloom)
-    assert(after.count() == batch.count())
-    // and a re-ingest of already-admitted docs against an updated
-    // history store drops them all
-    val newHist = hist.unionAll(batch.select("fp"))
-    assert(IncrementalDedup.dedupAgainstBloom(batch, newHist, "fp", bloom)
-      .count() == 0L)
-  }
-
   test("gram doc-frequency counts documents, not occurrences") {
     val d = Seq(
       (1L, "a b c a b c a b c"), // repeats "a b c" 3x in one doc

@@ -251,6 +251,67 @@ class SimilaritySpec extends SparkSpec {
     assert(thresholded == Seq((1L, 2L)))
   }
 
+  test("verifiedQuarantine: band collisions below the Jaccard threshold are NOT quarantined") {
+    // every doc shares an 8-token boilerplate header but is otherwise
+    // unique: true Jaccard ~ 6/22 = 272 milli — well under 500. With
+    // 1-row bands the shared header makes band collisions near-certain
+    // (any of the 8 min-hashes landing in the shared shingles collides).
+    val header = "terms of service apply to this document copyright"
+    def doc(i: Long) = (i, s"$header u${i}a u${i}b u${i}c u${i}d u${i}e u${i}f u${i}g u${i}h")
+    // plus one REAL near-dup of doc 1 (header + doc 1's filler minus
+    // the last token -> Jaccard ~ 12/14)
+    val realDup = (100L, s"$header u1a u1b u1c u1d u1e u1f u1g")
+    val corpus = ((1L to 20L).map(doc) :+ realDup).toDF("doc_id", "text")
+    val sig = Dedup.minhashSignaturesFast(corpus, "doc_id", "text", 8, 3)
+    val pairs = Dedup.lshCandidatePairs(sig, "doc_id", bands = 8, rowsPerBand = 1)
+
+    // boilerplate band-collides somewhere, and those candidates fail
+    // exact verification with their measured similarity
+    val scored = Dedup.verifyCandidatePairs(corpus, "doc_id", "text", pairs,
+        shingleWidth = 3, minJaccardMilli = 0L)
+      .select("doc_a", "doc_b", "jaccard_milli").as[(Long, Long, Long)]
+      .collect().toSeq
+    val rejected = scored.filter(_._3 < 500L)
+    assert(rejected.nonEmpty, "boilerplate must band-collide somewhere")
+    assert(!rejected.exists(r => r._1 == 1L && r._2 == 100L),
+      "the real dup pair must verify, not reject")
+
+    // the real near-dup is quarantined; NO boilerplate-only doc is, and
+    // the evidence names the keeper and the verified strength
+    val verdicts = Dedup.verifiedQuarantine(corpus, "doc_id", "text", pairs,
+        shingleWidth = 3, minJaccardMilli = 500L)
+      .select("doc_id", "n_collisions", "first_corpus_id", "best_jaccard_milli")
+      .as[(Long, Long, Long, Long)].collect().toSeq
+    assert(verdicts.map(_._1) == Seq(100L), s"quarantined $verdicts")
+    val (_, n, keeper, best) = verdicts.head
+    assert(n == 1L && keeper == 1L && best >= 500L)
+  }
+
+  test("verifiedQuarantine: a bucket flood keeps its keeper and quarantines every other member") {
+    // 20 identical docs: each band holds one 20-member bucket. Both the
+    // full pair expansion and the linear star edges (min id -> member)
+    // verify every member against the keeper at Jaccard 1000
+    val flood = (1L to 20L)
+      .map(i => (i, "identical boilerplate flood text repeated verbatim everywhere"))
+      .toDF("doc_id", "text")
+    val sig = Dedup.minhashSignaturesFast(flood, "doc_id", "text", 8, 3)
+    val pairs = Dedup.lshCandidatePairs(sig, "doc_id", 4, 2)
+    val stars = Dedup.lshCandidateEdges(sig, "doc_id", 4, 2)
+    assert(stars.count() == 19L, "star edges are linear in the bucket")
+    for (cands <- Seq(pairs, stars)) {
+      val verdicts = Dedup.verifiedQuarantine(flood, "doc_id", "text", cands,
+          shingleWidth = 3, minJaccardMilli = 500L)
+        .select("doc_id", "first_corpus_id", "best_jaccard_milli")
+        .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
+      assert(verdicts == (2L to 20L).map(i => (i, 1L, 1000L)))
+    }
+    // past maxBucketSize the pair expansion drops the flood entirely —
+    // a caller quarantining on candidates must size the cap to its
+    // batch, or the flood passes unverified
+    assert(Dedup.lshCandidatePairs(sig, "doc_id", 4, 2, maxBucketSize = 5)
+      .count() == 0L)
+  }
+
   test("LSH buckets: identical-direction vectors share a bucket") {
     val planes = Similarity.planeWeights(6, 3)
     assert(planes.length == 6 && planes.forall(_.length == 3))

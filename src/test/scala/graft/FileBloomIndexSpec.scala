@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{FileBloomIndex, Generations}
+import graft.ops.FileBloomIndex
 import org.apache.spark.sql.functions._
 
 class FileBloomIndexSpec extends SparkSpec {
@@ -58,44 +58,26 @@ class FileBloomIndexSpec extends SparkSpec {
     val side = scratch("stale_side") + "/idx"
     FileBloomIndex.build(spark, data, "id", side,
       expectedPerFile = 2000, fpp = 0.001)
-    // append AFTER the build — the sidecar does not know these files
+    // append AFTER the build — the sidecar does not know these files,
+    // so every probe, even for a key stored nowhere, must read them
+    val before = spark.read.parquet(data).inputFiles.toSet
     writeData(data, 100000 until 104000, 4)
-    assert(FileBloomIndex.uncoveredFiles(spark, data, side).length == 4)
+    val appended = spark.read.parquet(data).inputFiles.toSet -- before
+    assert(appended.size == 4)
+    assert(appended.subsetOf(
+      FileBloomIndex.candidateFiles(spark, data, side, Seq(-1L)).toSet))
 
     // a key that lives only in the appended files MUST still be found
     val got = FileBloomIndex.pointLookup(spark, data, side, "id", Seq(100123L))
       .select("id").as[Long].collect().toSeq
     assert(got == Seq(100123L), "stale sidecar lost an appended row")
 
-    // refresh scans only the 4 new files and restores full coverage
-    assert(FileBloomIndex.refresh(spark, data, "id", side,
-      expectedPerFile = 2000, fpp = 0.001) == 4)
-    assert(FileBloomIndex.uncoveredFiles(spark, data, side).isEmpty)
-    // coverage restored => the appended-only key now prunes too
+    // a rebuild restores full coverage => the appended-only key prunes
+    FileBloomIndex.build(spark, data, "id", side,
+      expectedPerFile = 2000, fpp = 0.001)
     val cand = FileBloomIndex.candidateFiles(spark, data, side, Seq(100123L))
     assert(cand.size <= 3, s"post-refresh probe should prune, got ${cand.size}")
-    assert(FileBloomIndex.refresh(spark, data, "id", side) == 0)
-  }
-
-  test("versioned lifecycle: pointer flip publishes, superseded generation intact") {
-    val data = scratch("gen") + "/t"
-    writeData(data, 0 until 4000, 4)
-    val root = scratch("gen_side") + "/idx"
-    val g1 = FileBloomIndex.buildVersioned(spark, data, "id", root,
-      expectedPerFile = 2000, fpp = 0.001)
-    assert(Generations.livePath(spark, root) == g1)
-    val viaLive = FileBloomIndex.pointLookup(spark, data,
-      Generations.livePath(spark, root), "id", Seq(42L)).count()
-    assert(viaLive == 1)
-
-    writeData(data, 50000 until 54000, 4)
-    val g2 = FileBloomIndex.buildVersioned(spark, data, "id", root,
-      expectedPerFile = 2000, fpp = 0.001)
-    assert(Generations.livePath(spark, root) == g2 && g2 != g1)
-    // superseded generation still serves in-flight probes (stale but safe)
-    assert(FileBloomIndex.pointLookup(spark, data, g1, "id",
-      Seq(50042L)).count() == 1)
-    // new generation covers everything
-    assert(FileBloomIndex.uncoveredFiles(spark, data, g2).isEmpty)
+    assert(FileBloomIndex.pointLookup(spark, data, side, "id", Seq(100123L))
+      .count() == 1)
   }
 }

@@ -1,45 +1,33 @@
 package graft
 
-import graft.ops.{Generations, IncrementalDedup, Ivf, IvfPq, ShardedBloom, ShardedBloomFiles}
-import org.apache.spark.sql.functions._
+import graft.ops.{Generations, MaxSim}
 
 /** The catalog-pointer generation discipline: pointer lifecycle and
-  * atomicity contract, prune's never-delete-live rule, and the
-  * versioned index lifecycles (Ivf / IvfPq / ShardedBloom) whose
-  * rebuild swaps become one pointer flip while superseded generations
-  * stay fully readable for concurrent probes.
+  * atomicity contract, prune's never-delete-live rule, and a versioned
+  * index writer (MaxSim's) whose rebuild swaps are one pointer flip
+  * while superseded generations stay fully readable for concurrent
+  * probes.
   */
 class GenerationsSpec extends SparkSpec {
   import spark.implicits._
 
-  /** 4 separated direction clusters in 8 dims (IvfSpec's fixture). */
-  private def clustered = {
-    val base = Seq(
-      Array(10f, 0f, 0f, 0f, 0f, 0f, 0f, 0f),
-      Array(0f, 10f, 0f, 0f, 0f, 0f, 0f, 0f),
-      Array(0f, 0f, 10f, 0f, 0f, 0f, 0f, 0f),
-      Array(0f, 0f, 0f, 10f, 0f, 0f, 0f, 0f))
-    val rows = for {
-      c <- 0 until 4
-      i <- 0 until 50
-    } yield {
-      val v = base(c).clone()
-      (0 until 8).foreach { d =>
-        v(d) = v(d) + (((c * 1315423911L + i * 2654435761L + d * 97L) % 100) / 100.0f)
-      }
-      ((c * 50 + i).toLong, v)
+  /** A small late-interaction corpus: `docs` x 2 tokens of
+    * deterministic 8-dim vectors (MaxSimSpec's corpus).
+    */
+  private def toks(docs: Range) = docs.flatMap { doc =>
+    (0 until 2).map { t =>
+      val v = (0 until 8).map(i =>
+        (math.sin(doc * 2.7 + t * 1.3 + i) * 10).toFloat)
+      (doc.toLong, t.toLong, doc.toLong * 100 + t, v)
     }
-    rows.toDF("vec_id", "embedding")
-  }
+  }.toDF("doc_id", "tok", "vec_id", "embedding")
 
-  private def hist = spark.range(5000)
-    .select(IncrementalDedup.fp60(concat(lit("h"), col("id"))).as("fp"))
-
-  private def batch = spark.range(1000)
-    .select(
-      when(col("id") % 10 === 0, concat(lit("h"), col("id") * 3))
-        .otherwise(concat(lit("new"), col("id"))).as("key"))
-    .select(col("key"), IncrementalDedup.fp60(col("key")).as("fp"))
+  /** Probe rows of a stored MaxSim index, as a set. */
+  private def probe(path: String): Set[(Long, Long, Long, Long)] =
+    MaxSim.searchIndex(spark, path, toks(0 until 2), k = 8, nPlanes = 3,
+        dims = 8, dBuckets = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3))).toSet
 
   test("pointer lifecycle: absent root, publish, flip, validation") {
     val root = java.nio.file.Files.createTempDirectory("graft_gen").toString
@@ -186,169 +174,65 @@ class GenerationsSpec extends SparkSpec {
     assert(!debris.exists, "crashed-publish temp pointer must be swept")
   }
 
-  test("Ivf versioned lifecycle: rebuild lands in a new generation, old one stays readable") {
-    val root = java.nio.file.Files.createTempDirectory("graft_gen_ivf")
+  test("versioned rebuild lands in a new generation by pointer flip; prune keeps reader grace") {
+    val root = java.nio.file.Files.createTempDirectory("graft_gen_ms")
       .resolve("idx").toString
-    val model0 = Ivf.fit(clustered, "vec_id", nLists = 4, iterations = 3)
-    val gen1 = Ivf.writeIndexVersioned(spark, clustered, model0, root)
+    val gen1 = MaxSim.writeIndexVersioned(toks(0 until 8), root, nPlanes = 3,
+      dims = 8, dBuckets = 4)
     assert(Generations.livePath(spark, root) == gen1)
+    val before = probe(gen1)
+    assert(before.nonEmpty)
 
-    val queries = clustered.where($"vec_id" % 50 === 0)
-    val viaPtr = Ivf.searchIndex(spark, Generations.livePath(spark, root),
-      queries, "vec_id", model0, k = 5, nProbe = 1)
-      .orderBy("q_id", "rnk").collect().toSeq
-    val inMemory = Ivf.search(clustered, queries, "vec_id", model0,
-      k = 5, nProbe = 1).orderBy("q_id", "rnk").collect().toSeq
-    assert(viaPtr == inMemory)
-
-    // healthy tick: no new generation, pointer unmoved
-    val tick0 = Ivf.maintain(spark, root, "vec_id", model0,
-      nLists = 4, threshold = 2.0)
-    assert(!tick0.rebuilt && Generations.livePath(spark, root) == gen1)
-
-    // drift appended into the LIVE generation trips the cadence
-    val drift = (0 until 2).map { g =>
-      clustered.select((col("vec_id") + lit(1000L * (g + 1))).as("vec_id"),
-        expr("transform(embedding, (x, i) -> IF(i = 0, x + 10f, x))").as("embedding"))
-    }.reduce(_ unionAll _)
-    Ivf.appendIndex(drift, model0, Generations.livePath(spark, root))
-    val rowsBefore = spark.read.parquet(gen1).count()
-
-    val tick1 = Ivf.maintain(spark, root, "vec_id", model0,
-      nLists = 4, threshold = 2.0)
-    assert(tick1.rebuilt)
-    val gen2 = Generations.livePath(spark, root)
+    // a rebuild over a grown corpus: new generation, one pointer flip
+    val gen2 = MaxSim.writeIndexVersioned(toks(0 until 16), root, nPlanes = 3,
+      dims = 8, dBuckets = 4)
     assert(gen2 != gen1 && gen2.endsWith("gen-000002"))
-    // a concurrent reader that resolved gen1 pre-flip still reads a
-    // complete index (keep=2 covers one generation of grace)
-    assert(spark.read.parquet(gen1).count() == rowsBefore)
-
-    // pointer-served search == from-scratch fit + build on the same corpus
-    val corpusAll = clustered.unionAll(drift)
-    val scratchM = Ivf.fit(corpusAll, "vec_id", nLists = 4, iterations = 3)
-    val scratch = java.nio.file.Files.createTempDirectory("graft_gen_scr")
+    assert(Generations.livePath(spark, root) == gen2)
+    // the live generation serves exactly a from-scratch build
+    val scratch = java.nio.file.Files.createTempDirectory("graft_gen_ms_s")
       .resolve("idx").toString
-    Ivf.writeIndex(corpusAll, scratchM, scratch)
-    val a = Ivf.searchIndex(spark, gen2, queries, "vec_id", tick1.model,
-      k = 5, nProbe = 1).orderBy("q_id", "rnk").collect().toSeq
-    val b = Ivf.searchIndex(spark, scratch, queries, "vec_id", scratchM,
-      k = 5, nProbe = 1).orderBy("q_id", "rnk").collect().toSeq
-    assert(a == b)
+    MaxSim.writeIndex(toks(0 until 16), scratch, nPlanes = 3, dims = 8,
+      dBuckets = 4)
+    assert(probe(Generations.livePath(spark, root)) == probe(scratch))
+    // a reader that resolved gen1 before the flip still reads it whole
+    assert(probe(gen1) == before)
+
+    // prune with keep=2 leaves that reader its generation; a third
+    // build moves the window past it
+    Generations.prune(spark, root, keep = 2)
+    assert(new java.io.File(gen1).isDirectory)
+    MaxSim.writeIndexVersioned(toks(0 until 16), root, nPlanes = 3, dims = 8,
+      dBuckets = 4)
+    Generations.prune(spark, root, keep = 2)
+    assert(!new java.io.File(gen1).exists)
+    assert(Generations.livePath(spark, root).endsWith("gen-000003"))
   }
 
-  test("IvfPq versioned lifecycle: two-level rebuild swaps by pointer flip") {
-    val root = java.nio.file.Files.createTempDirectory("graft_gen_ivfpq")
-      .resolve("idx").toString
-    val model = IvfPq.fit(clustered, "vec_id", nLists = 4, m = 4, k = 4)
-    val gen1 = IvfPq.writeIndexVersioned(spark, clustered, "vec_id", model, root)
-    assert(Generations.livePath(spark, root) == gen1)
-
-    val queries = clustered.where($"vec_id" % 50 === 0)
-    val direct = java.nio.file.Files.createTempDirectory("graft_gen_ivfpq_d")
-      .resolve("idx").toString
-    IvfPq.writeIndex(clustered, "vec_id", model, direct)
-    val viaPtr = IvfPq.searchIndex(spark, Generations.livePath(spark, root),
-      clustered, queries, "vec_id", model, topK = 5, nProbe = 2)
-      .orderBy("q_id", "rnk").collect().toSeq
-    val viaDirect = IvfPq.searchIndex(spark, direct, clustered, queries,
-      "vec_id", model, topK = 5, nProbe = 2)
-      .orderBy("q_id", "rnk").collect().toSeq
-    assert(viaPtr == viaDirect)
-
-    // healthy tick holds the pointer; forced trip flips to gen-2 and
-    // serves exactly a fresh fit + build (both levels refit)
-    val healthy = IvfPq.maintain(spark, root, clustered, "vec_id",
-      model, nLists = 4, m = 4, k = 4, threshold = 1e9)
-    assert(!healthy.rebuilt && Generations.livePath(spark, root) == gen1)
-    val rep = IvfPq.maintain(spark, root, clustered, "vec_id",
-      model, nLists = 4, m = 4, k = 4, threshold = 0.0)
-    assert(rep.rebuilt && Generations.livePath(spark, root).endsWith("gen-000002"))
-    val freshModel = IvfPq.fit(clustered, "vec_id", nLists = 4, m = 4, k = 4)
-    assert(rep.model == freshModel)
-    assert(new java.io.File(gen1).isDirectory) // grace for in-flight readers
-  }
-
-  test("LshIndex versioned compact: re-cap lands in a new generation, source untouched") {
-    import graft.ops.{Dedup, LshIndex}
-    val dup = Seq((1L, "alpha beta gamma delta epsilon zeta"),
-      (3L, "one two three four five six")).toDF("doc_id", "text")
-    val more = Seq((2L, "alpha beta gamma delta epsilon zeta"))
-      .toDF("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft_gen_lsh")
-      .resolve("idx").toString
-    val g1 = LshIndex.writeVersioned(
-      Dedup.minhashSignaturesFast(dup, "doc_id", "text", 8, 3),
-      "doc_id", 4, 2, root, maxBucketSize = 1)
-    assert(Generations.livePath(spark, root) == g1)
-    // append regrows the duplicate bucket past the cap IN the live gen
-    LshIndex.append(Dedup.minhashSignaturesFast(more, "doc_id", "text", 8, 3),
-      "doc_id", 4, 2, Generations.livePath(spark, root))
-    assert(spark.read.parquet(g1).select("doc_id").distinct().count() == 3L)
-
-    val g2 = LshIndex.compactVersioned(spark, root, maxBucketSize = 1)
-    assert(Generations.livePath(spark, root) == g2 && g2 != g1)
-    val kept = spark.read.parquet(g2).select("doc_id").distinct()
-      .as[Long].collect().toSet
-    assert(kept == Set(3L)) // regrown size-2 buckets dropped
-    // the pre-compact generation still serves its (uncapped) contents
-    assert(spark.read.parquet(g1).select("doc_id").distinct().count() == 3L)
-  }
-
-  test("versioned bloom epochs: saturation rotates by pointer flip, old epoch intact") {
-    val root = java.nio.file.Files.createTempDirectory("graft_gen_bloom")
-      .resolve("fam").toString
-    // grossly undersized (50 expected, 5000 admitted) -> saturated
-    val g1 = ShardedBloom.buildToPathVersioned(hist, "fp", 50L, root,
-      0.01, numShards = 4)
-    assert(Generations.livePath(spark, root) == g1)
-
-    val want = batch.join(hist, Seq("fp"), "left_anti")
-      .select("key", "fp").orderBy("fp").collect().toSeq
-    val got = IncrementalDedup.dedupAgainstShardedPath(batch, hist, "fp",
-      Generations.livePath(spark, root), numShards = 4)
-      .select("key", "fp").orderBy("fp").collect().toSeq
-    assert(got == want)
-
-    val report = ShardedBloom.maintainEpochVersioned(spark, hist, "fp", root)
-    assert(report.rotated && report.dir == Generations.livePath(spark, root))
-    assert(report.dir.endsWith("gen-000002"))
-    // immutable-epoch contract: the saturated family's files survive
-    // the flip for concurrent probes
-    assert(new java.io.File(g1, "_meta").exists())
-
-    // healthy follow-up tick: pointer unmoved, probes unchanged
-    val tick = ShardedBloom.maintainEpochVersioned(spark, hist, "fp", root)
-    assert(!tick.rotated && tick.dir == report.dir)
-    val got2 = IncrementalDedup.dedupAgainstShardedPath(batch, hist, "fp",
-      Generations.livePath(spark, root))
-      .select("key", "fp").orderBy("fp").collect().toSeq
-    assert(got2 == want)
-    Seq(g1, report.dir).foreach(ShardedBloomFiles.invalidate)
-  }
-
-  test("crashed bloom rotation converges: committed-but-unpublished generation skipped, not wedged") {
+  test("a crashed versioned build converges: its debris is rebuilt over, never served") {
     val root = java.nio.file.Files.createTempDirectory("graft_gen_crash")
-      .resolve("fam").toString
-    // live gen-1, saturated (50 expected, 5000 admitted)
-    val g1 = ShardedBloom.buildToPathVersioned(hist, "fp", 50L, root,
-      0.01, numShards = 4)
-    // simulate a rotation that crashed AFTER buildToPath committed
-    // gen-2 (_meta present) but BEFORE the pointer flip
-    val crashed = root + "/gen-000002"
-    ShardedBloom.buildToPath(hist, "fp", 5000L, crashed, 0.01, numShards = 4)
-    assert(Generations.livePath(spark, root) == g1) // pointer never moved
+      .resolve("idx").toString
+    val gen1 = MaxSim.writeIndexVersioned(toks(0 until 8), root, nPlanes = 3,
+      dims = 8, dBuckets = 4)
+    // simulate a rebuild that crashed mid-write: the next generation dir
+    // holds half an index (postings only) and the pointer never moved
+    val crashed = Generations.nextPath(spark, root)
+    MaxSim.writeIndex(toks(0 until 16), crashed, nPlanes = 3, dims = 8,
+      dBuckets = 4)
+    val torn = java.nio.file.Paths.get(crashed, "toks")
+    java.nio.file.Files.walk(torn).sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => java.nio.file.Files.delete(p))
+    assert(Generations.livePath(spark, root) == gen1)
+    assert(probe(Generations.livePath(spark, root)) == probe(gen1))
 
-    // the re-tick must not wedge on the committed debris: it skips to
-    // gen-3, publishes it, and the family serves correctly
-    val report = ShardedBloom.maintainEpochVersioned(spark, hist, "fp", root)
-    assert(report.rotated && report.dir.endsWith("gen-000003"))
-    assert(Generations.livePath(spark, root) == report.dir)
-    val want = batch.join(hist, Seq("fp"), "left_anti")
-      .select("key", "fp").orderBy("fp").collect().toSeq
-    val got = IncrementalDedup.dedupAgainstShardedPath(batch, hist, "fp",
-      Generations.livePath(spark, root))
-      .select("key", "fp").orderBy("fp").collect().toSeq
-    assert(got == want)
-    Seq(g1, crashed, report.dir).foreach(ShardedBloomFiles.invalidate)
+    // the retry builds into the same slot, overwriting the debris, and
+    // only then flips the pointer
+    val gen2 = MaxSim.writeIndexVersioned(toks(0 until 16), root, nPlanes = 3,
+      dims = 8, dBuckets = 4)
+    assert(gen2 == crashed && Generations.livePath(spark, root) == gen2)
+    val scratch = java.nio.file.Files.createTempDirectory("graft_gen_crash_s")
+      .resolve("idx").toString
+    MaxSim.writeIndex(toks(0 until 16), scratch, nPlanes = 3, dims = 8,
+      dBuckets = 4)
+    assert(probe(gen2) == probe(scratch))
   }
 }

@@ -82,73 +82,6 @@ class InvertedIndexSpec extends SparkSpec {
     assert(idx == scan)
   }
 
-  test("append new docs + versioned lifecycle: probe equals a full rebuild") {
-    val first = docs.where(col("doc_id") <= 3L)
-    val more = docs.where(col("doc_id") > 3L)
-    val root = java.nio.file.Files.createTempDirectory("graft_inv_gen").toString
-
-    val gen1 = InvertedIndex.writeIndexVersioned(spark, first, "doc_id", "text", root)
-    assert(graft.ops.Generations.livePath(spark, root) == gen1)
-    InvertedIndex.appendIndex(more, "doc_id", "text", gen1)
-
-    val full = java.nio.file.Files.createTempDirectory("graft_inv_full").toString + "/idx"
-    InvertedIndex.writeIndex(docs, "doc_id", "text", full)
-
-    for (p <- Seq(Seq("cat", "sat"), Seq("a", "a"))) {
-      val a = InvertedIndex.phraseSearchIndex(spark,
-        graft.ops.Generations.livePath(spark, root), p)
-        .as[(Long, Long)].collect().toMap
-      val b = InvertedIndex.phraseSearchIndex(spark, full, p)
-        .as[(Long, Long)].collect().toMap
-      assert(a == b, s"phrase=$p")
-    }
-    // BM25 sees the appended docs and sidecar rows too
-    val a = InvertedIndex.bm25SearchIndex(spark,
-      graft.ops.Generations.livePath(spark, root), Seq("cat", "dog"), 5).collect().toSeq
-    val b = InvertedIndex.bm25SearchIndex(spark, full, Seq("cat", "dog"), 5).collect().toSeq
-    assert(a == b)
-
-    // a rebuild publishes the next generation; readers of gen1 were
-    // never disturbed
-    val gen2 = InvertedIndex.writeIndexVersioned(spark, docs, "doc_id", "text", root)
-    assert(gen2 != gen1 && graft.ops.Generations.livePath(spark, root) == gen2)
-  }
-
-  test("compaction after an append chain: identical probes, fewer files, pruned generations") {
-    val root = java.nio.file.Files.createTempDirectory("graft_inv_cmp").toString
-    val gen1 = InvertedIndex.writeIndexVersioned(spark,
-      docs.where(col("doc_id") === 1L), "doc_id", "text", root)
-    // a 4-append chain: each append lands its own file set per bucket
-    (2L to 5L).foreach { id =>
-      InvertedIndex.appendIndex(docs.where(col("doc_id") === id),
-        "doc_id", "text", gen1)
-    }
-    def parquetFiles(p: String): Int = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(p)).count(_.getName.endsWith(".parquet"))
-    }
-    val before = parquetFiles(gen1)
-    val phraseBefore = InvertedIndex.phraseSearchIndex(spark,
-      graft.ops.Generations.livePath(spark, root), Seq("cat", "sat"))
-      .as[(Long, Long)].collect().toMap
-    val bm25Before = InvertedIndex.bm25SearchIndex(spark,
-      graft.ops.Generations.livePath(spark, root), Seq("cat", "dog"), 5)
-      .collect().toSeq
-
-    val gen2 = InvertedIndex.compactVersioned(spark, root)
-    assert(graft.ops.Generations.livePath(spark, root) == gen2 && gen2 != gen1)
-    // identical answers from the compacted layout
-    assert(InvertedIndex.phraseSearchIndex(spark, gen2, Seq("cat", "sat"))
-      .as[(Long, Long)].collect().toMap == phraseBefore)
-    assert(InvertedIndex.bm25SearchIndex(spark, gen2, Seq("cat", "dog"), 5)
-      .collect().toSeq == bm25Before)
-    // the chain's file multiplication is gone: one file per touched
-    // postings bucket (+ the bounded sidecar)
-    assert(parquetFiles(gen2) < before,
-      s"compaction did not shrink the layout: $before -> ${parquetFiles(gen2)}")
-  }
-
   test("postings carry tf and sorted positions") {
     val p = InvertedIndex.build(docs, "doc_id", "text")
       .where(col("term") === "cat" && col("doc") === 2L)

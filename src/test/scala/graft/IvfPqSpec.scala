@@ -109,17 +109,15 @@ class IvfPqSpec extends SparkSpec {
   }
 
   test("OPQ-permuted pipeline: searchIndex d2 is the raw-space exact distance") {
-    // the exact composition the frontier_ivfpq_opq_* bench rows run:
-    // permute embeddings, run the unchanged fit/write/search pipeline
+    // the OPQ model permutes codebooks and probe LUTs internally;
+    // cells and the exact re-rank stay in raw space
     val corpus = clustered
     val queries = corpus.where($"vec_id" % 50 === 0)
-    val perm = graft.ops.Pq.fitOpqPermutation(corpus, m = 4)
-    def permuted(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("embedding",
-        graft.ops.Pq.permuteEmbedding(col("embedding"), perm))
-    val model = IvfPq.fit(permuted(corpus), "vec_id", nLists = 4, m = 4, k = 4)
+    val model = IvfPq.fit(corpus, "vec_id", nLists = 4, m = 4, k = 4,
+      opq = true)
+    assert(model.perm.exists(p => p.sorted == (0 until 8)))
     val path = tmpIdx("opq")
-    IvfPq.writeIndex(permuted(corpus), "vec_id", model, path)
+    IvfPq.writeIndex(corpus, "vec_id", model, path)
     val vecs = Similarity.withQuantized(corpus, "embedding")
       .select(col("vec_id"), col("ei")).as[(Long, Seq[Long])].collect().toMap
     def d2(a: Seq[Long], b: Seq[Long]): Long =
@@ -127,54 +125,12 @@ class IvfPqSpec extends SparkSpec {
     // the probe's exact re-rank distances must equal RAW-space exact
     // integer distances — permutation invariance, the property that
     // makes OPQ frontier recall comparable against shared ground truth
-    val d2s = IvfPq.searchIndex(spark, path, permuted(corpus),
-        permuted(queries), "vec_id", model, topK = 3, nProbe = 4)
+    val d2s = IvfPq.searchIndex(spark, path, corpus, queries, "vec_id",
+        model, topK = 3, nProbe = 4)
       .select("q_id", "vec_id", "d2").as[(Long, Long, Long)].collect()
     assert(d2s.nonEmpty)
     d2s.foreach { case (q, id, d) =>
       assert(d == d2(vecs(q), vecs(id)), s"d2($q,$id)") }
-  }
-
-  test("append + search equals full rebuild; maintain refits both levels") {
-    val first = clustered.where($"vec_id" % 2 === 0)
-    val rest = clustered.where($"vec_id" % 2 =!= 0)
-    val model = IvfPq.fit(first, "vec_id", nLists = 4, m = 4, k = 4)
-    val queries = clustered.where($"vec_id" % 50 === 0)
-
-    val inc = tmpIdx("inc")
-    IvfPq.writeIndex(first, "vec_id", model, inc)
-    IvfPq.appendIndex(rest, "vec_id", model, inc)
-    val full = tmpIdx("full")
-    IvfPq.writeIndex(clustered, "vec_id", model, full)
-    val a = IvfPq.searchIndex(spark, inc, clustered, queries, "vec_id",
-      model, topK = 5, nProbe = 2).orderBy("q_id", "rnk").collect().toSeq
-    val b = IvfPq.searchIndex(spark, full, clustered, queries, "vec_id",
-      model, topK = 5, nProbe = 2).orderBy("q_id", "rnk").collect().toSeq
-    assert(a == b)
-
-    // healthy tick: nothing rebuilt, model unchanged, directory intact
-    val before = new java.io.File(inc).lastModified()
-    val healthy = IvfPq.maintainInPlace(spark, inc, clustered, "vec_id", model,
-      nLists = 4, m = 4, k = 4, threshold = 1e9)
-    assert(!healthy.rebuilt && healthy.model == model)
-
-    // forced rebuild (threshold below any real imbalance): the swapped
-    // index under the refit model serves exactly a fresh fit + build
-    val rep = IvfPq.maintainInPlace(spark, inc, clustered, "vec_id", model,
-      nLists = 4, m = 4, k = 4, threshold = 0.0)
-    assert(rep.rebuilt)
-    val freshModel = IvfPq.fit(clustered, "vec_id", nLists = 4, m = 4, k = 4)
-    assert(rep.model == freshModel)
-    val fresh = tmpIdx("fresh")
-    IvfPq.writeIndex(clustered, "vec_id", freshModel, fresh)
-    val viaMaintained = IvfPq.searchIndex(spark, inc, clustered, queries,
-      "vec_id", rep.model, topK = 5, nProbe = 2)
-      .orderBy("q_id", "rnk").collect().toSeq
-    val viaFresh = IvfPq.searchIndex(spark, fresh, clustered, queries,
-      "vec_id", freshModel, topK = 5, nProbe = 2)
-      .orderBy("q_id", "rnk").collect().toSeq
-    assert(viaMaintained == viaFresh)
-    assert(before > 0L) // directory existed before the cadence ticked
   }
 
   test("residual codes: recall@k at refine=1 >= non-residual at equal m; lifecycle round-trips the flag") {
@@ -224,22 +180,6 @@ class IvfPqSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect()
     assert(d2s.nonEmpty)
     d2s.foreach { case (q, id, d) => assert(d == d2(vecs(q), vecs(id))) }
-
-    // forced maintain refits BOTH levels, keeps the flag, and the
-    // refit codes are residuals of the NEW coarse level: the
-    // maintained index serves exactly a fresh residual fit + build
-    val rep = IvfPq.maintainInPlace(spark, pRes, corpus, "vec_id", mRes,
-      nLists = 4, m = 4, k = 4, threshold = 0.0)
-    assert(rep.rebuilt && rep.model.residual)
-    assert(rep.model == IvfPq.fit(corpus, "vec_id", nLists = 4, m = 4,
-      k = 4, residual = true))
-    val fresh = tmpIdx("res_fresh")
-    IvfPq.writeIndex(corpus, "vec_id", rep.model, fresh)
-    val a = IvfPq.searchIndex(spark, pRes, corpus, queries, "vec_id",
-      rep.model, topK = 5, nProbe = 2).orderBy("q_id", "rnk").collect().toSeq
-    val b = IvfPq.searchIndex(spark, fresh, corpus, queries, "vec_id",
-      rep.model, topK = 5, nProbe = 2).orderBy("q_id", "rnk").collect().toSeq
-    assert(a == b)
   }
 
   test("residual probe plan carries the centroid map ONCE, not per LUT entry") {

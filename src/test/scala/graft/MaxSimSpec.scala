@@ -160,30 +160,11 @@ class MaxSimSpec extends SparkSpec {
       s"token read not dbucket-pruned:\n$all")
   }
 
-  test("O(batch) append: new doc becomes findable, old partitions untouched") {
-    val d = corpus16
-    val idx = java.nio.file.Files.createTempDirectory("maxsim").toString
-    MaxSim.writeIndex(d, idx, nPlanes = 3, dims = 8, dBuckets = 4)
-    def files(): Set[String] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(idx)).map(_.getPath)
-        .filter(_.endsWith(".parquet")).toSet
-    }
-    val before = files()
-    // the appended doc duplicates doc 3's tokens under a new id, so
-    // its buckets collide with doc 3's and a doc-3-token query must
-    // now surface BOTH
-    val batch = d.where(col("doc_id") === 3)
-      .select((col("doc_id") + 100L).as("doc_id"), col("tok"),
-        (col("vec_id") + 10000L).as("vec_id"), col("embedding"))
-    MaxSim.appendIndex(batch, idx, nPlanes = 3, dims = 8, dBuckets = 4)
-    assert(before.subsetOf(files()), "append rewrote existing files")
-    val got = MaxSim.searchIndex(spark, idx, d.where(col("doc_id") === 3),
-        k = 16, nPlanes = 3, dims = 8, dBuckets = 4)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(got.contains(103L), s"appended doc not found: $got")
-  }
+  /** Buffered append of an unquantized token batch into `idx`. */
+  private def stage(batch: org.apache.spark.sql.DataFrame, idx: String,
+                    foldBytes: Long = 64L << 20): Boolean =
+    MaxSim.appendIndexBufferedQuantized(MaxSim.quantizeBag(batch), idx,
+      nPlanes = 3, dims = 8, dBuckets = 4, foldBytes = foldBytes)
 
   test("buffered append: one staging file, staged doc findable, scores equal the unbuffered twin") {
     val d = corpus16
@@ -200,13 +181,14 @@ class MaxSimSpec extends SparkSpec {
       .select((col("doc_id") + 100L).as("doc_id"), col("tok"),
         (col("vec_id") + 10000L).as("vec_id"), col("embedding"))
     val before = pq(buf)
-    val folded = MaxSim.appendIndexBuffered(batch, buf, nPlanes = 3,
-      dims = 8, dBuckets = 4) // default foldBytes: stays staged
+    val folded = stage(batch, buf) // default foldBytes: stays staged
     assert(!folded)
     val added = pq(buf) -- before
     assert(added.size == 1 && added.forall(_.contains("/staging/")),
       s"buffered append must land as ONE staging file, got $added")
-    MaxSim.appendIndex(batch, unbuf, nPlanes = 3, dims = 8, dBuckets = 4)
+    // the unbuffered twin: one build over the same docs
+    MaxSim.writeIndex(d.unionByName(batch), unbuf, nPlanes = 3, dims = 8,
+      dBuckets = 4)
     def rows(idx: String) =
       MaxSim.searchIndex(spark, idx, d.where(col("doc_id") === 3),
           k = 16, nPlanes = 3, dims = 8, dBuckets = 4)
@@ -222,9 +204,9 @@ class MaxSimSpec extends SparkSpec {
     val batch2 = d.where(col("doc_id") === 5)
       .select((col("doc_id") + 200L).as("doc_id"), col("tok"),
         (col("vec_id") + 20000L).as("vec_id"), col("embedding"))
-    assert(MaxSim.appendIndexBuffered(batch2, buf, nPlanes = 3, dims = 8,
-      dBuckets = 4, foldBytes = 1L))
-    MaxSim.appendIndex(batch2, unbuf, nPlanes = 3, dims = 8, dBuckets = 4)
+    assert(stage(batch2, buf, foldBytes = 1L))
+    MaxSim.writeIndex(d.unionByName(batch).unionByName(batch2), unbuf,
+      nPlanes = 3, dims = 8, dBuckets = 4)
     val stagingLive = graft.ops.Generations.livePath(spark, s"$buf/staging")
     assert(!graft.ops.Generations.hasData(spark, stagingLive),
       "post-fold live staging generation must be empty")
@@ -234,8 +216,7 @@ class MaxSimSpec extends SparkSpec {
     // grace-window duplicates are score-identical: re-stage a doc the
     // fold already moved into the partitions — visible in BOTH places
     val dupBefore = rows(buf)
-    assert(!MaxSim.appendIndexBuffered(batch2, buf, nPlanes = 3, dims = 8,
-      dBuckets = 4))
+    assert(!stage(batch2, buf))
     assert(rows(buf) == dupBefore,
       "a doc visible in both staging and partitions must not change a bit")
   }
@@ -248,8 +229,7 @@ class MaxSimSpec extends SparkSpec {
     // no writeIndex ever ran on `fresh`: only staging exists, and the
     // probe must still work (the scaladoc's "retrievable the moment
     // the append returns" has no fold precondition)
-    assert(!MaxSim.appendIndexBuffered(batch, fresh, nPlanes = 3, dims = 8,
-      dBuckets = 4))
+    assert(!stage(batch, fresh))
     MaxSim.writeIndex(batch, twin, nPlanes = 3, dims = 8, dBuckets = 4)
     def rows(idx: String) =
       MaxSim.searchIndex(spark, idx, d.where(col("doc_id") === 0),
@@ -283,16 +263,15 @@ class MaxSimSpec extends SparkSpec {
     val idx = java.nio.file.Files.createTempDirectory("maxsim_q").toString
     val twin = java.nio.file.Files.createTempDirectory("maxsim_qt").toString
     MaxSim.writeIndex(d, idx, nPlanes = 3, dims = 8, dBuckets = 4)
-    MaxSim.writeIndex(d, twin, nPlanes = 3, dims = 8, dBuckets = 4)
     val batch = d.where(col("doc_id") === 3)
       .select((col("doc_id") + 100L).as("doc_id"), col("tok"),
         (col("vec_id") + 10000L).as("vec_id"), col("embedding"))
+    MaxSim.writeIndex(d.unionByName(batch), twin, nPlanes = 3, dims = 8,
+      dBuckets = 4)
     // the streaming shape: quantize ONCE, share across append + probe
     val qRows = MaxSim.quantizeBag(batch).localCheckpoint(true)
     assert(!MaxSim.appendIndexBufferedQuantized(qRows, idx, nPlanes = 3,
       dims = 8, dBuckets = 4))
-    assert(!MaxSim.appendIndexBuffered(batch, twin, nPlanes = 3, dims = 8,
-      dBuckets = 4))
     val q = d.where(col("doc_id") === 3)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -314,8 +293,7 @@ class MaxSimSpec extends SparkSpec {
     def batchFor(doc: Long, idOff: Long) = d.where(col("doc_id") === doc)
       .select((col("doc_id") + idOff).as("doc_id"), col("tok"),
         (col("vec_id") + idOff * 100L).as("vec_id"), col("embedding"))
-    assert(!MaxSim.appendIndexBuffered(batchFor(3L, 100L), idx,
-      nPlanes = 3, dims = 8, dBuckets = 4))
+    assert(!stage(batchFor(3L, 100L), idx))
     val live = graft.ops.Generations.livePath(spark, s"$idx/staging")
     // snapshot taken NOW — then a racing append lands one more file
     // before the fold flips (the out-of-contract window the
@@ -324,8 +302,7 @@ class MaxSimSpec extends SparkSpec {
       .toSeq
       .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
       .map(f => new org.apache.hadoop.fs.Path(f.getAbsolutePath))
-    assert(!MaxSim.appendIndexBuffered(batchFor(5L, 200L), idx,
-      nPlanes = 3, dims = 8, dBuckets = 4))
+    assert(!stage(batchFor(5L, 200L), idx))
     MaxSim.foldStagingSnapshot(spark, idx, live, snapshot)
     // the racing file was carried into the FRESH staging generation —
     // its doc is still retrievable, and the snapshot's doc folded

@@ -24,6 +24,14 @@ class MaxSimStreamSpec extends SparkSpec {
 
   private val (nP, dms, dB, k) = (3, 8, 4, 8)
 
+  /** Buffered append of `docs` into the index at `path`; `foldBytes`
+    * = 1 folds it straight into the partitioned layout.
+    */
+  private def append(docs: Range, path: String,
+                     foldBytes: Long = 64L << 20): Boolean =
+    MaxSim.appendIndexBufferedQuantized(MaxSim.quantizeBag(toks(docs)), path,
+      nP, dms, dB, foldBytes)
+
   test("per-batch stream scores equal batch scoreLshPruned over the prior corpus") {
     val root = java.nio.file.Files.createTempDirectory("msroot").toString
     val out = java.nio.file.Files.createTempDirectory("msout").toString + "/out"
@@ -96,7 +104,7 @@ class MaxSimStreamSpec extends SparkSpec {
     val gen1 = Generations.livePath(spark, root)
     // re-append doc 3's postings (a replayed ingest without the
     // marker guard): (bucket, doc_id) pairs now duplicated
-    MaxSim.appendIndex(toks(3 until 4), gen1, nP, dms, dB)
+    append(3 until 4, gen1, foldBytes = 1L)
     val rawPostings = spark.read.parquet(s"$gen1/postings").count()
     val distinctPostings = spark.read.parquet(s"$gen1/postings")
       .distinct().count()
@@ -127,7 +135,7 @@ class MaxSimStreamSpec extends SparkSpec {
     MaxSim.writeIndexVersioned(toks(0 until 8), root, nP, dms, dB)
     val gen1 = Generations.livePath(spark, root)
     // buffered append stays staged (default threshold)
-    assert(!MaxSim.appendIndexBuffered(toks(8 until 10), gen1, nP, dms, dB))
+    assert(!append(8 until 10, gen1))
     val gen2 = MaxSim.compactVersioned(spark, root, maxBucketDocs = 1000L)
     // staged docs landed in the NEW generation's partitions…
     val docs = spark.read.parquet(s"$gen2/toks")
@@ -151,7 +159,7 @@ class MaxSimStreamSpec extends SparkSpec {
     val gen1 = Generations.livePath(spark, root)
     // un-guarded replay residue (duplicate postings) — exactly the
     // debris the in-tick cadence exists to own
-    MaxSim.appendIndex(toks(3 until 4), gen1, nP, dms, dB)
+    append(3 until 4, gen1, foldBytes = 1L)
     def stage(name: String, docs: Range): Unit = {
       val staged = s"$tmp/stage_$name"
       toks(docs).coalesce(1).write.parquet(staged)
@@ -200,7 +208,7 @@ class MaxSimStreamSpec extends SparkSpec {
     assert(!healthy.compacted && healthy.dupPostings == 0L)
     assert(Generations.livePath(spark, root) == gen1)
     // a replayed ingest without the marker guard duplicates postings
-    MaxSim.appendIndex(toks(3 until 4), gen1, nP, dms, dB)
+    append(3 until 4, gen1, foldBytes = 1L)
     val tripped = MaxSim.maintain(spark, root, maxBucketDocs = 1000L)
     assert(tripped.compacted && tripped.dupPostings > 0L)
     val gen2 = Generations.livePath(spark, root)

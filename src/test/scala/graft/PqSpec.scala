@@ -26,6 +26,11 @@ class PqSpec extends SparkSpec {
     rows.toDF("vec_id", "embedding")
   }
 
+  /** The OPQ permutation [[graft.ops.IvfPq.fit]] records in its model. */
+  private def opqPerm(d: org.apache.spark.sql.DataFrame, m: Int): Seq[Int] =
+    graft.ops.IvfPq.fit(d, "vec_id", nLists = 1, m = m, k = 1, opq = true)
+      .perm.get
+
   test("fit is deterministic; encode is argmin-exact and shuffle-free") {
     val m1 = Pq.fitQuantized(clustered, "vec_id", m = 4, k = 4)
     val m2 = Pq.fitQuantized(clustered, "vec_id", m = 4, k = 4)
@@ -175,17 +180,17 @@ class PqSpec extends SparkSpec {
     // greedy (E desc, d asc) into 2 bins of 2: d0->bin0, d1->bin1
     // (lighter), d2->bin1 (0.81e14 < 1e14), d3->bin0.
     val d = Seq((0L, Array(10f, 9f, 1f, 1f))).toDF("vec_id", "embedding")
-    assert(Pq.fitOpqPermutation(d, m = 2) == Seq(0, 3, 1, 2))
+    assert(opqPerm(d, m = 2) == Seq(0, 3, 1, 2))
     // the natural contiguous split would stack 1.81e14 against 2e12;
     // the allocation balances to 1.01e14 vs 0.82e14 — that's the point
   }
 
   test("OPQ permutation is a valid perm and leaves exact search invariant") {
     val d = clustered
-    val perm = Pq.fitOpqPermutation(d, m = 4)
+    val perm = opqPerm(d, m = 4)
     assert(perm.sorted == (0 until 8), s"not a permutation: $perm")
     val dp = d.withColumn("embedding",
-      Pq.permuteEmbedding(col("embedding"), perm))
+      array(perm.map(i => element_at(col("embedding"), i + 1)): _*))
     // permutation commutes with quantization and L2/cosine: the
     // brute-force top-k over permuted embeddings is bit-identical —
     // the invariance that makes the OPQ frontier rows comparable

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Generations, SegmentDedup}
+import graft.ops.SegmentDedup
 import graft.streaming.SegmentDedupStream
 import org.apache.spark.sql.functions._
 
@@ -34,86 +34,6 @@ class StreamingSegmentDedupSpec extends SparkSpec {
     assert(streamed == batch)
     // the plants actually lost segments (cross-batch dedup fired)
     assert(streamed.exists(r => r._1 >= 1000000L && r._3 < r._2))
-  }
-
-  test("sharded-bloom loop equals the batch op across an epoch rotation") {
-    val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
-      .select("doc_id", "text")
-    val plants = docs.where(col("doc_id") % 5 === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"),
-        expr("concat_ws(' ', slice(split(lower(trim(text)), '\\\\s+'), 1, " +
-          "greatest((size(split(lower(trim(text)), '\\\\s+')) * 4) div 5, 1)))")
-          .as("text"))
-    val b1 = docs.where(col("doc_id") < 200)
-    val b2 = docs.where(col("doc_id") >= 200 && col("doc_id") < 400)
-    val b3 = docs.where(col("doc_id") >= 400).unionAll(plants)
-
-    val base = java.nio.file.Files.createTempDirectory("graft_segshard").toString
-    val (root, out) = (s"$base/store", s"$base/out")
-    val bloomRoot = s"$root/bloom"
-    // rotateDeltaRows tiny: batch 1's fps alone exceed it, so batch 2
-    // runs at epoch 2 (file-backed probe + delta join) and batch 3 at
-    // epoch 3 — the equivalence below spans two rotations
-    Seq(b1, b2, b3).foreach(SegmentDedupStream.applyBatchSharded(
-      _, "doc_id", "text", 10, root, out, numShards = 4,
-      rotateDeltaRows = 50L))
-
-    // three rotations happened under the ONE Generations lifecycle:
-    // the pointer serves gen-3, gen-2 survives as reader grace
-    // (keep=2), gen-1 was pruned
-    assert(Generations.livePath(spark, bloomRoot).endsWith("gen-000003"))
-    assert(new java.io.File(s"$bloomRoot/gen-000002/_meta").isFile)
-    assert(!new java.io.File(s"$bloomRoot/gen-000001").exists)
-
-    val streamed = spark.read.parquet(out)
-      .select("doc_id", "n_segs", "n_kept", "clean_fp")
-      .as[(Long, Long, Long, Option[String])].collect().sortBy(_._1).toSeq
-    val batch = SegmentDedup.dedupSegments(
-        b1.unionAll(b2).unionAll(b3), "doc_id", "text", segTokens = 10)
-      .as[(Long, Long, Long, Option[String])].collect().sortBy(_._1).toSeq
-    assert(streamed == batch)
-    // cross-batch dedup fired on the planted truncations
-    assert(streamed.exists(r => r._1 >= 1000000L && r._3 < r._2))
-
-    // crash-recovery 1: UNCOMMITTED debris (a rotation that died
-    // mid-build: shard files, no _meta, no pointer flip) is never
-    // served — the pointer still names gen-3 and the next batch
-    // dedups correctly through it
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(s"$bloomRoot/gen-000004"))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$bloomRoot/gen-000004/shard-00000.bloom"),
-      Array[Byte](9, 9, 9))
-    val extra = docs.where(col("doc_id") % 7 === 3)
-      .select((col("doc_id") + 2000000L).as("doc_id"), col("text"))
-    SegmentDedupStream.applyBatchSharded(extra, "doc_id", "text", 10,
-      root, out, numShards = 4, rotateDeltaRows = 1000000L)
-    assert(Generations.livePath(spark, bloomRoot).endsWith("gen-000003"))
-    // the replayed docs are full duplicates of already-seen segments
-    val after = spark.read.parquet(out)
-      .where(col("doc_id") >= 2000000L)
-      .select("n_kept").as[Long].collect()
-    assert(after.nonEmpty && after.forall(_ == 0L),
-      "duplicate batch must be fully deduped through the published family")
-
-    // crash-recovery 2: a COMMITTED-but-unpublished family (died
-    // between _meta commit and pointer flip) is not served either,
-    // and the next rotation converges — clears and reuses the
-    // uncommitted gen-4 debris, publishes it — instead of wedging
-    graft.ops.ShardedBloom.buildToPath(
-      spark.read.parquet(s"$root/fps").select("seg_fp"), "seg_fp",
-      5000L, s"$bloomRoot/gen-000005", numShards = 4)
-    assert(Generations.livePath(spark, bloomRoot).endsWith("gen-000003"))
-    // fresh content (a unique prefix token shifts every segment) so
-    // fps land in the delta and the tiny bound trips a rotation
-    val fresh = docs.where(col("doc_id") < 100)
-      .select((col("doc_id") + 3000000L).as("doc_id"),
-        concat(lit("uniq"), col("doc_id"), lit(" "), col("text")).as("text"))
-    SegmentDedupStream.applyBatchSharded(fresh, "doc_id", "text", 10,
-      root, out, numShards = 4, rotateDeltaRows = 1L)
-    assert(Generations.livePath(spark, bloomRoot).endsWith("gen-000004"))
-    (1 to 5).foreach(g => graft.ops.ShardedBloomFiles.invalidate(
-      f"$bloomRoot/gen-$g%06d"))
   }
 
   test("the foreachBatch wrapper drives the same loop end-to-end") {

@@ -39,32 +39,4 @@ class ZOrderSpec extends SparkSpec {
       .where(!col("same")).count()
     assert(diff == 0L)
   }
-
-  test("z-clustered layout skips a 2-D box that a 1-D layout cannot") {
-    // uniform 64x64 grid; box predicate thin in y, full in x:
-    // an x-sorted layout prunes nothing, the z layout prunes most
-    val grid = (for (x <- 0 until 64; y <- 0 until 64) yield (x.toLong, y.toLong))
-      .toDF("x", "y").repartition(13) // scrambled input layout
-    val nParts = 16
-    val zStats = ZOrder.layoutStats(
-      ZOrder.clusterBy(grid, "x", "y", 6, nParts), "x", "y")
-    val xStats = ZOrder.layoutStats(
-      grid.repartitionByRange(nParts, col("x")), "x", "y")
-    val (x0, x1, y0, y1) = (0L, 63L, 0L, 7L)
-    val zSkip = ZOrder.skippedFraction(zStats, x0, x1, y0, y1)
-    val xSkip = ZOrder.skippedFraction(xStats, x0, x1, y0, y1)
-    assert(xSkip == 0.0, s"x-layout unexpectedly skipped $xSkip")
-    assert(zSkip >= 0.5, s"z-layout skipped only $zSkip")
-  }
-
-  test("clusterBy is a single range exchange, not a global sort") {
-    val grid = (for (x <- 0 until 32; y <- 0 until 32) yield (x.toLong, y.toLong))
-      .toDF("x", "y")
-    val plan = ZOrder.clusterBy(grid, "x", "y", 5, 8)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("rangepartitioning"), plan)
-    // the only Sort allowed is the partition-local one — a global sort
-    // prints as "Sort [...], true" in the physical plan
-    assert(!plan.matches("(?s).*Sort \\[[^\\]]*\\], true.*"), plan)
-  }
 }
