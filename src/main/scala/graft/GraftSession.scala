@@ -20,14 +20,18 @@ object GraftSession {
       .appName("graft")
       // engine extensions: native rewrites for idiomatic HOF patterns,
       // aggregate-to-materialized-rollup answering (no-op until a
-      // rollup target is registered), and the SQL bindings for the
-      // engine's expressions/aggregates (KLL, theta, top-k, MinHash,
-      // unicode_normalize) so spark.sql reaches the same operators as
-      // the Column API
+      // rollup target is registered), the native as-of join, one-task
+      // global sorts for inputs no larger than
+      // spark.sql.autoBroadcastJoinThreshold (SmallSortStrategy: no
+      // range-sampling job, no sort shuffle), and the SQL bindings for
+      // the engine's expressions/aggregates (KLL, theta, top-k,
+      // MinHash, unicode_normalize) so spark.sql reaches the same
+      // operators as the Column API
       .withExtensions { e =>
         e.injectOptimizerRule(_ => graft.plans.NativeDotRewrite)
         e.injectOptimizerRule(_ => graft.plans.RollupRewrite)
         e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+        e.injectPlannerStrategy(_ => graft.plans.SmallSortStrategy)
         graft.functions.GraftFunctions.register(e)
       }
       .config("spark.sql.shuffle.partitions", cores.toString)

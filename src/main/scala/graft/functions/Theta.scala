@@ -145,6 +145,11 @@ object Theta {
       ThetaUnionAgg(ColumnBridge.expression(c), lgK)
         .toAggregateExpression())
 
+  /** The sketch of no values: what [[sketchAgg]] returns over no rows. */
+  def empty(lgK: Int = 12): Array[Byte] =
+    SetOperation.builder().setLogNominalEntries(lgK).buildUnion()
+      .getResult.toByteArray
+
   private def wrap(bytes: Array[Byte]): Sketch =
     Sketches.wrapSketch(Memory.wrap(bytes))
 

@@ -7,10 +7,10 @@ import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructTyp
 
 /** Pre-flight join diagnostics: the distinct-key overlap between two
   * join sides, answered from theta sketches BEFORE paying for the
-  * join. Each side collapses to one KB-scale sketch (a single
-  * aggregation — at 100 TB that is one scan each, no shuffle of
-  * anything but the kilobyte partials); the overlap numbers are
-  * driver-side set algebra ([[graft.functions.Theta]]).
+  * join. Each side collapses to one KB-scale sketch (one aggregation
+  * grouped by side — at 100 TB that is one scan of each input, no
+  * shuffle of anything but the kilobyte partials); the overlap
+  * numbers are driver-side set algebra ([[graft.functions.Theta]]).
   *
   * What it answers up front: will this join be empty (disjoint key
   * domains — a wrong-column bug caught before an hour-long run)?
@@ -40,8 +40,14 @@ object JoinProfile {
   def keyOverlap(a: DataFrame, aKey: String, b: DataFrame, bKey: String,
                  lgK: Int = 12): DataFrame = {
     val spark: SparkSession = a.sparkSession
-    val skA = a.agg(Theta.sketchAgg(col(aKey), lgK)).head().getAs[Array[Byte]](0)
-    val skB = b.agg(Theta.sketchAgg(col(bKey), lgK)).head().getAs[Array[Byte]](0)
+    // both sketches in one aggregation; a side with no rows has no
+    // group, so its sketch is the empty one
+    val sides = a.select(lit(0).as("side"), col(aKey).cast("long").as("k"))
+      .unionAll(b.select(lit(1).as("side"), col(bKey).cast("long").as("k")))
+      .groupBy("side").agg(Theta.sketchAgg(col("k"), lgK))
+      .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
+    val skA = sides.getOrElse(0, Theta.empty(lgK))
+    val skB = sides.getOrElse(1, Theta.empty(lgK))
     val inter = Theta.intersect(skA, skB)
     val uni = Theta.union(skA, skB, lgK)
     val nA = Theta.estimate(skA).round

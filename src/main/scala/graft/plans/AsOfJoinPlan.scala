@@ -4,7 +4,9 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute,
   AttributeSet, JoinedRow, SortOrder, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan,
+  Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution,
   Distribution, Partitioning}
 import org.apache.spark.sql.catalyst.util.TypeUtils
@@ -42,6 +44,19 @@ final case class AsOfJoin(left: LogicalPlan, right: LogicalPlan,
                           tolerance: Option[Long] = None) extends BinaryNode {
   override def output: Seq[Attribute] = left.output ++ valOut
   override def producedAttributes: AttributeSet = AttributeSet(valOut)
+
+  /** One output row per left row: the left side's estimate, widened by
+    * the appended value columns. Spark's fallback for an unknown binary
+    * node is the product of both sides' sizes, which would make every
+    * sort or join above an as-of join look huge.
+    */
+  override def stats: Statistics = {
+    val l = left.stats
+    val size = l.sizeInBytes * EstimationUtils.getSizePerRow(output) /
+      EstimationUtils.getSizePerRow(left.output)
+    Statistics(sizeInBytes = size.max(1), rowCount = l.rowCount)
+  }
+
   override protected def withNewChildrenInternal(
       newLeft: LogicalPlan, newRight: LogicalPlan): AsOfJoin =
     copy(left = newLeft, right = newRight)

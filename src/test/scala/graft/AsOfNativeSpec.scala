@@ -97,6 +97,30 @@ class AsOfNativeSpec extends SparkSpec {
     assert(viaBuckets == plain && plain.nonEmpty)
   }
 
+  test("statistics are the left side's, widened by the value columns") {
+    import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils.getSizePerRow
+    // a Range left side carries a row count; the right side is larger
+    val l = spark.range(0, 1000).toDF()
+    val r = (1L to 5000L).map(i => (i % 37, i, i * 2)).toDF("id", "t", "rv")
+    val j = AsOf.joinAsOfNative(l, r, "id", "id", "t", Seq("rv"))
+    val node = j.queryExecution.optimizedPlan.collectFirst {
+      case a: graft.plans.AsOfJoin => a
+    }.get
+    val left = node.left.stats
+    assert(node.stats.rowCount == left.rowCount && left.rowCount.contains(1000))
+    assert(node.stats.sizeInBytes ==
+      left.sizeInBytes * getSizePerRow(node.output) / getSizePerRow(node.left.output))
+    assert(node.stats.sizeInBytes < node.right.stats.sizeInBytes * left.sizeInBytes)
+    // so the final ORDER BY above it sorts in one task, and still right
+    val sorted = j.orderBy("id")
+    val plan = sorted.queryExecution.executedPlan.toString
+    assert(!plan.contains("rangepartitioning"), plan)
+    val got = sorted.select("id", "rv_asof").as[(Long, Option[Long])].collect().toSeq
+    assert(got.map(_._1) == (0L until 1000L))
+    assert(got == AsOf.joinAsOf(l, r, "id", "id", "t", Seq("rv"))
+      .select("id", "rv_asof").as[(Long, Option[Long])].collect().sortBy(_._1).toSeq)
+  }
+
   test("null left keys never match") {
     val l = Seq((Some(1L), 10L, 1L), (None, 10L, 2L))
       .toDF("k", "t", "lid")

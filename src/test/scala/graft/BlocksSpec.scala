@@ -2,6 +2,7 @@ package graft
 
 import graft.ops.Blocks
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkBridge
 
 /** The r15 checkpoint-hygiene contract: a streaming fold that
   * `localCheckpoint`s frames every micro-batch must be able to free
@@ -77,8 +78,8 @@ class BlocksSpec extends SparkSpec {
         expr("transform(sequence(1, 8), d -> CAST((vec_id * 31 + d * 7) % 13 AS FLOAT) / 13.0)")
           .as("embedding")),
       "vec_id", 4)
-    val root = java.nio.file.Files.createTempDirectory("blocks_idx").toString
-    val out = java.nio.file.Files.createTempDirectory("blocks_out").toString +
+    val root = SparkBridge.tempDir("blocks_idx").toString
+    val out = SparkBridge.tempDir("blocks_out").toString +
       "/scores"
     graft.ops.MaxSim.writeIndexVersioned(mv.where(col("doc_id") >= 8), root,
       nPlanes = 4, dims = 8, dBuckets = 4)

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Bpe
+import org.apache.spark.sql.graft.SparkBridge
 
 /** BPE trainer: greedy-fold semantics, run parity, deterministic
   * tie-breaks, and the vocab-compaction weighting.
@@ -121,7 +122,7 @@ class BpeSpec extends SparkSpec {
     val mem = Bpe.encodeCounts(docs, seg, "doc_id", "text")
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val root = java.nio.file.Files.createTempDirectory("bpe").toString
+    val root = SparkBridge.tempDir("bpe").toString
     Bpe.writeModelVersioned(spark, merges, seg, root)
     seg.unpersist()
     val live = graft.ops.Generations.livePath(spark, root)
@@ -139,7 +140,7 @@ class BpeSpec extends SparkSpec {
     val (merges, seg) = Bpe.train(spark, Bpe.wordVocab(oldDocs, "text"), 2)
     // r1: (l,o); r2: (lo,w) — pinned so the new-word replay is known
     assert(merges.map(m => (m.s1, m.s2)) == Seq(("l", "o"), ("lo", "w")))
-    val root = java.nio.file.Files.createTempDirectory("bpe").toString
+    val root = SparkBridge.tempDir("bpe").toString
     Bpe.writeModelVersioned(spark, merges, seg, root)
     seg.unpersist()
     val batch = Seq((9L, "low slow lower")).toDF("doc_id", "text")
@@ -182,7 +183,7 @@ class BpeSpec extends SparkSpec {
     import spark.implicits._
     val docs = Seq((1L, "abab abab abc")).toDF("doc_id", "text")
     val (merges, seg) = Bpe.train(spark, Bpe.wordVocab(docs, "text"), 2)
-    val root = java.nio.file.Files.createTempDirectory("bpe").toString
+    val root = SparkBridge.tempDir("bpe").toString
     Bpe.writeModelVersioned(spark, merges, seg, root)
     seg.unpersist()
     val gen1 = graft.ops.Generations.livePath(spark, root)

@@ -2,12 +2,13 @@ package graft
 
 import graft.ops.FileBloomIndex
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkBridge
 
 class FileBloomIndexSpec extends SparkSpec {
   import spark.implicits._
 
   private def scratch(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_fbi_$tag").toString
+    SparkBridge.tempDir(s"graft_fbi_$tag").toString
 
   private def writeData(path: String, ids: Range, nFiles: Int): Unit =
     spark.range(ids.start, ids.end).toDF("id")

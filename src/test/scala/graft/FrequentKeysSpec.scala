@@ -2,6 +2,7 @@ package graft
 
 import graft.ops.FrequentKeys
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkBridge
 
 /** Misra-Gries heavy-hitter enumeration (q113's production path):
   * the two mergeable-summary theorems under real eviction, exactness
@@ -68,7 +69,7 @@ class FrequentKeysSpec extends SparkSpec {
   }
 
   test("streaming twin: per-batch merges keep the cumulative guarantee; snapshots are isolated") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mg_stream")
+    val dir = SparkBridge.tempDir("graft_mg_stream")
     // two micro-batches of the documents fixture -> a real cross-batch
     // merge, same staging shape as the Count-Min streaming spec
     Seq("a", "b").foreach { nm =>

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.{Generations, MaxSim}
+import org.apache.spark.sql.graft.SparkBridge
 
 /** The catalog-pointer generation discipline: pointer lifecycle and
   * atomicity contract, prune's never-delete-live rule, and a versioned
@@ -30,7 +31,7 @@ class GenerationsSpec extends SparkSpec {
         r.getLong(3))).toSet
 
   test("pointer lifecycle: absent root, publish, flip, validation") {
-    val root = java.nio.file.Files.createTempDirectory("graft_gen").toString
+    val root = SparkBridge.tempDir("graft_gen").toString
     assert(Generations.current(spark, root).isEmpty)
     intercept[java.io.IOException](Generations.livePath(spark, root))
 
@@ -71,7 +72,7 @@ class GenerationsSpec extends SparkSpec {
 
   test("legacy CURRENT pointer: still resolved, corrupt forms still loud") {
     // a root published before the manifest log existed: CURRENT only
-    val root = java.nio.file.Files.createTempDirectory("graft_gen_leg").toString
+    val root = SparkBridge.tempDir("graft_gen_leg").toString
     new java.io.File(root + "/gen-000001").mkdirs()
     Generations.publish(spark, root, root + "/gen-000001",
       Generations.RenameOverwrite)
@@ -88,7 +89,7 @@ class GenerationsSpec extends SparkSpec {
       root + "/gen-000001", Generations.RenameOverwrite))
 
     // corrupt legacy pointer on a legacy-only root: loud, not absent
-    val root2 = java.nio.file.Files.createTempDirectory("graft_gen_leg2").toString
+    val root2 = SparkBridge.tempDir("graft_gen_leg2").toString
     new java.io.File(root2 + "/gen-000001").mkdirs()
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(root2, "CURRENT"), "gen-bogus\n")
@@ -116,7 +117,7 @@ class GenerationsSpec extends SparkSpec {
     // store with no atomic rename. The commit is ONE new-object
     // creation, and resolution never reads entry content — so there
     // is no state in which a reader sees a missing or torn pointer.
-    val root = java.nio.file.Files.createTempDirectory("graft_gen_atom").toString
+    val root = SparkBridge.tempDir("graft_gen_atom").toString
     new java.io.File(root + "/gen-000001").mkdirs()
     new java.io.File(root + "/gen-000002").mkdirs()
     Generations.publish(spark, root, root + "/gen-000001")
@@ -144,7 +145,7 @@ class GenerationsSpec extends SparkSpec {
   }
 
   test("prune trims the manifest log but never its head entry") {
-    val root = java.nio.file.Files.createTempDirectory("graft_gen_ptrim").toString
+    val root = SparkBridge.tempDir("graft_gen_ptrim").toString
     (1 to 5).foreach { n =>
       new java.io.File(root + f"/gen-$n%06d").mkdirs()
       Generations.publish(spark, root, root + f"/gen-$n%06d")
@@ -158,7 +159,7 @@ class GenerationsSpec extends SparkSpec {
   }
 
   test("prune keeps the newest window and never the live generation") {
-    val root = java.nio.file.Files.createTempDirectory("graft_gen_prune").toString
+    val root = SparkBridge.tempDir("graft_gen_prune").toString
     (1 to 4).foreach(n => new java.io.File(root + f"/gen-$n%06d").mkdirs())
     Generations.publish(spark, root, root + "/gen-000001") // live = oldest
     // debris from a crashed publish (temp written, rename never ran)
@@ -175,7 +176,7 @@ class GenerationsSpec extends SparkSpec {
   }
 
   test("versioned rebuild lands in a new generation by pointer flip; prune keeps reader grace") {
-    val root = java.nio.file.Files.createTempDirectory("graft_gen_ms")
+    val root = SparkBridge.tempDir("graft_gen_ms")
       .resolve("idx").toString
     val gen1 = MaxSim.writeIndexVersioned(toks(0 until 8), root, nPlanes = 3,
       dims = 8, dBuckets = 4)
@@ -189,7 +190,7 @@ class GenerationsSpec extends SparkSpec {
     assert(gen2 != gen1 && gen2.endsWith("gen-000002"))
     assert(Generations.livePath(spark, root) == gen2)
     // the live generation serves exactly a from-scratch build
-    val scratch = java.nio.file.Files.createTempDirectory("graft_gen_ms_s")
+    val scratch = SparkBridge.tempDir("graft_gen_ms_s")
       .resolve("idx").toString
     MaxSim.writeIndex(toks(0 until 16), scratch, nPlanes = 3, dims = 8,
       dBuckets = 4)
@@ -209,7 +210,7 @@ class GenerationsSpec extends SparkSpec {
   }
 
   test("a crashed versioned build converges: its debris is rebuilt over, never served") {
-    val root = java.nio.file.Files.createTempDirectory("graft_gen_crash")
+    val root = SparkBridge.tempDir("graft_gen_crash")
       .resolve("idx").toString
     val gen1 = MaxSim.writeIndexVersioned(toks(0 until 8), root, nPlanes = 3,
       dims = 8, dBuckets = 4)
@@ -229,7 +230,7 @@ class GenerationsSpec extends SparkSpec {
     val gen2 = MaxSim.writeIndexVersioned(toks(0 until 16), root, nPlanes = 3,
       dims = 8, dBuckets = 4)
     assert(gen2 == crashed && Generations.livePath(spark, root) == gen2)
-    val scratch = java.nio.file.Files.createTempDirectory("graft_gen_crash_s")
+    val scratch = SparkBridge.tempDir("graft_gen_crash_s")
       .resolve("idx").toString
     MaxSim.writeIndex(toks(0 until 16), scratch, nPlanes = 3, dims = 8,
       dBuckets = 4)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.time.{Instant, LocalDateTime}
 import java.time.temporal.ChronoUnit
 
@@ -10,7 +9,7 @@ import graft.pipeline.{HistoryLoad, PipelineConfig, TableConfig}
 import graft.sources.PartitionedSink
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.graft.{ColumnBridge, SparkBridge}
 import org.apache.spark.sql.types.LongType
 
 /** Every HistoryLoad table whose columns have the same types reuses one
@@ -21,7 +20,7 @@ class HistoryLoadStageSpec extends SparkSpec {
 
   /** Two source tables, same column types, different names and values. */
   private lazy val source: String = {
-    val dir = Files.createTempDirectory("graft_stage").toString
+    val dir = SparkBridge.tempDir("graft_stage").toString
     def table(name: String, prefix: String, from: Long): Unit =
       spark.range(from, from + 200, 1, 2)
         .select(col("id").as(s"${prefix}_id"),
@@ -38,7 +37,7 @@ class HistoryLoadStageSpec extends SparkSpec {
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   test("after the first table, no table and no later run compiles generated code") {
-    val out = Files.createTempDirectory("graft_stage_out").toString
+    val out = SparkBridge.tempDir("graft_stage_out").toString
     val tables = Seq(TableConfig("first", "T"), TableConfig("second", "T"))
     val now = LocalDateTime.of(2024, 6, 1, 12, 0)
     def load(runId: Long, target: String) =

@@ -4,13 +4,14 @@ import graft.ops.IncrementalAgg
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.sql.graft.SparkBridge
 import scala.jdk.CollectionConverters._
 
 class IncrementalAggSpec extends SparkSpec {
   import spark.implicits._
 
   private def scratch(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_incagg_$tag")
+    SparkBridge.tempDir(s"graft_incagg_$tag")
       .resolve("t").toString
 
   private val keys = Seq("day", "k")

@@ -2,6 +2,7 @@ package graft
 
 import graft.ops.InvertedIndex
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkBridge
 
 class InvertedIndexSpec extends SparkSpec {
   import spark.implicits._
@@ -38,7 +39,7 @@ class InvertedIndexSpec extends SparkSpec {
   }
 
   test("materialized index: probe equals in-memory search; prune + pushdown") {
-    val path = java.nio.file.Files.createTempDirectory("graft_inv").toString + "/idx"
+    val path = SparkBridge.tempDir("graft_inv").toString + "/idx"
     InvertedIndex.writeIndex(docs, "doc_id", "text", path)
 
     // bucketed layout: directory count bounded by nBuckets, never vocab
@@ -62,7 +63,7 @@ class InvertedIndexSpec extends SparkSpec {
 
   test("BM25 over the index equals the corpus-scan composition") {
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val path = java.nio.file.Files.createTempDirectory("graft_inv_bm").toString + "/idx"
+    val path = SparkBridge.tempDir("graft_inv_bm").toString + "/idx"
     InvertedIndex.writeIndex(d, "doc_id", "text", path)
 
     val qts = Seq("join", "data", "spark")

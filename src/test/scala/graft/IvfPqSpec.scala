@@ -2,6 +2,7 @@ package graft
 
 import graft.ops.{IvfPq, Pq, Similarity}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkBridge
 
 class IvfPqSpec extends SparkSpec {
   import spark.implicits._
@@ -27,7 +28,7 @@ class IvfPqSpec extends SparkSpec {
   }
 
   private def tmpIdx(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_ivfpq_$tag")
+    SparkBridge.tempDir(s"graft_ivfpq_$tag")
       .resolve("idx").toString
 
   test("index stores codes only; probe prunes cells statically") {

@@ -5,6 +5,7 @@ import java.sql.DriverManager
 import graft.pipeline.{HistoryLoad, PipelineConfig}
 import graft.sources.JdbcSource
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkBridge
 
 /** Live end-to-end coverage for the JDBC scan (O-1, reference
   * utils/rdbms_operations.py:197-248) and the TRUNCATE+COPY-style
@@ -19,7 +20,7 @@ class JdbcE2eSpec extends SparkSpec {
 
   // keep derby.log out of the repo root
   System.setProperty("derby.system.home",
-    java.nio.file.Files.createTempDirectory("graft_derby").toString)
+    SparkBridge.tempDir("graft_derby").toString)
 
   private val url = "jdbc:derby:memory:graftdb;create=true"
 

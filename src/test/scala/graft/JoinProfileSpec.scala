@@ -27,6 +27,17 @@ class JoinProfileSpec extends SparkSpec {
       ((1000L, 1000L, 400L, 1600L, 400L, true)))
   }
 
+  test("a side with no rows profiles as an empty key domain") {
+    val a = spark.range(0, 50).toDF("k")
+    val none = spark.range(0, 100).toDF("k").where("k < 0")
+    assert(row(JoinProfile.keyOverlap(a, "k", none, "k")) ==
+      ((50L, 0L, 0L, 50L, 0L, true)))
+    assert(row(JoinProfile.keyOverlap(none, "k", a, "k")) ==
+      ((0L, 50L, 0L, 50L, 0L, true)))
+    assert(row(JoinProfile.keyOverlap(none, "k", none, "k")) ==
+      ((0L, 0L, 0L, 0L, 0L, true)))
+  }
+
   test("estimation mode is flagged and stays within sketch error") {
     val a = spark.range(0, 300000).toDF("k")
     val b = spark.range(100000, 400000).toDF("k")

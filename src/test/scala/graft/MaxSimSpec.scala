@@ -2,6 +2,7 @@ package graft
 
 import graft.ops.MaxSim
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkBridge
 
 /** Late-interaction MaxSim: golden scores on a hand-checkable corpus,
   * pruning soundness (shortlist scores ≡ exact scores), and the
@@ -76,7 +77,7 @@ class MaxSimSpec extends SparkSpec {
   test("stored-index multi-probe equals the in-memory multi-probe path") {
     val d = corpus16
     val q = d.where(col("doc_id") < 2)
-    val idx = java.nio.file.Files.createTempDirectory("maxsim").toString
+    val idx = SparkBridge.tempDir("maxsim").toString
     MaxSim.writeIndex(d, idx, nPlanes = 8, dims = 8, dBuckets = 4)
     val stored = MaxSim.searchIndex(spark, idx, q, k = 16, nPlanes = 8,
         dims = 8, dBuckets = 4, multiProbe = 3)
@@ -112,7 +113,7 @@ class MaxSimSpec extends SparkSpec {
   test("stored index probe equals the in-memory pruned path exactly") {
     val d = corpus16
     val q = d.where(col("doc_id") < 2)
-    val idx = java.nio.file.Files.createTempDirectory("maxsim").toString
+    val idx = SparkBridge.tempDir("maxsim").toString
     MaxSim.writeIndex(d, idx, nPlanes = 3, dims = 8, dBuckets = 4)
     val stored = MaxSim.searchIndex(spark, idx, q, k = 16, nPlanes = 3,
         dims = 8, dBuckets = 4)
@@ -127,7 +128,7 @@ class MaxSimSpec extends SparkSpec {
   test("stored index probe prunes both reads to the relevant partitions") {
     val d = corpus16
     val q = d.where(col("doc_id") === 0)
-    val idx = java.nio.file.Files.createTempDirectory("maxsim").toString
+    val idx = SparkBridge.tempDir("maxsim").toString
     MaxSim.writeIndex(d, idx, nPlanes = 3, dims = 8, dBuckets = 4)
     // the postings scan runs eagerly inside the probe (the shortlist
     // materializes once — r14's single-scan discipline), so its plan
@@ -173,8 +174,8 @@ class MaxSimSpec extends SparkSpec {
     def pq(dir: String): Set[String] =
       walk(new java.io.File(dir)).map(_.getPath)
         .filter(_.endsWith(".parquet")).toSet
-    val buf = java.nio.file.Files.createTempDirectory("maxsim_buf").toString
-    val unbuf = java.nio.file.Files.createTempDirectory("maxsim_unbuf").toString
+    val buf = SparkBridge.tempDir("maxsim_buf").toString
+    val unbuf = SparkBridge.tempDir("maxsim_unbuf").toString
     MaxSim.writeIndex(d, buf, nPlanes = 3, dims = 8, dBuckets = 4)
     MaxSim.writeIndex(d, unbuf, nPlanes = 3, dims = 8, dBuckets = 4)
     val batch = d.where(col("doc_id") === 3)
@@ -223,8 +224,8 @@ class MaxSimSpec extends SparkSpec {
 
   test("buffered append on a FRESH path: staged docs retrievable before any fold") {
     val d = corpus16
-    val fresh = java.nio.file.Files.createTempDirectory("maxsim_fresh").toString
-    val twin = java.nio.file.Files.createTempDirectory("maxsim_twin").toString
+    val fresh = SparkBridge.tempDir("maxsim_fresh").toString
+    val twin = SparkBridge.tempDir("maxsim_twin").toString
     val batch = d.where(col("doc_id") < 4)
     // no writeIndex ever ran on `fresh`: only staging exists, and the
     // probe must still work (the scaladoc's "retrievable the moment
@@ -240,7 +241,7 @@ class MaxSimSpec extends SparkSpec {
     assert(got.nonEmpty && got == rows(twin),
       "staging-only probe must score like a built index over the same docs")
     // probing a path with NO data at all fails loudly, not obscurely
-    val none = java.nio.file.Files.createTempDirectory("maxsim_none").toString
+    val none = SparkBridge.tempDir("maxsim_none").toString
     val e = intercept[IllegalArgumentException] {
       MaxSim.searchIndex(spark, none, d.where(col("doc_id") === 0),
         k = 8, nPlanes = 3, dims = 8, dBuckets = 4)
@@ -250,7 +251,7 @@ class MaxSimSpec extends SparkSpec {
 
   test("versioned index: build under Generations, probe the live path") {
     val d = corpus16
-    val root = java.nio.file.Files.createTempDirectory("maxsimroot").toString
+    val root = SparkBridge.tempDir("maxsimroot").toString
     MaxSim.writeIndexVersioned(d, root, nPlanes = 3, dims = 8, dBuckets = 4)
     val live = graft.ops.Generations.livePath(spark, root)
     val got = MaxSim.searchIndex(spark, live, d.where(col("doc_id") < 2),
@@ -260,8 +261,8 @@ class MaxSimSpec extends SparkSpec {
 
   test("pre-quantized probe and append equal the unquantized entry points") {
     val d = corpus16
-    val idx = java.nio.file.Files.createTempDirectory("maxsim_q").toString
-    val twin = java.nio.file.Files.createTempDirectory("maxsim_qt").toString
+    val idx = SparkBridge.tempDir("maxsim_q").toString
+    val twin = SparkBridge.tempDir("maxsim_qt").toString
     MaxSim.writeIndex(d, idx, nPlanes = 3, dims = 8, dBuckets = 4)
     val batch = d.where(col("doc_id") === 3)
       .select((col("doc_id") + 100L).as("doc_id"), col("tok"),
@@ -288,7 +289,7 @@ class MaxSimSpec extends SparkSpec {
 
   test("a staged file landing after the fold's snapshot survives the flip") {
     val d = corpus16
-    val idx = java.nio.file.Files.createTempDirectory("maxsim_race").toString
+    val idx = SparkBridge.tempDir("maxsim_race").toString
     MaxSim.writeIndex(d, idx, nPlanes = 3, dims = 8, dBuckets = 4)
     def batchFor(doc: Long, idOff: Long) = d.where(col("doc_id") === doc)
       .select((col("doc_id") + idOff).as("doc_id"), col("tok"),

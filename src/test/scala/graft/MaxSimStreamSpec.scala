@@ -3,6 +3,7 @@ package graft
 import graft.ops.{Generations, MaxSim}
 import graft.streaming.MaxSimStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkBridge
 
 /** Streaming MaxSim intake: each micro-batch's scores equal the batch
   * [[MaxSim.scoreLshPruned]] against the corpus as of the previous
@@ -33,8 +34,8 @@ class MaxSimStreamSpec extends SparkSpec {
       nP, dms, dB, foldBytes)
 
   test("per-batch stream scores equal batch scoreLshPruned over the prior corpus") {
-    val root = java.nio.file.Files.createTempDirectory("msroot").toString
-    val out = java.nio.file.Files.createTempDirectory("msout").toString + "/out"
+    val root = SparkBridge.tempDir("msroot").toString
+    val out = SparkBridge.tempDir("msout").toString + "/out"
     MaxSim.writeIndexVersioned(toks(0 until 8), root, nP, dms, dB)
 
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -55,8 +56,8 @@ class MaxSimStreamSpec extends SparkSpec {
   }
 
   test("tiny foldBytes folds every batch inside the guard; stream scores unchanged") {
-    val root = java.nio.file.Files.createTempDirectory("msroot").toString
-    val out = java.nio.file.Files.createTempDirectory("msout").toString + "/out"
+    val root = SparkBridge.tempDir("msroot").toString
+    val out = SparkBridge.tempDir("msout").toString + "/out"
     MaxSim.writeIndexVersioned(toks(0 until 8), root, nP, dms, dB)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("q_doc", "rnk", "doc_id", "score_micro").collect()
@@ -80,8 +81,8 @@ class MaxSimStreamSpec extends SparkSpec {
   }
 
   test("a crash-replayed batch REPLACES its sink partition, never appends") {
-    val root = java.nio.file.Files.createTempDirectory("msroot").toString
-    val out = java.nio.file.Files.createTempDirectory("msout").toString + "/out"
+    val root = SparkBridge.tempDir("msroot").toString
+    val out = SparkBridge.tempDir("msout").toString + "/out"
     MaxSim.writeIndexVersioned(toks(0 until 8), root, nP, dms, dB)
     MaxSimStream.applyBatch(toks(8 until 12), root, out, k, nP, dms, dB, 0L)
     assert(spark.read.parquet(out).count() > 0)
@@ -99,7 +100,7 @@ class MaxSimStreamSpec extends SparkSpec {
   }
 
   test("compactVersioned: postings re-distinct, flooded buckets capped, toks intact") {
-    val root = java.nio.file.Files.createTempDirectory("msroot").toString
+    val root = SparkBridge.tempDir("msroot").toString
     MaxSim.writeIndexVersioned(toks(0 until 8), root, nP, dms, dB)
     val gen1 = Generations.livePath(spark, root)
     // re-append doc 3's postings (a replayed ingest without the
@@ -131,7 +132,7 @@ class MaxSimStreamSpec extends SparkSpec {
   }
 
   test("compactVersioned folds staged rows — a compact never loses buffered docs") {
-    val root = java.nio.file.Files.createTempDirectory("msroot").toString
+    val root = SparkBridge.tempDir("msroot").toString
     MaxSim.writeIndexVersioned(toks(0 until 8), root, nP, dms, dB)
     val gen1 = Generations.livePath(spark, root)
     // buffered append stays staged (default threshold)
@@ -151,7 +152,7 @@ class MaxSimStreamSpec extends SparkSpec {
   }
 
   test("in-tick maintenance: maintainEvery compacts inside the guard, scores untouched") {
-    val tmp = java.nio.file.Files.createTempDirectory("msroot_mt").toString
+    val tmp = SparkBridge.tempDir("msroot_mt").toString
     val root = s"$tmp/root"
     val out = s"$tmp/out"
     val inDir = new java.io.File(s"$tmp/in"); inDir.mkdirs()
@@ -201,7 +202,7 @@ class MaxSimStreamSpec extends SparkSpec {
   }
 
   test("maintain: healthy tick is read-only; duplicate postings trip a compaction") {
-    val root = java.nio.file.Files.createTempDirectory("msroot").toString
+    val root = SparkBridge.tempDir("msroot").toString
     MaxSim.writeIndexVersioned(toks(0 until 8), root, nP, dms, dB)
     val gen1 = Generations.livePath(spark, root)
     val healthy = MaxSim.maintain(spark, root, maxBucketDocs = 1000L)

@@ -1,8 +1,8 @@
 package graft
 
-import java.nio.file.Files
 import graft.sources.Merge
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkBridge
 
 class MergeSpec extends SparkSpec {
 
@@ -14,7 +14,7 @@ class MergeSpec extends SparkSpec {
   }
 
   test("partition-scoped upsert rewrites only touched partitions") {
-    val out = Files.createTempDirectory("graft_merge").toString + "/orders"
+    val out = SparkBridge.tempDir("graft_merge").toString + "/orders"
     val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     orders.write.partitionBy("o_orderstatus").parquet(out)
     val statuses = orders.select("o_orderstatus").distinct()
@@ -47,7 +47,7 @@ class MergeSpec extends SparkSpec {
 
   test("applyChanges: deletes go, upserts land, an emptied partition's files are cleared") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_cdc").toString + "/t"
+    val out = SparkBridge.tempDir("graft_cdc").toString + "/t"
     Seq((1L, "a", "p1"), (2L, "b", "p1"), (3L, "c", "p2"), (4L, "d", "p3"))
       .toDF("k", "v", "part").write.partitionBy("part").parquet(out)
     val untouchedBefore = fileSet(s"$out/part=p1")
@@ -75,7 +75,7 @@ class MergeSpec extends SparkSpec {
 
   test("applyChanges clears emptied partitions whose value Hive-escapes") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_cdc_esc").toString + "/t"
+    val out = SparkBridge.tempDir("graft_cdc_esc").toString + "/t"
     // space and colon both escape in hive directory names — a raw
     // "$col=$value" path would miss the directory and leave the
     // stale files behind
@@ -100,7 +100,7 @@ class MergeSpec extends SparkSpec {
 
   test("null partition key merges against __HIVE_DEFAULT_PARTITION__, not past it") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_merge_null").toString + "/t"
+    val out = SparkBridge.tempDir("graft_merge_null").toString + "/t"
     Seq((1L, "a", null.asInstanceOf[String]), (2L, "b", null), (3L, "c", "p1"))
       .toDF("k", "v", "part").write.partitionBy("part").parquet(out)
 

@@ -8,6 +8,7 @@ import graft.sources.{NioLocalFileSystem, NioRawLocalFileSystem}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.graft.SparkBridge
 
 /** The session's `file` scheme sets permissions without forking `chmod`,
   * and leaves every file and directory with the bits Hadoop's own local
@@ -28,7 +29,7 @@ class NioLocalFileSystemSpec extends SparkSpec {
   }
 
   test("written part files, _SUCCESS, checksums and directories get Hadoop's permission bits") {
-    val dir = Files.createTempDirectory("graft_fs_perm").toFile
+    val dir = SparkBridge.tempDir("graft_fs_perm").toFile
     val df = spark.range(0, 100, 1, 2).selectExpr("id", "cast(id as string) as s")
     df.write.parquet(s"$dir/nio/t")
     // the same write through Hadoop's own LocalFileSystem: a write's
@@ -54,7 +55,7 @@ class NioLocalFileSystemSpec extends SparkSpec {
     nio.initialize(new URI("file:///"), conf)
     val raw = new RawLocalFileSystem
     raw.initialize(new URI("file:///"), conf)
-    val dir = Files.createTempDirectory("graft_fs_chmod").toFile
+    val dir = SparkBridge.tempDir("graft_fs_chmod").toFile
     for (bits <- Seq("600", "644", "755", "700", "777", "000", "501", "1755")) {
       val perm = new FsPermission(Integer.parseInt(bits, 8).toShort)
       val (a, b) = (new File(dir, s"nio-$bits"), new File(dir, s"raw-$bits"))

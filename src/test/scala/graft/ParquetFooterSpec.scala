@@ -3,11 +3,9 @@ package graft
 import java.io.File
 import java.nio.file.Files
 import java.time.LocalDateTime
-import java.util.concurrent.atomic.AtomicInteger
 
 import graft.pipeline.{HistoryLoad, PipelineConfig, TableConfig}
 import graft.sources.ParquetFooter
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.SparkBridge
 
@@ -18,7 +16,7 @@ class ParquetFooterSpec extends SparkSpec {
   /** A table of three part files, written by Spark, with timestamp,
     * decimal, date, string and non-nullable columns. */
   private lazy val table: String = {
-    val dir = Files.createTempDirectory("graft_footer").toString + "/t.parquet"
+    val dir = SparkBridge.tempDir("graft_footer").toString + "/t.parquet"
     spark.range(0, 300, 1, 3)
       .select(col("id"),
         (col("id") * 1000003L).cast("decimal(12,2)").as("amount"),
@@ -28,19 +26,6 @@ class ParquetFooterSpec extends SparkSpec {
         when(col("id") % 5 === 0, lit(null)).otherwise(col("id").cast("string")).as("note"))
       .write.parquet(dir)
     dir
-  }
-
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    SparkBridge.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    try { body; SparkBridge.drainListenerBus(sc) }
-    finally sc.removeSparkListener(listener)
-    jobs.get()
   }
 
   test("footer schema equals spark.read.parquet's on a multi-file table") {
@@ -59,7 +44,7 @@ class ParquetFooterSpec extends SparkSpec {
   }
 
   test("footer read skips _SUCCESS and hidden files, which sort first") {
-    val dir = Files.createTempDirectory("graft_footer_hidden").toFile
+    val dir = SparkBridge.tempDir("graft_footer_hidden").toFile
     new File(table).listFiles().filter(_.getName.endsWith(".parquet"))
       .foreach(f => Files.copy(f.toPath, new File(dir, f.getName).toPath))
     // not Parquet: reading either as the first data file would throw
@@ -71,14 +56,14 @@ class ParquetFooterSpec extends SparkSpec {
   }
 
   test("partitioned layouts are left to the reader's own discovery") {
-    val dir = Files.createTempDirectory("graft_footer_part").toString + "/t.parquet"
+    val dir = SparkBridge.tempDir("graft_footer_part").toString + "/t.parquet"
     spark.range(10).withColumn("p", col("id") % 2).write.partitionBy("p").parquet(dir)
     assert(ParquetFooter.schema(spark, dir).isEmpty)
   }
 
   test("processTable runs one Spark job per table: the write, no schema inference") {
     val src = new File(table).getParent
-    val out = Files.createTempDirectory("graft_footer_out").toString
+    val out = SparkBridge.tempDir("graft_footer_out").toString
     val load = new HistoryLoad(spark,
       PipelineConfig(src, out, 3L, "tester", Seq(TableConfig("t", "T"))),
       LocalDateTime.of(2024, 6, 1, 12, 0))

@@ -86,7 +86,7 @@ class ConfigSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("config loads through Hadoop FS: file:// URI and bare path") {
-    val f = Files.createTempFile("graft_cfg", ".yaml")
+    val f = SparkBridge.tempDir("graft_cfg").resolve("cfg.yaml")
     Files.write(f, "source_dir: /in\ntarget_dir: /out\ntables:\n  nation: {active_flag: \"T\"}\n".getBytes)
     val viaUri = Config.fromYamlFile("file://" + f.toAbsolutePath)
     val viaPath = Config.fromYamlFile(f.toAbsolutePath.toString)
@@ -111,7 +111,7 @@ class PipelineSpec extends SparkSpec {
     PipelineConfig(src, tgt, runId = 7L, updatedBy = "tester", tables = tables)
 
   test("end-to-end: scan -> audit -> normalize -> hash -> partitioned sink -> reconcile") {
-    val out = Files.createTempDirectory("graft_pipe").toString
+    val out = SparkBridge.tempDir("graft_pipe").toString
     val now = LocalDateTime.of(2024, 6, 1, 12, 0)
     val hl = new HistoryLoad(spark,
       cfg("/root/testdata/sf0.001",
@@ -136,7 +136,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("per-table failure isolation: one bad table doesn't abort the run") {
-    val out = Files.createTempDirectory("graft_pipe2").toString
+    val out = SparkBridge.tempDir("graft_pipe2").toString
     val hl = new HistoryLoad(spark,
       cfg("/root/testdata/sf0.001", out,
         Seq(TableConfig("nosuchtable", "T"), TableConfig("nation", "T"))))
@@ -167,7 +167,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("sink reconcile counts this write only, not every run at the path") {
-    val out = Files.createTempDirectory("graft_sink").toString
+    val out = SparkBridge.tempDir("graft_sink").toString
     val ts = LocalDateTime.of(2024, 6, 1, 9, 0)
     val df = spark.read.parquet("/root/testdata/sf0.001/region.parquet")
     assert(PartitionedSink.writeDatePartitioned(df, out, "region", ts) == 5)
@@ -178,7 +178,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("re-run appends under a new date path, leaving prior runs intact") {
-    val out = Files.createTempDirectory("graft_pipe3").toString
+    val out = SparkBridge.tempDir("graft_pipe3").toString
     val t1 = LocalDateTime.of(2024, 6, 1, 10, 0)
     val t2 = LocalDateTime.of(2024, 6, 1, 11, 0)
     val tables = Seq(TableConfig("region", "T"))

@@ -1,13 +1,13 @@
 package graft
 
-import java.nio.file.Files
 import graft.sources.PartitionedSink
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkBridge
 
 class PruningSpec extends SparkSpec {
 
   test("hive-partitioned layout gives partition pruning on read") {
-    val out = Files.createTempDirectory("graft_prune").toString + "/events_by_type"
+    val out = SparkBridge.tempDir("graft_prune").toString + "/events_by_type"
     val ev = graft.queries.events(spark, "/root/testdata/sf0.001")
     PartitionedSink.writePartitionedBy(ev, out, Seq("event_type"))
 
@@ -32,7 +32,7 @@ class PruningSpec extends SparkSpec {
   }
 
   test("clustered write: row-group stats let a filtered scan skip most data") {
-    val base = Files.createTempDirectory("graft_cluster").toString
+    val base = SparkBridge.tempDir("graft_cluster").toString
     val orders = spark.read.parquet("/root/testdata/sf0.01/orders.parquet")
 
     // unsorted layout: every file covers the whole key range
@@ -62,7 +62,7 @@ class PruningSpec extends SparkSpec {
   }
 
   test("z-ordered write: a two-dimensional box filter skips more than single-column clustering") {
-    val base = Files.createTempDirectory("graft_zorder").toString
+    val base = SparkBridge.tempDir("graft_zorder").toString
     val li = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
       .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
 
@@ -98,7 +98,7 @@ class PruningSpec extends SparkSpec {
   }
 
   test("z-ordered write survives empty frames and all-null z columns") {
-    val base = Files.createTempDirectory("graft_zorder_edge").toString
+    val base = SparkBridge.tempDir("graft_zorder_edge").toString
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .select("l_orderkey", "l_partkey", "l_suppkey")
 
@@ -115,7 +115,7 @@ class PruningSpec extends SparkSpec {
   }
 
   test("compaction merges small files without changing the data") {
-    val out = Files.createTempDirectory("graft_compact").toString + "/t"
+    val out = SparkBridge.tempDir("graft_compact").toString + "/t"
     val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     orders.repartition(16).write.parquet(out)
     val before = orders.orderBy("o_orderkey").collect().toSeq

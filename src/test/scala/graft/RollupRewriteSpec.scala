@@ -3,13 +3,14 @@ package graft
 import graft.ops.IncrementalAgg
 import graft.plans.RollupRewrite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkBridge
 import org.scalatest.BeforeAndAfterAll
 
 class RollupRewriteSpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
 
   private val tmp =
-    java.nio.file.Files.createTempDirectory("graft_rr").toString
+    SparkBridge.tempDir("graft_rr").toString
   private val srcPath = s"$tmp/events_src.parquet"
   private val rollupPath = s"$tmp/mv_store"
   private val keys = Seq("day", "event_type")
@@ -109,7 +110,7 @@ class RollupRewriteSpec extends SparkSpec with BeforeAndAfterAll {
     // the full loop: micro-batches fold into the materialized view
     // (RollupStream, replay-marked), the optimizer answers the raw
     // table's GROUP BY from it — a streaming materialized view
-    val dir = java.nio.file.Files.createTempDirectory("graft_rr_stream")
+    val dir = SparkBridge.tempDir("graft_rr_stream")
     val src2 = s"$dir/events_src2.parquet"
     val mv2 = s"$dir/mv_store2"
     val ev = graft.queries.events(spark, "/root/testdata/sf0.001")

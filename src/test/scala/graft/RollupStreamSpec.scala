@@ -4,6 +4,7 @@ import graft.ops.IncrementalAgg
 import graft.streaming.RollupStream
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkBridge
 
 class RollupStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -22,9 +23,9 @@ class RollupStreamSpec extends SparkSpec {
       .collect().sortBy(r => (r._1, r._2)).toSeq
 
   test("streamed rollup == batch rollup over the union of micro-batches") {
-    val path = java.nio.file.Files.createTempDirectory("graft_rollup_s")
+    val path = SparkBridge.tempDir("graft_rollup_s")
       .resolve("t").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_rollup_c")
+    val ckpt = SparkBridge.tempDir("graft_rollup_c")
       .toString
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[(String, String, Long)]
@@ -48,7 +49,7 @@ class RollupStreamSpec extends SparkSpec {
   }
 
   test("replayed micro-batch ids are skipped: the fold is redelivery-idempotent") {
-    val path = java.nio.file.Files.createTempDirectory("graft_rollup_r")
+    val path = SparkBridge.tempDir("graft_rollup_r")
       .resolve("t").toString
     val b = Seq(("2026-01-01", "a", 5L)).toDF("day", "k", "v")
     assert(RollupStream.applyBatch(b, 0L, path, keys, ms, "day"))
@@ -62,7 +63,7 @@ class RollupStreamSpec extends SparkSpec {
   }
 
   test("theta measure composes: streaming distinct-per-key across micro-batches") {
-    val path = java.nio.file.Files.createTempDirectory("graft_rollup_t")
+    val path = SparkBridge.tempDir("graft_rollup_t")
       .resolve("t").toString
     val ms2 = Seq(IncrementalAgg.count("n"),
       IncrementalAgg.thetaDistinct("v", "users"))
@@ -79,7 +80,7 @@ class RollupStreamSpec extends SparkSpec {
   }
 
   test("empty first micro-batch leaves a foldable table shape behind") {
-    val path = java.nio.file.Files.createTempDirectory("graft_rollup_e")
+    val path = SparkBridge.tempDir("graft_rollup_e")
       .resolve("t").toString
     val empty = Seq.empty[(String, String, Long)].toDF("day", "k", "v")
     assert(RollupStream.applyBatch(empty, 0L, path, keys, ms, "day"))

@@ -128,16 +128,6 @@ class RowHashSpec extends SparkSpec {
     (0 until 600).map(row(_, r))
   }
 
-  private def withConf[T](kv: (String, String)*)(body: => T): T = {
-    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally before.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** Every column alone and the whole row, native vs oracle: the
     * differing (columns, row) pairs, and the executed plan. */
   private def compare(): (Seq[String], String) = {

@@ -2,6 +2,7 @@ package graft
 
 import graft.ops.Sampling
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkBridge
 
 class SamplingSpec extends SparkSpec {
   import spark.implicits._
@@ -99,7 +100,7 @@ class SamplingSpec extends SparkSpec {
     // content-addressed membership is a stateless narrow filter, so
     // the SAME operator runs unchanged on a stream — and selects the
     // SAME rows (an RNG sampler cannot promise either)
-    val dir = java.nio.file.Files.createTempDirectory("graft_sample_stream")
+    val dir = SparkBridge.tempDir("graft_sample_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/documents.parquet"),
       dir.resolve("documents.parquet"))

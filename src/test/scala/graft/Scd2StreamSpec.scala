@@ -4,6 +4,7 @@ import graft.ops.ChangeCapture
 import graft.streaming.Scd2Stream
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkBridge
 import org.apache.spark.sql.types._
 
 class Scd2StreamSpec extends SparkSpec {
@@ -21,7 +22,7 @@ class Scd2StreamSpec extends SparkSpec {
       .collect().sortBy(r => (r._1, r._3, r._2)).toSeq
 
   test("cumulative store equals the batch SCD2 over everything folded") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scd2s").toString
+    val tmp = SparkBridge.tempDir("graft_scd2s").toString
     val store = s"$tmp/dim"
     // three in-order batches; keys overlap across batches, states
     // flip, repeat, and interleave
@@ -44,7 +45,7 @@ class Scd2StreamSpec extends SparkSpec {
   }
 
   test("a row older than a key's watermark quarantines; the fold proceeds") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scd2s_late").toString
+    val tmp = SparkBridge.tempDir("graft_scd2s_late").toString
     val store = s"$tmp/dim"
     Scd2Stream.applyBatch(spark, store,
       ev(Seq((1L, 100L, 1L, "A"), (2L, 100L, 2L, "X"))),
@@ -69,7 +70,7 @@ class Scd2StreamSpec extends SparkSpec {
   }
 
   test("equal-ts tie regression quarantines: the watermark is the (ts, tie) pair") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scd2s_tie").toString
+    val tmp = SparkBridge.tempDir("graft_scd2s_tie").toString
     val store = s"$tmp/dim"
     // batch 0 collapses (1,10,B),(1,100,B) to open [10,inf)B with
     // watermark (ts=100, tie=5). The tie-3 row at ts=100 sorts BEFORE
@@ -96,7 +97,7 @@ class Scd2StreamSpec extends SparkSpec {
   }
 
   test("backfillQuarantine drains late rows from the log; store equals one-shot scd2") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scd2s_bf").toString
+    val tmp = SparkBridge.tempDir("graft_scd2s_bf").toString
     val store = s"$tmp/dim"
     // the late row (B@20, user 1) lands inside a CLOSED collapsed run:
     // on-time x@10, x@30 collapse to one interval, z@50 closes it at
@@ -134,7 +135,7 @@ class Scd2StreamSpec extends SparkSpec {
   }
 
   test("an all-late batch leaves the store untouched; the stream stays alive") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scd2s_alllate").toString
+    val tmp = SparkBridge.tempDir("graft_scd2s_alllate").toString
     val store = s"$tmp/dim"
     val inDir = new java.io.File(s"$tmp/in"); inDir.mkdirs()
     def stage(name: String, rows: Seq[(Long, Long, Long, String)]): Unit = {
@@ -165,7 +166,7 @@ class Scd2StreamSpec extends SparkSpec {
   }
 
   test("untouched buckets are not read: the fold is partition-pruned") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scd2s_prune").toString
+    val tmp = SparkBridge.tempDir("graft_scd2s_prune").toString
     val store = s"$tmp/dim"
     val many = (1L to 200L).map(k => (k, 10L, k, "S"))
     Scd2Stream.applyBatch(spark, store, ev(many), "user_id", "ts", "event_id",
@@ -196,7 +197,7 @@ class Scd2StreamSpec extends SparkSpec {
   }
 
   test("full redelivery is absorbed by the applied-batch markers, not wedged by the late guard") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scd2s_replay").toString
+    val tmp = SparkBridge.tempDir("graft_scd2s_replay").toString
     val store = s"$tmp/dim"
     val inDir = new java.io.File(s"$tmp/in"); inDir.mkdirs()
     val rows = Seq((1L, 10L, 1L, "A"), (1L, 20L, 2L, "B"))
@@ -226,7 +227,7 @@ class Scd2StreamSpec extends SparkSpec {
   }
 
   test("null event time or tiebreak fails loudly, never silently vanishes") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scd2s_null").toString
+    val tmp = SparkBridge.tempDir("graft_scd2s_null").toString
     val store = s"$tmp/dim"
     Scd2Stream.applyBatch(spark, store, ev(Seq((1L, 10L, 1L, "A"))),
       "user_id", "ts", "event_id", Seq("state"))
@@ -248,7 +249,7 @@ class Scd2StreamSpec extends SparkSpec {
   }
 
   test("pre-watermark store fails loudly; migrateHwm seeds it and the fold resumes") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scd2s_mig").toString
+    val tmp = SparkBridge.tempDir("graft_scd2s_mig").toString
     val store = s"$tmp/dim"
     val b1 = Seq((1L, 10L, 1L, "A"), (1L, 100L, 2L, "A"), (2L, 15L, 3L, "X"))
     Scd2Stream.applyBatch(spark, store, ev(b1), "user_id", "ts", "event_id",
@@ -291,7 +292,7 @@ class Scd2StreamSpec extends SparkSpec {
   }
 
   test("the drain deletes only the quarantine files it read") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scd2s_fw").toString
+    val tmp = SparkBridge.tempDir("graft_scd2s_fw").toString
     val store = s"$tmp/dim"
     val all = Seq((1L, 10L, 1L, "a"), (1L, 50L, 2L, "b"),
       (2L, 10L, 3L, "p"), (2L, 50L, 4L, "q"),
@@ -331,7 +332,7 @@ class Scd2StreamSpec extends SparkSpec {
   }
 
   test("event tee + in-stream drain: out-of-order stream self-repairs to one-shot truth") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scd2s_tee").toString
+    val tmp = SparkBridge.tempDir("graft_scd2s_tee").toString
     val store = s"$tmp/dim"
     val inDir = new java.io.File(s"$tmp/in"); inDir.mkdirs()
     def stage(name: String, rows: Seq[(Long, Long, Long, String)]): Unit = {
@@ -391,7 +392,7 @@ class Scd2StreamSpec extends SparkSpec {
   }
 
   test("compactEventLog coalesces marked batches; the compacted log backfills exactly") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scd2s_cmp").toString
+    val tmp = SparkBridge.tempDir("graft_scd2s_cmp").toString
     val store = s"$tmp/dim"
     val inDir = new java.io.File(s"$tmp/in"); inDir.mkdirs()
     def stage(name: String, rows: Seq[(Long, Long, Long, String)]): Unit = {
@@ -469,7 +470,7 @@ class Scd2StreamSpec extends SparkSpec {
   }
 
   test("drainEvery without the tee is refused up front") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scd2s_cfg").toString
+    val tmp = SparkBridge.tempDir("graft_scd2s_cfg").toString
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val mem = org.apache.spark.sql.execution.streaming.runtime
@@ -483,7 +484,7 @@ class Scd2StreamSpec extends SparkSpec {
   }
 
   test("streaming attach: file-source micro-batches fold through the checkpoint") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scd2s_stream").toString
+    val tmp = SparkBridge.tempDir("graft_scd2s_stream").toString
     val store = s"$tmp/dim"
     val inDir = new java.io.File(s"$tmp/in"); inDir.mkdirs()
     def stage(name: String, rows: Seq[(Long, Long, Long, String)]): Unit = {

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.{Kll, Theta}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The durable half of the sketch-rollup contract (q117/q119/q121):
@@ -14,7 +15,7 @@ class SketchRollupSpec extends SparkSpec {
   import spark.implicits._
 
   test("theta + KLL sketch columns round-trip parquet and roll up correctly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sketch_store")
+    val dir = SparkBridge.tempDir("graft_sketch_store")
     val events = (1 to 30000).map { i =>
       (i % 7, (i % 2300).toLong, (i % 997).toDouble)
     }.toDF("day", "user_id", "value").repartition(8)

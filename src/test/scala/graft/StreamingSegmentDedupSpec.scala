@@ -3,6 +3,7 @@ package graft
 import graft.ops.SegmentDedup
 import graft.streaming.SegmentDedupStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkBridge
 
 class StreamingSegmentDedupSpec extends SparkSpec {
   import spark.implicits._
@@ -20,7 +21,7 @@ class StreamingSegmentDedupSpec extends SparkSpec {
     val b1 = docs.where(col("doc_id") < 250)
     val b2 = docs.where(col("doc_id") >= 250).unionAll(plants)
 
-    val base = java.nio.file.Files.createTempDirectory("graft_segdedup").toString
+    val base = SparkBridge.tempDir("graft_segdedup").toString
     val (store, out) = (s"$base/store", s"$base/out")
     SegmentDedupStream.applyBatch(b1, "doc_id", "text", 10, store, out)
     SegmentDedupStream.applyBatch(b2, "doc_id", "text", 10, store, out)
@@ -39,7 +40,7 @@ class StreamingSegmentDedupSpec extends SparkSpec {
   test("the foreachBatch wrapper drives the same loop end-to-end") {
     val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
       .select("doc_id", "text").where(col("doc_id") < 100)
-    val base = java.nio.file.Files.createTempDirectory("graft_segstream").toString
+    val base = SparkBridge.tempDir("graft_segstream").toString
     val srcDir = s"$base/src"
     new java.io.File(srcDir).mkdirs()
     docs.where(col("doc_id") < 50).coalesce(1)
@@ -68,7 +69,7 @@ class StreamingSegmentDedupSpec extends SparkSpec {
       .select("doc_id", "text").where(col("doc_id") < 100)
     val b1 = docs.where(col("doc_id") < 50)
     val b2 = docs.where(col("doc_id") >= 50)
-    val base = java.nio.file.Files.createTempDirectory("graft_segreplay").toString
+    val base = SparkBridge.tempDir("graft_segreplay").toString
     val (store, out) = (s"$base/store", s"$base/out")
     def applyGuarded(b: org.apache.spark.sql.DataFrame, id: Long): Boolean =
       graft.streaming.BatchMarkers.applyOnce(spark, out, id) {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.streaming.EventsStream
+import org.apache.spark.sql.graft.SparkBridge
 
 class StreamingSpec extends SparkSpec {
 
@@ -14,7 +15,7 @@ class StreamingSpec extends SparkSpec {
 
     // stage the fixture file into a directory (file-stream source
     // requires a directory to tail)
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream")
+    val dir = SparkBridge.tempDir("graft_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       dir.resolve("events.parquet"))
@@ -39,7 +40,7 @@ class StreamingSpec extends SparkSpec {
         spark.read.parquet("/root/testdata/sf0.001/events.parquet")))
       .orderBy("wstart").collect()
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_sliding")
+    val dir = SparkBridge.tempDir("graft_stream_sliding")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       dir.resolve("events.parquet"))
@@ -61,7 +62,7 @@ class StreamingSpec extends SparkSpec {
     // the same fixture staged TWICE: every event id arrives in two
     // different files; maxFilesPerTrigger=1 forces separate
     // micro-batches, so the drop happens through the state store
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_dedup")
+    val dir = SparkBridge.tempDir("graft_stream_dedup")
     Seq("a", "b").foreach { n =>
       java.nio.file.Files.copy(
         java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
@@ -92,7 +93,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming upsert applies each micro-batch as a partition-scoped merge") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_supsert").toString
+    val tmp = SparkBridge.tempDir("graft_supsert").toString
     val target = s"$tmp/target"
 
     Seq((1L, "a", "p1"), (2L, "b", "p1"), (3L, "c", "p2"))
@@ -133,7 +134,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     // stage the documents fixture TWICE -> two micro-batches, so the
     // equality below exercises a real cross-batch merge
-    val dir = java.nio.file.Files.createTempDirectory("graft_hh_stream")
+    val dir = SparkBridge.tempDir("graft_hh_stream")
     Seq("a", "b").foreach { n =>
       java.nio.file.Files.copy(
         java.nio.file.Paths.get("/root/testdata/sf0.001/documents.parquet"),
@@ -174,7 +175,7 @@ class StreamingSpec extends SparkSpec {
     // the SAME events file staged twice -> two micro-batches carrying
     // identical user_ids: a set-semantics accumulator must absorb the
     // replay (estimate unchanged), where a linear counter would double
-    val dir = java.nio.file.Files.createTempDirectory("graft_hll_stream")
+    val dir = SparkBridge.tempDir("graft_hll_stream")
     Seq("a", "b").foreach { n =>
       java.nio.file.Files.copy(
         java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
@@ -218,7 +219,7 @@ class StreamingSpec extends SparkSpec {
         batchEv.where("event_type = 'purchase'"))
       .orderBy("user_id", "click_id", "purchase_id").collect()
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_funnel")
+    val dir = SparkBridge.tempDir("graft_stream_funnel")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       dir.resolve("events.parquet"))
