@@ -10,9 +10,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * prunes columns down to the parquet reader.
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
 
   // Scan-plan cache: building a parquet scan costs a file listing and
   // a footer schema read EVERY call — pure fixed overhead when 100+
@@ -22,12 +19,10 @@ object Tables {
   // CONTRACT: a cached path's file listing is captured at first read —
   // the fixture dirs this catalog serves are immutable for a session's
   // lifetime (the driver writes them once, before any query runs). A
-  // caller that rewrites a parquet dir mid-session (compaction tests,
-  // sink round-trips) must NOT read it through this catalog, or must
-  // call `invalidate` after the rewrite; otherwise the stale listing
-  // yields old rows or FileNotFoundException on deleted files. The
-  // repo's sink/compaction specs read rewritten output via
-  // `spark.read.parquet` directly, never through here.
+  // caller that rewrites a parquet dir mid-session (a sink round-trip)
+  // must NOT read it through this catalog: the stale listing yields
+  // old rows or FileNotFoundException on deleted files. Read rewritten
+  // output with `spark.read.parquet` directly.
   //
   // Sessions are weak keys, but a weak key alone cannot collect here:
   // every cached DataFrame strongly references its SparkSession, so a
@@ -58,16 +53,5 @@ object Tables {
       }
     }
     perSession.computeIfAbsent(s"$dir/$name.parquet", p => spark.read.parquet(p))
-  }
-
-  /** Drop cached plans (all sessions, or one path in one session).
-    * Call after rewriting a parquet dir that was previously read
-    * through this catalog.
-    */
-  def invalidate(): Unit = cache.synchronized { cache.clear() }
-  def invalidate(spark: SparkSession, dir: String, name: String): Unit = {
-    val ref = cache.get(spark)
-    val perSession = if (ref != null) ref.get else null
-    if (perSession != null) { perSession.remove(s"$dir/$name.parquet"); () }
   }
 }

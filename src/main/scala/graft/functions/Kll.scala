@@ -88,13 +88,6 @@ object Kll {
   def quantile(bytes: Array[Byte], rank: Double): Double =
     KllDoublesSketch.heapify(Memory.wrap(bytes)).getQuantile(rank)
 
-  /** Merge serialized sketches (driver-side rollup helper). */
-  def mergeBytes(k: Int, sketches: Seq[Array[Byte]]): Array[Byte] = {
-    val acc = KllDoublesSketch.newHeapInstance(k)
-    sketches.foreach(b => acc.merge(KllDoublesSketch.heapify(Memory.wrap(b))))
-    acc.toByteArray
-  }
-
   /** In-plan quantile extraction (tiny post-aggregation rows only —
     * one sketch per group, never a per-row hot path).
     */

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.datasketches.memory.Memory
-import org.apache.datasketches.theta.{CompactSketch, SetOperation, Sketch, Sketches, Union}
+import org.apache.datasketches.theta.{SetOperation, Sketch, Sketches, Union}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -139,12 +139,6 @@ object Theta {
       ThetaSketchAgg(ColumnBridge.expression(c.cast("long")), lgK)
         .toAggregateExpression())
 
-  /** Union a column of serialized sketches into one sketch. */
-  def unionAgg(c: Column, lgK: Int = 12): Column =
-    ColumnBridge.column(
-      ThetaUnionAgg(ColumnBridge.expression(c), lgK)
-        .toAggregateExpression())
-
   /** The sketch of no values: what [[sketchAgg]] returns over no rows. */
   def empty(lgK: Int = 12): Array[Byte] =
     SetOperation.builder().setLogNominalEntries(lgK).buildUnion()
@@ -178,7 +172,4 @@ object Theta {
   /** Whether the sketch is still in exact mode (no sampling yet). */
   def isExact(bytes: Array[Byte]): Boolean =
     !wrap(bytes).isEstimationMode
-
-  private[graft] def compact(bytes: Array[Byte]): CompactSketch =
-    wrap(bytes).compact()
 }

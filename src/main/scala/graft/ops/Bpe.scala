@@ -76,8 +76,7 @@ object Bpe {
   /** One greedy merge pass of (s1, s2) over a symbol-array column —
     * in-row, narrow, codegen'd comparisons inside the HOF.
     */
-  def applyMerge(syms: org.apache.spark.sql.Column, s1: String,
-                 s2: String): org.apache.spark.sql.Column =
+  def applyMerge(syms: Column, s1: String, s2: String): Column =
     aggregate(
       syms,
       array().cast("array<string>"),
@@ -181,107 +180,6 @@ object Bpe {
     (merges.result(), cur)
   }
 
-  /** One greedy pass applying a SET of pairwise-disjoint merges in a
-    * single fold — the batched-round workhorse. `pairs` must be
-    * conflict-free (no shared symbols, no merged string colliding
-    * with another pair's symbol — [[trainBatched]] selects them so);
-    * under that precondition application order is immaterial and the
-    * pass equals applying each merge sequentially.
-    */
-  def applyMerges(syms: Column, pairs: Seq[(String, String)]): Column =
-    aggregate(
-      syms,
-      array().cast("array<string>"),
-      (acc, s) => {
-        // exact per-pair equality chain (a concatenated-key map
-        // lookup is ambiguous when symbols share boundaries, e.g.
-        // (a,bc) vs (ab,c)); batch sizes are small by contract
-        val last = element_at(acc, -1)
-        val hit = pairs
-          .map { case (a, b) =>
-            (last === lit(a) && s === lit(b), lit(a + b)) }
-          .foldRight(lit(null).cast("string")) { case ((c, v), e) =>
-            when(c, v).otherwise(e)
-          }
-        when(size(acc) > 0 && hit.isNotNull,
-          concat(slice(acc, lit(1), size(acc) - 1), array(hit)))
-          .otherwise(concat(acc, array(s)))
-      })
-
-  /** Production-scale training: each round greedily picks up to
-    * `batch` pairwise-DISJOINT pairs from the round's top-4·batch
-    * candidates by count (ties (count DESC, s1, s2) as ever) and
-    * applies them in one fold pass — a 30k-merge tokenizer becomes
-    * ~30k/batch synchronous rounds instead of 30k. Conflict-dense
-    * rounds (one hot symbol dominating the top of the list) may pick
-    * fewer than `batch`; the shortfall just rolls into the next
-    * round — progress per round is ≥ 1 merge, so termination holds
-    * and total merges are unchanged. The
-    * greedy disjointness filter (skip a pair sharing a symbol with an
-    * already-picked one, or whose merged string collides with a
-    * picked symbol) makes the single fold pass provably equal to
-    * applying the picked merges one at a time: disjoint pairs can
-    * never overlap an occurrence, and the collision check stops a
-    * freshly-merged symbol from feeding a same-round pair. The
-    * APPROXIMATION vs strict sequential BPE is the standard batched
-    * one — pairs CREATED by an earlier merge in the batch (x, a∥b)
-    * only compete from the next round; picked pairs' own counts are
-    * exact (disjointness means no pick disturbs another's
-    * occurrences). `batch = 1` is bit-identical to [[train]]
-    * (spec-pinned). Driver reads ≤ 4·batch candidate rows per round
-    * (KB-scale contract).
-    */
-  def trainBatched(spark: SparkSession, vocab: DataFrame, totalMerges: Int,
-                   batch: Int): (Seq[Merge], DataFrame) = {
-    require(batch >= 1, s"batch must be >= 1 (got $batch)")
-    var cur = charSymbols(vocab)
-      .select("word", "cnt", "syms")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    cur.count()
-    val merges = Seq.newBuilder[Merge]
-    var got = 0
-    var round = 1
-    var done = false
-    while (got < totalMerges && !done) {
-      val want = math.min(batch, totalMerges - got)
-      val top = cur
-        .select(
-          col("cnt"),
-          explode(expr(
-            "transform(slice(syms, 1, size(syms) - 1)," +
-              " (s, i) -> struct(s AS s1, syms[i + 1] AS s2))")).as("p"))
-        .groupBy(col("p.s1").as("s1"), col("p.s2").as("s2"))
-        .agg(sum(col("cnt")).as("c"))
-        .orderBy(col("c").desc, col("s1"), col("s2"))
-        .limit(4 * want) // oversample: some candidates conflict
-        .collect() // <= 4*batch rows — documented driver read
-      if (top.isEmpty) done = true
-      else {
-        val used = scala.collection.mutable.Set.empty[String]
-        val picked = Seq.newBuilder[(String, String, Long)]
-        var n = 0
-        top.foreach { r =>
-          val (a, b, c) = (r.getString(0), r.getString(1), r.getLong(2))
-          if (n < want && !used(a) && !used(b) && !used(a + b)) {
-            picked += ((a, b, c)); used += a; used += b; used += (a + b)
-            n += 1
-          }
-        }
-        val sel = picked.result()
-        sel.foreach { case (a, b, c) => merges += Merge(round, a, b, c) }
-        got += sel.length
-        val next = cur
-          .withColumn("syms",
-            applyMerges(col("syms"), sel.map(p => (p._1, p._2))))
-          .localCheckpoint(true)
-        if (round == 1) cur.unpersist() else freeCheckpoint(cur)
-        cur = next
-        round += 1
-      }
-    }
-    (merges.result(), cur)
-  }
-
   /** Per-doc BPE token counts: join each doc's words to the final
     * segmentation's per-word segment count. Big-big hash join on
     * `word` (both sides shuffle-partitioned by the key; AQE may
@@ -308,20 +206,15 @@ object Bpe {
   // Layout under one model path:
   //   path/merges/  (ord, round, s1, s2, cnt)   ord = application order
   //   path/vocab/   (word, cnt, syms)           segmented vocabulary
-  //   path/meta/    (trained_total)             corpus mass at train time
   //
   // `vocab` is the encode-side artifact (per-word segment counts via
   // one join — [[encodeCounts]]); `merges` is the cold path for words
-  // the vocabulary has never seen ([[segmentWords]]); `meta` anchors
-  // the retrain cadence: [[countShift]] = live vocab mass vs mass at
-  // train time, the drift signal [[maintain]] trips on.
+  // the vocabulary has never seen ([[segmentWords]]).
   // ---------------------------------------------------------------
 
   /** Persist a trained model at `path` (see layout above). `ord` is
     * the position in `merges` — the exact application order, which
-    * [[segmentWords]] must replay (batched rounds pick several merges
-    * per round; within a round order is provably immaterial, but
-    * storing the true sequence keeps the replay contract trivial).
+    * [[segmentWords]] must replay.
     */
   def writeModel(spark: SparkSession, merges: Seq[Merge],
                  segmented: DataFrame, path: String): Unit = {
@@ -330,10 +223,8 @@ object Bpe {
       .map { case (m, i) => (i.toLong, m.round, m.s1, m.s2, m.cnt) }
       .toDF("ord", "round", "s1", "s2", "cnt")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/merges")
-    val seg = segmented.select("word", "cnt", "syms")
-    seg.write.mode("overwrite").parquet(s"$path/vocab")
-    seg.agg(sum(col("cnt")).as("trained_total"))
-      .write.mode("overwrite").parquet(s"$path/meta")
+    segmented.select("word", "cnt", "syms")
+      .write.mode("overwrite").parquet(s"$path/vocab")
   }
 
   /** [[writeModel]] into the next [[Generations]] slot + pointer
@@ -392,26 +283,14 @@ object Bpe {
                          idCol: String, textCol: String): DataFrame =
     encodeCounts(docs, spark.read.parquet(s"$path/vocab"), idCol, textCol)
 
-  /** Vocabulary-mass drift since train time: live cnt mass /
-    * trained_total - 1. One vocab-scale aggregation + a 1-row meta
-    * read; the [[maintain]] trip signal.
-    */
-  def countShift(spark: SparkSession, path: String): Double = {
-    val trained = spark.read.parquet(s"$path/meta").head().getLong(0)
-    val live = spark.read.parquet(s"$path/vocab")
-      .agg(sum(col("cnt"))).head().getLong(0)
-    live.toDouble / trained.toDouble - 1.0
-  }
-
   /** Fold a new corpus batch into the live model as a NEW generation:
     * one batch-scale [[wordVocab]] aggregation, one vocab-scale
     * outer-join count fold, and an in-row merge replay for the
     * batch's genuinely new words ([[segmentWords]] — existing words
     * keep their stored segmentation, which depends only on the merge
-    * table and is therefore already correct). Merges and meta carry
-    * over unchanged — a refresh updates counts, never the tokenizer
-    * itself, so encode stays bit-stable across refreshes and
-    * [[countShift]] keeps measuring drift against train time.
+    * table and is therefore already correct). The merges carry over
+    * unchanged — a refresh updates counts, never the tokenizer itself,
+    * so encode stays bit-stable across refreshes.
     */
   def refresh(spark: SparkSession, root: String, newDocs: DataFrame,
               textCol: String): String = {
@@ -436,57 +315,25 @@ object Bpe {
     val gen = Generations.nextPath(spark, root)
     known.unionByName(fresh)
       .write.mode("overwrite").parquet(s"$gen/vocab")
-    // merges and meta carry over UNCHANGED by contract (a refresh
-    // updates counts, never the tokenizer) — byte-identical file copy
-    // instead of a read→rewrite Spark job each (r16: two fewer jobs
-    // per refresh; the copied parquet is the same artifact)
+    // the merges carry over UNCHANGED by contract (a refresh updates
+    // counts, never the tokenizer) — byte-identical file copy instead
+    // of a read→rewrite Spark job (r16; the copied parquet is the same
+    // artifact)
     val hconf = spark.sparkContext.hadoopConfiguration
-    Seq("merges", "meta").foreach { part =>
-      val src = new org.apache.hadoop.fs.Path(s"$live/$part")
-      val dst = new org.apache.hadoop.fs.Path(s"$gen/$part")
-      val fs = src.getFileSystem(hconf)
-      fs.mkdirs(dst)
-      fs.listStatus(src).filter(_.isFile).foreach { st =>
-        org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-          new org.apache.hadoop.fs.Path(dst, st.getPath.getName),
-          false, true, hconf)
-        ()
-      }
+    val src = new org.apache.hadoop.fs.Path(s"$live/merges")
+    val dst = new org.apache.hadoop.fs.Path(s"$gen/merges")
+    val fs = src.getFileSystem(hconf)
+    fs.mkdirs(dst)
+    fs.listStatus(src).filter(_.isFile).foreach { st =>
+      org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
+        new org.apache.hadoop.fs.Path(dst, st.getPath.getName),
+        false, true, hconf)
+      ()
     }
     Generations.publish(spark, root, gen)
     freeCheckpoint(folded)
     freeCheckpoint(fresh) // segmentWords' final chunk checkpoint
     gen
-  }
-
-  /** Outcome of one [[maintain]] tick. */
-  final case class TokenizerReport(countShift: Double, retrained: Boolean)
-
-  /** Retrain cadence: probe [[countShift]] on the live generation;
-    * under `threshold` a tick costs one aggregation and touches
-    * nothing; past it, retrain `rounds` merges from the LIVE folded
-    * vocabulary (refreshes already absorbed the corpus growth — no
-    * corpus rescan) into the next generation and flip. Same
-    * determinism contract as [[train]]: a rebuild is exactly the
-    * from-scratch model over the current vocabulary.
-    */
-  def maintain(spark: SparkSession, root: String, rounds: Int,
-               threshold: Double = 0.2, batch: Int = 1,
-               keep: Int = 2): TokenizerReport = {
-    val live = Generations.livePath(spark, root)
-    val shift = countShift(spark, live)
-    if (shift <= threshold) TokenizerReport(shift, retrained = false)
-    else {
-      val vocab = spark.read.parquet(s"$live/vocab").select("word", "cnt")
-      val (merges, seg) =
-        if (batch <= 1) train(spark, vocab, rounds)
-        else trainBatched(spark, vocab, rounds, batch)
-      writeModelVersioned(spark, merges, seg, root)
-      seg.unpersist() // zero-merge degenerate case: seg is the persist
-      freeCheckpoint(seg)
-      Generations.prune(spark, root, keep)
-      TokenizerReport(shift, retrained = true)
-    }
   }
 
   // ---------------------------------------------------------------

@@ -5,11 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** Snapshot differencing (batch CDC): classify every key between two
   * table versions as insert / delete / update — the change-detection
-  * step an incremental loader runs before applying
-  * [[graft.pipeline.Merge.upsertPartitioned]], and the natural
-  * extension of the reference's full-reload HistoryLoad (reference
-  * `main.py:8-80` reloads everything every run; diffing loads only
-  * what changed).
+  * step an incremental loader runs before applying the changes, and
+  * the natural extension of the reference's full-reload HistoryLoad
+  * (reference `main.py:8-80` reloads everything every run; diffing
+  * loads only what changed).
   *
   * Scale shape: one full-outer sort-merge join on the key — the
   * minimal comparison; both sides shuffle exactly once on the key

@@ -126,13 +126,4 @@ object Contamination {
       }
     exact(toks.select(col(idCol), explode(surviving).as("sh")))
   }
-
-  /** The removal composite: corpus minus every contaminated document
-    * (left anti-join against [[check]]'s hit set — hits are tiny, so
-    * the anti-join broadcasts).
-    */
-  def decontaminate(corpus: DataFrame, bench: DataFrame, idCol: String,
-                    textCol: String, n: Int): DataFrame =
-    corpus.join(broadcast(check(corpus, bench, idCol, textCol, n).select(idCol)),
-      Seq(idCol), "left_anti")
 }

@@ -83,10 +83,6 @@ object Expectations {
         when(count(lit(1)).between(lo, hi), lit(0L)).otherwise(lit(1L))
     }
 
-  private[graft] def ruleNamePublic(r: Rule): String = ruleName(r)
-  private[graft] def ruleColPublic(r: Rule): String = ruleCol(r)
-  private[graft] def thresholdPublic(r: Rule): Long = threshold(r)
-
   /** Evaluate all `rules` over `df` in ONE aggregation pass. */
   def evaluate(df: DataFrame, rules: Seq[Rule]): DataFrame = {
     require(rules.nonEmpty, "at least one rule")

@@ -9,11 +9,11 @@ import org.apache.spark.util.sketch.BloomFilter
   * each data file to a bloom filter of its key column, so a point
   * lookup (or small IN-list) on a HIGH-CARDINALITY key reads only the
   * files that might contain it — the skipping regime min/max file
-  * stats cannot enter. Range clustering ([[graft.sources.PartitionedSink]]
-  * `clusteredWrite`/`zOrderedWrite`) prunes when values are ordered;
-  * a bloom sidecar prunes equality probes on keys with no usable
-  * order at all (fingerprints, ids, hashes) — the Delta/Iceberg
-  * bloom-index shape on plain parquet.
+  * stats cannot enter. Range clustering (a sorted or z-ordered
+  * layout) prunes when values are ordered; a bloom sidecar prunes
+  * equality probes on keys with no usable order at all (fingerprints,
+  * ids, hashes) — the Delta/Iceberg bloom-index shape on plain
+  * parquet.
   *
   * At 100 TB: the sidecar holds one row (file, serialized bloom) per
   * data file; it is built distributed (per-partition partial blooms,

@@ -24,10 +24,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   * what makes the operator 100 TB-shaped: each partition reduces to a
   * <= k-entry map, partials merge associatively (treeAggregate), the
   * driver holds one O(k) map regardless of key cardinality, and no
-  * per-key shuffle ever happens. The streaming twin
-  * ([[graft.streaming.StreamingFrequentKeys]]) merges one partial per
-  * micro-batch into an accumulator under the same bound, with N the
-  * cumulative row count.
+  * per-key shuffle ever happens. Summaries of separate loads merge on
+  * the driver under the same bound, with N the cumulative row count.
   *
   * The reference has no analogue (its 15 operators move tables; it
   * never aggregates) — this is extension surface, same family as the
@@ -45,10 +43,8 @@ object FrequentKeys {
     private[FrequentKeys] val counters = new java.util.HashMap[String, Long](k * 2)
     private var scannedCount: Long = 0L
 
-    /** Rows folded into this summary (the N of the error bound). */
-    def scanned: Long = scannedCount
-
-    /** Undercount bound for this summary: ceil(N / (k+1)). Any key
+    /** Undercount bound for this summary: ceil(N / (k+1)), N the rows
+      * folded into it (nulls are not rows of the key space). Any key
       * with true count above this is guaranteed enumerated.
       */
     def bound: Long = math.ceil(scannedCount.toDouble / (k + 1)).toLong

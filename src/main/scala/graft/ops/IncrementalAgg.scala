@@ -27,15 +27,9 @@ import org.apache.spark.sql.functions.{col, lit}
   *
   * Measure algebra: COUNT and SUM merge by addition, MIN/MAX by
   * comparison. AVG is intentionally absent as a stored measure — it
-  * is not mergeable; derive it on read from (sum, count) (one exact
-  * division, [[withDerived]]). COUNT DISTINCT is not algebraically
-  * mergeable from scalars, but IS mergeable as a sketch: the
-  * [[thetaDistinct]] measure stores a serialized theta sketch per
-  * key ([[graft.functions.ThetaSketchAgg]] over the batch,
-  * [[graft.functions.ThetaUnionAgg]] at every merge), exact below k
-  * retained entries and set-algebra-capable beyond (the q121
-  * family) — so "distinct users per day" maintains incrementally in
-  * the same table as the counts.
+  * is not mergeable; derive it on read from (sum, count). COUNT
+  * DISTINCT is not mergeable from scalars either; the sketch family
+  * (q117/q121) carries it.
   *
   * Sums accumulate in exact integer domains: callers scale doubles
   * to micro/milli longs at the mouth (the q125 convention) so
@@ -53,25 +47,15 @@ object IncrementalAgg {
     * ignored for count. `out` names the stored column.
     */
   final case class Measure(agg: String, src: String, out: String) {
-    require(Set("count", "sum", "min", "max", "theta")(agg),
+    require(Set("count", "sum", "min", "max")(agg),
       s"measure '$agg' is not algebraically mergeable" +
-        " (avg: derive from sum+count on read; count distinct: use the" +
-        " thetaDistinct sketch measure)")
+        " (avg: derive from sum+count on read)")
   }
 
   def count(out: String): Measure = Measure("count", "", out)
   def sum(src: String, out: String): Measure = Measure("sum", src, out)
   def min(src: String, out: String): Measure = Measure("min", src, out)
   def max(src: String, out: String): Measure = Measure("max", src, out)
-
-  /** Distinct-count as a mergeable theta-sketch column (`src` is a
-    * long key, e.g. a user id or fingerprint): exact below k retained
-    * entries, standard sketch error beyond, and the stored sketches
-    * answer cross-key set algebra (union/intersect/difference) for
-    * free. Read the estimate with [[graft.functions.Theta.estimate]].
-    */
-  def thetaDistinct(src: String, out: String): Measure =
-    Measure("theta", src, out)
 
   /** The batch's partial aggregate: one map-side-combining
     * aggregation, |keys-in-batch| output rows.
@@ -84,8 +68,6 @@ object IncrementalAgg {
       case Measure("sum", src, out) => F.sum(col(src)).as(out)
       case Measure("min", src, out) => F.min(col(src)).as(out)
       case Measure("max", src, out) => F.max(col(src)).as(out)
-      case Measure("theta", src, out) =>
-        graft.functions.Theta.sketchAgg(col(src)).as(out)
     }
     batch.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
@@ -101,8 +83,6 @@ object IncrementalAgg {
       case Measure("sum", _, out) => F.sum(col(out)).as(out)
       case Measure("min", _, out) => F.min(col(out)).as(out)
       case Measure("max", _, out) => F.max(col(out)).as(out)
-      case Measure("theta", _, out) =>
-        graft.functions.Theta.unionAgg(col(out)).as(out)
     }
 
   /** Merge two partial-aggregate frames (same schema) into one. */
@@ -112,13 +92,28 @@ object IncrementalAgg {
     a.unionByName(b).groupBy(keys.map(col): _*).agg(m.head, m.tail: _*)
   }
 
+  /** Touched-partition predicate. `isin` alone never matches NULL, so
+    * a batch carrying a null partition key would skip reading the
+    * `__HIVE_DEFAULT_PARTITION__` rows while the dynamic overwrite
+    * still replaces that partition — silently dropping prior rows. An
+    * explicit isNull branch keeps null-keyed batches merge-correct.
+    */
+  private def touchedPredicate(partitionCol: String,
+                               touched: Seq[Any]): Column = {
+    val nonNull = touched.filter(_ != null)
+    val base =
+      if (nonNull.isEmpty) lit(false)
+      else col(partitionCol).isin(nonNull: _*)
+    if (nonNull.length != touched.length) base || col(partitionCol).isNull
+    else base
+  }
+
   /** Fold `batch` (raw rows) into the aggregate table at `path`,
     * hive-partitioned by `partitionCol` (must be one of `keys` —
     * typically the day). Cost: one partial aggregation of the batch
     * + a re-aggregation of (touched-partition current rows ∪ batch
     * partial) + a dynamic-partition overwrite of ONLY the touched
-    * partitions ([[graft.sources.Merge.upsertPartitioned]]'s rewrite
-    * discipline).
+    * partitions (dynamic partition overwrite).
     * Returns the number of partitions rewritten (0 for an empty
     * batch, which touches nothing — the touched-partition collect is
     * the emptiness check, so callers need no separate probe action).
@@ -168,8 +163,7 @@ object IncrementalAgg {
       // merge (isin never matches NULL — the dynamic overwrite would
       // replace that partition with batch-only partials)
       val current = spark.read.parquet(path)
-        .where(graft.sources.Merge.touchedPredicate(partitionCol,
-          touched.toIndexedSeq))
+        .where(touchedPredicate(partitionCol, touched.toIndexedSeq))
       // align to the partial's schema: hive partition-type inference
       // reads a string day partition back as DATE, which unionByName
       // would reject — cast key columns back to their ingest types
@@ -192,15 +186,4 @@ object IncrementalAgg {
     } finally { partial.unpersist(); () }
     }
   }
-
-  /** The maintained table, with non-mergeable derivations computed on
-    * read: each (sumCol, countCol, avgOut) triple becomes one exact
-    * double division — single IEEE op, deterministic, replayable.
-    */
-  def withDerived(table: DataFrame,
-                  avgs: Seq[(String, String, String)]): DataFrame =
-    avgs.foldLeft(table) { case (df, (s, n, out)) =>
-      df.withColumn(out,
-        col(s).cast("double") / col(n).cast("double"))
-    }
 }

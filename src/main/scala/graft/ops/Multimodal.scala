@@ -624,63 +624,14 @@ object Multimodal {
        FROM cand WHERE bit_count(xor(ha, hb)) <= $maxHamming
        ORDER BY doc_a, doc_b"""
 
-  // ---- frame sampling ----------------------------------------------
-
-  /** `k` evenly spaced frames from a WAV payload (first-channel 16-bit
-    * sample values) — the "frame-sample" step of an audio/video
-    * pipeline; video key-framing plugs into the same shape once a
-    * codec is available. Empty for non-WAV payloads.
-    */
-  case class FrameSample(id: Long, n_frames: Int, samples: Array[Int])
-  def sampleFrames(ds: Dataset[MediaRecord], k: Int): Dataset[FrameSample] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions(_.map { r =>
-      val d = r.data
-      val isWav = d.length >= 12 && d(0) == 'R' && d(1) == 'I' && d(2) == 'F' &&
-        d(3) == 'F' && d(8) == 'W' && d(9) == 'A' && d(10) == 'V' && d(11) == 'E'
-      if (!isWav) FrameSample(r.id, 0, Array.empty)
-      else try {
-        val buf = ByteBuffer.wrap(d).order(ByteOrder.LITTLE_ENDIAN)
-        var pos = 12
-        var channels = 1; var bits = 16; var dataOff = -1; var dataLen = 0
-        var walking = true
-        while (walking && pos + 8 <= d.length) {
-          val id = new String(d, pos, 4, "US-ASCII")
-          val len = buf.getInt(pos + 4)
-          if (len < 0) walking = false
-          else {
-            if (id == "fmt " && pos + 24 <= d.length) {
-              channels = math.max(buf.getShort(pos + 10).toInt, 1)
-              bits = buf.getShort(pos + 22).toInt
-            } else if (id == "data") {
-              dataOff = pos + 8
-              // frame offsets are computed from this, so it must reflect
-              // the bytes actually present, not the header's claim
-              dataLen = math.max(0, math.min(len, d.length - dataOff))
-            }
-            val next = pos.toLong + 8L + len + (len & 1)
-            if (next > d.length) walking = false else pos = next.toInt
-          }
-        }
-        val bytesPerFrame = math.max(channels * (bits / 8), 1)
-        val frames = if (dataOff < 0) 0 else dataLen / bytesPerFrame
-        if (frames == 0 || bits != 16) FrameSample(r.id, frames, Array.empty)
-        else FrameSample(r.id, frames, Array.tabulate(math.min(k, frames)) { i =>
-          buf.getShort(dataOff + (i.toLong * frames / math.min(k, frames)).toInt
-            * bytesPerFrame).toInt
-        })
-      } catch {
-        case scala.util.control.NonFatal(_) => FrameSample(r.id, 0, Array.empty)
-      }
-    })
-  }
+  // ---- keyframe sampling -------------------------------------------
 
   /** `k` evenly spaced KEYFRAMES from an MP4 payload: 1-based sample
     * number, byte offset, byte size, decode time (ms), and the md5 of
     * the keyframe's bytes (the deterministic stand-in for handing that
-    * slice to a codec) — the video analogue of [[sampleFrames]]. The
-    * selection, slicing, and batch shape are the real pipeline; only
-    * the per-slice pixel decode awaits a codec. Empty for non-MP4
+    * slice to a codec) — the "frame-sample" step of a video
+    * pipeline. The selection, slicing, and batch shape are the real
+    * pipeline; only the per-slice pixel decode awaits a codec. Empty for non-MP4
     * payloads and for headers without resolvable sample tables.
     *
     * Spacing is even in TIME when the header carries `stts` decode

@@ -48,7 +48,6 @@ object Pq {
     */
   final case class QuantCodebook(m: Int, width: Int,
                                  centroids: Seq[Seq[(Int, Seq[Long])]]) {
-    def k: Int = centroids.head.length
     def cc(s: Int, code: Int): Long =
       centroids(s)(code)._2.map(x => x * x).sum
   }
@@ -249,38 +248,17 @@ object Pq {
     q.withColumn("codes", codesColumn(col("ei"), model))
   }
 
-  /** ADC top-k: per query, an in-plan m x k LUT of EXACT integer
-    * subspace distances (|q_s - c|^2), then each candidate's
-    * approximate distance is `zip_with(codes, lut, lookup) |> sum` —
-    * one codegen'd expression per pair, `m` adds deep. Queries are
-    * broadcast-size by contract (same as [[Ivf.searchQuantized]]); ranking
-    * tie-breaks (adc_d2, id).
-    */
-  def searchAdcQuantized(corpus: DataFrame, queries: DataFrame, idCol: String,
-                         model: QuantCodebook, topK: Int): DataFrame = {
-    val codes = encodeQuantized(corpus, model)
-      .select(col(idCol), col("codes"))
-
-    val qlut = Similarity.withQuantized(queries, "embedding")
-      .withColumn("lut", lutColumn(col("ei"), model))
-      .select(col(idCol).as("q_id"), col("lut"))
-
-    val w = Window.partitionBy("q_id").orderBy(col("adc_d2").asc, col(idCol).asc)
-    codes.crossJoin(broadcast(qlut))
-      .where(col(idCol) =!= col("q_id"))
-      .withColumn("adc_d2", adcDistance(col("codes"), col("lut")))
-      .withColumn("rnk", row_number().over(w).cast(LongType))
-      .where(col("rnk") <= topK)
-      .select(col("q_id"), col("rnk"), col(idCol), col("adc_d2"))
-  }
-
-  /** The production IVF-PQ probe shape: ADC ranks a SHORTLIST
-    * (`topK * refine` candidates — `m` integer adds per pair), then
+  /** The production IVF-PQ probe shape: per query, an in-plan m x k
+    * LUT of EXACT integer subspace distances (|q_s - c|^2), so each
+    * candidate's approximate distance is `zip_with(codes, lut,
+    * lookup) |> sum` — one codegen'd expression per pair. ADC ranks a
+    * SHORTLIST (`topK * refine` candidates, ties (adc_d2, id)), then
     * only the shortlist is re-ranked by exact integer distance over
     * the full quantized vectors. Coarse-but-cheap first, exact math on
     * k*refine rows per query — ADC's quantization error affects which
     * candidates make the shortlist, never the final ordering. Output
-    * `d2` is the EXACT |q - x|^2 in micro^2 units.
+    * `d2` is the EXACT |q - x|^2 in micro^2 units. Queries are
+    * broadcast-size by contract (same as [[Ivf.searchQuantized]]).
     */
   def searchAdcRefinedQuantized(corpus: DataFrame, queries: DataFrame,
                                 idCol: String, model: QuantCodebook,

@@ -69,8 +69,6 @@ import org.apache.spark.sql.functions._
   * and exact verification on candidates only — no quadratic stage
   * anywhere. Residual candidate volume is output-class: pairs
   * sharing a rare shingle at compatible lengths/ranks.
-  * [[selfJoinCandidates]] exposes the generator so a pipeline can
-  * price candidate volume explicitly.
   *
   * All arithmetic is exact-integer (milli thresholds, floor-division
   * Jaccard) so results replay bit-for-bit in any engine.
@@ -215,18 +213,6 @@ object PrefixJoin {
       .withColumn("contain_milli", expr("n_common * 1000 DIV sz_a"))
       .where(col("contain_milli") >= minContainMilli)
       .select(col("doc_a"), col("doc_b"), col("n_common"), col("contain_milli"))
-
-  /** Candidate pairs (doc_a < doc_b) that could reach Jaccard >=
-    * `minJaccardMilli`/1000 — the lossless generator [[selfJoin]]
-    * verifies. Exposed so candidate volume can be priced on its own.
-    */
-  def selfJoinCandidates(docs: DataFrame, idCol: String, textCol: String,
-                         shingleWidth: Int, minJaccardMilli: Long): DataFrame = {
-    require(minJaccardMilli >= 1 && minJaccardMilli <= 1000,
-      s"minJaccardMilli must be in [1, 1000] (got $minJaccardMilli)")
-    jaccardCandidatesFrom(shingleSets(docs, idCol, textCol, shingleWidth),
-      idCol, minJaccardMilli)
-  }
 
   /** All pairs (doc_a < doc_b) with distinct-`shingleWidth`-gram
     * Jaccard >= `minJaccardMilli`/1000, exactly. Output columns:

@@ -31,13 +31,10 @@ object Sampling {
     conv(substring(md5(key.cast("string")), 1, 8), 16, 10)
       .cast(LongType) % 1000
 
-  /** Keep rows whose key hashes under `rateMilli` (per-mill). */
-  def deterministicSample(df: DataFrame, keyCol: String, rateMilli: Int): DataFrame =
-    df.where(hashMilli(col(keyCol)) < rateMilli)
-
-  /** Stratified variant: per-stratum keep rates (per-mill), e.g. to
-    * rebalance languages in a training corpus. Unlisted strata get
-    * `defaultMilli`.
+  /** Keep rows whose key hashes under their stratum's rate
+    * (per-mill), e.g. to rebalance languages in a training corpus.
+    * Unlisted strata get `defaultMilli`, so an empty `ratesMilli` is
+    * a uniform sample.
     */
   def stratifiedSample(df: DataFrame, keyCol: String, stratumCol: String,
                        ratesMilli: Map[String, Int],

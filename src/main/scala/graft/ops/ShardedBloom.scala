@@ -46,7 +46,7 @@ object BloomMembership {
   *
   * Correctness is unchanged from the monolithic filter: same
   * no-false-negative guarantee (a fingerprint is always probed against
-  * the shard that [[putLong]] routed it to), same fpp per probe, and
+  * the shard [[ShardedBloom.build]] routed it to), same fpp per probe, and
   * the exact-resolution contract of [[IncrementalDedup]] never depended
   * on the filter anyway.
   *
@@ -55,7 +55,7 @@ object BloomMembership {
   * `stat.bloomFilter` builds differently-sized bitsets that
   * `mergeInPlace` rejects — this family never mixes implementations).
   */
-final class ShardedBloom(val perShardItems: Long, val fpp: Double,
+final class ShardedBloom(val perShardItems: Long,
                          val shards: Array[BloomFilter]) extends LongMembership {
 
   def numShards: Int = shards.length
@@ -65,26 +65,6 @@ final class ShardedBloom(val perShardItems: Long, val fpp: Double,
 
   override def mightContainLong(fp: Long): Boolean =
     shards(shardOf(fp)).mightContainLong(fp)
-
-  def putLong(fp: Long): Unit = { shards(shardOf(fp)).putLong(fp); () }
-
-  def mergeInPlace(other: ShardedBloom): ShardedBloom = {
-    require(other.numShards == numShards,
-      s"shard count mismatch: $numShards vs ${other.numShards}")
-    var i = 0
-    while (i < numShards) { shards(i).mergeInPlace(other.shards(i)); i += 1 }
-    this
-  }
-
-  /** Deep copy via the sketch's own serialization (the only
-    * implementation-safe clone — see the mergeInPlace sizing note).
-    */
-  def copy(): ShardedBloom =
-    new ShardedBloom(perShardItems, fpp, shards.map { s =>
-      val bos = new java.io.ByteArrayOutputStream()
-      s.writeTo(bos)
-      BloomFilter.readFrom(new java.io.ByteArrayInputStream(bos.toByteArray))
-    })
 }
 
 object ShardedBloom {
@@ -97,8 +77,7 @@ object ShardedBloom {
              numShards: Int = 8): ShardedBloom = {
     require(numShards > 0, "numShards must be positive")
     val per = perShard(expectedItems, numShards)
-    new ShardedBloom(per, fpp,
-      Array.fill(numShards)(BloomFilter.create(per, fpp)))
+    new ShardedBloom(per, Array.fill(numShards)(BloomFilter.create(per, fpp)))
   }
 
   /** Distributed shard-local build: fingerprints shuffle to their

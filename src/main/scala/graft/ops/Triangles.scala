@@ -83,11 +83,4 @@ object Triangles {
       .select(explode(array(col("x"), col("y"), col("z"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("n_triangles"))
   }
-
-  /** Global triangle count (one number). */
-  def globalCount(edges: DataFrame, srcCol: String, dstCol: String): Long = {
-    val per = perNode(edges, srcCol, dstCol)
-    per.agg(coalesce(sum("n_triangles"), lit(0L)).as("s"))
-      .head().getLong(0) / 3
-  }
 }

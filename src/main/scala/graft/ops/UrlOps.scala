@@ -38,15 +38,4 @@ object UrlOps {
       .withColumn("apex", apexDomain(col("host")))
     withCols.where(!col("apex").isin(blockedApex.map(lit): _*))
   }
-
-  /** Blocklist as a TABLE (one `apex` column) for real-world list
-    * sizes (UT1, commercial lists: 1e5-1e7 domains — far past any
-    * `isin` literal): broadcast anti-join on the extracted apex. The
-    * corpus never shuffles.
-    */
-  def filterBlockedTable(df: DataFrame, urlCol: String,
-                         blocked: DataFrame): DataFrame =
-    df.withColumn("host", host(col(urlCol)))
-      .withColumn("apex", apexDomain(col("host")))
-      .join(broadcast(blocked.select(col("apex"))), Seq("apex"), "left_anti")
 }

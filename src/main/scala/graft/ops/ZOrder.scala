@@ -16,8 +16,7 @@ import org.apache.spark.sql.types.LongType
   *
   * The z-value is a pure per-row expression (64 bit-ops at 16-bit
   * resolution) inside whole-stage codegen — no UDF, no shuffle of its
-  * own. [[graft.sources.PartitionedSink.zOrderedWrite]] range-
-  * partitions a table on it, which is the write-side layout step.
+  * own.
   *
   * The top 2k bits of a z-value name the 4^k-cell quadtree bucket the
   * point falls in — `zBucket` exposes that as the fully-parallel

@@ -34,7 +34,7 @@ final case class RunReport(
   * The whole chain is ONE lazy Catalyst plan per table executed at the
   * sink action — the reference's chunk loop becomes partition
   * parallelism. The scan takes its schema from one Parquet footer read
-  * on the driver ([[ParquetFooter.schema]]), so a table costs one Spark
+  * on the driver ([[ParquetFooter.ifExists]]), so a table costs one Spark
   * job, the write.
   *
   * Each table's `updated_utc_ts` is taken on the driver as its plan is

@@ -68,9 +68,6 @@ object RollupRewrite extends Rule[LogicalPlan] {
     } catch { case _: Throwable => path }).toUri.toString
 
   def register(t: Target): Unit = { targets.put(canon(t.sourcePath), t); () }
-  def unregister(sourcePath: String): Unit = {
-    targets.remove(canon(sourcePath)); ()
-  }
   def clear(): Unit = targets.clear()
 
   /** The rewrite requires the scan to read EXACTLY the registered

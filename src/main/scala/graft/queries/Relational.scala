@@ -495,11 +495,6 @@ object Relational {
         .orderBy("column")
     }),
 
-    // funnel interval self-join: click -> purchase by the same user
-    // within one hour. Time math in exact integer microseconds (the
-    // epoch_us/unix_micros parity convention); executes as one
-    // SortMergeJoin on user_id with the range as a join filter — no
-    // quadratic stage. Streaming analogue: EventsStream.funnelPairs.
     // the salted-join fallback for dominant keys, oracle-gated: the
     // lineitem⋈part join fanned saltFactor ways (deterministic salt
     // from the line number — reproducible under retries, unlike
@@ -652,6 +647,11 @@ object Relational {
         .orderBy("nation", "bal_band")
     }),
 
+    // funnel interval self-join: click -> purchase by the same user
+    // within one hour. Time math in exact integer microseconds (the
+    // epoch_us/unix_micros parity convention); executes as one
+    // SortMergeJoin on user_id with the range as a join filter — no
+    // quadratic stage.
     "q81_funnel_pairs" -> ((s, dir) => {
       val ev = events(s, dir)
       val c = ev.where(col("event_type") === "click")
@@ -740,8 +740,8 @@ object Relational {
     // l_suppkey), group by the level-3 quadtree bucket (top 6 z bits
     // — a pure projection, NO global sort), and emit each bucket's
     // min-max box plus whether a fixed 2-D box predicate could skip
-    // it entirely. This is the data-skipping math behind
-    // PartitionedSink.zOrderedWrite: tight min-max on BOTH dims at once.
+    // it entirely: the data-skipping math of a z-ordered layout, tight
+    // min-max on BOTH dims at once.
     "q118_zorder_skipping" -> ((s, dir) => {
       val bits = 16
       val z = graft.ops.ZOrder.zValue2(col("l_partkey"), col("l_suppkey"), bits)

@@ -23,17 +23,11 @@ object ParquetFooter {
     * session's Parquet settings, all fields nullable. Files whose names
     * start with `_` or `.` (`_SUCCESS`, checksums) are not data.
     *
-    * None when `path` does not exist, holds no data file, or has
-    * subdirectories (a partitioned layout, whose partition columns
-    * only the reader's own discovery can supply).
-    */
-  def schema(spark: SparkSession, path: String): Option[StructType] =
-    ifExists(spark, path).flatten
-
-  /** [[schema]] of an existing `path`, or None when `path` does not
-    * exist: the same one listing tells a missing source from a
-    * partitioned or empty one, so a caller can fail on the driver
-    * before Spark plans a read.
+    * None when `path` does not exist; Some(None) when it holds no data
+    * file or has subdirectories (a partitioned layout, whose partition
+    * columns only the reader's own discovery can supply). The same one
+    * listing tells a missing source from a partitioned or empty one,
+    * so a caller can fail on the driver before Spark plans a read.
     */
   def ifExists(spark: SparkSession, path: String): Option[Option[StructType]] = {
     val conf = spark.sessionState.newHadoopConf()

@@ -11,10 +11,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * merge. The dashboard rollup stays fresh without EVER rescanning
   * the event history.
   *
-  * Unlike the keyed upsert ([[StreamingUpsert]]), a COUNT/SUM fold is
-  * NOT naturally idempotent: re-applying a replayed micro-batch
-  * (foreachBatch re-executes the last batch after a crash between
-  * sink commit and checkpoint commit) would double-count it. The
+  * Unlike a keyed upsert, a COUNT/SUM fold is NOT naturally
+  * idempotent: re-applying a replayed micro-batch (foreachBatch
+  * re-executes the last batch after a crash between sink commit and
+  * checkpoint commit) would double-count it. The
   * sink therefore runs each identified micro-batch through
   * [[BatchMarkers.applyOnce]] — applied ids are marker objects under
   * `<path>/_applied/`, and a marked id is skipped — the standard

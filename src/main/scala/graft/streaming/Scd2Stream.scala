@@ -10,9 +10,9 @@ import graft.ops.ChangeCapture
   * change stream. The interval table lives as parquet partitioned by
   * a fixed key-hash bucket; each micro-batch rewrites ONLY the
   * buckets its keys touch — steady-state cost tracks batch volume and
-  * the touched keys' history, never the table (the
-  * [[StreamingUpsert]] discipline, for a sink whose unit of change is
-  * a KEY'S ROW-SET rather than a single row).
+  * the touched keys' history, never the table (a partition-scoped
+  * rewrite whose unit of change is a KEY'S ROW-SET rather than a
+  * single row).
   *
   * Fold per batch, equivalence by construction: a key's closed
   * intervals are immutable under in-order arrival, and its OPEN
@@ -169,14 +169,12 @@ object Scd2Stream {
       .where(col("kb").isin(touchedKb: _*))
     // a store written before the watermark columns existed would
     // throw an opaque AnalysisException on col("hwm") below, wedging
-    // every micro-batch of an upgraded stream — fail loudly instead,
-    // naming the one-time migration
+    // every micro-batch of an upgraded stream — fail loudly instead
     require(curAll.columns.contains("hwm") &&
         curAll.columns.contains("hwm_tie"),
-      s"$store predates the hwm/hwm_tie watermark columns: run " +
-        "Scd2Stream.migrateHwm once (stream stopped) before attaching " +
-        "— the fold classifies late rows against the per-key high " +
-        "watermark the store carries")
+      s"scd2 store $store lacks the hwm/hwm_tie watermark columns the " +
+        "fold classifies late rows against: rebuild the store with a " +
+        "fresh fold over the full event log")
     // late-row split against the watermark pair (read off the key's
     // open row). Keys with no open interval (never seen) are on-time
     // by definition. The open rows join the batch DIRECTLY (r15: the
@@ -295,64 +293,6 @@ object Scd2Stream {
       .agg(max(struct(col(tsCol), col(tieCol))).as("__p"))
       .select(col(keyCol), col("__p")(tsCol).as("hwm"),
         col("__p")(tieCol).as("hwm_tie"))
-
-  /** One-time migration of a store written BEFORE the round-13
-    * watermark columns: seeds `hwm`/`hwm_tie` on every row from the
-    * key's open-interval `(valid_from, tie)` — a conservative LOWER
-    * bound (event times of collapsed re-assertions are unrecoverable
-    * from the store, so a row may read as on-time that a full
-    * watermark would have quarantined; the fold it produces is still
-    * the fold the pre-migration store would have computed, and the
-    * log backfill remains the exact repair). No-op when every open
-    * row already carries a non-null watermark.
-    *
-    * Run with the stream STOPPED. The rewrite is a dynamic partition
-    * overwrite of the key buckets (the `_applied` markers, the
-    * quarantine, and the event tee are untouched), and it is
-    * idempotent: a crash mid-overwrite leaves a mixed store that a
-    * re-run reads with schema merging and re-seeds — already-seeded
-    * keys recompute to the same value because the seed depends only
-    * on `(valid_from, tie)`, which the migration never changes.
-    */
-  def migrateHwm(spark: SparkSession, store: String, keyCol: String,
-                 tsCol: String, tieCol: String,
-                 nBuckets: Int = 64): Unit = {
-    require(BatchMarkers.hasData(spark, store), s"no scd2 store at $store")
-    // mergeSchema: a crashed earlier migration leaves files WITH and
-    // WITHOUT the columns; the merged view reads the missing ones as
-    // null, which the seed below fills
-    val cur0 = spark.read.option("mergeSchema", "true").parquet(store)
-    val vfType = cur0.schema("valid_from").dataType
-    val tieType = cur0.schema(tieCol).dataType
-    val cur =
-      if (cur0.columns.contains("hwm")) cur0
-      else cur0.withColumn("hwm", lit(null).cast(vfType))
-        .withColumn("hwm_tie", lit(null).cast(tieType))
-    val open = cur.where(col("is_current"))
-    if (open.where(col("hwm").isNull).isEmpty) return
-    val seed = open
-      .select(col(keyCol),
-        when(col("hwm").isNotNull,
-          struct(col("hwm").as("h"), col("hwm_tie").as("t")))
-          .otherwise(struct(col("valid_from").as("h"), col(tieCol).as("t")))
-          .as("__p"))
-      .groupBy(keyCol).agg(max("__p").as("__p"))
-      .select(col(keyCol), col("__p.h").as("__h"), col("__p.t").as("__t"))
-    // uniform per-key watermark on every row (only the open row's is
-    // ever read); left join so a malformed key with no open row keeps
-    // its rows instead of vanishing
-    val out = cur.drop("hwm", "hwm_tie", "kb")
-      .join(seed, Seq(keyCol), "left")
-      .withColumnRenamed("__h", "hwm").withColumnRenamed("__t", "hwm_tie")
-      .withColumn("kb", pmod(hash(col(keyCol)), lit(nBuckets)))
-    // localCheckpoint breaks lineage from the files the overwrite
-    // replaces (the applyBatch discipline)
-    out.localCheckpoint()
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("kb")
-      .parquet(store)
-  }
 
   /** Drain the `_latedata` quarantine: recompute the affected keys'
     * history from the FULL event log and swap exactly their buckets.

@@ -27,12 +27,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * the batch [[SegmentDedup.dedupSegments]] over everything ingested:
   * verified by `StreamingSegmentDedupSpec`. The store read/write is
   * snapshot-isolated per batch via `localCheckpoint` (same pattern as
-  * [[graft.sources.Merge.upsertPartitioned]]) so the append never
+  * [[graft.ops.IncrementalAgg.updateTable]]) so the append never
   * feeds back into its own batch's anti-join lineage.
   *
   * Store growth is one 32-byte fingerprint row per NEW segment —
-  * at most the clean-corpus token volume / segTokens; compact it
-  * periodically with [[graft.sources.PartitionedSink.compact]].
+  * at most the clean-corpus token volume / segTokens.
   *
   * Replay safety: the fold is NOT naturally idempotent — the segment
   * STORE tolerates a replay (every fingerprint is already present, so

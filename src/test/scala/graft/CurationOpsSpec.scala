@@ -81,14 +81,4 @@ class CurationOpsSpec extends SparkSpec {
       assert(two == one, s"minDf=$minDf")
     }
   }
-
-  test("profileNumeric: grouped variant is output-identical to the one-pass") {
-    val li = Tables(spark, "/root/testdata/sf0.001", "lineitem")
-    val cols = Seq("l_orderkey", "l_partkey", "l_quantity", "l_discount", "l_tax")
-    val one = graft.ops.Profile.profileNumeric(li, cols)
-      .orderBy("column").collect().toSeq
-    val grouped = graft.ops.Profile.profileNumericGrouped(li, cols, groupSize = 2)
-      .orderBy("column").collect().toSeq
-    assert(one == grouped)
-  }
 }

@@ -2,12 +2,11 @@ package graft
 
 import graft.ops.FrequentKeys
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.SparkBridge
 
 /** Misra-Gries heavy-hitter enumeration (q113's production path):
   * the two mergeable-summary theorems under real eviction, exactness
-  * below capacity, the streaming twin's cumulative guarantee, and
-  * parity between the SQL count_min_sketch aggregate and
+  * below capacity, the cumulative guarantee of a driver-side merge,
+  * and parity between the SQL count_min_sketch aggregate and
   * stat.countMinSketch (q112's single-pass restructure rides it).
   */
 class FrequentKeysSpec extends SparkSpec {
@@ -17,19 +16,22 @@ class FrequentKeysSpec extends SparkSpec {
     * more distinct keys than summary capacity, so adds evict and
     * merges subtract.
     */
-  private def skewed = {
+  private def skewedRows: Seq[String] = {
     val rows = for {
       i <- 1 to 60
       _ <- 1 to (1000 / i)
     } yield s"key$i"
     // interleave deterministically so partitions see mixed keys
-    rows.sortBy(_.hashCode).toDF("term").repartition(8)
+    rows.sortBy(_.hashCode)
   }
+  private def skewed = skewedRows.toDF("term").repartition(8)
+
+  /** ceil(n / (k+1)): the bound a summary of `n` rows must report. */
+  private def boundOf(n: Long, k: Int): Long = math.ceil(n.toDouble / (k + 1)).toLong
 
   test("below capacity the summary is exact") {
     val df = Seq("a", "a", "b", "c", "c", "c").toDF("term").repartition(3)
     val mg = FrequentKeys.summarize(df, "term", k = 10)
-    assert(mg.scanned == 6L)
     assert(mg.estimates == Map("a" -> 2L, "b" -> 1L, "c" -> 3L))
   }
 
@@ -39,7 +41,7 @@ class FrequentKeysSpec extends SparkSpec {
     val n = exact.values.sum
     val k = 12 // far below 60 distinct keys: decrement + subtract run
     val mg = FrequentKeys.summarize(df, "term", k)
-    assert(mg.scanned == n)
+    assert(mg.bound == boundOf(n, k))
     val est = mg.estimates
     assert(est.size <= k)
     val bound = mg.bound
@@ -58,8 +60,9 @@ class FrequentKeysSpec extends SparkSpec {
 
   test("nulls are skipped, not counted as a key") {
     val df = Seq(Some("a"), None, Some("a"), None).toDF("term")
-    val mg = FrequentKeys.summarize(df, "term", k = 4)
-    assert(mg.scanned == 2L && mg.estimates == Map("a" -> 2L))
+    // k = 1: two counted rows bound at 1, four (nulls counted) at 2
+    val mg = FrequentKeys.summarize(df, "term", k = 1)
+    assert(mg.bound == boundOf(2L, 1) && mg.estimates == Map("a" -> 2L))
   }
 
   test("merge refuses mismatched capacities") {
@@ -68,45 +71,25 @@ class FrequentKeysSpec extends SparkSpec {
     intercept[IllegalArgumentException](a.merge(b))
   }
 
-  test("streaming twin: per-batch merges keep the cumulative guarantee; snapshots are isolated") {
-    val dir = SparkBridge.tempDir("graft_mg_stream")
-    // two micro-batches of the documents fixture -> a real cross-batch
-    // merge, same staging shape as the Count-Min streaming spec
-    Seq("a", "b").foreach { nm =>
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get("/root/testdata/sf0.001/documents.parquet"),
-        dir.resolve(s"docs_$nm.parquet"))
-    }
-    val docsSchema = spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet").schema
-    val termStream = spark.readStream.schema(docsSchema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .select(explode(graft.ops.TextAnalysis.tokens(col("text"))).as("term"))
-
-    val k = 29
-    val sfk = new graft.streaming.StreamingFrequentKeys("term", k)
-    val q = sfk.attach(termStream)
-    try q.processAllAvailable() finally q.stop()
-
-    val batchDf = spark.read.parquet(dir.toString)
-      .select(explode(graft.ops.TextAnalysis.tokens(col("text"))).as("term"))
-    val exact = batchDf.groupBy("term").count().as[(String, Long)].collect().toMap
-    val n = exact.values.sum
-
-    val snap = sfk.summary
-    assert(snap.scanned == n)
-    val bound = snap.bound
-    val est = snap.estimates
-    val mustHave = exact.filter(_._2 > bound).keySet
+  test("driver-side merge of two summaries keeps the cumulative guarantee") {
+    // two loads sharing keys, each summarized on its own, then merged
+    // on the driver: N and the bound are cumulative over both
+    val (a, b) = skewedRows.zipWithIndex.partition(_._2 % 3 == 0)
+    val k = 12
+    val mg = FrequentKeys.summarize(a.map(_._1).toDF("term").repartition(4), "term", k)
+      .merge(FrequentKeys.summarize(b.map(_._1).toDF("term").repartition(4), "term", k))
+    val exact = skewedRows.groupBy(identity).view.mapValues(_.length.toLong).toMap
+    val n = skewedRows.length.toLong
+    assert(mg.bound == boundOf(n, k))
+    val est = mg.estimates
+    assert(est.size <= k)
+    val mustHave = exact.filter(_._2 > mg.bound).keySet
     assert(mustHave.nonEmpty, "fixture must exercise the guarantee")
-    assert(mustHave.subsetOf(est.keySet))
+    assert(mustHave.subsetOf(est.keySet),
+      s"missing hot keys: ${mustHave -- est.keySet}")
     est.foreach { case (key, e) =>
-      assert(e <= exact(key) && exact(key) - e <= bound)
+      assert(e <= exact(key) && exact(key) - e <= mg.bound, key)
     }
-    // the snapshot is a deep copy: mutating it leaves the accumulator
-    // (and later snapshots) untouched
-    snap.add("poison")
-    assert(!sfk.summary.estimates.contains("poison"))
   }
 
   test("SQL count_min_sketch aggregate == stat.countMinSketch (q112's one-pass sketch)") {

@@ -100,43 +100,7 @@ class IncrementalAggSpec extends SparkSpec {
     assert(ab == ba)
   }
 
-  test("theta measure: distinct-count sketch maintains incrementally, exact below k") {
-    val path = scratch("theta")
-    val ms2 = ms :+ IncrementalAgg.thetaDistinct("v", "users")
-    // three batches with overlapping v values per key: a scalar count
-    // cannot merge distinct, the sketch must
-    val batches = Seq(
-      Seq(("d", "x", 1L), ("d", "x", 2L), ("d", "y", 9L)),
-      Seq(("d", "x", 2L), ("d", "x", 3L)), // 2 repeats across batches
-      Seq(("d", "x", 1L), ("d", "x", 4L), ("d", "y", 9L)))
-    batches.foreach { b =>
-      IncrementalAgg.updateTable(spark, path, frame(b), keys, ms2, "day")
-    }
-    val got = spark.read.parquet(path)
-      .select("k", "users").collect()
-      .map(r => r.getString(0) ->
-        graft.functions.Theta.estimate(r.getAs[Array[Byte]](1)).round)
-      .toMap
-    assert(got == Map("x" -> 4L, "y" -> 1L),
-      s"incremental sketch must count distinct across batches exactly below k: $got")
-    // maintained sketch == from-scratch sketch (same retained set)
-    val scratch0 = IncrementalAgg.aggregateBatch(
-        frame(batches.flatten), keys, ms2)
-      .select("k", "users").collect()
-      .map(r => r.getString(0) ->
-        graft.functions.Theta.estimate(r.getAs[Array[Byte]](1)).round)
-      .toMap
-    assert(got == scratch0)
-  }
-
-  test("derived averages on read; non-mergeable measures rejected at construction") {
-    val path = scratch("derived")
-    IncrementalAgg.updateTable(spark, path,
-      frame(Seq(("d", "x", 10L), ("d", "x", 5L))), keys, ms, "day")
-    val avg = IncrementalAgg.withDerived(spark.read.parquet(path),
-        Seq(("sv", "n", "avg_v")))
-      .select("avg_v").as[Double].collect()
-    assert(avg.toSeq == Seq(7.5))
+  test("non-mergeable measures rejected at construction, a non-key partition column at update") {
     intercept[IllegalArgumentException] {
       IncrementalAgg.Measure("avg", "v", "bad")
     }

@@ -32,15 +32,16 @@ class ParquetFooterSpec extends SparkSpec {
     val parts = new File(table).listFiles().map(_.getName)
     assert(parts.count(_.endsWith(".parquet")) == 3 && parts.contains("_SUCCESS"))
     val inferred = spark.read.parquet(table).schema
-    assert(ParquetFooter.schema(spark, table).contains(inferred))
+    assert(ParquetFooter.ifExists(spark, table).contains(Some(inferred)))
     assert(inferred.map(_.dataType.typeName).toSet ==
       Set("long", "decimal(12,2)", "decimal(38,6)", "timestamp", "date", "string"))
   }
 
   test("footer schema of a single file, and none for a missing path") {
     val file = new File(table).listFiles().filter(_.getName.endsWith(".parquet")).head.getPath
-    assert(ParquetFooter.schema(spark, file).contains(spark.read.parquet(file).schema))
-    assert(ParquetFooter.schema(spark, s"$table-missing").isEmpty)
+    assert(ParquetFooter.ifExists(spark, file)
+      .contains(Some(spark.read.parquet(file).schema)))
+    assert(ParquetFooter.ifExists(spark, s"$table-missing").isEmpty)
   }
 
   test("footer read skips _SUCCESS and hidden files, which sort first") {
@@ -51,14 +52,14 @@ class ParquetFooterSpec extends SparkSpec {
     Files.write(new File(dir, "_SUCCESS").toPath, Array[Byte](1, 2, 3))
     Files.write(new File(dir, ".0000.parquet").toPath, "junk".getBytes)
     Files.write(new File(dir, "_0000.parquet").toPath, "junk".getBytes)
-    assert(ParquetFooter.schema(spark, dir.getPath)
-      .contains(spark.read.parquet(dir.getPath).schema))
+    assert(ParquetFooter.ifExists(spark, dir.getPath)
+      .contains(Some(spark.read.parquet(dir.getPath).schema)))
   }
 
   test("partitioned layouts are left to the reader's own discovery") {
     val dir = SparkBridge.tempDir("graft_footer_part").toString + "/t.parquet"
     spark.range(10).withColumn("p", col("id") % 2).write.partitionBy("p").parquet(dir)
-    assert(ParquetFooter.schema(spark, dir).isEmpty)
+    assert(ParquetFooter.ifExists(spark, dir).contains(None))
   }
 
   test("processTable runs one Spark job per table: the write, no schema inference") {

@@ -88,24 +88,6 @@ class PipelineOps3Spec extends SparkSpec {
     assert(out.head.getAs[Long]("n_hit_grams") == 1L)
   }
 
-  test("decontaminate removes exactly the contaminated docs") {
-    val bench = Seq((100L, "alpha beta gamma delta epsilon zeta")).toDF("id", "text")
-    val corpus = Seq(
-      (1L, "alpha beta gamma delta epsilon other words here"),
-      (2L, "completely different content with no overlap at all")).toDF("id", "text")
-    val clean = graft.ops.Contamination.decontaminate(corpus, bench, "id", "text", 5)
-    assert(clean.select("id").as[Long].collect().toSeq == Seq(2L))
-  }
-
-  test("table-driven URL blocklist: anti-join on apex") {
-    val df = Seq(
-      (1L, "https://en.site-3.com/p/1"),
-      (2L, "http://sub.site-4.com/x")).toDF("id", "url")
-    val blocked = Seq("site-3.com").toDF("apex")
-    val out = UrlOps.filterBlockedTable(df, "url", blocked)
-    assert(out.select("id").as[Long].collect().toSeq == Seq(2L))
-  }
-
   test("UrlOps host/apex extraction and blocklist") {
     val df = Seq(
       (1L, "https://en.site-3.com/p/1"),

@@ -366,19 +366,6 @@ class MultimodalSpec extends SparkSpec {
     assert(ph.codec == "opaque")
   }
 
-  test("frame sampling: k evenly spaced WAV samples") {
-    import spark.implicits._
-    val wav = wavBytes((0 until 8000).map(_.toShort), rate = 8000)
-    val fs = Multimodal.sampleFrames(
-      Seq(MediaRecord(5L, "audio", wav)).toDS(), k = 4).head()
-    assert(fs.n_frames == 8000)
-    assert(fs.samples.toSeq == Seq(0, 2000, 4000, 6000))
-    // non-media payload: no frames, empty samples
-    val none = Multimodal.sampleFrames(
-      Seq(MediaRecord(6L, "doc", "plain text".getBytes)).toDS(), k = 4).head()
-    assert(none.n_frames == 0 && none.samples.isEmpty)
-  }
-
   test("audio windows: exact energy/zero-crossing/peak math, boundary rules") {
     import spark.implicits._
     // 20 samples, window 8 -> windows of 8, 8, 4; hand-checkable values
@@ -400,9 +387,11 @@ class MultimodalSpec extends SparkSpec {
     assert(w.map(_.zero_crossings) == Seq(4, 6, 3))
     assert(w.map(_.peak) == Seq(5, 3, 5))
     // round-trip: the muxer's bytes decode to the samples we fed in
-    val back = Multimodal.sampleFrames(
-      Seq(MediaRecord(2L, "audio", wav)).toDS(), k = 20).head()
-    assert(back.n_frames == 20 && back.samples.toSeq == s.map(_.toInt).toSeq)
+    // (one-sample windows expose each |sample|)
+    val back = Seq(MediaRecord(2L, "audio", wav)).toDS()
+    assert(Multimodal.extractFeatures(back).head().n_frames == 20)
+    assert(Multimodal.audioWindows(back, windowFrames = 1)
+      .collect().sortBy(_.win).map(_.peak).toSeq == s.map(v => math.abs(v.toInt)).toSeq)
     // non-WAV payloads contribute no windows
     assert(Multimodal.audioWindows(
       Seq(MediaRecord(3L, "doc", "text".getBytes)).toDS(), 8).isEmpty)
@@ -419,8 +408,8 @@ class MultimodalSpec extends SparkSpec {
     val ds = Seq(MediaRecord(7L, "audio", buf.array())).toDS()
     val f = Multimodal.extractFeatures(ds).head()
     assert(f.codec == "wav/pcm" && f.n_frames == 0)
-    val fs = Multimodal.sampleFrames(ds, k = 4).head()
-    assert(fs.n_frames == 0 && fs.samples.isEmpty)
+    // the PCM walk behind audioWindows stops there too: no data chunk
+    assert(Multimodal.audioWindows(ds, windowFrames = 4).isEmpty)
   }
 
   test("truncated WAV: header overstates data length, frames clamp to payload") {
@@ -431,9 +420,11 @@ class MultimodalSpec extends SparkSpec {
     val ds = Seq(MediaRecord(8L, "audio", wav)).toDS()
     val f = Multimodal.extractFeatures(ds).head()
     assert(f.codec == "wav/pcm" && f.n_frames == 1000)
-    val fs = Multimodal.sampleFrames(ds, k = 4).head()
-    assert(fs.n_frames == 1000)
-    assert(fs.samples.toSeq == Seq(0, 250, 500, 750))
+    // sample i is i: four full windows over the 1000 samples present
+    val w = Multimodal.audioWindows(ds, windowFrames = 250)
+      .collect().sortBy(_.win).toSeq
+    assert(w.map(_.n_samp) == Seq(250, 250, 250, 250))
+    assert(w.map(_.peak) == Seq(249, 499, 749, 999))
   }
 
   /** JPEG-encode a BufferedImage via the JDK's own writer. */

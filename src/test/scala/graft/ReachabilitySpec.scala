@@ -14,7 +14,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * nested class (`A$B`) counts as its top-level class `A`.
   *
   * The census is per class: a method only a spec calls, inside a
-  * reached class, does not show up here.
+  * reached class, does not show up here. `tools/method_census.py` is
+  * the method-level census over `javap -c -p`. It counts `static {}`
+  * of `X$` as a caller (an object's query and oracle maps are built
+  * there), does not count the static forwarder `X` beside `X$`, and
+  * cannot see calls made only from codegen source strings.
   */
 class ReachabilitySpec extends AnyFunSuite {
 

@@ -62,23 +62,6 @@ class RollupStreamSpec extends SparkSpec {
     assert(tableAt(path) == Seq(("2026-01-01", "a", 2L, 10L, 5L)))
   }
 
-  test("theta measure composes: streaming distinct-per-key across micro-batches") {
-    val path = SparkBridge.tempDir("graft_rollup_t")
-      .resolve("t").toString
-    val ms2 = Seq(IncrementalAgg.count("n"),
-      IncrementalAgg.thetaDistinct("v", "users"))
-    // value 5 recurs in both batches: count reaches 3, distinct stays 2
-    assert(RollupStream.applyBatch(
-      Seq(("d", "x", 5L), ("d", "x", 8L)).toDF("day", "k", "v"),
-      0L, path, keys, ms2, "day"))
-    assert(RollupStream.applyBatch(
-      Seq(("d", "x", 5L)).toDF("day", "k", "v"),
-      1L, path, keys, ms2, "day"))
-    val r = spark.read.parquet(path).select("n", "users").head()
-    assert(r.getLong(0) == 3L)
-    assert(graft.functions.Theta.estimate(r.getAs[Array[Byte]](1)).round == 2L)
-  }
-
   test("empty first micro-batch leaves a foldable table shape behind") {
     val path = SparkBridge.tempDir("graft_rollup_e")
       .resolve("t").toString

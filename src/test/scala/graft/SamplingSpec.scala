@@ -9,10 +9,16 @@ class SamplingSpec extends SparkSpec {
 
   private def docs = Tables(spark, "/root/testdata/sf0.001", "documents")
 
+  /** A uniform 200‰ content-addressed sample: no stratum listed, so
+    * every row gets the default rate.
+    */
+  private def sample200(df: org.apache.spark.sql.DataFrame) =
+    Sampling.stratifiedSample(df, "doc_id", "lang", Map.empty, defaultMilli = 200)
+
   test("membership is content-addressed: stable under repartitioning and reruns") {
-    val a = Sampling.deterministicSample(docs, "doc_id", 200)
+    val a = sample200(docs)
       .select("doc_id").as[Long].collect().sorted.toSeq
-    val b = Sampling.deterministicSample(docs.repartition(7), "doc_id", 200)
+    val b = sample200(docs.repartition(7))
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(a == b)
     assert(a.nonEmpty && a.length < 500)
@@ -20,10 +26,9 @@ class SamplingSpec extends SparkSpec {
     // consistency across tables sharing the key: sample-then-join ==
     // join-then-sample (the property RNG samplers lack)
     val other = docs.select(col("doc_id"), col("lang"))
-    val joinThenSample = Sampling.deterministicSample(
-      docs.join(other, "doc_id"), "doc_id", 200).count()
-    val sampleThenJoin = Sampling.deterministicSample(docs, "doc_id", 200)
-      .join(Sampling.deterministicSample(other, "doc_id", 200), "doc_id").count()
+    val joinThenSample = sample200(docs.join(other, "doc_id")).count()
+    val sampleThenJoin = sample200(docs)
+      .join(sample200(other), "doc_id").count()
     assert(joinThenSample == sampleThenJoin)
   }
 
@@ -105,7 +110,7 @@ class SamplingSpec extends SparkSpec {
       java.nio.file.Paths.get("/root/testdata/sf0.001/documents.parquet"),
       dir.resolve("documents.parquet"))
     val src = spark.readStream.schema(docs.schema).parquet(dir.toString)
-    val q = Sampling.deterministicSample(src, "doc_id", 200)
+    val q = sample200(src)
       .select("doc_id")
       .writeStream.outputMode("append")
       .format("memory").queryName("sample_stream_out")
@@ -114,7 +119,7 @@ class SamplingSpec extends SparkSpec {
       q.processAllAvailable()
       val streamed = spark.table("sample_stream_out")
         .as[Long].collect().sorted.toSeq
-      val batch = Sampling.deterministicSample(docs, "doc_id", 200)
+      val batch = sample200(docs)
         .select("doc_id").as[Long].collect().sorted.toSeq
       assert(streamed == batch)
     } finally q.stop()

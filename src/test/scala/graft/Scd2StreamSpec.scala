@@ -248,7 +248,7 @@ class Scd2StreamSpec extends SparkSpec {
     assert(!graft.streaming.BatchMarkers.hasData(spark, s"$store/_latedata"))
   }
 
-  test("pre-watermark store fails loudly; migrateHwm seeds it and the fold resumes") {
+  test("pre-watermark store fails loudly, naming the store and the missing watermark columns") {
     val tmp = SparkBridge.tempDir("graft_scd2s_mig").toString
     val store = s"$tmp/dim"
     val b1 = Seq((1L, 10L, 1L, "A"), (1L, 100L, 2L, "A"), (2L, 15L, 3L, "X"))
@@ -261,34 +261,16 @@ class Scd2StreamSpec extends SparkSpec {
     legacy.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("kb").parquet(store)
-    val b2 = ev(Seq((1L, 120L, 4L, "B")))
-    val e = intercept[IllegalArgumentException] {
-      Scd2Stream.applyBatch(spark, store, b2, "user_id", "ts", "event_id",
-        Seq("state"), nBuckets = 4)
-    }
-    assert(e.getMessage.contains("migrateHwm"))
-    Scd2Stream.migrateHwm(spark, store, "user_id", "ts", "event_id",
-      nBuckets = 4)
-    // the seeded watermark is the open row's (valid_from, tie) — a
-    // conservative lower bound (user 1's collapsed ts=100 re-assertion
-    // is unrecoverable from the store, so the seed is (10, 1), not
-    // (100, 2); the documented migration trade) — and a plainly-new
-    // row must fold cleanly against it:
-    Scd2Stream.applyBatch(spark, store, b2, "user_id", "ts", "event_id",
-      Seq("state"), nBuckets = 4)
-    assert(intervals(spark.read.parquet(store)) ==
-      intervals(ChangeCapture.scd2(
-        ev(Seq((1L, 10L, 1L, "A"), (2L, 15L, 3L, "X"), (1L, 120L, 4L, "B"))),
-        "user_id", "ts", "event_id", Seq("state"))))
-    // a second migrate is a no-op (watermarks now non-null everywhere)
     val before = intervals(spark.read.parquet(store))
-    Scd2Stream.migrateHwm(spark, store, "user_id", "ts", "event_id",
-      nBuckets = 4)
+    val e = intercept[IllegalArgumentException] {
+      Scd2Stream.applyBatch(spark, store, ev(Seq((1L, 120L, 4L, "B"))),
+        "user_id", "ts", "event_id", Seq("state"), nBuckets = 4)
+    }
+    assert(e.getMessage.contains(store))
+    assert(e.getMessage.contains("hwm/hwm_tie"))
+    assert(e.getMessage.contains("rebuild the store with a fresh fold"))
+    // the guard fires before any write: the store is untouched
     assert(intervals(spark.read.parquet(store)) == before)
-    // and genuinely-regressed rows still quarantine against the seed
-    Scd2Stream.applyBatch(spark, store, ev(Seq((2L, 5L, 9L, "Y"))),
-      "user_id", "ts", "event_id", Seq("state"), nBuckets = 4, batchId = 9L)
-    assert(spark.read.parquet(s"$store/_latedata").count() == 1L)
   }
 
   test("the drain deletes only the quarantine files it read") {

@@ -4,7 +4,7 @@ import graft.ops.{Contamination, IncrementalDedup, ShardedBloom}
 import org.apache.spark.sql.functions._
 
 /** The sharded bloom family: no false negatives at any shard count,
-  * deep copies, and the sharded survivor filter in gramDocFrequency.
+  * and the sharded survivor filter in gramDocFrequency.
   */
 class ShardedBloomSpec extends SparkSpec {
   import spark.implicits._
@@ -20,14 +20,6 @@ class ShardedBloomSpec extends SparkSpec {
       assert(fps.forall(family.mightContainLong),
         s"numShards=$n missed a built fingerprint")
     }
-  }
-
-  test("copy() is a deep clone: mutating the copy leaves the original intact") {
-    val family = ShardedBloom.create(1000L, 0.01, numShards = 3)
-    val clone = family.copy()
-    (1L to 500L).foreach(clone.putLong)
-    assert((1L to 500L).forall(clone.mightContainLong))
-    assert(!(1L to 500L).forall(family.mightContainLong))
   }
 
   test("gramDocFrequency: sharded survivor filter equals monolithic and single-pass") {

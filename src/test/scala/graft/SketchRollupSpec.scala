@@ -1,6 +1,8 @@
 package graft
 
 import graft.functions.{Kll, Theta}
+import org.apache.datasketches.kll.KllDoublesSketch
+import org.apache.datasketches.memory.Memory
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.SparkBridge
 import org.scalatest.funsuite.AnyFunSuite
@@ -38,8 +40,9 @@ class SketchRollupSpec extends SparkSpec {
     // quantile rollup across days from the stored KLL columns
     val klls = stored.select("kll_value").collect()
       .map(_.getAs[Array[Byte]](0))
-    val merged = Kll.mergeBytes(200, klls.toIndexedSeq)
-    val est = Kll.quantile(merged, 0.5)
+    val acc = KllDoublesSketch.newHeapInstance(200)
+    klls.foreach(b => acc.merge(KllDoublesSketch.heapify(Memory.wrap(b))))
+    val est = Kll.quantile(acc.toByteArray, 0.5)
     val xs = events.select("value").as[Double].collect().sorted
     val (lo, hi) = (xs((xs.length * 0.47).toInt), xs((xs.length * 0.53).toInt))
     assert(est >= lo && est <= hi, s"p50 $est outside [$lo,$hi]")
