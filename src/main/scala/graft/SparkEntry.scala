@@ -8,7 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `queries` is the engine's oracle-testable surface: every operator
   * from SURVEY.md §2 gets a named entry here and a DuckDB-equivalent
   * SQL string in `oracleSql` (same column names, deterministic ORDER
-  * BY on both sides).
+  * BY on both sides). A repeated call returns the session's kept frame
+  * (`Tables.query`: key, lifetime and what is never kept).
   */
 object SparkEntry {
 
@@ -16,12 +17,15 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ ReferenceOps.queries ++
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    (Relational.queries ++ ReferenceOps.queries ++
       TextQueries.queries ++ VectorQueries.queries ++ PipelineQueries.queries ++
-      CurationQueries.queries
+      CurationQueries.queries).map { case (name, build) =>
+        name -> ((spark: SparkSession, dir: String) =>
+          Tables.query(spark, dir, name)(build(spark, dir)))
+      }
 
-  def oracleSql: Map[String, String] =
+  val oracleSql: Map[String, String] =
     Relational.oracles ++ ReferenceOps.oracles ++
       TextQueries.oracles ++ VectorQueries.oracles ++ PipelineQueries.oracles ++
       CurationQueries.oracles

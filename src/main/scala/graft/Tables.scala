@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
 /** Catalog over the driver fixture directory: name -> DataFrame.
   *
@@ -8,6 +12,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (reference main.py:42) as a map from table name to a lazily-planned
   * parquet scan. Scans are declarative so Catalyst pushes filters and
   * prunes columns down to the parquet reader.
+  *
+  * Beside the scans it keeps the session's named-query plans
+  * ([[query]]): a repeated `SparkEntry.queries` call returns the
+  * `DataFrame` it built before, so Spark reuses that frame's analyzed,
+  * optimized and AQE-finalized plan and re-runs only its final stage
+  * over the shuffle output the first run materialized.
   */
 object Tables {
 
@@ -24,34 +34,83 @@ object Tables {
   // old rows or FileNotFoundException on deleted files. Read rewritten
   // output with `spark.read.parquet` directly.
   //
+  // The same contract covers reused query plans: a named query's frame
+  // is built from these scans, so it is as fresh as they are, and a
+  // reused frame also returns the rows its first run computed on the
+  // driver (q146's eager sketches). Scans and plans live in one
+  // per-session state, so a re-listed scan never pairs with an old
+  // plan: when the state is cleared, both go. A plan is keyed by
+  // (data dir, query name, every SQL conf of the session, the
+  // `RollupRewrite` target set), so a conf change, a new rollup
+  // target or another dir builds a new frame. A plan that holds an
+  // `InMemoryRelation` (a query that persists frames) is never kept:
+  // `spark.catalog.clearCache()` would leave it reading a dropped
+  // cache.
+  //
   // Sessions are weak keys, but a weak key alone cannot collect here:
   // every cached DataFrame strongly references its SparkSession, so a
   // map value holding DataFrames directly would keep its own key
   // strongly reachable forever (the classic WeakHashMap value->key
-  // pitfall). The per-session map therefore sits behind a
+  // pitfall). The per-session state therefore sits behind a
   // SoftReference: the plans are only SOFTLY reachable through the
   // cache, so under memory pressure the GC clears the indirection,
   // the stopped session loses its last strong path, and the weak
   // entry goes with it. Cost of a cleared soft ref is one re-listing
-  // per table — the cache is an optimization, never a correctness
-  // dependency.
+  // per table and one re-plan per query — the cache is an
+  // optimization, never a correctness dependency.
+  private final class State {
+    val scans = new ConcurrentHashMap[String, DataFrame]()
+    // its own map, not nested in `scans.computeIfAbsent`: a query
+    // build calls `apply` and may run Spark jobs
+    val plans = new ConcurrentHashMap[PlanKey, DataFrame]()
+  }
+
+  private final case class PlanKey(dir: String, name: String,
+                                   confs: Map[String, String],
+                                   rollups: Set[graft.plans.RollupRewrite.Target])
+
   private val cache =
     java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.lang.ref.SoftReference[
-          java.util.concurrent.ConcurrentHashMap[String, DataFrame]]]())
+      new java.util.WeakHashMap[SparkSession, java.lang.ref.SoftReference[State]]())
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val perSession = cache.synchronized {
-      val ref = cache.get(spark)
-      val live = if (ref != null) ref.get else null
-      if (live != null) live
-      else {
-        val fresh = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        cache.put(spark, new java.lang.ref.SoftReference(fresh))
-        fresh
-      }
+  private val hits, misses = new AtomicLong()
+
+  private def state(spark: SparkSession): State = cache.synchronized {
+    val ref = cache.get(spark)
+    val live = if (ref != null) ref.get else null
+    if (live != null) live
+    else {
+      val fresh = new State
+      cache.put(spark, new java.lang.ref.SoftReference(fresh))
+      fresh
     }
-    perSession.computeIfAbsent(s"$dir/$name.parquet", p => spark.read.parquet(p))
   }
+
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    state(spark).scans.computeIfAbsent(s"$dir/$name.parquet", p => spark.read.parquet(p))
+
+  /** The named query `name` over `dir`: the frame built before under
+    * the same key, or `build`'s, kept unless its plan holds an
+    * `InMemoryRelation`. Builds outside any map lock; when two callers
+    * build at once, the first frame stored wins.
+    */
+  def query(spark: SparkSession, dir: String, name: String)(build: => DataFrame): DataFrame = {
+    val plans = state(spark).plans
+    val key = PlanKey(dir, name, spark.conf.getAll, graft.plans.RollupRewrite.targetSet)
+    val hit = plans.get(key)
+    if (hit != null) { hits.incrementAndGet(); hit }
+    else {
+      misses.incrementAndGet()
+      val df = build
+      val persisted = df.queryExecution.withCachedData
+        .collectWithSubqueries { case r: InMemoryRelation => r }.nonEmpty
+      if (persisted) df else Option(plans.putIfAbsent(key, df)).getOrElse(df)
+    }
+  }
+
+  /** Named-query calls answered with a kept frame, since JVM start. */
+  def planHits: Long = hits.get
+
+  /** Named-query calls that built a frame, since JVM start. */
+  def planMisses: Long = misses.get
 }

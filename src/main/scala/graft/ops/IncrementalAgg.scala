@@ -43,19 +43,34 @@ import org.apache.spark.sql.functions.{col, lit}
   */
 object IncrementalAgg {
 
-  /** A mergeable measure: `agg` ∈ count | sum | min | max. `src` is
-    * ignored for count. `out` names the stored column.
+  /** A mergeable measure, stored in column `out`: the row count, or
+    * the sum, min or max of column `src`.
     */
-  final case class Measure(agg: String, src: String, out: String) {
-    require(Set("count", "sum", "min", "max")(agg),
-      s"measure '$agg' is not algebraically mergeable" +
-        " (avg: derive from sum+count on read)")
+  sealed trait Measure
+
+  object Measure {
+    final case class Count(out: String) extends Measure
+    final case class Sum(src: String, out: String) extends Measure
+    final case class Min(src: String, out: String) extends Measure
+    final case class Max(src: String, out: String) extends Measure
+
+    /** The measure named `agg` ∈ count | sum | min | max. `src` is
+      * ignored for count. */
+    def apply(agg: String, src: String, out: String): Measure = agg match {
+      case "count" => Count(out)
+      case "sum" => Sum(src, out)
+      case "min" => Min(src, out)
+      case "max" => Max(src, out)
+      case _ => throw new IllegalArgumentException(
+        s"measure '$agg' is not algebraically mergeable" +
+          " (avg: derive from sum+count on read)")
+    }
   }
 
-  def count(out: String): Measure = Measure("count", "", out)
-  def sum(src: String, out: String): Measure = Measure("sum", src, out)
-  def min(src: String, out: String): Measure = Measure("min", src, out)
-  def max(src: String, out: String): Measure = Measure("max", src, out)
+  def count(out: String): Measure = Measure.Count(out)
+  def sum(src: String, out: String): Measure = Measure.Sum(src, out)
+  def min(src: String, out: String): Measure = Measure.Min(src, out)
+  def max(src: String, out: String): Measure = Measure.Max(src, out)
 
   /** The batch's partial aggregate: one map-side-combining
     * aggregation, |keys-in-batch| output rows.
@@ -64,10 +79,10 @@ object IncrementalAgg {
                      measures: Seq[Measure]): DataFrame = {
     require(measures.nonEmpty && keys.nonEmpty)
     val aggs = measures.map {
-      case Measure("count", _, out) => F.count(lit(1)).as(out)
-      case Measure("sum", src, out) => F.sum(col(src)).as(out)
-      case Measure("min", src, out) => F.min(col(src)).as(out)
-      case Measure("max", src, out) => F.max(col(src)).as(out)
+      case Measure.Count(out) => F.count(lit(1)).as(out)
+      case Measure.Sum(src, out) => F.sum(col(src)).as(out)
+      case Measure.Min(src, out) => F.min(col(src)).as(out)
+      case Measure.Max(src, out) => F.max(col(src)).as(out)
     }
     batch.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
@@ -79,10 +94,10 @@ object IncrementalAgg {
     */
   private def mergeAggs(measures: Seq[Measure]): Seq[Column] =
     measures.map {
-      case Measure("count", _, out) => F.sum(col(out)).as(out)
-      case Measure("sum", _, out) => F.sum(col(out)).as(out)
-      case Measure("min", _, out) => F.min(col(out)).as(out)
-      case Measure("max", _, out) => F.max(col(out)).as(out)
+      case Measure.Count(out) => F.sum(col(out)).as(out)
+      case Measure.Sum(_, out) => F.sum(col(out)).as(out)
+      case Measure.Min(_, out) => F.min(col(out)).as(out)
+      case Measure.Max(_, out) => F.max(col(out)).as(out)
     }
 
   /** Merge two partial-aggregate frames (same schema) into one. */

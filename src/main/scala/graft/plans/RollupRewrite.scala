@@ -2,6 +2,8 @@ package graft.plans
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
@@ -70,6 +72,11 @@ object RollupRewrite extends Rule[LogicalPlan] {
   def register(t: Target): Unit = { targets.put(canon(t.sourcePath), t); () }
   def clear(): Unit = targets.clear()
 
+  /** The registered targets: part of a kept query plan's key
+    * (`graft.Tables.query`), since a new target changes what this
+    * rule rewrites. */
+  def targetSet: Set[Target] = targets.values.asScala.toSet
+
   /** The rewrite requires the scan to read EXACTLY the registered
     * source: a multi-directory read (`spark.read.parquet(src, other)`)
     * covers rows the rollup never folded, so any root-path match
@@ -122,13 +129,13 @@ object RollupRewrite extends Rule[LogicalPlan] {
     import org.apache.spark.sql.graft.ColumnBridge
     val keySet = t.keys.toSet
     val sumOf = t.measures.collect {
-      case Measure("sum", src, out) => src -> out }.toMap
+      case Measure.Sum(src, out) => src -> out }.toMap
     val minOf = t.measures.collect {
-      case Measure("min", src, out) => src -> out }.toMap
+      case Measure.Min(src, out) => src -> out }.toMap
     val maxOf = t.measures.collect {
-      case Measure("max", src, out) => src -> out }.toMap
+      case Measure.Max(src, out) => src -> out }.toMap
     val countOut = t.measures.collectFirst {
-      case Measure("count", _, out) => out }
+      case Measure.Count(out) => out }
 
     // grouping: plain key columns only (any subset of the rollup keys)
     val groupNames = agg.groupingExpressions.map {

@@ -14,8 +14,12 @@ class ScratchDirSpec extends graft.SparkSpec {
     def scratch: Set[java.io.File] =
       tmp.listFiles().filter(_.getName.startsWith("graft_q134")).toSet
     val before = scratch
-    graft.SparkEntry.queries("q134_phrase_search")(spark,
-      "/root/testdata/sf0.001").collect()
+    // a conf of its own: another suite may have built q134 in this JVM
+    // already, and a repeated call reuses that frame and its directory
+    withConf("graft.spec.scratchDir" -> System.nanoTime.toString) {
+      graft.SparkEntry.queries("q134_phrase_search")(spark,
+        "/root/testdata/sf0.001").collect()
+    }
     val made = scratch -- before
     assert(made.nonEmpty, "q134 builds its index in a scratch directory")
     made.foreach { d =>
