@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Single place that builds a correctly-configured SparkSession.
   *
   * Scale stance: these configs are what we'd ship on a 1000-executor
-  * cluster, modulo `master`: AQE on (runtime re-plan, skew-join
-  * splitting, dynamic coalescing of shuffle partitions), UTC session
+  * cluster, modulo `master`: AQE on as Spark's default (runtime
+  * re-plan, skew-join splitting, dynamic coalescing of shuffle
+  * partitions — none of them set here), UTC session
   * time zone (oracle parity + cross-cluster determinism), shuffle
   * partitions sized to the local core count rather than the 200
   * default (on a real cluster this is set to ~2-3x total cores or
@@ -25,7 +26,7 @@ object GraftSession {
       // spark.sql.autoBroadcastJoinThreshold (SmallSortStrategy: no
       // range-sampling job, no sort shuffle), and the SQL bindings for
       // the engine's expressions/aggregates (KLL, theta, top-k,
-      // MinHash, unicode_normalize) so spark.sql reaches the same
+      // unicode_normalize) so spark.sql reaches the same
       // operators as the Column API
       .withExtensions { e =>
         e.injectOptimizerRule(_ => graft.plans.NativeDotRewrite)
@@ -35,9 +36,6 @@ object GraftSession {
         graft.functions.GraftFunctions.register(e)
       }
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // r16 §9 config pass — MEASURED AND REJECTED, numbers in
       // OPTIMIZATION_r16.md: (1) preferSortMergeJoin=false + the AQE
       // maxShuffledHashJoinLocalMapThreshold rewrite read geomean
@@ -49,14 +47,14 @@ object GraftSession {
       // .parallelismFirst=false read q127 25.6 s (4x), q133 15.3 s
       // (3x), q131 10.0 s (3x) in a targeted A/B — size-first
       // coalescing starves the CPU-bound stages of cores.
-      // runtime bloom-filter join pruning, explicit: a selective dim
-      // filter is pushed to the FACT side's scan as a bloom probe, so
-      // the big side sheds rows before the shuffle — at 100 TB this is
-      // a first-order scan/exchange reduction. The 10 GB application-
-      // side threshold means local fixtures never trigger it (correct:
-      // the filter costs a pass over the dim side), RuntimeFilterSpec
-      // pins the injection with thresholds lowered.
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+      //
+      // Runtime bloom-filter join pruning is on by Spark's default: a
+      // selective dim filter is pushed to the FACT side's scan as a
+      // bloom probe, so the big side sheds rows before the shuffle — at
+      // 100 TB this is a first-order scan/exchange reduction. The 10 GB
+      // application-side threshold means local fixtures never trigger
+      // it (correct: the filter costs a pass over the dim side),
+      // RuntimeFilterSpec pins the injection with thresholds lowered.
       .config("spark.sql.session.timeZone", "UTC")
       // events fixture has TIMESTAMP(NANOS); read as long, convert in-plan
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -67,7 +65,6 @@ object GraftSession {
       // cast would block parquet pushdown)
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.parquet.compression.codec", "snappy")
       // local files through Hadoop's LocalFileSystem, checksums and all,
       // but with a setPermission that does not fork `chmod` per file and
       // directory written (graft.sources.NioLocalFileSystem). The FS

@@ -86,8 +86,15 @@ object Tables {
     }
   }
 
+  /** The scan of table `name` under `dir`. Its schema comes from one
+    * driver-side footer read ([[graft.sources.ParquetFooter]]), as in
+    * `HistoryLoad`, so the first read starts no schema-inference job; a
+    * missing path or a partitioned layout takes Spark's own inference,
+    * and a missing table fails there, naming its path.
+    */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    state(spark).scans.computeIfAbsent(s"$dir/$name.parquet", p => spark.read.parquet(p))
+    state(spark).scans.computeIfAbsent(s"$dir/$name.parquet", p =>
+      graft.sources.ParquetFooter.reader(spark, p).getOrElse(spark.read).parquet(p))
 
   /** The named query `name` over `dir`: the frame built before under
     * the same key, or `build`'s, kept unless its plan holds an

@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * duplicated, these are bindings, not implementations). Injected by
   * [[graft.GraftSession]] next to the optimizer rules.
   *
-  * Tuning arguments (k, lgK, width, form) must be LITERALS — they
+  * Tuning arguments (k, lgK, form) must be LITERALS — they
   * parameterize the operator itself (buffer sizes, codegen constants)
   * and cannot vary per row; a non-literal fails analysis with a
   * message naming the argument.
@@ -87,12 +87,6 @@ object GraftFunctions {
     e.injectFunction(fd("theta_estimate", classOf[ThetaEstimate]) {
       case Seq(sk) => ThetaEstimate(sk)
       case args => arity("theta_estimate", args.length, "1")
-    })
-    e.injectFunction(fd("minhash_shingles", classOf[MinHashShingles]) {
-      case Seq(tokens, k, w) =>
-        MinHashShingles(tokens, intLit("minhash_shingles", "k")(k),
-          intLit("minhash_shingles", "width")(w))
-      case args => arity("minhash_shingles", args.length, "3")
     })
     e.injectFunction(fd("unicode_normalize", classOf[UnicodeNormalize]) {
       case Seq(s) => UnicodeNormalize(s, "NFC")

@@ -10,10 +10,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** All `width`-token shingle hashes of a document in ONE codegen'd
-  * pass over its token array — the gram-statistics sibling of
-  * [[MinHashShingles]] (identical per-token FNV-1a + rolling
-  * polynomial combine + splitmix finalizer; this one KEEPS every
-  * shingle hash instead of folding minima).
+  * pass over its token array: per token one FNV-1a hash, per shingle
+  * a rolling polynomial combine + splitmix finalizer.
   *
   * Why it exists: corpus-wide gram statistics (doc frequency,
   * contamination blocklists) only need gram IDENTITY for their
@@ -54,8 +52,7 @@ case class GramHashes(child: Expression, width: Int)
 object GramHashes {
 
   /** Static entry shared by interpreted eval and codegen. Returns null
-    * when fewer than `width` tokens exist. Hash family identical to
-    * [[MinHashShingles.compute]]'s shingle hash.
+    * when fewer than `width` tokens exist.
     */
   def compute(tokens: ArrayData, width: Int): ArrayData = {
     val n = tokens.numElements()
@@ -124,19 +121,17 @@ case class SurvivingGrams(child: Expression, width: Int,
   // null when the document has fewer than `width` tokens (no shingle)
   override def nullable: Boolean = true
 
-  @transient private lazy val filter: graft.ops.LongMembership =
-    graft.ops.BloomMembership.wrap(bloom.value)
+  @transient private lazy val filter: BloomFilter = bloom.value
 
   override def nullSafeEval(input: Any): Any =
     SurvivingGrams.compute(input.asInstanceOf[ArrayData], width, filter)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val bfClass = classOf[BloomFilter].getName
-    val lmClass = classOf[graft.ops.LongMembership].getName
     val ref = ctx.addReferenceObj("survBloomBc", bloom, classOf[Broadcast[_]].getName)
-    // wrapped ONCE into the membership adapter per task, not per row
-    val local = ctx.addMutableState(lmClass, "survBloom",
-      v => s"$v = graft.ops.BloomMembership.wrap(($bfClass) $ref.value());")
+    // resolved ONCE per task, not per row
+    val local = ctx.addMutableState(bfClass, "survBloom",
+      v => s"$v = ($bfClass) $ref.value();")
     val result = ctx.freshName("sg")
     nullSafeCodeGen(ctx, ev, c =>
       s"""
@@ -147,46 +142,6 @@ case class SurvivingGrams(child: Expression, width: Int,
   }
 
   override protected def withNewChildInternal(newChild: Expression): SurvivingGrams =
-    copy(child = newChild)
-}
-
-/** [[SurvivingGrams]] with a sharded survivor filter
-  * ([[graft.ops.ShardedBloom]]): same single-pass hash-probe-build, but
-  * the filter was built shard-locally (no full-size bitset per
-  * partition during the build) — the path that lifts the documented
-  * ~100M-survivor comfort ceiling of the monolithic broadcast.
-  */
-case class SurvivingGramsSharded(child: Expression, width: Int,
-                                 family: Broadcast[graft.ops.ShardedBloom])
-    extends UnaryExpression {
-
-  require(width > 0, "width must be positive")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def nullable: Boolean = true
-
-  @transient private lazy val filter: graft.ops.ShardedBloom = family.value
-
-  override def nullSafeEval(input: Any): Any =
-    SurvivingGrams.compute(input.asInstanceOf[ArrayData], width, filter)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sbClass = classOf[graft.ops.ShardedBloom].getName
-    val ref = ctx.addReferenceObj("survShardedBc", family,
-      classOf[Broadcast[_]].getName)
-    val local = ctx.addMutableState(sbClass, "survSharded",
-      v => s"$v = ($sbClass) $ref.value();")
-    val result = ctx.freshName("sg")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $result =
-         |  graft.functions.SurvivingGrams.compute($c, $width, $local);
-         |if ($result == null) { ${ev.isNull} = true; } else { ${ev.value} = $result; }
-       """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SurvivingGramsSharded =
     copy(child = newChild)
 }
 
@@ -213,19 +168,17 @@ case class SurvivingGramPositions(child: Expression, width: Int,
   // null when the document has fewer than `width` tokens (no shingle)
   override def nullable: Boolean = true
 
-  @transient private lazy val filter: graft.ops.LongMembership =
-    graft.ops.BloomMembership.wrap(bloom.value)
+  @transient private lazy val filter: BloomFilter = bloom.value
 
   override def nullSafeEval(input: Any): Any =
     SurvivingGrams.computePositions(input.asInstanceOf[ArrayData], width, filter)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val bfClass = classOf[BloomFilter].getName
-    val lmClass = classOf[graft.ops.LongMembership].getName
     val ref = ctx.addReferenceObj("survPosBloomBc", bloom,
       classOf[Broadcast[_]].getName)
-    val local = ctx.addMutableState(lmClass, "survPosBloom",
-      v => s"$v = graft.ops.BloomMembership.wrap(($bfClass) $ref.value());")
+    val local = ctx.addMutableState(bfClass, "survPosBloom",
+      v => s"$v = ($bfClass) $ref.value();")
     val result = ctx.freshName("sgp")
     nullSafeCodeGen(ctx, ev, c =>
       s"""
@@ -243,14 +196,11 @@ case class SurvivingGramPositions(child: Expression, width: Int,
 object SurvivingGrams {
 
   /** Same hashing as [[GramHashes.compute]]; a window that passes the
-    * membership probe (monolithic bloom via [[graft.ops.BloomMembership]]
-    * or a [[graft.ops.ShardedBloom]] family — one resolved handle, one
-    * bimorphic call per window) gets its gram string built (UTF8String
-    * concat, no JVM String round-trip) and deduplicated in encounter
-    * order.
+    * bloom probe gets its gram string built (UTF8String concat, no JVM
+    * String round-trip) and deduplicated in encounter order.
     */
   def compute(tokens: ArrayData, width: Int,
-              bloom: graft.ops.LongMembership): ArrayData = {
+              bloom: BloomFilter): ArrayData = {
     val n = tokens.numElements()
     if (n < width) return null
 
@@ -301,7 +251,7 @@ object SurvivingGrams {
     * kept (positions are the payload).
     */
   def computePositions(tokens: ArrayData, width: Int,
-                       bloom: graft.ops.LongMembership): ArrayData = {
+                       bloom: BloomFilter): ArrayData = {
     val n = tokens.numElements()
     if (n < width) return null
 
@@ -360,9 +310,4 @@ object SurvivingGrams {
     ColumnBridge.column(
       SurvivingGramPositions(ColumnBridge.expression(tokens), width, bloom))
 
-  /** Column API over a sharded survivor family. */
-  def survivingGramsSharded(tokens: Column, width: Int,
-                            family: Broadcast[graft.ops.ShardedBloom]): Column =
-    ColumnBridge.column(
-      SurvivingGramsSharded(ColumnBridge.expression(tokens), width, family))
 }

@@ -75,18 +75,13 @@ object Contamination {
     *
     * Sizing note for the survivor bloom: survivors are the corpus's
     * repeated grams (boilerplate), ~1.8 bytes each at fpp 0.001. The
-    * monolithic filter broadcasts comfortably to ~100M survivors; past
-    * that, `survivorShards > 1` builds a [[ShardedBloom]] family
-    * instead — shard-local build (no full-size bitset per partition,
-    * no single `stat.bloomFilter` driver merge), identical probe
-    * semantics. A corpus whose survivor set outgrows broadcast
-    * entirely should raise `minDf` (df >= 2 at web scale keeps half of
-    * everything) or take the single-pass path.
+    * filter broadcasts comfortably to ~100M survivors. A corpus whose
+    * survivor set outgrows broadcast should raise `minDf` (df >= 2 at
+    * web scale keeps half of everything) or take the single-pass path.
     */
   def gramDocFrequency(docs: DataFrame, idCol: String, textCol: String,
                        n: Int, minDf: Long = 2L,
-                       twoPass: Boolean = true,
-                       survivorShards: Int = 1): DataFrame = {
+                       twoPass: Boolean = true): DataFrame = {
     def exact(g: DataFrame): DataFrame = g
       .groupBy("sh")
       .agg(count(lit(1)).as("df"), min(col(idCol)).as("first_doc"))
@@ -108,22 +103,13 @@ object Contamination {
     val nSurv = survivors.count()
     // pass 2: per-doc distinct SURVIVING gram strings, built in-row —
     // strings exist only for windows whose hash passed the filter
-    val surviving =
-      if (survivorShards > 1) {
-        val family = ShardedBloom.build(survivors, "gh",
-          math.max(nSurv, 1L), 0.001, survivorShards)
-        survivors.unpersist()
-        val bc = spark.sparkContext.broadcast(family)
-        graft.functions.SurvivingGrams.survivingGramsSharded(col("tk"), n, bc)
-      } else {
-        val bloom =
-          if (nSurv == 0L)
-            org.apache.spark.util.sketch.BloomFilter.create(1L, 0.001)
-          else survivors.stat.bloomFilter("gh", nSurv, 0.001)
-        survivors.unpersist()
-        val bc = spark.sparkContext.broadcast(bloom)
-        graft.functions.SurvivingGrams.survivingGrams(col("tk"), n, bc)
-      }
+    val bloom =
+      if (nSurv == 0L)
+        org.apache.spark.util.sketch.BloomFilter.create(1L, 0.001)
+      else survivors.stat.bloomFilter("gh", nSurv, 0.001)
+    survivors.unpersist()
+    val bc = spark.sparkContext.broadcast(bloom)
+    val surviving = graft.functions.SurvivingGrams.survivingGrams(col("tk"), n, bc)
     exact(toks.select(col(idCol), explode(surviving).as("sh")))
   }
 }

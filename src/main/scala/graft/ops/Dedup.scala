@@ -36,20 +36,6 @@ object Dedup {
       .groupBy(col("_fp").as("fingerprint"))
       .agg(min(col(idCol)).as("keeper_id"), count(lit(1)).as("n_copies"))
 
-  /** Scale-path exact dedup: 64-bit xxhash fingerprint instead of the
-    * md5 hex string — stays entirely in codegen'd long arithmetic (no
-    * hex encode, no string shuffle key; the shuffle key is 8 bytes,
-    * not 32). Same deterministic min-id keeper semantics and the same
-    * null-vs-empty collision contract as the md5 path (both fold
-    * column values positionally). The md5 variant remains the
-    * reference/oracle-parity surface (O-8's hash IS md5); this is what
-    * a 100 TB dedup run should call.
-    */
-  def exactDedupFast(df: DataFrame, idCol: String, cols: Seq[String]): DataFrame =
-    df.withColumn("_fp", xxhash64(cols.map(col): _*))
-      .groupBy(col("_fp").as("fingerprint"))
-      .agg(min(col(idCol)).as("keeper_id"), count(lit(1)).as("n_copies"))
-
   /** MinHash signatures: k min-hashes over `n`-word shingles of
     * `textCol`, via Kirsch-Mitzenmacher double hashing: ONE md5 per
     * shingle yields h1/h2 (two 32-bit halves) and hash_j = (h1 + j*h2)
@@ -60,9 +46,7 @@ object Dedup {
     * md5s and all k minima are HOFs over the token array — no shingle
     * explode, no aggregation, zero shuffles (the historical
     * explode+groupBy formulation shuffled the whole shingle volume;
-    * in-row minima made the md5 oracle family ~9x faster at 500k
-    * docs and it now differs from [[minhashSignaturesFast]] only in
-    * hash family, not in shape).
+    * in-row minima made it ~9x faster at 500k docs).
     */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         k: Int, shingleWidth: Int = 3): DataFrame = {
@@ -80,27 +64,6 @@ object Dedup {
     hs.select(col(idCol) +: (0 until k).map(j =>
       expr(s"array_min(transform(hs, s -> (s.h1 + $j * s.h2) % 4294967296))")
         .as(s"h$j")): _*)
-  }
-
-  /** Scale-path MinHash: same output shape as [[minhashSignatures]]
-    * (h0..h{k-1} longs, so [[lshCandidatePairs]] consumes either
-    * variant), computed by the native
-    * [[graft.functions.MinHashShingles]] expression — the whole
-    * signature is a NARROW MAP over the corpus: no shingle strings,
-    * no 26M-row explode, no aggregation shuffle. Different hash
-    * family than md5 → different (equally valid) signatures; exact
-    * duplicates still collide on every band by construction. Use this
-    * at corpus scale; the md5 variant is the cross-engine-replicable
-    * oracle path.
-    */
-  def minhashSignaturesFast(df: DataFrame, idCol: String, textCol: String,
-                            k: Int, shingleWidth: Int = 3): DataFrame = {
-    val toks = df.select(col(idCol), TextAnalysis.tokens(col(textCol)).as("tk"))
-      .where(size(col("tk")) >= shingleWidth)
-    val sig = toks.withColumn("mh",
-      graft.functions.MinHashShingles.minhashArray(col("tk"), k, shingleWidth))
-    sig.select(col(idCol) +:
-      (0 until k).map(j => element_at(col("mh"), j + 1).as(s"h$j")): _*)
   }
 
   /** LSH banding over a signature frame from [[minhashSignatures]]:

@@ -30,8 +30,7 @@ import org.apache.spark.util.sketch.BloomFilter
   * the last build) are ALWAYS candidates — a stale sidecar costs
   * reads, never correctness; [[build]] again to cover them.
   *
-  * Keys are longs ([[LongMembership]] convention); hash strings
-  * through `xxhash64` at the mouth, as the exact-dedup family does.
+  * Keys are longs; hash strings through `xxhash64` at the mouth.
   */
 object FileBloomIndex {
 

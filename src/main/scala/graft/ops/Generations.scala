@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Catalog-pointer generation discipline for on-disk index roots: a
@@ -12,34 +12,24 @@ import org.apache.spark.sql.SparkSession
   * Layout under one root directory:
   * {{{
   *   root/_ptr/ptr-000000000007.gen-000002   append-only pointer log
-  *   root/CURRENT                            legacy single-file pointer
   *   root/gen-000001/    superseded generation (immutable)
   *   root/gen-000002/    live generation
   * }}}
   *
-  * Two publish strategies, selected per call:
+  * The commit point is the creation of ONE NEW object in `_ptr/`
+  * whose NAME carries both a monotonically increasing commit sequence
+  * and the generation it points at. Readers resolve by listing `_ptr/`
+  * and taking the highest sequence — they never read pointer file
+  * CONTENT, so a torn pointer is impossible by construction: there is
+  * no rename, no overwrite, no delete-then-recreate, and nothing
+  * half-written that resolution depends on. This holds on S3-class
+  * stores (a PUT becomes listable atomically and list-after-write is
+  * strongly consistent) as well as on HDFS — the reference's actual
+  * store is S3 (`utils/s3_operations.py:49-61`), where rename is
+  * copy+delete and a single replaced pointer file can disappear
+  * mid-flip.
   *
-  *  - [[Generations.ManifestLog]] (default, object-store-safe). The
-  *    commit point is the creation of ONE NEW object in `_ptr/` whose
-  *    NAME carries both a monotonically increasing commit sequence and
-  *    the generation it points at. Readers resolve by listing `_ptr/`
-  *    and taking the highest sequence — they never read pointer file
-  *    CONTENT, so a torn pointer is impossible by construction: there
-  *    is no overwrite, no delete-then-recreate, and nothing
-  *    half-written that resolution depends on. This holds on S3-class
-  *    stores (a PUT becomes listable atomically and list-after-write
-  *    is strongly consistent) as well as on HDFS — the reference's
-  *    actual store is S3 (`utils/s3_operations.py:49-61`), where
-  *    rename is copy+delete and a single replaced pointer file can
-  *    disappear mid-flip.
-  *  - [[Generations.RenameOverwrite]] (legacy). The original
-  *    write-temp-then-`rename(OVERWRITE)` over a single `CURRENT`
-  *    file — atomic ONLY on HDFS-semantics stores, and therefore
-  *    refused up front on known object-store schemes. Kept as an
-  *    explicit escape hatch for deployments that require the
-  *    single-file layout.
-  *
-  * Either way a concurrent reader resolves either the old generation
+  * A concurrent reader resolves either the old generation
   * or the new one — never a missing pointer, a torn pointer, or a
   * half-written index — and keeps reading the OLD generation's files
   * safely after the flip, because superseded generations are immutable
@@ -67,65 +57,23 @@ import org.apache.spark.sql.SparkSession
   * whatever owns the cadence (a scheduler slot, a lock service).
   */
 object Generations {
-  private val Pointer = "CURRENT"
   private val GenPrefix = "gen-"
   private val PtrDir = "_ptr"
-  private val PtrEntry = """^ptr-(\d{12})\.(gen-\d{6})$""".r
-
-  /** How [[publish]] commits the pointer flip. */
-  sealed trait PointerStrategy
-
-  /** Append-only pointer log; commit = one new-object creation. Safe
-    * on object stores AND HDFS-semantics stores. The default.
-    */
-  case object ManifestLog extends PointerStrategy
-
-  /** Single `CURRENT` file replaced via `rename(OVERWRITE)`. Atomic
-    * only where rename is a metadata operation (HDFS, local, viewfs);
-    * refused on known object-store schemes, where rename is
-    * copy+delete and the pointer can vanish mid-flip.
-    */
-  case object RenameOverwrite extends PointerStrategy
-
-  /** URI schemes whose rename is NOT an atomic metadata operation. */
-  private val ObjectStoreSchemes =
-    Set("s3", "s3a", "s3n", "gs", "oss", "cos", "obs", "swift", "wasb", "abfs", "abfss")
+  private val PtrEntry = """^ptr-(\d{12})\.gen-(\d{6})$""".r
 
   private def genName(n: Long): String = f"$GenPrefix$n%06d"
-
-  private def fcFor(p: Path, spark: SparkSession): FileContext =
-    FileContext.getFileContext(
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).getUri,
-      spark.sparkContext.hadoopConfiguration)
 
   private def fsOf(p: Path, spark: SparkSession) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Parse a canonical generation-dir name or fail loudly. */
-  private def parseGen(name: String, where: String): Long = {
-    val n =
-      try {
-        require(name.startsWith(GenPrefix))
-        name.stripPrefix(GenPrefix).toLong
-      } catch {
-        case _: IllegalArgumentException => // bad prefix OR non-numeric
-          throw new java.io.IOException(
-            s"$where is corrupt: '$name' is not a generation name")
-      }
-    if (name != genName(n))
-      throw new java.io.IOException(
-        s"$where is corrupt: non-canonical generation name '$name'" +
-          s" (canonical form is ${genName(n)})")
-    n
-  }
-
   /** Highest-sequence manifest entry, if the pointer log has any.
     * Resolution is name-only — entry content is never read, so a
     * half-written entry body cannot tear resolution. A non-hidden
-    * file in `_ptr/` that does not parse as an entry is reported as
-    * corruption, never skipped.
+    * file in `_ptr/` that does not parse as an entry (a non-canonical
+    * generation name included) is reported as corruption, never
+    * skipped.
     */
-  private def manifestHead(spark: SparkSession, root: String): Option[(Long, String)] = {
+  private def manifestHead(spark: SparkSession, root: String): Option[(Long, Long)] = {
     val dir = new Path(new Path(root), PtrDir)
     val fs = fsOf(dir, spark)
     if (!fs.exists(dir)) None
@@ -135,7 +83,7 @@ object Generations {
         .map(_.getPath.getName)
         .filterNot(_.startsWith(".")) // crashed-publish temp debris
         .map {
-          case PtrEntry(seq, gen) => (seq.toLong, gen)
+          case PtrEntry(seq, gen) => (seq.toLong, gen.toLong)
           case other => throw new java.io.IOException(
             s"$root/$PtrDir/$other is corrupt: not a pointer entry")
         }
@@ -143,36 +91,18 @@ object Generations {
     }
   }
 
-  /** The live generation's number, if a pointer exists. The manifest
-    * log supersedes the legacy `CURRENT` file when both are present
-    * (a root upgraded mid-life keeps flipping through the log). A
-    * pointer naming a non-existent dir (never possible through
-    * [[publish]], which validates first) is reported as corrupt
-    * loudly rather than silently treated as absent.
+  /** The live generation's number, if a pointer exists. A pointer
+    * naming a non-existent dir (never possible through [[publish]],
+    * which validates first) is reported as corrupt loudly rather than
+    * silently treated as absent.
     */
-  def current(spark: SparkSession, root: String): Option[Long] = {
-    val fs = fsOf(new Path(root), spark)
-    val name: Option[String] = manifestHead(spark, root) match {
-      case Some((_, gen)) => Some(gen)
-      case None =>
-        val ptr = new Path(root, Pointer)
-        if (!fs.exists(ptr)) None
-        else {
-          val in = fs.open(ptr)
-          val s =
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-            finally in.close()
-          Some(s)
-        }
-    }
-    name.map { nm =>
-      val n = parseGen(nm, s"$root pointer")
-      if (!fs.exists(new Path(root, nm)))
+  def current(spark: SparkSession, root: String): Option[Long] =
+    manifestHead(spark, root).map { case (_, n) =>
+      if (!fsOf(new Path(root), spark).exists(new Path(root, genName(n))))
         throw new java.io.IOException(
-          s"$root pointer names $nm but that generation does not exist")
+          s"$root pointer names ${genName(n)} but that generation does not exist")
       n
     }
-  }
 
   /** Absolute path of the live generation; error if none published. */
   def livePath(spark: SparkSession, root: String): String =
@@ -189,24 +119,16 @@ object Generations {
   def nextPath(spark: SparkSession, root: String): String =
     new Path(root, genName(current(spark, root).getOrElse(0L) + 1)).toString
 
-  /** Flip the pointer to a fully-built generation dir under `root`.
-    *
-    * With [[ManifestLog]] (default) the commit is the creation of one
-    * new entry in the pointer log — no rename, no overwrite, safe on
-    * object stores. With [[RenameOverwrite]] the legacy single-file
-    * pointer is replaced via write-temp-then-rename(OVERWRITE), which
-    * is refused on object-store schemes (rename there is copy+delete
-    * and readers can catch the pointer missing mid-flip) and on roots
-    * that already flip through the manifest log (the log would
-    * silently out-vote the legacy file).
+  /** Flip the pointer to a fully-built generation dir under `root`:
+    * the commit is the creation of one new entry in the pointer log —
+    * no rename, no overwrite, safe on object stores.
     *
     * Only canonical generation names (`gen-` + zero-padded number,
     * exactly as [[nextPath]] hands out) are publishable: a
     * non-canonical dir like `gen-7` would commit a pointer that
     * [[livePath]] reconstructs as `gen-000007` and cannot serve.
     */
-  def publish(spark: SparkSession, root: String, genDir: String,
-      strategy: PointerStrategy = ManifestLog): Unit = {
+  def publish(spark: SparkSession, root: String, genDir: String): Unit = {
     val gen = new Path(genDir)
     val name = gen.getName
     val n =
@@ -223,37 +145,14 @@ object Generations {
         s" ${genName(n)} (got $name): a non-canonical name would" +
         s" commit a pointer livePath cannot resolve")
     val rootP = new Path(root)
-    // scheme contract is checked BEFORE any filesystem call so an
-    // unsafe store is refused even where no client is installed
-    strategy match {
-      case RenameOverwrite =>
-        val scheme = Option(rootP.toUri.getScheme).getOrElse("file")
-        require(!ObjectStoreSchemes.contains(scheme.toLowerCase),
-          s"RenameOverwrite is not atomic on '$scheme' (rename is" +
-            s" copy+delete there): use ManifestLog for object stores")
-      case ManifestLog => ()
-    }
     val fs = fsOf(rootP, spark)
     require(fs.exists(gen), s"cannot publish $genDir: does not exist")
-    strategy match {
-      case ManifestLog =>
-        val seq = manifestHead(spark, root).map(_._1).getOrElse(0L) + 1
-        val entry = new Path(new Path(rootP, PtrDir), f"ptr-$seq%012d.$name")
-        // overwrite=false: a second maintainer racing the same seq
-        // fails here instead of silently last-writer-winning
-        val out = fs.create(entry, false)
-        try out.write((name + "\n").getBytes("UTF-8")) finally out.close()
-      case RenameOverwrite =>
-        require(manifestHead(spark, root).isEmpty,
-          s"$root already publishes through the manifest log; a legacy" +
-            s" CURRENT write would be out-voted by the log — use ManifestLog")
-        val tmp = new Path(root,
-          s".$Pointer.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-        val out = fs.create(tmp, true)
-        try out.write((name + "\n").getBytes("UTF-8")) finally out.close()
-        fcFor(rootP, spark).rename(tmp, new Path(root, Pointer),
-          Options.Rename.OVERWRITE)
-    }
+    val seq = manifestHead(spark, root).map(_._1).getOrElse(0L) + 1
+    val entry = new Path(new Path(rootP, PtrDir), f"ptr-$seq%012d.$name")
+    // overwrite=false: a second maintainer racing the same seq
+    // fails here instead of silently last-writer-winning
+    val out = fs.create(entry, false)
+    try out.write((name + "\n").getBytes("UTF-8")) finally out.close()
   }
 
   /** True iff `path` holds at least one non-hidden entry — i.e. a
@@ -277,8 +176,8 @@ object Generations {
     * newest — a keep window of 2 means one full generation of grace
     * for in-flight readers that resolved just before a flip. The live
     * generation is never deleted regardless of `keep`. Leftover
-    * pointer temp files from crashed publishes go with them, and the
-    * manifest log is trimmed to its `keep` newest entries (the head
+    * temp files from crashed publishes in `_ptr/` go with them, and
+    * the manifest log is trimmed to its `keep` newest entries (the head
     * entry — the one resolution uses — is never deleted).
     *
     * Caveat: the window counts generation NUMBERS, so a generation
@@ -298,9 +197,6 @@ object Generations {
     gens.dropRight(keep).filterNot(live.contains).foreach { n =>
       fs.delete(new Path(root, genName(n)), true); ()
     }
-    fs.listStatus(rootP).toSeq
-      .filter(s => !s.isDirectory && s.getPath.getName.startsWith(s".$Pointer.tmp-"))
-      .foreach { s => fs.delete(s.getPath, false); () }
     val ptrDir = new Path(rootP, PtrDir)
     if (fs.exists(ptrDir)) {
       val entries = fs.listStatus(ptrDir).toSeq.filter(!_.isDirectory)

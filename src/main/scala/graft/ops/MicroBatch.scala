@@ -23,7 +23,10 @@ import org.apache.spark.sql.SparkSession
   * to one task.
   *
   * The conf flip is session-wide for the duration of `f` and restored
-  * after (finally). That is safe under the folds' existing
+  * after (finally) to exactly what it was: a value the session never
+  * set is unset again, not pinned to Spark's default, so the session's
+  * explicit confs (part of `graft.Tables.query`'s plan key) do not
+  * change. That is safe under the folds' existing
   * one-owner-per-sink serialization: the foreachBatch tick owns the
   * session's work while it runs — the same contract the drain and
   * maintenance cadences already rely on.
@@ -31,7 +34,8 @@ import org.apache.spark.sql.SparkSession
 object MicroBatch {
   def noAqe[T](spark: SparkSession)(f: => T): T = {
     val k = "spark.sql.adaptive.enabled"
-    val old = spark.conf.getOption(k)
+    val old =
+      if (spark.sessionState.conf.contains(k)) spark.conf.getOption(k) else None
     spark.conf.set(k, "false")
     try f
     finally old match {

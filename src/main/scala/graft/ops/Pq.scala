@@ -68,10 +68,8 @@ object Pq {
       m, k, oversample)
 
   /** [[fitQuantized]] over a frame that ALREADY carries the quantized
-    * `ei` column — the residual IVF-PQ fit path, where `ei` holds
-    * exact integer cell residuals rather than raw quantized vectors
-    * (residuals live on the same micro grid, so all the exact-integer
-    * arithmetic below applies unchanged).
+    * `ei` column — the OPQ IVF-PQ fit path, where `ei` holds the
+    * permuted quantized vectors ([[IvfPq.fit]]).
     */
   private[ops] def fitQuantizedEi(q: DataFrame, idCol: String, m: Int,
                                   k: Int, oversample: Int): QuantCodebook = {
@@ -200,9 +198,8 @@ object Pq {
     graft.functions.PqEncodeCodes.codes(ei, model.m, model.width,
       model.centroids.map(_.sortBy(_._1).map(_._2.toArray).toArray).toArray)
 
-  /** The HOF reference formulation of [[codesColumn]], kept for the
-    * native twin's parity spec (the established MinHash-family
-    * pattern).
+  /** The HOF reference formulation of [[codesColumn]], which
+    * PqSpec's parity rows compare the native expression against.
     */
   private[graft] def codesColumnHof(ei: Column, model: QuantCodebook): Column =
     array((0 until model.m).map { s =>

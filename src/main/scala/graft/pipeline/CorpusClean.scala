@@ -33,11 +33,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object CorpusClean {
 
-  /** `fastHashing` switches both dedup stages to the xxhash/native
-    * scale path (identical keeper semantics, different — equally
-    * valid — MinHash family; see Dedup). Default stays md5: that is
-    * the family the cross-engine oracle replays (q60).
-    */
   /** `transitive` resolves near-dup evidence through connected
     * components before dropping: with pairs (A,C) and (B,C) only, the
     * pair-greedy rule keeps both A and B even though they are
@@ -47,7 +42,6 @@ object CorpusClean {
     */
   final case class Params(minTokens: Int = 20, minhashK: Int = 8,
                           bands: Int = 4, rowsPerBand: Int = 2,
-                          fastHashing: Boolean = false,
                           transitive: Boolean = false)
 
   /** Returns the surviving (doc_id, text) rows. */
@@ -56,17 +50,14 @@ object CorpusClean {
       .where(size(TextAnalysis.tokens(col("text"))) >= params.minTokens)
       .persist(StorageLevel.DISK_ONLY)
 
-    val exact = if (params.fastHashing) Dedup.exactDedupFast _ else Dedup.exactDedup _
-    val keepers = exact(quality, "doc_id", Seq("text"))
+    val keepers = Dedup.exactDedup(quality, "doc_id", Seq("text"))
       .select(col("keeper_id").as("doc_id"))
     // Materialized once: consumed by the MinHash stage AND the final
     // anti-join; also collapses the duplicated `quality` derivation.
     val unique = quality.join(keepers, Seq("doc_id"), "left_semi")
       .persist(StorageLevel.DISK_ONLY)
 
-    val minhash =
-      if (params.fastHashing) Dedup.minhashSignaturesFast _ else Dedup.minhashSignatures _
-    val sig = minhash(unique, "doc_id", "text", params.minhashK, 3)
+    val sig = Dedup.minhashSignatures(unique, "doc_id", "text", params.minhashK, 3)
     val nearDups =
       if (params.transitive) {
         // star edges (connectivity-equivalent, n-1 per bucket) ->

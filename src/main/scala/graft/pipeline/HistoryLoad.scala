@@ -34,7 +34,7 @@ final case class RunReport(
   * The whole chain is ONE lazy Catalyst plan per table executed at the
   * sink action — the reference's chunk loop becomes partition
   * parallelism. The scan takes its schema from one Parquet footer read
-  * on the driver ([[ParquetFooter.ifExists]]), so a table costs one Spark
+  * on the driver ([[ParquetFooter.reader]]), so a table costs one Spark
   * job, the write.
   *
   * Each table's `updated_utc_ts` is taken on the driver as its plan is
@@ -69,9 +69,8 @@ class HistoryLoad(spark: SparkSession, config: PipelineConfig,
     */
   def processTable(table: String): Long = {
     val path = s"${config.sourceDir}/$table.parquet"
-    val schema = ParquetFooter.ifExists(spark, path).getOrElse(
+    val reader = ParquetFooter.reader(spark, path).getOrElse(
       throw new FileNotFoundException(s"table '$table': source $path does not exist"))
-    val reader = schema.fold(spark.read)(spark.read.schema)
     PartitionedSink.writeDatePartitioned(transform(reader.parquet(path)),
       config.targetDir, table, now)
   }

@@ -70,6 +70,10 @@ object RollupRewrite extends Rule[LogicalPlan] {
     } catch { case _: Throwable => path }).toUri.toString
 
   def register(t: Target): Unit = { targets.put(canon(t.sourcePath), t); () }
+
+  /** Drop `t`, and only `t`: a target registered since under the same
+    * source stays. */
+  def unregister(t: Target): Unit = { targets.remove(canon(t.sourcePath), t); () }
   def clear(): Unit = targets.clear()
 
   /** The registered targets: part of a kept query plan's key

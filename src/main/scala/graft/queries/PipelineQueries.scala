@@ -4,7 +4,7 @@ import graft.ops.{ChangeCapture, Contamination, Packing, QualitySignals, Segment
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.SparkBridge
+import org.apache.spark.sql.graft.{ColumnBridge, SparkBridge}
 import org.apache.spark.sql.types.LongType
 
 /** Training-data pipeline surface, round 3: repetition quality
@@ -789,22 +789,30 @@ object PipelineQueries {
         IncrementalAgg.updateTable(s, rollupPath,
           src.where(col("user_id") % 2 === i), keys, ms, "day")
       }
-      RollupRewrite.register(RollupRewrite.Target(srcPath, rollupPath, keys, ms))
-      val q = s.read.parquet(srcPath)
-        .groupBy("day", "event_type")
-        .agg(count(lit(1)).as("n_events"), sum("v_milli").as("sum_v_milli"))
-        .orderBy("day", "event_type")
-      // the scans' root paths, not the plan text: Spark cuts a file
-      // location short in a plan string
-      val scanned = q.queryExecution.optimizedPlan.collect {
-        case lr: LogicalRelation => lr.relation
-      }.collect {
-        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.getName)
-      }.flatten
-      require(scanned.contains("rollup_mv_store") &&
-          !scanned.contains("raw_events_src.parquet"),
-        s"rollup rewrite did not fire, scans $scanned:\n${q.queryExecution.optimizedPlan}")
-      q
+      // registered only while this frame's plan is optimized: the
+      // `require` forces it, and the frame returned wraps that
+      // optimized plan, so a frame derived from it (a write, a
+      // coalesce) still reads the rollup while later plans (and
+      // `Tables.query`'s keys) see no new target
+      val target = RollupRewrite.Target(srcPath, rollupPath, keys, ms)
+      RollupRewrite.register(target)
+      try {
+        val q = s.read.parquet(srcPath)
+          .groupBy("day", "event_type")
+          .agg(count(lit(1)).as("n_events"), sum("v_milli").as("sum_v_milli"))
+          .orderBy("day", "event_type")
+        // the scans' root paths, not the plan text: Spark cuts a file
+        // location short in a plan string
+        val scanned = q.queryExecution.optimizedPlan.collect {
+          case lr: LogicalRelation => lr.relation
+        }.collect {
+          case fs: HadoopFsRelation => fs.location.rootPaths.map(_.getName)
+        }.flatten
+        require(scanned.contains("rollup_mv_store") &&
+            !scanned.contains("raw_events_src.parquet"),
+          s"rollup rewrite did not fire, scans $scanned:\n${q.queryExecution.optimizedPlan}")
+        ColumnBridge.ofRows(s, q.queryExecution.optimizedPlan)
+      } finally RollupRewrite.unregister(target)
     }),
 
     // SCD2 dimension history from the event log: per-user validity

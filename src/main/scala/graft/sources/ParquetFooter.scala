@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrameReader, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.graft.SparkBridge
 import org.apache.spark.sql.types.StructType
@@ -44,4 +44,13 @@ object ParquetFooter {
     Some(Some(SparkBridge.asNullable(
       ParquetFileFormat.readSchemaFromFooter(new Footer(first, footer), converter))))
   }
+
+  /** The reader for the Parquet table at `path`: one with
+    * [[ifExists]]'s footer schema when there is one, Spark's own
+    * (inferring) reader for a partitioned or empty layout. None when
+    * `path` does not exist, so a caller chooses how a missing table
+    * fails.
+    */
+  def reader(spark: SparkSession, path: String): Option[DataFrameReader] =
+    ifExists(spark, path).map(_.fold(spark.read)(spark.read.schema))
 }

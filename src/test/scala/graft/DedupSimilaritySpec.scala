@@ -62,7 +62,7 @@ class DedupSpec extends SparkSpec {
     val corpus = base
       .unionAll(base.select(col("doc_id") + 1000, col("text")))
       .unionAll(base.select(col("doc_id") + 2000, col("text")))
-    val sig = Dedup.minhashSignaturesFast(corpus, "doc_id", "text", k = 8)
+    val sig = Dedup.minhashSignatures(corpus, "doc_id", "text", k = 8)
     def comps(pairs: org.apache.spark.sql.DataFrame) =
       Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
     val full = comps(Dedup.lshCandidatePairs(sig, "doc_id", 4, 2))
@@ -97,37 +97,6 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     assert(viaDriver == expected)
     assert(viaLoop == expected)
-  }
-
-  test("fast (xxhash64) paths agree with the md5 paths on what is a duplicate") {
-    // planted exact duplicates: 100 base docs, ids+1000 are copies
-    val base = Tables(spark, "/root/testdata/sf0.001", "documents")
-      .select(col("doc_id"), col("text")).limit(100)
-    val corpus = base.unionAll(base.select(col("doc_id") + 1000, col("text")))
-
-    // exact dedup: same duplicate-group structure (keeper, group size)
-    def groups(df: org.apache.spark.sql.DataFrame) =
-      df.select("keeper_id", "n_copies").as[(Long, Long)].collect().sorted.toSeq
-    val slow = groups(Dedup.exactDedup(corpus, "doc_id", Seq("text")))
-    val fast = groups(Dedup.exactDedupFast(corpus, "doc_id", Seq("text")))
-    assert(fast == slow)
-
-    // fast minhash: every planted exact-dup pair must band-collide,
-    // and the fast signatures are deterministic across runs
-    val sigF = Dedup.minhashSignaturesFast(corpus, "doc_id", "text", k = 8)
-    val pairsF = Dedup.lshCandidatePairs(sigF, "doc_id", bands = 4, rowsPerBand = 2)
-      .as[(Long, Long)].collect().toSet
-    val planted = base.select("doc_id").as[Long].collect()
-      .map(id => (id, id + 1000)).toSet
-    // only docs that survive the >=shingleWidth token gate can pair
-    val eligible = Dedup.minhashSignaturesFast(corpus, "doc_id", "text", k = 8)
-      .select("doc_id").as[Long].collect().toSet
-    val expected = planted.filter { case (a, b) => eligible(a) && eligible(b) }
-    assert(expected.nonEmpty && expected.subsetOf(pairsF),
-      s"missing planted pairs: ${(expected -- pairsF).take(5)}")
-    val sigF2 = Dedup.minhashSignaturesFast(corpus, "doc_id", "text", k = 8)
-    assert(sigF.orderBy("doc_id").collect().toSeq ==
-      sigF2.orderBy("doc_id").collect().toSeq)
   }
 
   test("simhash: identical docs equal, near-dups within small hamming distance") {
@@ -262,7 +231,7 @@ class SimilaritySpec extends SparkSpec {
     // the last token -> Jaccard ~ 12/14)
     val realDup = (100L, s"$header u1a u1b u1c u1d u1e u1f u1g")
     val corpus = ((1L to 20L).map(doc) :+ realDup).toDF("doc_id", "text")
-    val sig = Dedup.minhashSignaturesFast(corpus, "doc_id", "text", 8, 3)
+    val sig = Dedup.minhashSignatures(corpus, "doc_id", "text", 8, 3)
     val pairs = Dedup.lshCandidatePairs(sig, "doc_id", bands = 8, rowsPerBand = 1)
 
     // boilerplate band-collides somewhere, and those candidates fail
@@ -294,7 +263,7 @@ class SimilaritySpec extends SparkSpec {
     val flood = (1L to 20L)
       .map(i => (i, "identical boilerplate flood text repeated verbatim everywhere"))
       .toDF("doc_id", "text")
-    val sig = Dedup.minhashSignaturesFast(flood, "doc_id", "text", 8, 3)
+    val sig = Dedup.minhashSignatures(flood, "doc_id", "text", 8, 3)
     val pairs = Dedup.lshCandidatePairs(sig, "doc_id", 4, 2)
     val stars = Dedup.lshCandidateEdges(sig, "doc_id", 4, 2)
     assert(stars.count() == 19L, "star edges are linear in the bucket")

@@ -70,49 +70,34 @@ class GenerationsSpec extends SparkSpec {
     intercept[java.io.IOException](Generations.current(spark, root))
   }
 
-  test("legacy CURRENT pointer: still resolved, corrupt forms still loud") {
-    // a root published before the manifest log existed: CURRENT only
-    val root = SparkBridge.tempDir("graft_gen_leg").toString
-    new java.io.File(root + "/gen-000001").mkdirs()
-    Generations.publish(spark, root, root + "/gen-000001",
-      Generations.RenameOverwrite)
-    assert(new java.io.File(root, "CURRENT").isFile)
-    assert(Generations.livePath(spark, root).endsWith("gen-000001"))
-
-    // upgrading mid-life: a manifest publish supersedes the legacy file
-    new java.io.File(root + "/gen-000002").mkdirs()
-    Generations.publish(spark, root, root + "/gen-000002")
-    assert(Generations.livePath(spark, root).endsWith("gen-000002"))
-    // ...and once the log exists, a legacy write is refused (it would
-    // be silently out-voted by the log)
-    intercept[IllegalArgumentException](Generations.publish(spark, root,
-      root + "/gen-000001", Generations.RenameOverwrite))
-
-    // corrupt legacy pointer on a legacy-only root: loud, not absent
-    val root2 = SparkBridge.tempDir("graft_gen_leg2").toString
-    new java.io.File(root2 + "/gen-000001").mkdirs()
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(root2, "CURRENT"), "gen-bogus\n")
-    intercept[java.io.IOException](Generations.current(spark, root2))
-    // non-canonical name in a legacy pointer (hand-written 'gen-1'):
+  test("a corrupt pointer log is loud: non-canonical, unparseable, missing generation") {
+    def ptr(root: String, entry: String) = {
+      new java.io.File(root + "/_ptr").mkdirs()
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(root, "_ptr", entry), "")
+    }
+    // non-canonical generation name in an entry (hand-written 'gen-1'):
     // loud, because livePath would reconstruct 'gen-000001'
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(root2, "CURRENT"), "gen-1\n")
-    intercept[java.io.IOException](Generations.current(spark, root2))
-  }
+    val root = SparkBridge.tempDir("graft_gen_corrupt").toString
+    new java.io.File(root + "/gen-000001").mkdirs()
+    ptr(root, "ptr-000000000001.gen-1")
+    intercept[java.io.IOException](Generations.current(spark, root))
 
-  test("RenameOverwrite is refused on object-store schemes") {
-    // rename on s3 is copy+delete: the legacy strategy must refuse it
-    // up front (before touching the filesystem) rather than commit a
-    // pointer that can vanish mid-flip
-    val e = intercept[IllegalArgumentException](Generations.publish(
-      spark, "s3a://bucket/idx", "s3a://bucket/idx/gen-000001",
-      Generations.RenameOverwrite))
-    assert(e.getMessage.contains("ManifestLog"))
+    // an entry whose name does not parse at all: loud, never skipped
+    val root2 = SparkBridge.tempDir("graft_gen_corrupt2").toString
+    new java.io.File(root2 + "/gen-000001").mkdirs()
+    ptr(root2, "ptr-000000000001.gen-bogus")
+    intercept[java.io.IOException](Generations.current(spark, root2))
+
+    // an entry naming a generation that does not exist: loud, not absent
+    val root3 = SparkBridge.tempDir("graft_gen_corrupt3").toString
+    ptr(root3, "ptr-000000000001.gen-000042")
+    val e = intercept[java.io.IOException](Generations.current(spark, root3))
+    assert(e.getMessage.contains("gen-000042"), e.getMessage)
   }
 
   test("manifest commit atomicity: every intermediate state resolves old or new, never torn") {
-    // Walk the exact filesystem states the ManifestLog commit passes
+    // Walk the exact filesystem states the manifest-log commit passes
     // through, as a crash/concurrent-reader would observe them on a
     // store with no atomic rename. The commit is ONE new-object
     // creation, and resolution never reads entry content — so there
@@ -162,9 +147,6 @@ class GenerationsSpec extends SparkSpec {
     val root = SparkBridge.tempDir("graft_gen_prune").toString
     (1 to 4).foreach(n => new java.io.File(root + f"/gen-$n%06d").mkdirs())
     Generations.publish(spark, root, root + "/gen-000001") // live = oldest
-    // debris from a crashed publish (temp written, rename never ran)
-    val debris = new java.io.File(root, ".CURRENT.tmp-deadbeef")
-    java.nio.file.Files.writeString(debris.toPath, "gen-000003\n")
     Generations.prune(spark, root, keep = 1)
     val left = new java.io.File(root).listFiles()
       .map(_.getName).filter(_.startsWith("gen-")).sorted.toSeq
@@ -172,7 +154,6 @@ class GenerationsSpec extends SparkSpec {
     // unconditionally even though it is outside the window
     assert(left == Seq("gen-000001", "gen-000004"), left.mkString(","))
     assert(Generations.livePath(spark, root).endsWith("gen-000001"))
-    assert(!debris.exists, "crashed-publish temp pointer must be swept")
   }
 
   test("versioned rebuild lands in a new generation by pointer flip; prune keeps reader grace") {

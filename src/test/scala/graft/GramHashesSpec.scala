@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{GramHashes, MinHashShingles, SurvivingGrams}
+import graft.functions.{GramHashes, SurvivingGrams}
 import org.apache.spark.sql.functions._
 
 class GramHashesSpec extends SparkSpec {
@@ -9,19 +9,33 @@ class GramHashesSpec extends SparkSpec {
   private def docs = Tables(spark, "/root/testdata/sf0.001", "documents")
     .select(col("doc_id"), split(lower(trim(col("text"))), "\\s+").as("tk"))
 
-  test("GramHashes and MinHashShingles share one hash family") {
-    // the documented contract: MinHashShingles' h0 (KM family j=0) is
-    // the minimum of GramHashes' low 32 bits over the same windows —
-    // pinned so the two expressions can never silently diverge
+  /** Straight-line reference of the shingle hash: FNV-1a per token,
+    * polynomial window combine, splitmix64 finalizer.
+    */
+  private def reference(tokens: Seq[String], width: Int): Seq[Long] = {
+    def fnv(s: String): Long =
+      s.getBytes("UTF-8").foldLeft(0xcbf29ce484222325L)((h, b) =>
+        (h ^ (b & 0xffL)) * 0x100000001b3L)
+    val th = tokens.map(fnv)
+    (0 to tokens.length - width).map { s =>
+      var hh = (0 until width).foldLeft(0L)((h, w) => h * 0x9e3779b97f4a7c15L + th(s + w))
+      hh ^= (hh >>> 30); hh *= 0xbf58476d1ce4e5b9L
+      hh ^= (hh >>> 27); hh *= 0x94d049bb133111ebL
+      hh ^ (hh >>> 31)
+    }
+  }
+
+  test("GramHashes matches the reference hash (codegen and interpreted)") {
     val rows = docs.where(size(col("tk")) >= 3)
-      .withColumn("ghs", GramHashes.gramHashArray(col("tk"), 3))
-      .withColumn("mhs", MinHashShingles.minhashArray(col("tk"), 8, 3))
-      .select(
-        expr("array_min(transform(ghs, h -> h & 4294967295))").as("viaGrams"),
-        element_at(col("mhs"), 1).as("viaMinhash"))
-      .as[(Long, Long)].collect()
+      .select(col("tk"), GramHashes.gramHashArray(col("tk"), 3).as("ghs"))
+      .as[(Seq[String], Seq[Long])].collect()
     assert(rows.nonEmpty)
-    rows.foreach { case (g, m) => assert(g == m) }
+    rows.foreach { case (tk, ghs) =>
+      assert(ghs == reference(tk, 3))
+      val arr = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
+        tk.map(org.apache.spark.unsafe.types.UTF8String.fromString).toArray)
+      assert(GramHashes.compute(arr, 3).toLongArray().toSeq == ghs)
+    }
   }
 
   test("GramHashes: window count and sub-width nulls") {

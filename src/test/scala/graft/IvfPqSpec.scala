@@ -134,82 +134,32 @@ class IvfPqSpec extends SparkSpec {
       assert(d == d2(vecs(q), vecs(id)), s"d2($q,$id)") }
   }
 
-  test("residual codes: recall@k at refine=1 >= non-residual at equal m; lifecycle round-trips the flag") {
-    val corpus = clustered
-    val queries = corpus.where($"vec_id" % 50 === 0)
-    val mNon = IvfPq.fit(corpus, "vec_id", nLists = 4, m = 4, k = 4)
-    val mRes = IvfPq.fit(corpus, "vec_id", nLists = 4, m = 4, k = 4,
-      residual = true)
-    // same coarse level; only the codebooks (and their interpretation)
-    // differ
-    assert(mRes.residual && !mNon.residual && mRes.coarse == mNon.coarse)
-
-    val pNon = tmpIdx("res_non"); val pRes = tmpIdx("res_res")
-    IvfPq.writeIndex(corpus, "vec_id", mNon, pNon)
-    IvfPq.writeIndex(corpus, "vec_id", mRes, pRes)
-    // the codes-only storage contract is interpretation-independent
-    assert(spark.read.parquet(pRes).columns.sorted.toSeq ==
-      Seq("cell", "codes", "vec_id"))
-
-    val vecs = Similarity.withQuantized(corpus, "embedding")
-      .select(col("vec_id"), col("ei")).as[(Long, Seq[Long])].collect().toMap
-    def d2(a: Seq[Long], b: Seq[Long]): Long =
-      a.lazyZip(b).map((x, y) => (x - y) * (x - y)).sum
-    def exactTopK(q: Long, k: Int): Seq[Long] =
-      vecs.collect { case (id, v) if id != q => (d2(vecs(q), v), id) }
-        .toSeq.sorted.take(k).map(_._2)
-
-    // refine=1 makes the ADC shortlist THE final set, so recall here
-    // measures code fidelity (the quantity residual encoding buys),
-    // not the re-rank's rescue
-    def recall(path: String, model: IvfPq.Model): Double = {
-      val got = IvfPq.searchIndex(spark, path, corpus, queries, "vec_id",
-        model, topK = 10, nProbe = 4, refine = 1)
-        .select("q_id", "vec_id").as[(Long, Long)].collect()
-        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-      got.map { case (q, ids) => (ids & exactTopK(q, 10).toSet).size }
-        .sum.toDouble / (10 * got.size)
-    }
-    val rNon = recall(pNon, mNon)
-    val rRes = recall(pRes, mRes)
-    assert(rRes >= rNon, s"residual recall $rRes < non-residual $rNon")
-
-    // exact re-rank distances stay exact under residual codes (stage 3
-    // never touches codes)
-    val d2s = IvfPq.searchIndex(spark, pRes, corpus, queries, "vec_id",
-      mRes, topK = 3, nProbe = 2).select("q_id", "vec_id", "d2")
-      .as[(Long, Long, Long)].collect()
-    assert(d2s.nonEmpty)
-    d2s.foreach { case (q, id, d) => assert(d == d2(vecs(q), vecs(id))) }
-  }
-
-  test("residual probe plan carries the centroid map ONCE, not per LUT entry") {
+  test("OPQ probe plan carries the permuted query ONCE, not per LUT entry") {
     // Regression pin for the r12 x20 OOM: lutColumn splices its ei
     // argument into all m*k code entries (3 dotLong references each),
-    // so passing the residual TREE duplicated the full nLists x dims
-    // centroid map ~m*k*3 times. ConstantFolding collapses each copy
-    // to ONE MapType literal node — plan node count barely moves —
-    // but every literal still serializes the whole map, which is the
-    // ~44 MiB task binary that OOM'd executors at 2.56M x 64-dim.
-    // The fix projects the residual as its own column, so the map
-    // literal appears exactly once; counting MapType literals is the
-    // scale-independent pin (broken form: 48 at m=4/k=4, hundreds at
-    // production shapes).
+    // so passing a derived query TREE duplicates that tree ~m*k*3
+    // times, and every copy serializes into the task binary (a
+    // ~44 MiB binary OOM'd executors at 2.56M x 64-dim). The probe
+    // projects the OPQ-permuted query as its own column (qpe), so the
+    // permutation tree (an array of element_at over the query's ei)
+    // appears exactly once; inlined it would appear 48 times at
+    // m=4/k=4, hundreds at production shapes.
     val corpus = clustered
     val queries = corpus.where($"vec_id" % 50 === 0)
-    val mRes = IvfPq.fit(corpus, "vec_id", nLists = 4, m = 4, k = 4,
-      residual = true)
-    val pRes = tmpIdx("plan_res")
-    IvfPq.writeIndex(corpus, "vec_id", mRes, pRes)
-    val probe = IvfPq.searchIndex(spark, pRes, corpus, queries,
-      "vec_id", mRes, topK = 5, nProbe = 2)
-    val mapLits = probe.queryExecution.optimizedPlan.collect { case p =>
+    val model = IvfPq.fit(corpus, "vec_id", nLists = 4, m = 4, k = 4,
+      opq = true)
+    val path = tmpIdx("plan_opq")
+    IvfPq.writeIndex(corpus, "vec_id", model, path)
+    val probe = IvfPq.searchIndex(spark, path, corpus, queries,
+      "vec_id", model, topK = 5, nProbe = 2)
+    import org.apache.spark.sql.catalyst.expressions.{CreateArray, ElementAt}
+    val permTrees = probe.queryExecution.optimizedPlan.collect { case p =>
       p.expressions.map(_.collect {
-        case l: org.apache.spark.sql.catalyst.expressions.Literal
-          if l.dataType.isInstanceOf[org.apache.spark.sql.types.MapType] => 1
+        case a: CreateArray
+          if a.children.nonEmpty && a.children.forall(_.isInstanceOf[ElementAt]) => 1
       }.sum).sum
     }.sum
-    assert(mapLits <= 2,
-      s"centroid map literal duplicated $mapLits times in the residual probe plan")
+    assert(permTrees == 1,
+      s"permuted query tree appears $permTrees times in the OPQ probe plan")
   }
 }

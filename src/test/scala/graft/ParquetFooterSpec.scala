@@ -56,6 +56,18 @@ class ParquetFooterSpec extends SparkSpec {
       .contains(Some(spark.read.parquet(dir.getPath).schema)))
   }
 
+  test("Tables' first read starts no job; a missing table fails naming its path") {
+    val fixture = "/root/testdata/sf0.001"
+    val fresh = spark.newSession() // a session state no suite has read through
+    val jobs = jobsOf { Tables(fresh, fixture, "lineitem"); () }
+    assert(jobs == 0, s"first read started $jobs job(s)")
+    assert(Tables(fresh, fixture, "lineitem").schema ==
+      spark.read.parquet(s"$fixture/lineitem.parquet").schema)
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      Tables(fresh, fixture, "no_such_table"))
+    assert(e.getMessage.contains(s"$fixture/no_such_table.parquet"), e.getMessage)
+  }
+
   test("partitioned layouts are left to the reader's own discovery") {
     val dir = SparkBridge.tempDir("graft_footer_part").toString + "/t.parquet"
     spark.range(10).withColumn("p", col("id") % 2).write.partitionBy("p").parquet(dir)

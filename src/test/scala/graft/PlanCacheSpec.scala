@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 import graft.ops.IncrementalAgg
 import graft.plans.RollupRewrite
@@ -32,7 +33,6 @@ class PlanCacheSpec extends SparkSpec {
   private def q(name: String, at: String = dir): DataFrame = SparkEntry.queries(name)(spark, at)
 
   test("a repeated shuffle query starts only its final job") {
-    Tables(spark, dir, "lineitem") // its footer read is a job of its own
     fresh {
       val first = jobsOf { q("q01_pricing_summary").collect(); () }
       val again = jobsOf { q("q01_pricing_summary").collect(); () }
@@ -48,7 +48,9 @@ class PlanCacheSpec extends SparkSpec {
       assert(q("q92_token_histogram") eq a)
       assert(Tables.planHits == hits + 1 && Tables.planMisses == misses)
 
-      withConf("spark.sql.shuffle.partitions" -> "3") {
+      // a value other than the session's, whatever the host's core count
+      val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt + 1
+      withConf("spark.sql.shuffle.partitions" -> partitions.toString) {
         assert(q("q92_token_histogram") ne a)
       }
       assert(q("q92_token_histogram") eq a, "the restored confs find the kept frame")
@@ -63,6 +65,38 @@ class PlanCacheSpec extends SparkSpec {
       try assert(q("q92_token_histogram") ne a)
       finally RollupRewrite.clear()
       assert(q("q92_token_histogram") eq a)
+    }
+  }
+
+  test("q156 leaves the rollup targets as it found them, so kept plans stay hits") {
+    fresh {
+      val targets = RollupRewrite.targetSet
+      val kept = q("q92_token_histogram")
+      val first = q("q156_rollup_rewrite")
+      val rows = first.collect().toSeq
+      assert(RollupRewrite.targetSet == targets)
+      val hits = Tables.planHits
+      val second = q("q156_rollup_rewrite")
+      assert(second eq first, "the second q156 call is a plan hit")
+      assert(Tables.planHits == hits + 1)
+      assert(RollupRewrite.targetSet == targets)
+      assert(second.collect().toSeq == rows && rows.nonEmpty)
+      assert(q("q92_token_histogram") eq kept, "a plan kept before q156 is still a hit")
+    }
+  }
+
+  test("a frame derived from q156 still reads the rollup, not the raw table") {
+    fresh {
+      val base = q("q156_rollup_rewrite")
+      val derived = base.coalesce(1)
+      val scanned = derived.queryExecution.optimizedPlan.collect {
+        case lr: LogicalRelation => lr.relation
+      }.collect {
+        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.getName)
+      }.flatten
+      assert(scanned.contains("rollup_mv_store") &&
+        !scanned.contains("raw_events_src.parquet"), s"derived frame scans $scanned")
+      assert(derived.collect().toSeq == base.collect().toSeq)
     }
   }
 

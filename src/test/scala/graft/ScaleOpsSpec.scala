@@ -41,20 +41,14 @@ class BucketingSpec extends SparkSpec {
       Tables(spark, dir, "customer").withColumnRenamed("c_custkey", "o_custkey"),
       "b_customer", "o_custkey", 8)
 
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.enabled" -> "false") {
       val joined = Bucketing.table(spark, "b_orders")
         .join(Bucketing.table(spark, "b_customer"), "o_custkey")
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"),
         s"bucketed join should not shuffle, plan:\n$plan")
       assert(joined.count() == 1500L)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
   }
 }

@@ -12,9 +12,12 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.local()
 
   /** `body` with the session configs `kv` set, the previous values
-    * restored after. */
+    * restored after; a key that was unset is unset again, not pinned
+    * to Spark's default (set confs are part of every kept plan's key). */
   protected def withConf[T](kv: (String, String)*)(body: => T): T = {
-    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val before = kv.map { case (k, _) =>
+      k -> (if (spark.sessionState.conf.contains(k)) spark.conf.getOption(k) else None)
+    }
     kv.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally before.foreach {

@@ -1,11 +1,10 @@
 package graft
 
-import graft.functions.{Kll, MinHashShingles, Theta, UnicodeNormalize}
 import org.apache.spark.sql.functions._
 
 /** The SQL surface reaches the engine's native functions/aggregates
   * (GraftFunctions bindings injected by GraftSession): q119/q121-
-  * shaped sketch rollups, top-k, MinHash and unicode normalization,
+  * shaped sketch rollups, top-k and unicode normalization,
   * all via pure `spark.sql`, equal to (or within the sketch accuracy
   * contract of) the Column-API path.
   */
@@ -78,21 +77,6 @@ class SqlSurfaceSpec extends SparkSpec {
         |ORDER BY l_suppkey, qty DESC, okey""".stripMargin)
       .as[(Long, Long, Long)].collect().toSeq
     assert(viaAgg == viaWindow && viaAgg.nonEmpty)
-  }
-
-  test("minhash_shingles in SQL == the Column API expression") {
-    view("docs", "documents")
-    val sqlSide = spark.sql(
-      """SELECT doc_id, minhash_shingles(split(lower(text), ' '), 16, 3) AS mh
-        |FROM docs ORDER BY doc_id LIMIT 50""".stripMargin)
-      .as[(Long, Option[Seq[Long]])].collect().toSeq
-    val colSide = spark.table("docs")
-      .select(col("doc_id"), org.apache.spark.sql.graft.ColumnBridge.column(
-        MinHashShingles(org.apache.spark.sql.graft.ColumnBridge.expression(
-          split(lower(col("text")), " ")), 16, 3)).as("mh"))
-      .orderBy("doc_id").limit(50)
-      .as[(Long, Option[Seq[Long]])].collect().toSeq
-    assert(sqlSide == colSide && sqlSide.nonEmpty)
   }
 
   test("unicode_normalize in SQL: NFC default, explicit forms, literal-only form") {
